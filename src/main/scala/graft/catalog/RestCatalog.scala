@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.catalog.MetadataUpdates.commitBody
 import graft.core.TableMetadata
 
 /** Catalog abstraction + REST implementation (parity with
@@ -107,7 +108,7 @@ final case class SetCurrentSchema(schemaId: Int) extends TableUpdate
 /** The spec's `upgrade-format-version` action — the format flip of a
   * V2→V3 upgrade commits through the server. When the table carries live
   * positional parquet tombstones, the DV re-home snapshot rides the SAME
-  * commit (`TableWriter.upgradeFormatVersionRest`), so a reader observes
+  * commit (`TableWriter.upgradeFormatVersion`), so a reader observes
   * either the V2 table with tombstones or the V3 table with DVs — never a
   * V3 table whose tombstone files readers silently ignore. */
 final case class UpgradeFormatVersion(formatVersion: Int) extends TableUpdate
@@ -512,142 +513,6 @@ final class RestCatalog(val name: String, uri: String,
       case e: AlreadyExistsError => throw new CommitConflictError(e.getMessage)
     }
     ()
-  }
-
-  /** The spec's CommitTableRequest node — shared by the single-table
-    * `updateTable` route and each entry of `transactions/commit`. */
-  private def commitBody(identifier: Seq[String],
-                         requirements: Seq[TableRequirement],
-                         updates: Seq[TableUpdate])
-      : com.fasterxml.jackson.databind.node.ObjectNode = {
-    val ns = identifier.dropRight(1)
-    val body = mapper.createObjectNode()
-    val ident = body.putObject("identifier")
-    val nsArr = ident.putArray("namespace"); ns.foreach(nsArr.add)
-    ident.put("name", identifier.last)
-    val reqs = body.putArray("requirements")
-    requirements.foreach {
-      case AssertTableUuid(uuid) =>
-        val r = reqs.addObject()
-        r.put("type", "assert-table-uuid"); r.put("uuid", uuid)
-      case AssertRefSnapshotId(ref, snapId) =>
-        val r = reqs.addObject()
-        r.put("type", "assert-ref-snapshot-id"); r.put("ref", ref)
-        snapId match {
-          case Some(id) => r.put("snapshot-id", id)
-          case None => r.putNull("snapshot-id")
-        }
-      case AssertCurrentSchemaId(schemaId) =>
-        val r = reqs.addObject()
-        r.put("type", "assert-current-schema-id")
-        r.put("current-schema-id", schemaId)
-    }
-    val ups = body.putArray("updates")
-    updates.foreach {
-      case SetProperties(set) =>
-        val u = ups.addObject()
-        u.put("action", "set-properties")
-        val m = u.putObject("updates"); set.foreach { case (k, v) => m.put(k, v) }
-      case RemoveProperties(remove) =>
-        val u = ups.addObject()
-        u.put("action", "remove-properties")
-        val arr = u.putArray("removals"); remove.foreach(arr.add)
-      case AddSnapshot(s) =>
-        val u = ups.addObject()
-        u.put("action", "add-snapshot")
-        val sn = u.putObject("snapshot")
-        sn.put("snapshot-id", s.snapshotId)
-        s.parentSnapshotId.foreach(p => sn.put("parent-snapshot-id", p))
-        sn.put("sequence-number", s.sequenceNumber)
-        sn.put("timestamp-ms", s.timestampMs)
-        sn.put("manifest-list", s.manifestList)
-        s.summary.foreach { sum =>
-          val so = sn.putObject("summary")
-          so.put("operation", sum.operation.repr)
-          sum.properties.foreach { case (k, v) => so.put(k, v) }
-        }
-        s.schemaId.foreach(id => sn.put("schema-id", id))
-        s.firstRowId.foreach(v => sn.put("first-row-id", v))
-      case SetSnapshotRef(refName, snapId, refType, minKeep, maxSnapAge,
-          maxRefAge) =>
-        val u = ups.addObject()
-        u.put("action", "set-snapshot-ref")
-        u.put("ref-name", refName)
-        u.put("type", refType)
-        u.put("snapshot-id", snapId)
-        // the spec's set-snapshot-ref REPLACES the ref, so the retention
-        // policy rides the update or is lost server-side
-        minKeep.foreach(v => u.put("min-snapshots-to-keep", v))
-        maxSnapAge.foreach(v => u.put("max-snapshot-age-ms", v))
-        maxRefAge.foreach(v => u.put("max-ref-age-ms", v))
-      case RemoveSnapshots(ids) =>
-        val u = ups.addObject()
-        u.put("action", "remove-snapshots")
-        val arr = u.putArray("snapshot-ids"); ids.foreach(arr.add)
-      case RemoveSnapshotRef(refName) =>
-        val u = ups.addObject()
-        u.put("action", "remove-snapshot-ref")
-        u.put("ref-name", refName)
-      case AddSchema(schema, lastColumnId) =>
-        val u = ups.addObject()
-        u.put("action", "add-schema")
-        u.set[com.fasterxml.jackson.databind.JsonNode]("schema",
-          mapper.readTree(graft.core.TableMetadata.schemaJson(schema)))
-        lastColumnId.foreach(v => u.put("last-column-id", v))
-      case SetCurrentSchema(schemaId) =>
-        val u = ups.addObject()
-        u.put("action", "set-current-schema")
-        u.put("schema-id", schemaId)
-      case UpgradeFormatVersion(v) =>
-        val u = ups.addObject()
-        u.put("action", "upgrade-format-version")
-        u.put("format-version", v)
-      case SetStatistics(entryJson) =>
-        val u = ups.addObject()
-        u.put("action", "set-statistics")
-        u.set[com.fasterxml.jackson.databind.JsonNode]("statistics",
-          mapper.readTree(entryJson))
-      case SetPartitionStatistics(entryJson) =>
-        val u = ups.addObject()
-        u.put("action", "set-partition-statistics")
-        u.set[com.fasterxml.jackson.databind.JsonNode]("partition-statistics",
-          mapper.readTree(entryJson))
-      case AddPartitionSpec(spec) =>
-        val u = ups.addObject()
-        u.put("action", "add-spec")
-        val sn = u.putObject("spec")
-        sn.put("spec-id", spec.specId)
-        val fs = sn.putArray("fields")
-        spec.fields.foreach { f =>
-          val fn = fs.addObject()
-          fn.put("source-id", f.sourceId)
-          fn.put("field-id", f.fieldId)
-          fn.put("name", f.name)
-          fn.put("transform", f.transform.repr)
-        }
-      case SetDefaultSpec(specId) =>
-        val u = ups.addObject()
-        u.put("action", "set-default-spec")
-        u.put("spec-id", specId)
-      case AddSortOrder(order) =>
-        val u = ups.addObject()
-        u.put("action", "add-sort-order")
-        val on = u.putObject("sort-order")
-        on.put("order-id", order.orderId)
-        val fs = on.putArray("fields")
-        order.fields.foreach { f =>
-          val fn = fs.addObject()
-          fn.put("transform", f.transform.repr)
-          fn.put("source-id", f.sourceId)
-          fn.put("direction", f.direction.repr)
-          fn.put("null-order", f.nullOrder.repr)
-        }
-      case SetDefaultSortOrder(orderId) =>
-        val u = ups.addObject()
-        u.put("action", "set-default-sort-order")
-        u.put("sort-order-id", orderId)
-    }
-    body
   }
 
   /** Existence probe (the spec's `HEAD .../tables/{table}`) — one

@@ -10,6 +10,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.catalog.MetadataUpdates.{applyUpdates, checkRequirements}
+
 /** A minimal but STATEFUL Iceberg REST catalog for integration tests AND
   * the battery's transactional-sync fixture (t33 provisions against a live
   * server, which is why this lives on the main classpath): real sockets,
@@ -664,233 +666,6 @@ final class TestRestCatalogServer(clientId: String, secret: String) {
         applyUpdates(b, md)
         respond(ex, 200, tableResponse(ns, t, md))
     }
-  }
-
-  /** Validate one CommitTableRequest's requirements against `md` WITHOUT
-    * mutating anything; first failure message, or None. */
-  private def checkRequirements(b: com.fasterxml.jackson.databind.JsonNode,
-                                md: ObjectNode): Option[String] = {
-    var failure: Option[String] = None
-    Option(b.get("requirements")).foreach(_.forEach { r =>
-      r.get("type").asText() match {
-        case "assert-table-uuid" =>
-          if (r.get("uuid").asText() != md.get("table-uuid").asText())
-            failure = failure.orElse(Some("table uuid mismatch"))
-        case "assert-ref-snapshot-id" =>
-          val refName = r.get("ref").asText()
-          val current = Option(md.get("refs"))
-            .flatMap(rs => Option(rs.get(refName)))
-            .map(_.get("snapshot-id").asLong())
-          val expected = Option(r.get("snapshot-id")).filter(!_.isNull)
-            .map(_.asLong())
-          if (current != expected)
-            failure = failure.orElse(
-              Some(s"ref $refName at $current, requirement expected $expected"))
-        case "assert-current-schema-id" =>
-          val expected = r.get("current-schema-id").asInt()
-          val current = md.get("current-schema-id").asInt()
-          if (current != expected)
-            failure = failure.orElse(Some(
-              s"current schema id $current, requirement expected $expected"))
-        case other => failure = failure.orElse(Some(s"unknown requirement $other"))
-      }
-    })
-    failure
-  }
-
-  /** Apply one CommitTableRequest's updates to `md` in place. */
-  private def applyUpdates(b: com.fasterxml.jackson.databind.JsonNode,
-                           md: ObjectNode): Unit = {
-        // `set-current-schema` with schema-id = -1 refers to the schema
-        // added in this same update set (the spec's pairing rule);
-        // `set-default-spec` has the same -1 rule for `add-spec`
-        var lastAddedSchemaId = -1
-        var lastAddedSpecId = -1
-        var lastAddedSortOrderId = -1
-        Option(b.get("updates")).foreach(_.forEach { u =>
-          u.get("action").asText() match {
-            case "set-properties" =>
-              val props = md.`with`("properties")
-              u.get("updates").properties().forEach(e =>
-                props.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue): Unit)
-            case "remove-properties" =>
-              val props = md.`with`("properties")
-              u.get("removals").forEach(r => props.remove(r.asText()): Unit)
-            case "add-snapshot" =>
-              val sn = u.get("snapshot")
-              md.withArray[ArrayNode]("snapshots").add(sn)
-              md.put("last-sequence-number",
-                math.max(md.get("last-sequence-number").asLong(),
-                  sn.get("sequence-number").asLong()))
-              md.put("last-updated-ms", System.currentTimeMillis())
-              // V3 row lineage (REST spec): a snapshot carrying
-              // first-row-id advances the table's next-row-id past the
-              // rows it added (summary added-records)
-              Option(sn.get("first-row-id")).filter(!_.isNull).foreach { fr =>
-                val addedRows = Option(sn.get("summary"))
-                  .flatMap(s0 => Option(s0.get("added-records")))
-                  .map(_.asLong()).getOrElse(0L)
-                val cur = Option(md.get("next-row-id")).map(_.asLong()).getOrElse(0L)
-                md.put("next-row-id", math.max(cur, fr.asLong() + addedRows))
-                ()
-              }
-            case "set-snapshot-ref" =>
-              val refName = u.get("ref-name").asText()
-              val snapId = u.get("snapshot-id").asLong()
-              val ref = md.`with`("refs").putObject(refName)
-              ref.put("snapshot-id", snapId)
-              ref.put("type", u.get("type").asText())
-              // retention policy rides the update (the spec's
-              // set-snapshot-ref REPLACES the ref node)
-              Seq("min-snapshots-to-keep", "max-snapshot-age-ms",
-                "max-ref-age-ms").foreach { f =>
-                Option(u.get(f)).filter(!_.isNull)
-                  .foreach(v => ref.put(f, v.asLong()))
-              }
-              if (refName == "main") {
-                md.put("current-snapshot-id", snapId)
-                val log = Option(md.get("snapshot-log"))
-                  .collect { case a: ArrayNode => a }
-                  .getOrElse(md.putArray("snapshot-log"))
-                val e = log.addObject()
-                e.put("snapshot-id", snapId)
-                e.put("timestamp-ms", System.currentTimeMillis())
-              }
-            case "remove-snapshots" =>
-              val drop = mutable.Set[Long]()
-              u.get("snapshot-ids").forEach(id => drop += id.asLong())
-              val kept = mapper.createArrayNode()
-              md.withArray[ArrayNode]("snapshots").forEach { sn =>
-                if (!drop.contains(sn.get("snapshot-id").asLong())) kept.add(sn): Unit
-              }
-              md.set[com.fasterxml.jackson.databind.JsonNode]("snapshots", kept)
-              Option(md.get("snapshot-log")).collect { case a: ArrayNode => a }
-                .foreach { log =>
-                  val keptLog = mapper.createArrayNode()
-                  log.forEach { e =>
-                    if (!drop.contains(e.get("snapshot-id").asLong())) keptLog.add(e): Unit
-                  }
-                  md.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", keptLog)
-                  ()
-                }
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "remove-snapshot-ref" =>
-              md.`with`("refs").remove(u.get("ref-name").asText())
-              ()
-            case "add-schema" =>
-              val sn = u.get("schema").deepCopy[ObjectNode]()
-              val schemas = md.withArray[ArrayNode]("schemas")
-              // the server owns schema-id assignment on conflict (the
-              // same rule the view route applies to version ids)
-              var maxId = -1
-              schemas.forEach(x => maxId =
-                math.max(maxId, x.get("schema-id").asInt()))
-              if (sn.get("schema-id").asInt() <= maxId)
-                sn.put("schema-id", maxId + 1)
-              schemas.add(sn)
-              lastAddedSchemaId = sn.get("schema-id").asInt()
-              // advance the column-id high-water mark past every id the
-              // new schema allocated (ids of DROPPED columns must never
-              // be reused — old data files still carry them)
-              Option(u.get("last-column-id")).filter(!_.isNull).foreach { v =>
-                md.put("last-column-id",
-                  math.max(md.get("last-column-id").asLong(), v.asLong()))
-                ()
-              }
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "set-current-schema" =>
-              val id = u.get("schema-id").asInt()
-              val target = if (id == -1) lastAddedSchemaId else id
-              var known = false
-              md.withArray[ArrayNode]("schemas").forEach(x =>
-                known ||= x.get("schema-id").asInt() == target)
-              if (!known) throw new IllegalArgumentException(
-                s"set-current-schema: schema-id $target not in metadata")
-              md.put("current-schema-id", target)
-              ()
-            case "upgrade-format-version" =>
-              val target = u.get("format-version").asInt()
-              val cur = md.get("format-version").asInt()
-              if (target < cur) throw new IllegalArgumentException(
-                s"cannot downgrade format-version $cur -> $target")
-              md.put("format-version", target)
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "add-spec" =>
-              val sn = u.get("spec").deepCopy[ObjectNode]()
-              val specs = md.withArray[ArrayNode]("partition-specs")
-              // the server owns spec-id assignment on conflict (the
-              // add-schema rule)
-              var maxId = -1
-              specs.forEach(x => maxId = math.max(maxId, x.get("spec-id").asInt()))
-              if (sn.get("spec-id").asInt() <= maxId)
-                sn.put("spec-id", maxId + 1)
-              specs.add(sn)
-              lastAddedSpecId = sn.get("spec-id").asInt()
-              // advance the partition-field-id high-water mark (dropped
-              // fields' ids must never be reused — old manifests carry them)
-              var maxField =
-                Option(md.get("last-partition-id")).map(_.asInt()).getOrElse(999)
-              sn.get("fields").forEach(f =>
-                maxField = math.max(maxField, f.get("field-id").asInt()))
-              md.put("last-partition-id", maxField)
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "set-default-spec" =>
-              val id0 = u.get("spec-id").asInt()
-              val target = if (id0 == -1) lastAddedSpecId else id0
-              var known = false
-              md.withArray[ArrayNode]("partition-specs").forEach(x =>
-                known ||= x.get("spec-id").asInt() == target)
-              if (!known) throw new IllegalArgumentException(
-                s"set-default-spec: spec-id $target not in metadata")
-              md.put("default-spec-id", target)
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "add-sort-order" =>
-              val on = u.get("sort-order").deepCopy[ObjectNode]()
-              val orders = md.withArray[ArrayNode]("sort-orders")
-              var maxId = -1
-              orders.forEach(x => maxId =
-                math.max(maxId, x.get("order-id").asInt()))
-              if (on.get("order-id").asInt() <= maxId)
-                on.put("order-id", maxId + 1)
-              orders.add(on)
-              lastAddedSortOrderId = on.get("order-id").asInt()
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case "set-default-sort-order" =>
-              val id0 = u.get("sort-order-id").asInt()
-              val target = if (id0 == -1) lastAddedSortOrderId else id0
-              var known = false
-              md.withArray[ArrayNode]("sort-orders").forEach(x =>
-                known ||= x.get("order-id").asInt() == target)
-              if (!known) throw new IllegalArgumentException(
-                s"set-default-sort-order: order-id $target not in metadata")
-              md.put("default-sort-order-id", target)
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            // statistics registration: replace any entry for the same
-            // snapshot, keep others (the spec's merge rule)
-            case "set-statistics" | "set-partition-statistics" =>
-              val field = if (u.get("action").asText() == "set-statistics")
-                "statistics" else "partition-statistics"
-              val entry = u.get(field)
-              val sid = entry.get("snapshot-id").asLong()
-              val kept = mapper.createArrayNode()
-              Option(md.get(field)).collect { case a: ArrayNode => a }
-                .foreach(_.forEach { n =>
-                  if (n.get("snapshot-id").asLong() != sid) kept.add(n): Unit
-                })
-              kept.add(entry)
-              md.set[com.fasterxml.jackson.databind.JsonNode](field, kept)
-              md.put("last-updated-ms", System.currentTimeMillis())
-              ()
-            case other => throw new IllegalArgumentException(s"unknown update $other")
-          }
-        })
   }
 
   private def viewResponse(ns: String, v: String, md: ObjectNode): String = {

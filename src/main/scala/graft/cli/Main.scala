@@ -92,21 +92,15 @@ object Main {
         println(s"registered $id -> ${t.metadataLocation}")
       case "rollback" :: id :: snap :: Nil =>
         val snapId = snap.toLongOption.getOrElse(die(s"invalid snapshot id: $snap"))
-        if (isLocal(id))
-          graft.spark.TableWriter.rollbackTo(IcebergTables.load(id), snapId)
-        else graft.spark.TableWriter.rollbackToRest(restCatalog(cfg),
-          id.split('.').toSeq, snapId)
+        graft.spark.TableWriter.rollbackTo(table(cfg, id), snapId)
         println(s"rolled back $id to $snap")
       case "expire" :: id :: olderThan :: rest =>
         val olderMs = olderThan.toLongOption.getOrElse(
           die(s"invalid timestamp (ms): $olderThan"))
         val retain = rest.headOption.map(r =>
           r.toIntOption.getOrElse(die(s"invalid retain count: $r"))).getOrElse(1)
-        if (isLocal(id))
-          graft.spark.TableWriter.expireSnapshots(IcebergTables.load(id),
-            olderMs, retain, deleteFiles = true)
-        else graft.spark.TableWriter.expireSnapshotsRest(restCatalog(cfg),
-          id.split('.').toSeq, olderMs, retain, deleteFiles = true)
+        graft.spark.TableWriter.expireSnapshots(table(cfg, id), olderMs, retain,
+          deleteFiles = true)
         println(s"expired snapshots of $id older than $olderThan (retain $retain)")
       case "rewrite-manifests" :: id :: Nil =>
         requireLocal(id)
@@ -316,32 +310,25 @@ object Main {
     case _ => die("this verb requires a REST catalog for ns.table identifiers")
   }
 
-  /** Catalog-table commits go through the REST `updateTable` route, pinned
-    * to the loaded table's uuid (409 → commit conflict). */
-  private def restCommit(cfg: Config, id: String, set: Map[String, String],
-                         remove: Seq[String]): Unit = {
-    val cat = catalog(cfg) match {
-      case r: RestCatalog => r
-      case _ => die("properties mutation requires a REST catalog")
+  /** A handle on `id` bound to its catalog of record: a table path, or a
+    * `ns.table` identifier whose commits go through the REST `updateTable`
+    * route. */
+  private def table(cfg: Config, id: String): graft.spark.IcebergTable =
+    if (isLocal(id)) IcebergTables.load(id)
+    else {
+      val rc = restCatalog(cfg)
+      graft.spark.TableWriter.restTableOf(rc.loadTable(id.split('.').toSeq), rc)
     }
-    val ident = id.split('.').toSeq
-    val loaded = cat.loadTable(ident)
-    cat.commitTableProperties(ident, loaded.metadata.tableUuid, set, remove)
-  }
 
   private def setProperty(cfg: Config, id: String, key: String, value: String): Unit = {
-    if (isLocal(id))
-      graft.spark.TableWriter.updateProperties(IcebergTables.load(id), Map(key -> value))
-    else restCommit(cfg, id, Map(key -> value), Nil)
+    graft.spark.TableWriter.updateProperties(table(cfg, id), Map(key -> value))
     println(s"set $key on $id")
   }
 
   private def removeProperty(cfg: Config, id: String, key: String): Unit = {
-    if (isLocal(id)) {
-      val t = IcebergTables.load(id)
-      if (!t.properties.contains(key)) die(s"property $key not found")
-      graft.spark.TableWriter.updateProperties(t, Map.empty, Seq(key))
-    } else restCommit(cfg, id, Map.empty, Seq(key))
+    val t = table(cfg, id)
+    if (!t.properties.contains(key)) die(s"property $key not found")
+    graft.spark.TableWriter.updateProperties(t, Map.empty, Seq(key))
     println(s"removed $key from $id")
   }
 

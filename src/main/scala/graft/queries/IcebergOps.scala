@@ -1248,9 +1248,9 @@ object IcebergOps {
   /** SQL DML on a REST-cataloged table (ice34): INSERT INTO, key-equality
     * DELETE, copy-on-write UPDATE, and MERGE each run as plain Spark SQL
     * against a GraftCatalog bound to a LIVE REST server — every commit
-    * rides the server's update actions (TableWriter.appendRest /
-    * deleteEqualityRest / replaceFilesRest with the scanned head pinned),
-    * never metadata files behind it. The reference PANICS on any REST
+    * rides the server's update actions through the table handle's
+    * [[graft.spark.RestTableOperations]] (the scanned head pinned), never
+    * metadata files behind it. The reference PANICS on any REST
     * commit (rest.go:418-424); here the full SQL DML surface is the
     * client. Provisioned once per sf dir; the server's final metadata is
     * then materialized locally so bench iterations and the oracle compare

@@ -78,6 +78,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         tableDir(Identifier.of(parts.init, parts.last)).getPath
       } else
         resolvedTableLocation(tableDir(Identifier.of(parts.init, parts.last)))
+    }, resolveTable = tableRef => {
+      // a REST-cataloged table's handle commits through the server's
+      // update actions, never by rewriting metadata files behind it
+      val parts = tableRef.split('.')
+      val dir = tableDir(Identifier.of(parts.init, parts.last))
+      val onRest = if (isTable(dir)) None else rest.flatMap { rc =>
+        try Some(restHandle(rc, parts.toSeq, rc.loadTable(parts.toSeq)))
+        catch { case _: graft.catalog.CatalogError => None }
+      }
+      onRest.foreach { _ =>
+        // the procedure may commit through the server: drop any cached
+        // metadata for this ident so subsequent reads see the commit
+        invalidateRest(parts.toSeq)
+        touchedRest.add(parts.toSeq)
+      }
+      onRest.getOrElse(IcebergTables.load(resolvedTableLocation(dir)))
     }, resolveRest = tableRef => {
       // REST-plane routing: only for refs that are NOT local path tables —
       // a maintenance CALL on a REST-cataloged table must commit through
@@ -196,20 +212,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def restIdent(ident: Identifier): Seq[String] =
     ident.namespace().toSeq :+ ident.name()
 
+  /** A handle on a REST-cataloged table that commits through `rc`; each
+    * landed commit drops this catalog's metadata-cache entry, so a write
+    * through THIS catalog is visible immediately (the CachingCatalog
+    * contract). */
+  private def restHandle(rc: graft.catalog.RestCatalog, id: Seq[String],
+                         loaded: graft.catalog.LoadedTable): IcebergTable =
+    TableWriter.restTableOf(loaded, rc, afterCommit = () => invalidateRest(id))
+
   /** REST-plane table resolution: a SELECT over a REST-cataloged table
     * rides the full scan stack, and SQL DML (INSERT / INSERT OVERWRITE /
     * DELETE / UPDATE / MERGE / TRUNCATE) commits THROUGH the server's
-    * update actions via the [[RestDmlBinding]] — never metadata files
-    * behind its back. The binding's afterCommit drops this catalog's
-    * metadata-cache entry, so a SQL write through THIS catalog is visible
-    * immediately (the CachingCatalog contract the procedures honor). */
+    * update actions via the handle's [[RestTableOperations]] — never
+    * metadata files behind its back. */
   private def restLoadTable(ident: Identifier): Option[Table] =
     rest.flatMap { rc =>
       val id = restIdent(ident)
-      try Some(new GraftSparkTable(
-        TableWriter.restTableOf(restLoad(rc, id), rc),
-        restDml = Some(RestDmlBinding(rc, id,
-          afterCommit = () => invalidateRest(id)))))
+      try Some(new GraftSparkTable(restHandle(rc, id, restLoad(rc, id))))
       catch {
         case _: graft.catalog.NoSuchTableError |
              _: graft.catalog.NoSuchNamespaceError => None
@@ -464,10 +483,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * snapshots projecting their own schema; nested fields carry ids the
     * same as top-level ones, so the same machinery covers both. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    // REST-cataloged table (no local metadata): evolve through the server
-    if (!isTable(tableDir(ident)) && rest.isDefined)
-      return restAlterTable(ident, changes)
-    val (t, setProps, unsetProps) = applyAlterChanges(loadIce(ident), changes)
+    // a REST-cataloged table (no local metadata) evolves through the
+    // server: its handle commits each change as the spec's update actions
+    val table =
+      if (!isTable(tableDir(ident)) && rest.isDefined)
+        restHandle(rest.get, restIdent(ident), rest.get.loadTable(restIdent(ident)))
+      else loadIce(ident)
+    val (t, setProps, unsetProps) = applyAlterChanges(table, changes)
     val t2 =
       if (setProps.nonEmpty || unsetProps.nonEmpty)
         TableWriter.updateProperties(t, setProps, unsetProps)
@@ -475,71 +497,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     new GraftSparkTable(t2)
   }
 
-  /** SQL ALTER TABLE on a REST-cataloged table: schema evolution runs the
-    * SAME evolution functions the local plane uses — against a local
-    * SCRATCH copy of the loaded metadata (metadata-only; nothing under the
-    * real table location is touched) — and only the RESULT commits, as the
-    * spec's `add-schema` + `set-current-schema(-1)` update actions guarded
-    * by `assert-current-schema-id` (two racing ALTERs based on the same
-    * schema cannot both land). Property changes ride the same commit as
-    * `set-properties`/`remove-properties`. `format-version` is not a
-    * free-form property (same rule as the local plane): it routes through
-    * [[TableWriter.upgradeFormatVersionRest]] — the spec's
-    * `upgrade-format-version` action, plus the V3 DV re-home snapshot in
-    * the SAME commit when live parquet tombstones exist. */
-  private def restAlterTable(ident: Identifier,
-                             changes: Seq[TableChange]): Table = {
-    val rc = rest.get
-    val id = restIdent(ident)
-    val fv = changes.collect {
-      case s: TableChange.SetProperty if s.property() == "format-version" => s }
-    fv.foreach { s =>
-      val target = s.value().toIntOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"format-version must be an integer, got '${s.value()}'"))
-      TableWriter.upgradeFormatVersionRest(rc, id, rc.loadTable(id),
-        org.apache.spark.sql.SparkSession.active, target)
-      invalidateRest(id)
-    }
-    val remaining = changes.filterNot(c => fv.exists(_ eq c))
-    if (remaining.isEmpty)
-      return restLoadTable(ident).getOrElse(
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
-    val loaded = rc.loadTable(id)
-    val md = loaded.metadata
-    val scratch = java.nio.file.Files.createTempDirectory("graft_rest_alter").toFile
-    val metaDir = new File(scratch, "metadata"); metaDir.mkdirs()
-    java.nio.file.Files.writeString(
-      new File(metaDir, "v1.metadata.json").toPath, md.toJson)
-    val (t, setProps, unsetProps) =
-      applyAlterChanges(IcebergTables.load(scratch.getPath), remaining)
-    val updates = Vector.newBuilder[graft.catalog.TableUpdate]
-    val schemaChanged = t.metadata.currentSchemaId != md.currentSchemaId ||
-      t.metadata.currentSchema != md.currentSchema
-    if (schemaChanged) {
-      updates += graft.catalog.AddSchema(t.metadata.currentSchema,
-        Some(t.metadata.lastColumnId))
-      updates += graft.catalog.SetCurrentSchema(-1)
-    }
-    if (setProps.nonEmpty) updates += graft.catalog.SetProperties(setProps)
-    if (unsetProps.nonEmpty) updates += graft.catalog.RemoveProperties(unsetProps)
-    val ups = updates.result()
-    if (ups.nonEmpty) {
-      val reqs = Seq(graft.catalog.AssertTableUuid(md.tableUuid)) ++
-        (if (schemaChanged)
-           Seq(graft.catalog.AssertCurrentSchemaId(md.currentSchemaId))
-         else Nil)
-      rc.commitTable(id, reqs, ups)
-      invalidateRest(id)
-    }
-    restLoadTable(ident).getOrElse(
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
-  }
-
   /** Apply Spark TableChanges to `t` through the TableWriter evolution
-    * functions; property set/unset are RETURNED, not applied (the local
-    * path folds them into one updateProperties commit, the REST path into
-    * the server-side update set). */
+    * functions; property set/unset are RETURNED, not applied (they fold
+    * into one updateProperties commit). */
   private def applyAlterChanges(t0: IcebergTable, changes: Seq[TableChange])
       : (IcebergTable, Map[String, String], Seq[String]) = {
     var t = t0

@@ -32,16 +32,23 @@ final class IcebergTable(val location: String, val metadataPath: String,
                          /** Scan telemetry (the REST spec's `metrics`
                            * route), wired like [[remotePlanner]]; reports
                            * are fire-and-forget. */
-                         val scanMetricsReporter: Option[graft.catalog.ScanMetricsReporter] = None) {
+                         val scanMetricsReporter: Option[graft.catalog.ScanMetricsReporter] = None,
+                         /** Binds the handle's commit target: file-backed
+                           * by default, REST via [[TableWriter.restTableOf]]. */
+                         bindOps: IcebergTable => TableOperations =
+                           new FileTableOperations(_)) {
+
+  /** Where this handle's commits land (see [[TableOperations]]). */
+  lazy val ops: TableOperations = bindOps(this)
 
   /** Effective IO properties: the explicit merged map when provided,
     * else the table's own properties. */
   def effectiveIoProps: Map[String, String] =
     if (ioProps.nonEmpty) ioProps else metadata.properties
 
-  /** Metadata version this table was loaded at — commits pin their CAS to
-    * `loadedVersion + 1`, so a writer holding stale state conflicts instead
-    * of silently dropping a concurrent commit. */
+  /** Metadata version this table was loaded at — file-backed commits pin
+    * their CAS to `loadedVersion + 1`, so a writer holding stale state
+    * conflicts instead of silently dropping a concurrent commit. */
   def loadedVersion: Int =
     "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(metadataPath)
       .map(_.group(1).toInt).getOrElse(0)
@@ -53,7 +60,7 @@ final class IcebergTable(val location: String, val metadataPath: String,
   def currentSnapshot: Option[Snapshot] = metadata.currentSnapshot
 
   /** Re-load metadata from the catalog/file system (table.go:100-109). */
-  def refresh(): IcebergTable = IcebergTables.load(location)
+  def refresh(): IcebergTable = ops.current()
 
   def newScan(filter: BooleanExpression = AlwaysTrue,
               selected: Seq[String] = Nil,
@@ -517,11 +524,15 @@ object IcebergTables {
     val metadataFile =
       if (p.endsWith(".json")) new File(p)
       else resolveLatest(new File(p))
-    val md = parseCached(metadataFile)
     val loc = if (p.endsWith(".json")) metadataFile.getParentFile.getParentFile.getPath
       else p
-    new IcebergTable(loc, metadataFile.getPath, md, LocalFileIO)
+    loadFile(loc, metadataFile)
   }
+
+  /** The table at `location` as of one specific metadata file. */
+  private[spark] def loadFile(location: String, metadataFile: File): IcebergTable =
+    new IcebergTable(location, metadataFile.getPath, parseCached(metadataFile),
+      LocalFileIO)
 
   private def resolveLatest(tableDir: File): File = {
     val metaDir = new File(tableDir, "metadata")

@@ -95,37 +95,20 @@ object GraftSparkTable {
       table.properties.get("write.wap.enabled").exists(_.equalsIgnoreCase("true")))
 }
 
-/** A table whose catalog of record is a REST server: `catalog` commits
-  * SQL DML (INSERT/DELETE/UPDATE/MERGE) through the server's update
-  * actions — never metadata files behind its back — and `afterCommit`
-  * runs once the commit lands (the owning catalog drops its metadata
-  * cache entry there, preserving the CachingCatalog contract). */
-final case class RestDmlBinding(catalog: graft.catalog.RestCatalog,
-                                identifier: Seq[String],
-                                afterCommit: () => Unit = () => ()) {
-  def load(): graft.catalog.LoadedTable = catalog.loadTable(identifier)
-}
-
 /** `pinnedSnapshotId` is set by the catalog's time-travel hooks
   * (`VERSION AS OF` / `TIMESTAMP AS OF`): the scan is pinned to that
   * snapshot and the table reports the SNAPSHOT's schema, so old reads
-  * resolve the schema they were written under. */
+  * resolve the schema they were written under. SQL writes — DML, WAP
+  * staging, mergeSchema evolution, V3 DV deltas — re-load through the
+  * handle's [[TableOperations]] and commit through them, so a
+  * REST-cataloged table commits THROUGH its server. */
 final class GraftSparkTable(table: IcebergTable,
                             pinnedSnapshotId: Option[Long] = None,
-                            readChanges: Boolean = false,
-                            // set when the table's catalog of record is a
-                            // REST server: SQL reads ride the full scan
-                            // stack, and SQL DML — including WAP staging,
-                            // mergeSchema evolution, and V3 DV deltas —
-                            // commits THROUGH the server
-                            // (TableWriter.appendRest and friends).
-                            restDml: Option[RestDmlBinding] = None) extends Table
+                            readChanges: Boolean = false) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-
-  private def restManaged: Boolean = restDml.isDefined
 
   /** SQL UPDATE / MERGE / non-pushable DELETE: copy-on-write rewrite of
     * only the affected files by default (see [[GraftRowLevelOperation]]);
@@ -156,10 +139,7 @@ final class GraftSparkTable(table: IcebergTable,
       // re-read properties at operation build: the mode may have been set
       // by an ALTER TABLE after this Table handle was resolved; for REST
       // tables the fresh state comes from the server, never location files
-      val fresh = restDml match {
-        case Some(b) => TableWriter.restTableOf(b.load())
-        case None => IcebergTables.load(table.location)
-      }
+      val fresh = table.ops.current()
       GraftSparkTable.wapStageId(fresh).foreach { id =>
         throw new UnsupportedOperationException(
           s"spark.wap.id='$id' is set and this table has " +
@@ -170,8 +150,8 @@ final class GraftSparkTable(table: IcebergTable,
       val mor = fresh.properties
         .get(modeProp).exists(_.equalsIgnoreCase("merge-on-read"))
       if (mor)
-        new GraftDeltaRowLevelOperation(fresh.location, info.command(), restDml)
-      else new GraftRowLevelOperation(fresh.location, info.command(), restDml)
+        new GraftDeltaRowLevelOperation(fresh, info.command())
+      else new GraftRowLevelOperation(fresh, info.command())
     }
 
   private def activeSchema: graft.core.Schema = pinnedSnapshotId
@@ -231,10 +211,7 @@ final class GraftSparkTable(table: IcebergTable,
           "branch — publish (fast_forward) or unset spark.wap.branch first")
     }
     val spark = org.apache.spark.sql.SparkSession.active
-    val current = restDml match {
-      case Some(b) => TableWriter.restTableOf(b.load())
-      case None => IcebergTables.load(table.location)
-    }
+    val current = table.ops.current()
     GraftSparkTable.wapStageId(current).foreach { id =>
       throw new UnsupportedOperationException(
         s"spark.wap.id='$id' is set and this table has write.wap.enabled: " +
@@ -249,23 +226,11 @@ final class GraftSparkTable(table: IcebergTable,
         val keys = spark.createDataFrame(
           java.util.Arrays.asList(
             rows.map(r => org.apache.spark.sql.Row(r: _*)): _*), keySchema)
-        restDml match {
-          case Some(b) =>
-            TableWriter.deleteEqualityRest(b.catalog, b.identifier, keys, cols)
-            b.afterCommit()
-          case None => TableWriter.deleteEquality(current, keys, cols)
-        }
+        TableWriter.deleteEquality(current, keys, cols)
       case None =>
         val expr = filters.flatMap(FilterConv.fromSparkFilter)
           .reduceOption(CoreAnd(_, _)).getOrElse(AlwaysTrue)
-        restDml match {
-          case Some(b) =>
-            TableWriter.deleteWhereRest(b.catalog, b.identifier, spark,
-              FilterConv.toColumn(expr))
-            b.afterCommit()
-          case None =>
-            TableWriter.deleteWhere(current, spark, FilterConv.toColumn(expr))
-        }
+        TableWriter.deleteWhere(current, spark, FilterConv.toColumn(expr))
     }
   }
 
@@ -299,21 +264,10 @@ final class GraftSparkTable(table: IcebergTable,
     * row). Previous data stays reachable through time travel. */
   override def truncateTable(): Boolean = {
     val spark = org.apache.spark.sql.SparkSession.active
-    restDml match {
-      case Some(b) =>
-        val schema = b.load().metadata.currentSchema
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          SchemaConv.toSparkSchema(schema))
-        TableWriter.overwriteRest(b.catalog, b.identifier, empty)
-        b.afterCommit()
-      case None =>
-        val current = IcebergTables.load(table.location)
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          SchemaConv.toSparkSchema(current.schema))
-        TableWriter.overwrite(current, empty)
-    }
+    val current = table.ops.current()
+    TableWriter.overwrite(current, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      SchemaConv.toSparkSchema(current.schema)))
     true
   }
   override def name(): String = table.location
@@ -388,10 +342,9 @@ final class GraftSparkTable(table: IcebergTable,
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(table, schema(), options, pinnedSnapshotId,
-      // streaming reads on a REST-cataloged table poll the SERVER for
-      // fresh metadata (the local listing may lag or not exist at all)
-      streamReload = restDml.map(b =>
-        () => TableWriter.restTableOf(b.load(), b.catalog)))
+      // streaming reads poll the table's catalog of record for fresh
+      // metadata (a REST table's local listing may lag or not exist)
+      streamReload = Some(() => table.ops.current()))
 
   /** Write path: the V1Write bridge hands us the source DataFrame intact, so
     * INSERT INTO / df.writeTo(...).append() reuse the same distributed
@@ -409,63 +362,10 @@ final class GraftSparkTable(table: IcebergTable,
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.V1Write {
           override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, _: Boolean) => restDml match {
-              case Some(b) =>
-                // SQL INSERT INTO / INSERT OVERWRITE on a REST-cataloged
-                // table: align against the server's fresh schema, write
-                // distributed, commit through the server's update actions
-                if (info.options().getBoolean("mergeSchema", false)) {
-                  // write-time evolution: new primitive columns commit as
-                  // add-schema actions BEFORE the append (same evolution
-                  // functions as the local path, via the scratch bridge)
-                  TableWriter.evolveSchemaRest(b.catalog, b.identifier, t0 => {
-                    var cur = t0
-                    val existing = cur.schema.fields.map(_.name).toSet
-                    data.schema.fields
-                      .filterNot(f => existing.contains(f.name)).foreach { f =>
-                        val t = SchemaConv.primitiveFromSpark(f.dataType)
-                          .getOrElse(throw new UnsupportedOperationException(
-                            s"mergeSchema supports primitive new columns; " +
-                              s"'${f.name}' is ${f.dataType.simpleString}"))
-                        cur = TableWriter.addColumnAt(cur, Seq(f.name), t)
-                      }
-                    cur
-                  })
-                  ()
-                }
-                val fresh = TableWriter.restTableOf(b.load())
-                val df = alignToTable(data, fresh)
-                (GraftSparkTable.wapStageId(fresh),
-                    GraftSparkTable.wapBranch) match {
-                  case (Some(id), Some(br)) =>
-                    throw new UnsupportedOperationException(
-                      s"both spark.wap.id='$id' and spark.wap.branch='$br' " +
-                        "are set — choose one WAP flavor (stage-commit or " +
-                        "branch staging)")
-                  case (Some(id), None) =>
-                    // same append-only rule as the local path
-                    if (overwrite) throw new UnsupportedOperationException(
-                      s"spark.wap.id='$id' is set and this table has " +
-                        "write.wap.enabled: INSERT OVERWRITE/truncate cannot " +
-                        "be staged (unset spark.wap.id, or rewrite on main)")
-                    TableWriter.stageWapAppendRest(b.catalog, b.identifier, df, id)
-                  case (None, Some(br)) =>
-                    if (overwrite) throw new UnsupportedOperationException(
-                      s"spark.wap.branch='$br' is set: INSERT OVERWRITE/" +
-                        "truncate cannot be staged on a branch (unset " +
-                        "spark.wap.branch, or publish and rewrite on main)")
-                    TableWriter.appendToBranchRest(b.catalog, b.identifier, df, br)
-                  case (None, None) =>
-                    if (overwrite)
-                      TableWriter.overwriteRest(b.catalog, b.identifier, df)
-                    else TableWriter.appendRest(b.catalog, b.identifier, df)
-                }
-                b.afterCommit()
-              case None => localInsert(data)
-            }
+            (data: org.apache.spark.sql.DataFrame, _: Boolean) => insert(data)
 
-          private def localInsert(data: org.apache.spark.sql.DataFrame): Unit = {
-              var current = IcebergTables.load(table.location) // fresh metadata
+          private def insert(data: org.apache.spark.sql.DataFrame): Unit = {
+              var current = table.ops.current() // fresh metadata
               val mergeSchema = info.options().getBoolean("mergeSchema", false)
               if (mergeSchema) {
                 // schema evolution on write: new primitive columns in the
@@ -515,8 +415,8 @@ final class GraftSparkTable(table: IcebergTable,
             }
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            new graft.streaming.GraftStreamingWrite(table.location, info.schema(),
-              info.queryId(), restDml = restDml)
+            new graft.streaming.GraftStreamingWrite(table, info.schema(),
+              info.queryId())
         }
     }
   }
@@ -1222,15 +1122,6 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     val mfs = tasks.map(_.manifestPath)
     if (mfs.nonEmpty && mfs.forall(_.nonEmpty)) mfs.toSet else Set.empty
   }
-
-  /** Metadata version this scan read — CoW commits pin their CAS to it so a
-    * concurrent commit between scan and rewrite conflicts loudly. */
-  private[spark] def scannedVersion: Int = table.loadedVersion
-
-  /** Snapshot this scan read — the base of snapshot-isolation validation
-    * for merge-on-read row-level commits. */
-  private[spark] def scannedSnapshotId: Option[Long] =
-    snapshotId.orElse(table.currentSnapshot.map(_.snapshotId))
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = {

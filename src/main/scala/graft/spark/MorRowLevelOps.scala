@@ -33,18 +33,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference has no write path at all (rest.go:418-424 panics on
   * commit); both modes and the mode property itself follow the public
   * Iceberg spec + Spark DSv2 row-level API. */
-final class GraftDeltaRowLevelOperation(location: String,
-                                        cmd: RowLevelOperation.Command,
-                                        restDml: Option[RestDmlBinding] = None)
+final class GraftDeltaRowLevelOperation(table: IcebergTable,
+                                        cmd: RowLevelOperation.Command)
     extends RowLevelOperation with SupportsDelta {
 
-  @volatile private var capturedScan: GraftScan = _
-  // REST: the load the scan's row positions came from — the delta commit
-  // pins the server's main ref to its head (serializable semantics)
-  @volatile private var capturedLoaded: graft.catalog.LoadedTable = _
+  // the handle the scan's row positions came from — the delta commit is
+  // pinned to it
+  @volatile private var scanned: IcebergTable = _
 
   override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"icegopher $cmd $location [merge-on-read]"
+  override def description(): String =
+    s"icegopher $cmd ${table.location} [merge-on-read]"
 
   /** The tombstone coordinate: which file, which row in it. */
   override def rowId(): Array[NamedReference] = Array(
@@ -56,26 +55,9 @@ final class GraftDeltaRowLevelOperation(location: String,
   override def requiredMetadataAttributes(): Array[NamedReference] = Array.empty
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val table = restDml match {
-      case Some(b) =>
-        val loaded = b.load()
-        capturedLoaded = loaded
-        TableWriter.restTableOf(loaded)
-      case None => IcebergTables.load(location)
-    }
-    val inner = new GraftScanBuilder(table,
-      SchemaConv.toSparkSchema(table.schema), options)
-    // capture the built scan: its metadata version pins the commit's CAS
-    new ScanBuilder
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        inner.pruneColumns(requiredSchema)
-      override def build(): Scan = {
-        val scan = inner.build().asInstanceOf[GraftScan]
-        capturedScan = scan
-        scan
-      }
-    }
+    val fresh = table.ops.current()
+    scanned = fresh
+    new GraftScanBuilder(fresh, SchemaConv.toSparkSchema(fresh.schema), options)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
@@ -91,33 +73,24 @@ final class GraftDeltaRowLevelOperation(location: String,
           case RowLevelOperation.Command.UPDATE => "write.update.isolation-level"
           case _ => "write.merge.isolation-level"
         }
-        val isolation = restDml.map(b => b.load().metadata.properties)
-          .getOrElse(IcebergTables.load(location).properties)
-          .getOrElse(isolationProp, "serializable")
-        new GraftDeltaWrite(location, info.schema(), rowIdSchema,
+        val isolation = table.properties.getOrElse(isolationProp, "serializable")
+        new GraftDeltaWrite(table.location, info.schema(), rowIdSchema,
           () => {
-            require(capturedScan != null, "row-level write before scan was planned")
-            (capturedScan.scannedVersion, capturedScan.scannedSnapshotId)
-          }, isolation,
-          restCommit = restDml.map(b => (b, () => {
-            require(capturedLoaded != null,
-              "row-level REST write before scan was planned")
-            capturedLoaded
-          })))
+            require(scanned != null, "row-level write before scan was planned")
+            scanned
+          }, isolation)
       }
     }
 }
 
 /** V2 delta batch write: tasks write positional-tombstone parquet +
   * ordinary data files; the driver commit lands both in ONE snapshot,
-  * pinned to the metadata version the scan read (a concurrent commit
-  * between scan and write would invalidate the captured row positions). */
+  * pinned to the handle the scan read (a concurrent commit between scan
+  * and write would invalidate the captured row positions). */
 final class GraftDeltaWrite(location: String, dataSchema: StructType,
                             rowIdSchema: StructType,
-                            scannedBase: () => (Int, Option[Long]),
-                            isolation: String = "serializable",
-                            restCommit: Option[(RestDmlBinding,
-                              () => graft.catalog.LoadedTable)] = None)
+                            scanned: () => IcebergTable,
+                            isolation: String = "serializable")
     extends DeltaWrite with DeltaBatchWrite {
 
   private val writeDir =
@@ -127,10 +100,7 @@ final class GraftDeltaWrite(location: String, dataSchema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     writeDir.mkdirs()
-    val table = restCommit match {
-      case Some((_, loadedAtScan)) => TableWriter.restTableOf(loadedAtScan())
-      case None => IcebergTables.load(location)
-    }
+    val table = scanned()
     val partFields = table.spec.fields.map { pf =>
       val src = table.schema.findFieldById(pf.sourceId).getOrElse(
         throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
@@ -149,31 +119,10 @@ final class GraftDeltaWrite(location: String, dataSchema: StructType,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val data = messages.collect { case m: GraftDeltaCommit => m.dataFiles }.flatten
     val dels = messages.collect { case m: GraftDeltaCommit => m.deleteFiles }.flatten
-    restCommit match {
-      case Some((b, loadedAtScan)) =>
-        val loaded = loadedAtScan()
-        // same fork as the local path: V3 re-homes tombstones into DVs
-        if (loaded.metadata.formatVersion >= 3)
-          TableWriter.commitDeltaDvRest(b.catalog, b.identifier, loaded,
-            data.toSeq, dels.toSeq)
-        else
-          TableWriter.commitDeltaRest(b.catalog, b.identifier, loaded,
-            data.toSeq, dels.toSeq)
-        b.afterCommit()
-      case None =>
-        val (version, snapId) = scannedBase()
-        // format-version 3 forbids positional delete FILES (readers ignore
-        // them for DV-bearing files — the delete would silently drop): the
-        // task tombstones re-home into deletion vectors at commit
-        if (IcebergTables.load(location).metadata.formatVersion >= 3)
-          TableWriter.commitDeltaDv(location, data.toSeq, dels.toSeq,
-            expectedVersion = Some(version), scannedSnapshotId = snapId,
-            isolation = isolation)
-        else
-          TableWriter.commitDelta(location, data.toSeq, dels.toSeq,
-            expectedVersion = Some(version), scannedSnapshotId = snapId,
-            isolation = isolation)
-    }
+    // format-version 3 forbids positional delete FILES (readers ignore
+    // them for DV-bearing files — the delete would silently drop): there
+    // the task tombstones re-home into deletion vectors at commit
+    TableWriter.commitDelta(scanned(), data.toSeq, dels.toSeq, isolation)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -67,43 +67,20 @@ object GraftProcedures {
     }
 
   def load(name: String, resolveLocation: String => String,
+           resolveTable: String => IcebergTable,
            resolveRest: String =>
              Option[(graft.catalog.RestCatalog, Seq[String])] = _ => None)
       : UnboundProcedure = {
-    // Resolve a ref for a DATA-REWRITING procedure (compact and friends):
-    // a REST table gets a read handle over a fresh server load PLUS the
-    // commit context (catalog, ident, basedOn) the rewrite pins its
-    // replace commit to — maintenance must commit through the server,
-    // never rewrite metadata files behind it.
-    def rewriteCtx(ref: String): (IcebergTable,
-        Option[(graft.catalog.RestCatalog, Seq[String],
-          graft.catalog.LoadedTable)]) =
-      resolveRest(ref) match {
-        case Some((rc, id)) =>
-          val loaded = rc.loadTable(id)
-          (TableWriter.restTableOf(loaded, rc), Some((rc, id, loaded)))
-        case None =>
-          (IcebergTables.load(resolveLocation(ref)), None)
-      }
     name match {
       case "rollback_to_snapshot" => proc(name,
         Seq("table" -> StringType, "snapshot_id" -> LongType),
         StructType(Seq(
           StructField("previous_snapshot_id", LongType),
           StructField("current_snapshot_id", LongType, nullable = false)))) { in =>
-        val ref = in.getUTF8String(0).toString
-        resolveRest(ref) match {
-          case Some((rc, ident)) =>
-            val prev = rc.loadTable(ident).metadata.currentSnapshotId
-            val out = TableWriter.rollbackToRest(rc, ident, in.getLong(1))
-            Array[Any](prev.map(Long.box).orNull,
-              out.metadata.currentSnapshotId.get)
-          case None =>
-            val table = IcebergTables.load(resolveLocation(ref))
-            val prev = table.currentSnapshot.map(_.snapshotId)
-            val out = TableWriter.rollbackTo(table, in.getLong(1))
-            Array[Any](prev.orNull, out.currentSnapshot.get.snapshotId)
-        }
+        val table = resolveTable(in.getUTF8String(0).toString)
+        val prev = table.currentSnapshot.map(_.snapshotId)
+        val out = TableWriter.rollbackTo(table, in.getLong(1))
+        Array[Any](prev.orNull, out.currentSnapshot.get.snapshotId)
       }
       case "expire_snapshots" => proc(name,
         Seq("table" -> StringType, "older_than_ms" -> LongType,
@@ -111,25 +88,12 @@ object GraftProcedures {
         StructType(Seq(
           StructField("expired_snapshots", IntegerType, nullable = false),
           StructField("remaining_snapshots", IntegerType, nullable = false)))) { in =>
-        val ref = in.getUTF8String(0).toString
-        resolveRest(ref) match {
-          // REST-cataloged table: expiry commits remove-snapshots /
-          // remove-snapshot-ref actions through the server (same
-          // per-branch retention math — TableWriter.computeExpiry)
-          case Some((rc, ident)) =>
-            val before = rc.loadTable(ident).metadata.snapshots.size
-            val out = TableWriter.expireSnapshotsRest(rc, ident,
-              in.getLong(1), retainLast = in.getInt(2), deleteFiles = true)
-            val after = out.metadata.snapshots.size
-            Array[Any](before - after, after)
-          case None =>
-            val table = IcebergTables.load(resolveLocation(ref))
-            val before = table.metadata.snapshots.size
-            val out = TableWriter.expireSnapshots(table, in.getLong(1),
-              retainLast = in.getInt(2), deleteFiles = true)
-            val after = out.metadata.snapshots.size
-            Array[Any](before - after, after)
-        }
+        val table = resolveTable(in.getUTF8String(0).toString)
+        val before = table.metadata.snapshots.size
+        val out = TableWriter.expireSnapshots(table, in.getLong(1),
+          retainLast = in.getInt(2), deleteFiles = true)
+        val after = out.metadata.snapshots.size
+        Array[Any](before - after, after)
       }
       case "compact" => proc(name,
         Seq("table" -> StringType, "target_files" -> IntegerType,
@@ -143,7 +107,7 @@ object GraftProcedures {
           "min_file_size_bytes" -> "CAST(NULL AS BIGINT)",
           "delete_file_threshold" -> "CAST(NULL AS INT)")) { in =>
         val spark = org.apache.spark.sql.SparkSession.active
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         // a predicate scopes the rewrite to the files the planner can't
         // prove disjoint from it — an inexpressible predicate REFUSES
         // (parsePredicate throws) rather than widening to the whole table
@@ -157,8 +121,7 @@ object GraftProcedures {
           minSize, delThreshold).size
         val before = table.newScan().planFiles().size
         val out = TableWriter.compact(table, spark, in.getInt(1), where = where,
-          minFileSizeBytes = minSize, deleteFileThreshold = delThreshold,
-          restCommit = restCtx)
+          minFileSizeBytes = minSize, deleteFileThreshold = delThreshold)
         Array[Any](before, out.newScan().planFiles().size, rewritten)
       }
       case "rewrite_sorted" => proc(name,
@@ -168,14 +131,13 @@ object GraftProcedures {
           StructField("files_before", IntegerType, nullable = false),
           StructField("files_after", IntegerType, nullable = false),
           StructField("sorted_by", StringType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val cols = in.getUTF8String(2).toString.split(',').map(_.trim)
           .filter(_.nonEmpty).toSeq
         require(cols.nonEmpty, "rewrite_sorted needs at least one sort column")
         val before = table.newScan().planFiles().size
         val out = TableWriter.compact(table,
-          org.apache.spark.sql.SparkSession.active, in.getInt(1), sortBy = cols,
-          restCommit = restCtx)
+          org.apache.spark.sql.SparkSession.active, in.getInt(1), sortBy = cols)
         Array[Any](before, out.newScan().planFiles().size, cols.mkString(","))
       }
       case "compute_table_stats" => proc(name,
@@ -183,11 +145,11 @@ object GraftProcedures {
         StructType(Seq(
           StructField("statistics_path", StringType, nullable = false),
           StructField("columns_analyzed", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val cols = Option(in.getUTF8String(1)).map(_.toString).getOrElse("")
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         val (out, n) = TableWriter.computeTableStats(table,
-          org.apache.spark.sql.SparkSession.active, cols, restCommit = restCtx)
+          org.apache.spark.sql.SparkSession.active, cols)
         Array[Any](UTF8String.fromString(
           out.metadata.statisticsFiles.find(
             _.snapshotId == out.currentSnapshot.get.snapshotId)
@@ -198,9 +160,9 @@ object GraftProcedures {
         StructType(Seq(
           StructField("statistics_path", StringType, nullable = false),
           StructField("partitions", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val (out, n) = TableWriter.computePartitionStats(table,
-          org.apache.spark.sql.SparkSession.active, restCommit = restCtx)
+          org.apache.spark.sql.SparkSession.active)
         Array[Any](UTF8String.fromString(
           out.metadata.partitionStatisticsFiles.find(
             _.snapshotId == out.currentSnapshot.get.snapshotId)
@@ -215,11 +177,7 @@ object GraftProcedures {
         // reads the SERVER's current metadata to compute reachability —
         // sweeping against a stale local metadata.json would delete files
         // a newer server-side commit references
-        val table = resolveRest(in.getUTF8String(0).toString) match {
-          case Some((rc, ident)) => TableWriter.restTableOf(rc.loadTable(ident))
-          case None =>
-            IcebergTables.load(resolveLocation(in.getUTF8String(0).toString))
-        }
+        val table = resolveTable(in.getUTF8String(0).toString)
         val (n, bytes) = TableWriter.removeOrphanFiles(table, in.getLong(1))
         Array[Any](n, bytes)
       }
@@ -229,10 +187,10 @@ object GraftProcedures {
         StructType(Seq(
           StructField("spec_id", IntegerType, nullable = false),
           StructField("field_name", StringType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val t = graft.core.Transform.parse(in.getUTF8String(2).toString)
         val out = TableWriter.addPartitionField(table,
-          in.getUTF8String(1).toString, t, restCommit = restCtx)
+          in.getUTF8String(1).toString, t)
         Array[Any](out.spec.specId, out.spec.fields.last.name)
       }
       case "drop_partition_field" => proc(name,
@@ -240,9 +198,9 @@ object GraftProcedures {
         StructType(Seq(
           StructField("spec_id", IntegerType, nullable = false),
           StructField("remaining_fields", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val out = TableWriter.dropPartitionField(table,
-          in.getUTF8String(1).toString, restCommit = restCtx)
+          in.getUTF8String(1).toString)
         Array[Any](out.spec.specId, out.spec.fields.size)
       }
       case "create_branch" | "create_tag" => proc(name,
@@ -263,23 +221,11 @@ object GraftProcedures {
         // snapshot_id 0 → current snapshot
         val snap = in.getLong(2) match { case 0L => None; case id => Some(id) }
         val refName = in.getUTF8String(1).toString
-        val tableRef = in.getUTF8String(0).toString
-        val refs = resolveRest(tableRef) match {
-          case Some((rc, ident)) =>
-            TableWriter.createRefRest(rc, ident, refName, refType, snap,
-              maxRefAgeMs = Some(in.getLong(5)).filter(_ > 0),
-              minSnapshotsToKeep = Some(in.getInt(3)).filter(_ > 0),
-              maxSnapshotAgeMs = Some(in.getLong(4)).filter(_ > 0))
-              .metadata.refs
-          case None =>
-            TableWriter.createRef(
-              IcebergTables.load(resolveLocation(tableRef)), refName,
-              refType, snap,
-              maxRefAgeMs = Some(in.getLong(5)).filter(_ > 0),
-              minSnapshotsToKeep = Some(in.getInt(3)).filter(_ > 0),
-              maxSnapshotAgeMs = Some(in.getLong(4)).filter(_ > 0))
-              .metadata.refs
-        }
+        val refs = TableWriter.createRef(
+          resolveTable(in.getUTF8String(0).toString), refName, refType, snap,
+          maxRefAgeMs = Some(in.getLong(5)).filter(_ > 0),
+          minSnapshotsToKeep = Some(in.getInt(3)).filter(_ > 0),
+          maxSnapshotAgeMs = Some(in.getLong(4)).filter(_ > 0)).metadata.refs
         Array[Any](in.getUTF8String(1), refs(refName).snapshotId)
       }
       case "set_branch_retention" => proc(name,
@@ -295,15 +241,9 @@ object GraftProcedures {
         val refName = in.getUTF8String(1).toString
         val minKeep = Some(in.getInt(2)).filter(_ > 0)
         val maxAge = Some(in.getLong(3)).filter(_ > 0)
-        val refs = resolveRest(in.getUTF8String(0).toString) match {
-          case Some((rc, ident)) =>
-            TableWriter.setRefRetentionRest(rc, ident, refName, minKeep,
-              maxAge).metadata.refs
-          case None =>
-            TableWriter.setRefRetention(
-              IcebergTables.load(resolveLocation(in.getUTF8String(0).toString)),
-              refName, minKeep, maxAge).metadata.refs
-        }
+        val refs = TableWriter.setRefRetention(
+          resolveTable(in.getUTF8String(0).toString), refName, minKeep, maxAge)
+          .metadata.refs
         val r = refs(refName)
         Array[Any](in.getUTF8String(1),
           r.minSnapshotsToKeep.map(Int.box).orNull,
@@ -314,15 +254,9 @@ object GraftProcedures {
         StructType(Seq(
           StructField("dropped", StringType, nullable = false),
           StructField("remaining_refs", IntegerType, nullable = false)))) { in =>
-        val refs = resolveRest(in.getUTF8String(0).toString) match {
-          case Some((rc, ident)) =>
-            TableWriter.dropRefRest(rc, ident,
-              in.getUTF8String(1).toString).metadata.refs
-          case None =>
-            TableWriter.dropRef(
-              IcebergTables.load(resolveLocation(in.getUTF8String(0).toString)),
-              in.getUTF8String(1).toString).metadata.refs
-        }
+        val refs = TableWriter.dropRef(
+          resolveTable(in.getUTF8String(0).toString),
+          in.getUTF8String(1).toString).metadata.refs
         Array[Any](in.getUTF8String(1), refs.size)
       }
       case "create_changelog_view" => proc(name,
@@ -353,15 +287,14 @@ object GraftProcedures {
           StructField("files_before", IntegerType, nullable = false),
           StructField("files_after", IntegerType, nullable = false),
           StructField("zordered_by", StringType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val cols = in.getUTF8String(2).toString.split(',').map(_.trim)
           .filter(_.nonEmpty).toSeq
         require(cols.size >= 2,
           "rewrite_zorder needs at least two columns (use rewrite_sorted for one)")
         val before = table.newScan().planFiles().size
         val out = TableWriter.compact(table,
-          org.apache.spark.sql.SparkSession.active, in.getInt(1), zOrderBy = cols,
-          restCommit = restCtx)
+          org.apache.spark.sql.SparkSession.active, in.getInt(1), zOrderBy = cols)
         Array[Any](before, out.newScan().planFiles().size, cols.mkString(","))
       }
       case "rewrite_position_deletes" => proc(name,
@@ -369,9 +302,9 @@ object GraftProcedures {
         StructType(Seq(
           StructField("delete_files_before", IntegerType, nullable = false),
           StructField("delete_files_after", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val (_, before, after) = TableWriter.rewritePositionDeletes(table,
-          org.apache.spark.sql.SparkSession.active, restCommit = restCtx)
+          org.apache.spark.sql.SparkSession.active)
         Array[Any](before, after)
       }
       case "rewrite_deletion_vectors" => proc(name,
@@ -380,9 +313,9 @@ object GraftProcedures {
           StructField("dvs_rewritten", IntegerType, nullable = false),
           StructField("puffin_files_before", IntegerType, nullable = false),
           StructField("puffin_files_after", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val (_, rewritten, before, after) = TableWriter.rewriteDeletionVectors(
-          table, org.apache.spark.sql.SparkSession.active, restCommit = restCtx)
+          table, org.apache.spark.sql.SparkSession.active)
         Array[Any](rewritten, before, after)
       }
       case "add_files" => proc(name,
@@ -390,10 +323,9 @@ object GraftProcedures {
         StructType(Seq(
           StructField("added_files", IntegerType, nullable = false),
           StructField("added_records", LongType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val before = table.newScan().planFiles()
-        val out = TableWriter.addFiles(table, in.getUTF8String(1).toString,
-          restCommit = restCtx)
+        val out = TableWriter.addFiles(table, in.getUTF8String(1).toString)
         val after = out.newScan().planFiles()
         val newFiles = after.filterNot(t => before.exists(_.file.path == t.file.path))
         Array[Any](newFiles.size, newFiles.map(_.file.recordCount).sum)
@@ -403,36 +335,19 @@ object GraftProcedures {
         StructType(Seq(
           StructField("previous_snapshot_id", LongType),
           StructField("current_snapshot_id", LongType, nullable = false)))) { in =>
-        val ref = in.getUTF8String(0).toString
-        val branch = in.getUTF8String(1).toString
-        resolveRest(ref) match {
-          case Some((rc, ident)) =>
-            val prev = rc.loadTable(ident).metadata.currentSnapshotId
-            val out = TableWriter.fastForwardRest(rc, ident, branch)
-            Array[Any](prev.map(Long.box).orNull,
-              out.metadata.currentSnapshotId.get)
-          case None =>
-            val table = IcebergTables.load(resolveLocation(ref))
-            val prev = table.currentSnapshot.map(_.snapshotId)
-            val out = TableWriter.fastForward(table, branch)
-            Array[Any](prev.orNull, out.currentSnapshot.get.snapshotId)
-        }
+        val table = resolveTable(in.getUTF8String(0).toString)
+        val prev = table.currentSnapshot.map(_.snapshotId)
+        val out = TableWriter.fastForward(table, in.getUTF8String(1).toString)
+        Array[Any](prev.orNull, out.currentSnapshot.get.snapshotId)
       }
       case "cherrypick_snapshot" => proc(name,
         Seq("table" -> StringType, "snapshot_id" -> LongType),
         StructType(Seq(
           StructField("source_snapshot_id", LongType, nullable = false),
           StructField("current_snapshot_id", LongType, nullable = false)))) { in =>
-        val ref = in.getUTF8String(0).toString
-        resolveRest(ref) match {
-          case Some((rc, ident)) =>
-            val out = TableWriter.cherrypickSnapshotRest(rc, ident, in.getLong(1))
-            Array[Any](in.getLong(1), out.metadata.currentSnapshotId.get)
-          case None =>
-            val table = IcebergTables.load(resolveLocation(ref))
-            val out = TableWriter.cherrypickSnapshot(table, in.getLong(1))
-            Array[Any](in.getLong(1), out.currentSnapshot.get.snapshotId)
-        }
+        val out = TableWriter.cherrypickSnapshot(
+          resolveTable(in.getUTF8String(0).toString), in.getLong(1))
+        Array[Any](in.getLong(1), out.currentSnapshot.get.snapshotId)
       }
       // Iceberg's WAP publish verb: resolve the staged snapshot by its
       // wap.id and cherrypick it — the id is what the audit pipeline
@@ -442,24 +357,14 @@ object GraftProcedures {
         StructType(Seq(
           StructField("source_snapshot_id", LongType, nullable = false),
           StructField("current_snapshot_id", LongType, nullable = false)))) { in =>
-        val ref = in.getUTF8String(0).toString
         val wapId = in.getUTF8String(1).toString
-        def stagedIn(md: graft.core.TableMetadata): Long =
-          md.snapshots.find(_.summary.exists(
-              _.properties.get("wap.id").contains(wapId)))
-            .getOrElse(throw new IllegalArgumentException(
-              s"no staged snapshot carries wap.id '$wapId'")).snapshotId
-        resolveRest(ref) match {
-          case Some((rc, ident)) =>
-            val staged = stagedIn(rc.loadTable(ident).metadata)
-            val out = TableWriter.cherrypickSnapshotRest(rc, ident, staged)
-            Array[Any](staged, out.metadata.currentSnapshotId.get)
-          case None =>
-            val table = IcebergTables.load(resolveLocation(ref))
-            val staged = stagedIn(table.metadata)
-            val out = TableWriter.cherrypickSnapshot(table, staged)
-            Array[Any](staged, out.currentSnapshot.get.snapshotId)
-        }
+        val table = resolveTable(in.getUTF8String(0).toString)
+        val staged = table.metadata.snapshots.find(_.summary.exists(
+            _.properties.get("wap.id").contains(wapId)))
+          .getOrElse(throw new IllegalArgumentException(
+            s"no staged snapshot carries wap.id '$wapId'")).snapshotId
+        val out = TableWriter.cherrypickSnapshot(table, staged)
+        Array[Any](staged, out.currentSnapshot.get.snapshotId)
       }
       // Iceberg's register_table: adopt an EXISTING table under a catalog
       // identifier without touching a single data or metadata file. In
@@ -531,11 +436,11 @@ object GraftProcedures {
         StructType(Seq(
           StructField("manifests_before", IntegerType, nullable = false),
           StructField("manifests_after", IntegerType, nullable = false)))) { in =>
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         def count(t: IcebergTable): Int = t.currentSnapshot.toSeq.flatMap(s =>
           graft.core.ManifestIO.readManifestList(t.io.open(s.manifestList))).size
         val before = count(table)
-        val out = TableWriter.rewriteManifests(table, restCommit = restCtx)
+        val out = TableWriter.rewriteManifests(table)
         Array[Any](before, count(out))
       }
       // incremental-maintenance procedures: fold the docs table's
@@ -579,24 +484,13 @@ object GraftProcedures {
         // comma-separated merge-key column list; rows in `source` must be
         // unique per key (the keyed-upsert contract).
         val spark = org.apache.spark.sql.SparkSession.active
-        val (table, restCtx) = rewriteCtx(in.getUTF8String(0).toString)
+        val table = resolveTable(in.getUTF8String(0).toString)
         val source = spark.table(in.getUTF8String(1).toString)
         val keyCols = in.getUTF8String(2).toString.split(',')
           .map(_.trim).filter(_.nonEmpty).toSeq
         require(keyCols.nonEmpty, "merge_keyed needs at least one key column")
-        val out = restCtx match {
-          case Some((rc, id, _)) =>
-            // REST plane: the same atomic retract-and-replace snapshot,
-            // committed through the server (single-change transaction)
-            TableWriter.transaction(rc)
-              .stageReplaceEquality(id, source.selectExpr(keyCols: _*),
-                keyCols, source)
-              .commit()
-            TableWriter.restTableOf(rc.loadTable(id), rc)
-          case None =>
-            TableWriter.replaceEquality(table,
-              source.selectExpr(keyCols: _*), keyCols, source)
-        }
+        val out = TableWriter.replaceEquality(table,
+          source.selectExpr(keyCols: _*), keyCols, source)
         val appended = out.currentSnapshot.get.summary
           .flatMap(_.properties.get("added-records")).map(_.toLong).getOrElse(0L)
         Array[Any](out.currentSnapshot.get.snapshotId, appended)

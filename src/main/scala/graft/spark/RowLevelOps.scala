@@ -32,38 +32,26 @@ import graft.core.{Literal => IceLiteral, _}
   *
   * (Pushable DELETEs never get here — `SupportsDelete` commits merge-on-
   * read tombstones without touching data.) */
-final class GraftRowLevelOperation(location: String,
-                                   cmd: RowLevelOperation.Command,
-                                   restDml: Option[RestDmlBinding] = None)
+final class GraftRowLevelOperation(table: IcebergTable,
+                                   cmd: RowLevelOperation.Command)
     extends RowLevelOperation {
 
   @volatile private var capturedScan: GraftScan = _
-  // REST: the load the scan planned against — the commit derives its
-  // snapshot from THIS metadata and pins the server's main ref to its
-  // head, so a commit that lands mid-rewrite conflicts (409) instead of
-  // being silently based away (the expectedVersion pin's REST twin)
-  @volatile private var capturedLoaded: graft.catalog.LoadedTable = _
+  // the handle the scan planned against — the commit derives its snapshot
+  // from THIS metadata and is pinned to it, so a commit that lands
+  // mid-rewrite conflicts instead of being silently based away
+  @volatile private var scanned: IcebergTable = _
 
   override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"icegopher $cmd $location [copy-on-write]"
-
-  private def freshTable(): IcebergTable = restDml match {
-    case Some(b) =>
-      val loaded = b.load()
-      capturedLoaded = loaded
-      // local planning on purpose: the CoW commit needs per-task manifest
-      // provenance, which the REST plan wire format does not carry
-      TableWriter.restTableOf(loaded)
-    case None => IcebergTables.load(location)
-  }
+  override def description(): String =
+    s"icegopher $cmd ${table.location} [copy-on-write]"
 
   /** `_file` groups the rewrite; on V3 tables the row-lineage metadata
     * columns ride along too, so the replacement files MATERIALIZE each
     * carried row's `_row_id`/`_last_updated_sequence_number` (the spec's
     * id-preserving rewrite) instead of re-identifying every row. */
   private lazy val v3Lineage: Boolean = {
-    val md = restDml.map(_.load().metadata)
-      .getOrElse(IcebergTables.load(location).metadata)
+    val md = table.metadata
     md.formatVersion >= 3 &&
       !md.currentSchema.fields.exists(f =>
         f.name == GraftReaders.RowIdCol || f.name == GraftReaders.LastUpdatedSeqCol)
@@ -81,9 +69,12 @@ final class GraftRowLevelOperation(location: String,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val table = freshTable()
-    val inner = new GraftScanBuilder(table,
-      SchemaConv.toSparkSchema(table.schema), options)
+    val fresh = table.ops.current()
+    scanned = fresh
+    // the `_file` projection keeps this scan on driver-side planning: the
+    // CoW commit needs per-task manifest provenance
+    val inner = new GraftScanBuilder(fresh,
+      SchemaConv.toSparkSchema(fresh.schema), options)
     // capture the built scan: its (runtime-filtered) file set is the group
     // set the commit replaces
     new ScanBuilder
@@ -101,17 +92,12 @@ final class GraftRowLevelOperation(location: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new GraftReplaceDataWrite(location, info.schema(),
+        new GraftReplaceDataWrite(table.location, info.schema(),
           () => {
             require(capturedScan != null, "row-level write before scan was planned")
-            (capturedScan.scannedFilePaths, capturedScan.scannedVersion,
+            (scanned, capturedScan.scannedFilePaths,
               capturedScan.scannedManifestPaths)
           },
-          restCommit = restDml.map(b => (b, () => {
-            require(capturedLoaded != null,
-              "row-level REST write before scan was planned")
-            capturedLoaded
-          })),
           withLineage = v3Lineage,
           // Spark's If-shaped rewrite delivers the SCAN's metadata for
           // modified rows too, so a materialized _last_updated_sequence_
@@ -127,13 +113,11 @@ final class GraftRowLevelOperation(location: String,
 
 /** V2 batch write for the replacement rows: tasks write parquet files with
   * Spark's own row write support; the driver commit swaps the replaced
-  * files in one OVERWRITE snapshot, pinned to the metadata version the
-  * scan read (CommitConflictException on concurrent commits — a MoR
-  * delete landing mid-rewrite would otherwise be silently undone). */
+  * files in one OVERWRITE snapshot, pinned to the handle the scan read
+  * (CommitConflictError on concurrent commits — a MoR delete landing
+  * mid-rewrite would otherwise be silently undone). */
 final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
-                                  replacedFiles: () => (Seq[String], Int, Set[String]),
-                                  restCommit: Option[(RestDmlBinding,
-                                    () => graft.catalog.LoadedTable)] = None,
+                                  replacedFiles: () => (IcebergTable, Seq[String], Set[String]),
                                   withLineage: Boolean = false,
                                   withLastUpdated: Boolean = true)
     extends Write with BatchWrite {
@@ -145,10 +129,7 @@ final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     writeDir.mkdirs()
-    val table = restCommit match {
-      case Some((_, loadedAtScan)) => TableWriter.restTableOf(loadedAtScan())
-      case None => IcebergTables.load(location)
-    }
+    val table = replacedFiles()._1
     val partFields = table.spec.fields.map { pf =>
       val src = table.schema.findFieldById(pf.sourceId).getOrElse(
         throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
@@ -179,21 +160,9 @@ final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val added = messages.collect { case m: GraftCowCommit => m.files }.flatten
-    val (paths, scannedVersion, manifests) = replacedFiles()
-    restCommit match {
-      case Some((b, loadedAtScan)) =>
-        // the REST pin: the snapshot derives from the SCAN's load and the
-        // assert-ref guard holds its main head — a commit in between 409s
-        TableWriter.replaceFilesRest(b.catalog, b.identifier, paths.toSet,
-          added.toSeq,
-          touchedManifests = if (manifests.nonEmpty) Some(manifests) else None,
-          basedOn = Some(loadedAtScan()))
-        b.afterCommit()
-      case None =>
-        TableWriter.replaceFiles(location, paths.toSet, added.toSeq,
-          expectedVersion = Some(scannedVersion),
-          touchedManifests = if (manifests.nonEmpty) Some(manifests) else None)
-    }
+    val (scanned, paths, manifests) = replacedFiles()
+    TableWriter.replaceFiles(scanned, paths.toSet, added.toSeq,
+      touchedManifests = Some(manifests).filter(_.nonEmpty))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

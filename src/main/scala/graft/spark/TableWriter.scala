@@ -1,7 +1,6 @@
 package graft.spark
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
@@ -13,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr => sexpr, to_date, udf, year => syear}
 
+import graft.catalog.{AddPartitionSpec, AddSchema, AddSnapshot, AddSortOrder, AssertCurrentSchemaId, AssertRefSnapshotId, AssertTableUuid, RemoveProperties, RemoveSnapshotRef, RemoveSnapshots, SetCurrentSchema, SetDefaultSortOrder, SetDefaultSpec, SetPartitionStatistics, SetProperties, SetSnapshotRef, SetStatistics, TableRequirement, TableUpdate, UpgradeFormatVersion}
 import graft.core._
 
 /** The write/commit path — "Writing is WIP" in the reference
@@ -20,8 +20,11 @@ import graft.core._
   * writers (shared with the CoW path) write the parquet, derive partition
   * tuples per row, and count float/double NaNs inline; the driver turns
   * parquet FOOTERS into per-file Iceberg stats (no second data pass —
-  * O(files) metadata reads), then commits manifest → manifest list →
-  * vN.metadata.json atomically via rename, with a version-hint for readers.
+  * O(files) metadata reads) and stages manifests → manifest list. Every
+  * operation is written once: it stages the REST spec's requirements and
+  * updates and commits them through the handle's [[TableOperations]] — a
+  * metadata-file CAS for file-backed tables, the catalog's `updateTable`
+  * route for REST-cataloged ones.
   */
 object TableWriter {
 
@@ -46,10 +49,8 @@ object TableWriter {
       PartitionField(f.id, PartitionSpec.PartitionDataIdStart + i,
         partName(src, t), t)
     })
-    val sortOrder = sortOrderFor(schema, sortBy)
-    commit(df, location, schema, spec, properties, version = 1, parentSnapshot = None,
-      existingEntries = Nil, existingManifests = Nil, sequenceNumber = 1,
-      sortOrder = sortOrder)
+    createTable(df, location, schema, spec, properties,
+      sortOrderFor(schema, sortBy), formatVersion = 2)
   }
 
   /** [[create]] with an EXPLICIT Iceberg schema — the authoring path for
@@ -85,10 +86,33 @@ object TableWriter {
            TimestampNsT | TimestampTzNsT => true
       case _ => false
     })
-    commit(df, location, schema, spec, properties, version = 1,
-      parentSnapshot = None, existingEntries = Nil, existingManifests = Nil,
-      sequenceNumber = 1, sortOrder = sortOrderFor(schema, sortBy),
-      minFormatVersion = if (needsV3) 3 else 2)
+    createTable(df, location, schema, spec, properties, sortOrderFor(schema, sortBy),
+      formatVersion = if (needsV3) 3 else 2)
+  }
+
+  /** Commit a new table's version 1: its first metadata, already carrying
+    * the first snapshot. A table BORN V3 (V3-only types) assigns row
+    * lineage from 0 on that commit, per spec. */
+  private def createTable(df: DataFrame, location: String, schema: Schema,
+                          spec: PartitionSpec, properties: Map[String, String],
+                          sortOrder: SortOrder, formatVersion: Int): IcebergTable = {
+    val empty = TableMetadata(formatVersion = formatVersion,
+      tableUuid = java.util.UUID.randomUUID().toString, location = location,
+      lastSequenceNumber = 0L, lastUpdatedMs = System.currentTimeMillis(),
+      lastColumnId = schema.highestFieldId, schemas = Seq(schema),
+      currentSchemaId = schema.schemaId, partitionSpecs = Seq(spec),
+      defaultSpecId = spec.specId,
+      lastPartitionId = Some((spec.fields.map(_.fieldId) :+ 999).max),
+      properties = properties, snapshots = Nil, currentSnapshotId = None,
+      snapshotLog = Nil, metadataLog = Nil,
+      sortOrders = Seq(SortOrder.unsorted, sortOrder).distinctBy(_.orderId),
+      defaultSortOrderId = sortOrder.orderId, refs = Map.empty,
+      nextRowId = if (formatVersion >= 3) Some(0L) else None)
+    // no metadata file yet: the handle's commit lands version 1
+    val table = new IcebergTable(location, "", empty, LocalFileIO)
+    val outs = writeDistributed(df, newDataDir(table), schema, spec, properties,
+      sortOrder, preClustered = false)
+    publish(table, stageAppendSnapshot(table, outs, Map.empty, sortOrder.orderId))
   }
 
   private def sortOrderFor(schema: Schema, sortBy: Seq[String]): SortOrder =
@@ -99,34 +123,28 @@ object TableWriter {
       SortField(f.id, IdentityTransform, SortAsc, NullsFirst)
     })
 
-  /** Overwrite (INSERT OVERWRITE / truncate-then-write): the new snapshot's
-    * manifest list starts empty — previous files remain reachable only
-    * through time travel. */
-  def overwrite(table: IcebergTable, df: DataFrame): IcebergTable = {
-    val version = table.loadedVersion + 1
-    val t = commit(df, table.location, table.schema, table.spec, table.properties,
-      version, table.currentSnapshot, Nil, Nil,
-      table.metadata.lastSequenceNumber + 1)
-    val md = t.metadata
-    writeMetadata(table.location, md.copy(snapshots = md.snapshots.init :+
-      md.snapshots.last.copy(summary = Some(SnapshotSummary(OpOverwrite)))),
-      currentVersion(table.location) + 1)
-    IcebergTables.load(table.location)
-  }
+  /** A fresh directory for one write's data files. */
+  private def newDataDir(table: IcebergTable): File =
+    new File(table.location, s"data/snap-${System.nanoTime()}")
+
+  /** The distributed write of `df` under the table's schema, spec and
+    * properties (unsorted: appends keep the caller's layout). */
+  private def writeData(table: IcebergTable, df: DataFrame): Seq[CowFileOut] =
+    writeDistributed(alignForWrite(df, table.schema), newDataDir(table),
+      table.schema, table.spec, table.properties, SortOrder.unsorted,
+      preClustered = false)
+
+  /** Overwrite (INSERT OVERWRITE / truncate-then-write): ONE `overwrite`
+    * snapshot retires every live data file and adds the new rows —
+    * previous files remain reachable only through time travel. */
+  def overwrite(table: IcebergTable, df: DataFrame): IcebergTable =
+    replace(table, None, writeData(table, df), None, None, OpOverwrite)
 
   /** Append a snapshot: new files join the previous snapshot's manifests.
     * A frame missing schema columns is aligned first — each absent column
     * fills with its V3 `write-default` when declared, null otherwise. */
-  def append(table: IcebergTable, df: DataFrame): IcebergTable = {
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val version = table.loadedVersion + 1
-    commit(alignForWrite(df, table.schema), table.location, table.schema,
-      table.spec, table.properties,
-      version, table.currentSnapshot, Nil, prevManifests,
-      table.metadata.lastSequenceNumber + 1)
-  }
+  def append(table: IcebergTable, df: DataFrame): IcebergTable =
+    appendFiles(table, writeData(table, df))
 
   /** Align a write frame whose columns are a SUBSET of the schema: absent
     * columns fill with their `write-default` (V3) or null, present columns
@@ -159,60 +177,16 @@ object TableWriter {
     // DV-bearing files — writing one would silently drop the delete)
     if (table.metadata.formatVersion >= 3)
       return deleteWhereDv(table, spark, predicate)
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val delDir = new File(table.location, s"data/deletes-$snapId")
-
     // compute tombstones with one distributed scan over current data;
     // provenance comes from the scan itself (the `_metadata` pseudo-column
     // would not resolve above MoR anti-joins when deletes already exist)
-    val scan = table.newScan()
-    val df = scan.toDF(spark, keepProvenance = true)
+    val delDir = new File(table.location, s"data/deletes-${System.nanoTime()}")
+    table.newScan().toDF(spark, keepProvenance = true)
       .filter(predicate)
       .select(col("__path").as("file_path"), col("__pos").as("pos"))
       .orderBy("file_path", "pos")
-    df.write.parquet(delDir.getPath)
-
-    val delFiles = listParquet(delDir).map { f =>
-      statsFromFooter(f, scan.table.newScan().snapshotSchema,
-        Map.empty, content = DataFileContent.PositionDeletes,
-        overrideSchema = Some(posDeleteSchema))
-    }
-    val deleteEntries = delFiles.map(info => ManifestEntry(
-      ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info))
-
-    val manifestFile = new File(metaDir, s"manifest-del-$snapId.avro")
-    ManifestIO.writeManifest(manifestFile, deleteEntries, StructT(Nil))
-    val delManifest = ManifestFile(
-      path = manifestFile.getPath, length = manifestFile.length(),
-      partitionSpecId = table.spec.specId, content = 1,
-      sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-      addedFilesCount = deleteEntries.size, existingFilesCount = 0,
-      deletedFilesCount = 0,
-      addedRowsCount = delFiles.map(_.recordCount).sum,
-      existingRowsCount = 0, deletedRowsCount = 0,
-      partitions = Nil, formatVersion = 2)
-
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, prevManifests :+ delManifest)
-
-    val snapshot = Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(OpDelete)), Some(table.schema.schemaId))
-    writeMetadata(table.location, table.metadata.copy(
-      lastSequenceNumber = seq,
-      lastUpdatedMs = System.currentTimeMillis(),
-      snapshots = table.metadata.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapId),
-      snapshotLog = table.metadata.snapshotLog :+
-        SnapshotLogEntry(snapId, System.currentTimeMillis()),
-      refs = advRef(table.metadata.refs, TableMetadata.MainBranch, snapId)), version)
-    IcebergTables.load(table.location)
+      .write.parquet(delDir.getPath)
+    publish(table, stageDeltaSnapshot(table, Nil, listParquet(delDir).map(_.getPath)))
   }
 
   /** Path as tombstone coordinates store it: no `file:`/`file://` scheme. */
@@ -236,8 +210,6 @@ object TableWriter {
     import org.apache.spark.sql.functions.regexp_replace
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
     val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
 
     val scan = table.newScan()
@@ -247,8 +219,8 @@ object TableWriter {
         col("__pos").as("pos"))
     val (dead, priorDvs) = foldPriorDeletes(spark, newDead, scan.planFiles())
     val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
-    commitDvSnapshot(table, Nil, dvFiles, _ => false, OpDelete, Map.empty,
-      snapId, seq, version, metaDir)
+    commitDvSnapshot(table, stageDvSnapshot(table, Nil, dvFiles, _ => false,
+      OpDelete, Map.empty, snapId, seq))
   }
 
   /** Prior deletes of the files a new DV write touches, resolved exactly as
@@ -395,9 +367,7 @@ object TableWriter {
     * after). No-op when the live set already lives in a single container
     * with no dead weight. */
   def rewriteDeletionVectors(table: IcebergTable,
-                             spark: org.apache.spark.sql.SparkSession,
-                             restCommit: Option[(graft.catalog.RestCatalog,
-                               Seq[String], graft.catalog.LoadedTable)] = None)
+                             spark: org.apache.spark.sql.SparkSession)
       : (IcebergTable, Int, Int, Int) = {
     val snap = table.currentSnapshot.getOrElse(return (table, 0, 0, 0))
     // the live DV per data file, exactly as the reader resolves it
@@ -422,8 +392,6 @@ object TableWriter {
 
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
     val delDir = new File(table.location, s"data/dv-rw-$snapId"); delDir.mkdirs()
 
     val dvInfos: Seq[(String, String, Long, Long, Long, Long)] =
@@ -464,23 +432,11 @@ object TableWriter {
           }.collect().toSeq // one row per live DV: metadata-sized
       }
 
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        val (snapshot, _) = stageDvSnapshot(table, Nil, dvDataFiles(dvInfos),
-          alsoSuperseded = _.isDeletionVector, OpReplace,
-          Map("deletion-vectors-rewritten" -> allDvEntries.size.toString),
-          snapId, seq, metaDir)
-        val change = restChangeFor(basedOn.metadata, id, snapshot)
-        val out = restTableOf(
-          rc.commitTable(id, change.requirements, change.updates), rc)
-        (out, live.size, containersBefore, dvInfos.map(_._1).distinct.size)
-      case None =>
-        val out = commitDvSnapshot(table, Nil, dvDataFiles(dvInfos),
-          alsoSuperseded = _.isDeletionVector, OpReplace,
-          Map("deletion-vectors-rewritten" -> allDvEntries.size.toString),
-          snapId, seq, version, metaDir)
-        (out, live.size, containersBefore, dvInfos.map(_._1).distinct.size)
-    }
+    val out = commitDvSnapshot(table, stageDvSnapshot(table, Nil,
+      dvDataFiles(dvInfos), alsoSuperseded = _.isDeletionVector, OpReplace,
+      Map("deletion-vectors-rewritten" -> allDvEntries.size.toString),
+      snapId, seq))
+    (out, live.size, containersBefore, dvInfos.map(_._1).distinct.size)
   }
 
   /** Rewrite delete manifests so superseded entries leave the live set: V3
@@ -496,141 +452,68 @@ object TableWriter {
   private def supersedeDeleteEntries(table: IcebergTable,
                                      deleteManifests: Seq[ManifestFile],
                                      superseded: DataFileInfo => Boolean,
-                                     snapId: Long, seq: Long,
-                                     metaDir: File): Seq[ManifestFile] = {
-    val md = table.metadata
+                                     snapId: Long, seq: Long): Seq[ManifestFile] = {
     deleteManifests.zipWithIndex.map { case (m, i) =>
       val es = ManifestIO.readManifestEntries(table.io.open(m.path), m)
-      val (gone, kept0) = es.partition(e => superseded(e.dataFile))
+      val (gone, kept) = es.partition(e => superseded(e.dataFile))
       if (gone.isEmpty) m
-      else {
-        val kept = kept0.map(_.copy(status = ManifestEntryStatus.Existing))
-        val removed = gone.map(_.copy(status = ManifestEntryStatus.Deleted,
-          snapshotId = Some(snapId)))
-        val partType = md.partitionSpecs.find(_.specId == m.partitionSpecId)
-          .map(_.partitionType(table.schema)).getOrElse(StructT(Nil))
-        val mf = new File(metaDir, s"manifest-del-ss-$snapId-$i.avro")
-        ManifestIO.writeManifest(mf, kept ++ removed, partType)
-        ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = m.partitionSpecId, content = 1,
-          sequenceNumber = seq,
-          minSequenceNumber =
-            (kept ++ removed).flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-          addedSnapshotId = snapId,
-          addedFilesCount = 0, existingFilesCount = kept.size,
-          deletedFilesCount = removed.size,
-          addedRowsCount = 0,
-          existingRowsCount = kept.map(_.dataFile.recordCount).sum,
-          deletedRowsCount = removed.map(_.dataFile.recordCount).sum,
-          partitions = partitionSummaries(kept, partType), formatVersion = 2)
-      }
+      else writeManifest(table, s"manifest-del-ss-$snapId-$i", 1,
+        m.partitionSpecId, partTypeOf(table, m.partitionSpecId, StructT(Nil)),
+        retire(kept, gone, snapId), snapId, seq)
     }
   }
 
-  /** Assemble + commit ONE snapshot carrying appended data files, new
-    * deletion vectors, and the retirement of whatever those DVs supersede
-    * (prior DVs of the touched files always; `alsoSuperseded` lets format
-    * upgrade retire parquet tombstones too). Moves format-version to 3 —
-    * every caller is producing a V3 construct. */
-  private def commitDvSnapshot(table: IcebergTable,
-                               added: Seq[graft.spark.CowFileOut],
-                               dvFiles: Seq[DataFileInfo],
-                               alsoSuperseded: DataFileInfo => Boolean,
-                               op: SnapshotOp, extraSummary: Map[String, String],
-                               snapId: Long, seq: Long, version: Int,
-                               metaDir: File): IcebergTable = {
-    val md = table.metadata
-    val (snapshot, nextRowId) = stageDvSnapshot(table, added, dvFiles,
-      alsoSuperseded, op, extraSummary, snapId, seq, metaDir)
-    val now = snapshot.timestampMs
-    writeMetadata(table.location, md.copy(
-      formatVersion = 3, // DVs are a V3 construct; metadata serializes V3
-      lastSequenceNumber = seq, lastUpdatedMs = now,
-      snapshots = md.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapId),
-      snapshotLog = md.snapshotLog :+ SnapshotLogEntry(snapId, now),
-      refs = advRef(md.refs, TableMetadata.MainBranch, snapId),
-      nextRowId = nextRowId), version)
-    IcebergTables.load(table.location)
-  }
+  /** A rewritten manifest's entries: `kept` carry as EXISTING, `gone`
+    * stay as DELETED entries recording the snapshot that removed them
+    * (Iceberg spec: the committing snapshot names what it removed, so
+    * `entries` forensics and changelog readers never diff whole
+    * snapshots). */
+  private def retire(kept: Seq[ManifestEntry], gone: Seq[ManifestEntry],
+                     snapId: Long): Seq[ManifestEntry] =
+    kept.map(_.copy(status = ManifestEntryStatus.Existing)) ++
+      gone.map(_.copy(status = ManifestEntryStatus.Deleted, snapshotId = Some(snapId)))
 
-  /** The staging body of [[commitDvSnapshot]] (manifests + manifest list
-    * on disk, no metadata commit) — shared with the REST plane
-    * ([[commitDeltaDvRest]]). Returns the snapshot and the V3
-    * `next-row-id` the commit must advance to. */
+  /** Commit a snapshot carrying deletion vectors. DVs are a V3
+    * construct, so a table below V3 moves to 3 in the same commit — the
+    * format flip first, so the snapshot lands on V3 metadata and a reader
+    * never sees DVs under an older format. */
+  private def commitDvSnapshot(table: IcebergTable, snapshot: Snapshot): IcebergTable =
+    publish(table, snapshot, leading =
+      if (table.metadata.formatVersion >= 3) Nil else Seq(UpgradeFormatVersion(3)))
+
+  /** Stage ONE snapshot carrying appended data files, new deletion
+    * vectors, and the retirement of whatever those DVs supersede (prior
+    * DVs of the touched files always; `alsoSuperseded` lets format upgrade
+    * retire parquet tombstones too) — manifests + manifest list on disk,
+    * committed by [[commitDvSnapshot]]. */
   private def stageDvSnapshot(table: IcebergTable,
                               added: Seq[graft.spark.CowFileOut],
                               dvFiles: Seq[DataFileInfo],
                               alsoSuperseded: DataFileInfo => Boolean,
                               op: SnapshotOp, extraSummary: Map[String, String],
-                              snapId: Long, seq: Long,
-                              metaDir: File): (Snapshot, Option[Long]) = {
-    val md = table.metadata
-    val partType = table.spec.partitionType(table.schema)
-    val addedEntries0 = added.map { f =>
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-        statsFromFooter(new File(f.path), table.schema,
-          f.partition.filter(_._2 != null), DataFileContent.Data, None, f.nanCounts))
-    }
+                              snapId: Long, seq: Long): Snapshot = {
+    val addedEntries0 = added.map(addedEntry(table, _, snapId, seq))
     // the committed metadata is V3 (DVs force it) even when the loaded
     // table was not yet — lineage must be assigned under the TARGET version
-    val lineage = assignLineage(md.copy(formatVersion = 3), addedEntries0)
+    val lineage = assignLineage(table.metadata.copy(formatVersion = 3), addedEntries0)
     val addedEntries = lineage.entries
-    val addManifest =
-      if (addedEntries.isEmpty) None
-      else {
-        val mf = new File(metaDir, s"manifest-dv-add-$snapId.avro")
-        ManifestIO.writeManifest(mf, addedEntries, partType)
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 0,
-          sequenceNumber = seq, minSequenceNumber = seq,
-          addedSnapshotId = snapId,
-          addedFilesCount = addedEntries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = addedEntries.map(_.dataFile.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = partitionSummaries(addedEntries, partType),
-          formatVersion = 2,
-          firstRowId = lineage.manifestFirstRowId))
-      }
-
     val dvEntries = dvFiles.map(info => ManifestEntry(
       ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info))
-    val dvManifest =
-      if (dvEntries.isEmpty) None
-      else {
-        val mf = new File(metaDir, s"manifest-dv-$snapId.avro")
-        ManifestIO.writeManifest(mf, dvEntries, StructT(Nil))
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 1,
-          sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-          addedFilesCount = dvEntries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = dvFiles.map(_.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = Nil, formatVersion = 2))
-      }
-
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val (prevData, prevDelete) = prevManifests.partition(_.content == 0)
+    val (prevData, prevDelete) = liveManifests(table).partition(_.content == 0)
     val touched = dvFiles.flatMap(_.referencedDataFile).map(normFsPath).toSet
     val isSuperseded: DataFileInfo => Boolean = d =>
       (d.isDeletionVector &&
         touched(normFsPath(d.referencedDataFile.get))) || alsoSuperseded(d)
     val newDelete =
-      supersedeDeleteEntries(table, prevDelete, isSuperseded, snapId, seq, metaDir)
+      supersedeDeleteEntries(table, prevDelete, isSuperseded, snapId, seq)
 
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      prevData ++ addManifest ++ newDelete ++ dvManifest)
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      now, listFile.getPath,
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, prevData ++
+      addedManifest(table, addedEntries, "manifest-dv-add", snapId, seq,
+        lineage.manifestFirstRowId) ++ newDelete ++
+      addedManifest(table, dvEntries, "manifest-dv", snapId, seq))
+    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
+      System.currentTimeMillis(), listFile.getPath,
       Some(SnapshotSummary(op, Map(
         "added-data-files" -> addedEntries.size.toString,
         // added-records makes V3 lineage advance exact for the appends
@@ -641,7 +524,6 @@ object TableWriter {
         "deletion-vectors-added" -> dvEntries.size.toString) ++ extraSummary)),
       Some(table.schema.schemaId),
       firstRowId = lineage.snapshotFirstRowId)
-    (snapshot, lineage.nextRowId)
   }
 
   /** V3 variant of [[commitDelta]] — SQL MoR DML on a format-version-3
@@ -654,58 +536,47 @@ object TableWriter {
     * ([[foldPriorDeletes]]), write one DV per file, and commit DVs +
     * appends in ONE snapshot under the same conflict pin as
     * [[commitDelta]]. */
-  def commitDeltaDv(location: String, added: Seq[graft.spark.CowFileOut],
-                    posDeleteFiles: Seq[String],
-                    expectedVersion: Option[Int] = None,
-                    scannedSnapshotId: Option[Long] = None,
-                    isolation: String = "serializable"): IcebergTable = {
-    if (posDeleteFiles.isEmpty)
-      return commitDelta(location, added, Nil, expectedVersion,
-        scannedSnapshotId, isolation)
-    val spark = org.apache.spark.sql.SparkSession.active
-    val table = IcebergTables.load(location)
-    expectedVersion.foreach { v =>
-      if (table.loadedVersion != v) {
-        val appendOnly = isolation.equalsIgnoreCase("snapshot") &&
-          appendOnlySince(table, scannedSnapshotId)
-        if (!appendOnly)
-          throw new CommitConflictException(table.loadedVersion, location)
-      }
-    }
+  private def commitDeltaDv(table: IcebergTable,
+                            added: Seq[graft.spark.CowFileOut],
+                            posDeleteFiles: Seq[String]): IcebergTable = {
     import org.apache.spark.sql.functions.regexp_replace
+    val spark = org.apache.spark.sql.SparkSession.active
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(location, "metadata"); metaDir.mkdirs()
-    val delDir = new File(location, s"data/dv-$snapId"); delDir.mkdirs()
-
+    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
     val newDead = spark.read.parquet(posDeleteFiles: _*)
       .select(regexp_replace(col("file_path"), "^file:(//)?", "")
         .as("file_path"), col("pos"))
     val (dead, priorDvs) =
       foldPriorDeletes(spark, newDead, table.newScan().planFiles())
     val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
-    val committed = commitDvSnapshot(table, added, dvFiles, _ => false,
-      if (added.isEmpty) OpDelete else OpOverwrite, Map.empty,
-      snapId, seq, version, metaDir)
+    val committed = commitDvSnapshot(table, stageDvSnapshot(table, added,
+      dvFiles, _ => false, if (added.isEmpty) OpDelete else OpOverwrite,
+      Map.empty, snapId, seq))
     // the task tombstone parquet files were commit intermediates only
     posDeleteFiles.foreach(p => new File(p).delete())
     committed
   }
 
-  /** Upgrade a table's format-version in place. 1→2 is a metadata-only
-    * bump. →3 additionally re-homes every LIVE positional-parquet tombstone
-    * into deletion vectors (V3 tables must not carry position delete
-    * files): one distributed pass groups live tombstone coordinates by data
-    * file — dangling tombstones of vanished files drop; a file that already
-    * has a DV keeps it untouched, and its parquet tombstone entries (dead
+  /** Upgrade a table's format-version in place. 1→2, and →3 with no live
+    * positional tombstones, is one `upgrade-format-version` update — a
+    * pure metadata flip, no snapshot. →3 with live tombstones additionally
+    * re-homes every LIVE positional-parquet tombstone into deletion
+    * vectors (V3 tables must not carry position delete files): one
+    * distributed pass groups live tombstone coordinates by data file —
+    * dangling tombstones of vanished files drop; a file that already has
+    * a DV keeps it untouched, and its parquet tombstone entries (dead
     * weight readers already ignore) retire WITHOUT folding, so reader
     * semantics are preserved bit-for-bit — then ONE snapshot retires all
-    * parquet tombstone entries and adds the DVs. Downgrades refuse. */
+    * parquet tombstone entries and adds the DVs, in the SAME commit as the
+    * format flip. Both shapes are head-pinned: the no-tombstones decision
+    * and the re-home came from this handle's scan, so a MoR delete landing
+    * in between conflicts instead of leaving live parquet tombstones under
+    * V3. At 100 TB the re-home is O(live tombstone rows): data files are
+    * untouched. Downgrades refuse. */
   def upgradeFormatVersion(table: IcebergTable,
                            spark: org.apache.spark.sql.SparkSession,
                            target: Int): IcebergTable = {
-    import org.apache.spark.sql.functions.regexp_replace
     val md = table.metadata
     require(target >= 2 && target <= 3,
       s"unsupported format-version $target (this engine writes 2 and 3)")
@@ -717,30 +588,25 @@ object TableWriter {
     val posPaths = tasks.flatMap(_.deleteFiles.filter(d =>
       d.content == DataFileContent.PositionDeletes && !d.isDeletionVector)
       .map(_.path)).distinct
-    if (target == 2 || posPaths.isEmpty) {
-      // nothing to re-home: a pure metadata bump, no new snapshot
-      writeMetadata(table.location, md.copy(formatVersion = target,
-        lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-      return IcebergTables.load(table.location)
-    }
+    if (target == 2 || posPaths.isEmpty)
+      return table.ops.commit(md, headGuard(md),
+        Seq(UpgradeFormatVersion(target)))
     val seq = md.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
     val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
     val dvFiles = rehomeDvFiles(table, spark, tasks, posPaths, delDir,
       snapId, seq)
-    commitDvSnapshot(table, Nil, dvFiles,
+    commitDvSnapshot(table, stageDvSnapshot(table, Nil, dvFiles,
       alsoSuperseded = d =>
         d.content == DataFileContent.PositionDeletes && !d.isDeletionVector,
       op = OpReplace,
       extraSummary = Map("format-version" -> "3",
         "position-delete-files-removed" -> posPaths.size.toString),
-      snapId, seq, version, metaDir)
+      snapId, seq))
   }
 
-  /** Shared staging of the V2→V3 tombstone re-home ([[upgradeFormatVersion]]
-    * / [[upgradeFormatVersionRest]]): group live tombstone coordinates by
+  /** Staging of the V2→V3 tombstone re-home ([[upgradeFormatVersion]]):
+    * group live tombstone coordinates by
     * data file — dangling tombstones of vanished files drop; a file that
     * already has a DV keeps it untouched and its parquet tombstone entries
     * (dead weight readers already ignore) retire WITHOUT folding — then
@@ -768,29 +634,8 @@ object TableWriter {
     * `keys` is deleted — no data rewrite, no scan at commit time at all
     * (the delete applies table-wide to earlier-sequence files). */
   def deleteEquality(table: IcebergTable, keys: DataFrame,
-                     equalityCols: Seq[String]): IcebergTable = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val version = table.loadedVersion + 1
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val delManifest = writeEqDeleteManifest(table, keys, equalityCols, snapId, seq)
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, prevManifests :+ delManifest)
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      now, listFile.getPath, Some(SnapshotSummary(OpDelete)),
-      Some(table.schema.schemaId))
-    writeMetadata(table.location, table.metadata.copy(
-      lastSequenceNumber = seq, lastUpdatedMs = now,
-      snapshots = table.metadata.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapId),
-      snapshotLog = table.metadata.snapshotLog :+ SnapshotLogEntry(snapId, now),
-      refs = advRef(table.metadata.refs, TableMetadata.MainBranch, snapId)), version)
-    IcebergTables.load(table.location)
-  }
+                     equalityCols: Seq[String]): IcebergTable =
+    publish(table, stageEqualitySnapshot(table, keys, equalityCols, None))
 
   /** Write `keys` as equality-delete parquet + its content=1 manifest for
     * snapshot `snapId` at sequence `seq`; shared by [[deleteEquality]]
@@ -798,7 +643,6 @@ object TableWriter {
   private def writeEqDeleteManifest(table: IcebergTable, keys: DataFrame,
                                     equalityCols: Seq[String],
                                     snapId: Long, seq: Long): ManifestFile = {
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
     val delDir = new File(table.location, s"data/eqdeletes-$snapId")
     keys.select(equalityCols.map(col): _*).distinct().write.parquet(delDir.getPath)
     val eqIds = equalityCols.map(c => table.schema.findFieldByName(c).getOrElse(
@@ -808,18 +652,10 @@ object TableWriter {
         content = graft.core.DataFileContent.EqualityDeletes, None)
         .copy(equalityIds = eqIds)
     }
-    val entries = delFiles.map(info => ManifestEntry(
-      ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info))
-    val manifestFile = new File(metaDir, s"manifest-eqdel-$snapId.avro")
-    ManifestIO.writeManifest(manifestFile, entries, StructT(Nil))
-    ManifestFile(
-      path = manifestFile.getPath, length = manifestFile.length(),
-      partitionSpecId = table.spec.specId, content = 1,
-      sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-      addedFilesCount = entries.size, existingFilesCount = 0, deletedFilesCount = 0,
-      addedRowsCount = delFiles.map(_.recordCount).sum,
-      existingRowsCount = 0, deletedRowsCount = 0,
-      partitions = Nil, formatVersion = 2)
+    writeManifest(table, s"manifest-eqdel-$snapId", 1, table.spec.specId,
+      StructT(Nil), delFiles.map(info => ManifestEntry(
+        ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info)),
+      snapId, seq)
   }
 
   /** ATOMIC retract-and-replace: ONE snapshot carrying an equality-delete
@@ -836,18 +672,9 @@ object TableWriter {
   def replaceEquality(table: IcebergTable, keys: DataFrame,
                       keyCols: Seq[String], rows: DataFrame,
                       extraProperties: Map[String, String] = Map.empty)
-      : IcebergTable = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    commit(rows, table.location, table.schema, table.spec,
-      table.properties ++ extraProperties, table.loadedVersion + 1,
-      table.currentSnapshot, Nil, prevManifests, seq,
-      extraManifestsFor =
-        snapId => Seq(writeEqDeleteManifest(table, keys, keyCols, snapId, seq)),
-      op = OpOverwrite)
-  }
+      : IcebergTable =
+    publish(table, stageEqualitySnapshot(table, keys, keyCols, Some(rows)),
+      trailing = propertyUpdates(extraProperties, Nil))
 
   /** MoR UPDATE: rows matching `predicate` get `assignments` applied — the
     * originals become positional tombstones, the rewritten rows are
@@ -892,127 +719,69 @@ object TableWriter {
     * path they name (all strictly earlier here — the new files' paths
     * appear in no tombstone), so a reader sees exactly the post-DML state.
     *
-    * `expectedVersion` pins the commit to the metadata version the
-    * row-level scan read: the buffered (file, pos) coordinates are only
-    * valid against that snapshot's files.
+    * `scanned` is the handle the row-level scan read: the buffered
+    * (file, pos) coordinates are only valid against its files, so the
+    * commit is pinned to it (a stale handle conflicts). A V3 table re-homes
+    * the tombstones into deletion vectors ([[commitDeltaDv]]).
     *
     * Isolation (Iceberg's `write.<op>.isolation-level` semantics):
-    * `serializable` (the default) conflicts on ANY concurrent commit;
-    * `snapshot` tolerates concurrent PURE APPENDS — appended files
-    * cannot contain any row this operation tombstoned or read (new
-    * paths, and positional deletes only name pre-existing paths), so
-    * committing on the moved base is exactly snapshot isolation. The
-    * validation walks the snapshot parent chain from the current head
-    * back to `scannedSnapshotId`, requires every intermediate commit be
-    * an `append` under the SAME schema, and otherwise conflicts loudly
-    * (a concurrent delete/rewrite may have removed rows this operation
-    * re-appends — the lost-delete anomaly snapshot isolation forbids). */
-  def commitDelta(location: String, added: Seq[graft.spark.CowFileOut],
+    * `serializable` (the default) conflicts on ANY concurrent commit the
+    * plane's guard sees; `snapshot` tolerates concurrent PURE APPENDS —
+    * appended files cannot contain any row this operation tombstoned or
+    * read (new paths, and positional deletes only name pre-existing
+    * paths), so committing on the moved base is exactly snapshot
+    * isolation. The validation walks the snapshot parent chain from the
+    * current head back to the scanned snapshot, requires every
+    * intermediate commit be an `append` under the SAME schema, and
+    * otherwise stays pinned to the scan and conflicts (a concurrent
+    * delete/rewrite may have removed rows this operation re-appends — the
+    * lost-delete anomaly snapshot isolation forbids). */
+  def commitDelta(scanned: IcebergTable, added: Seq[graft.spark.CowFileOut],
                   posDeleteFiles: Seq[String],
-                  expectedVersion: Option[Int] = None,
-                  scannedSnapshotId: Option[Long] = None,
                   isolation: String = "serializable"): IcebergTable = {
-    val table = IcebergTables.load(location)
-    expectedVersion.foreach { v =>
-      if (table.loadedVersion != v) {
-        val appendOnly = isolation.equalsIgnoreCase("snapshot") &&
-          appendOnlySince(table, scannedSnapshotId)
-        if (!appendOnly)
-          throw new CommitConflictException(table.loadedVersion, location)
+    val table =
+      if (!isolation.equalsIgnoreCase("snapshot")) scanned
+      else {
+        val fresh = scanned.ops.current()
+        if (appendOnlySince(fresh, scanned.currentSnapshot.map(_.snapshotId)))
+          fresh
+        else scanned
       }
-    }
-    val md = table.metadata
-    val snapshot = stageDeltaSnapshot(table, added, posDeleteFiles)
-    writeMetadata(location, md.copy(
-      lastSequenceNumber = snapshot.sequenceNumber,
-      lastUpdatedMs = snapshot.timestampMs,
-      nextRowId = nextRowIdAfter(md, snapshot),
-      snapshots = md.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapshot.snapshotId),
-      snapshotLog = md.snapshotLog :+
-        SnapshotLogEntry(snapshot.snapshotId, snapshot.timestampMs),
-      refs = advRef(md.refs, TableMetadata.MainBranch, snapshot.snapshotId)),
-      table.loadedVersion + 1)
-    IcebergTables.load(location)
+    if (table.metadata.formatVersion >= 3 && posDeleteFiles.nonEmpty)
+      commitDeltaDv(table, added, posDeleteFiles)
+    else publish(table, stageDeltaSnapshot(table, added, posDeleteFiles))
   }
 
   /** Stage the MoR delta snapshot (manifests + manifest list on disk, no
-    * metadata commit) — the body of [[commitDelta]], shared with the REST
-    * plane ([[stageRestDeltaChange]]/[[RestTransaction.stageDelta]]). */
+    * metadata commit) — the body of [[commitDelta]], shared with
+    * [[RestTransaction.stageDelta]]. */
   private def stageDeltaSnapshot(table: IcebergTable,
                                  added: Seq[graft.spark.CowFileOut],
                                  posDeleteFiles: Seq[String]): Snapshot = {
-    val md = table.metadata
-    val location = table.location
-    val seq = md.lastSequenceNumber + 1
+    val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(location, "metadata"); metaDir.mkdirs()
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val partType = table.spec.partitionType(table.schema)
-
-    val addedEntries0 = added.map { f =>
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-        statsFromFooter(new File(f.path), table.schema,
-          f.partition.filter(_._2 != null), DataFileContent.Data, None, f.nanCounts))
-    }
-    val lineage = assignLineage(md, addedEntries0)
+    val lineage = assignLineage(table.metadata,
+      added.map(addedEntry(table, _, snapId, seq)))
     val addedEntries = lineage.entries
-    val addManifest =
-      if (addedEntries.isEmpty) None
-      else {
-        val mf = new File(metaDir, s"manifest-mor-$snapId.avro")
-        ManifestIO.writeManifest(mf, addedEntries, partType)
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 0,
-          sequenceNumber = seq, minSequenceNumber = seq,
-          addedSnapshotId = snapId,
-          addedFilesCount = addedEntries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = addedEntries.map(_.dataFile.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = partitionSummaries(addedEntries, partType),
-          formatVersion = 2,
-          firstRowId = lineage.manifestFirstRowId))
-      }
-
     val delInfos = posDeleteFiles.map { p =>
       statsFromFooter(new File(p), table.schema, Map.empty,
         content = DataFileContent.PositionDeletes,
         overrideSchema = Some(posDeleteSchema))
     }
-    val delManifest =
-      if (delInfos.isEmpty) None
-      else {
-        val entries = delInfos.map(info => ManifestEntry(
-          ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info))
-        val mf = new File(metaDir, s"manifest-mor-del-$snapId.avro")
-        ManifestIO.writeManifest(mf, entries, StructT(Nil))
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 1,
-          sequenceNumber = seq, minSequenceNumber = seq,
-          addedSnapshotId = snapId,
-          addedFilesCount = entries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = delInfos.map(_.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = Nil, formatVersion = 2))
-      }
-
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      prevManifests ++ addManifest ++ delManifest)
-    val now = System.currentTimeMillis()
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, liveManifests(table) ++
+      addedManifest(table, addedEntries, "manifest-mor", snapId, seq,
+        lineage.manifestFirstRowId) ++
+      addedManifest(table, delInfos.map(info => ManifestEntry(
+        ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info)),
+        "manifest-mor-del", snapId, seq))
     val op = if (addedEntries.isEmpty) OpDelete else OpOverwrite
     Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      now, listFile.getPath,
+      System.currentTimeMillis(), listFile.getPath,
       Some(SnapshotSummary(op, Map(
         "added-data-files" -> addedEntries.size.toString,
-        // added-records makes nextRowIdAfter (and a REST server's V3
-        // lineage advance) exact for the delta commit's appended rows
+        // added-records makes the V3 next-row-id advance exact for the
+        // delta commit's appended rows
         "added-records" -> addedEntries.map(_.dataFile.recordCount).sum.toString,
         "added-delete-files" -> delInfos.size.toString,
         "added-position-deletes" -> delInfos.map(_.recordCount).sum.toString))),
@@ -1054,128 +823,70 @@ object TableWriter {
     * referencing removed files are inert (their file_path bounds can't
     * match the new files).
     *
-    * `expectedVersion` pins the commit to the metadata version the
-    * row-level scan read: if anything committed in between (e.g. a MoR
+    * The commit is pinned to `table`, the handle the caller computed
+    * `removedPaths` from: if anything committed in between (e.g. a MoR
     * DELETE whose tombstones reference a replaced file — which this
     * rewrite would silently undo), the commit fails with
-    * CommitConflictException instead of losing the concurrent write. */
-  def replaceFiles(location: String, removedPaths: Set[String],
+    * [[graft.catalog.CommitConflictError]] instead of losing the
+    * concurrent write. A `sortOrder` is registered first and stamped on
+    * the added files. */
+  def replaceFiles(table: IcebergTable, removedPaths: Set[String],
                    added: Seq[graft.spark.CowFileOut],
-                   expectedVersion: Option[Int] = None,
-                   touchedManifests: Option[Set[String]] = None): IcebergTable = {
-    val table = IcebergTables.load(location)
-    expectedVersion.foreach { v =>
-      if (table.loadedVersion != v)
-        throw new CommitConflictException(table.loadedVersion, location)
+                   touchedManifests: Option[Set[String]] = None,
+                   sortOrder: Option[SortOrder] = None): IcebergTable =
+    replace(table, Some(removedPaths), added, touchedManifests, sortOrder,
+      OpOverwrite)
+
+  /** The one replace commit: `removed` = None retires EVERY live data
+    * file (overwrite, whole-table compaction). */
+  private def replace(table: IcebergTable, removed: Option[Set[String]],
+                      added: Seq[graft.spark.CowFileOut],
+                      touchedManifests: Option[Set[String]],
+                      sortOrder: Option[SortOrder], op: SnapshotOp): IcebergTable = {
+    val (target, order) = sortOrder.filterNot(_.isUnsorted) match {
+      case Some(o) => registerSortOrder(table, o)
+      case None => (table, None)
     }
-    val md = table.metadata
-    val snapshot = stageReplaceSnapshot(table, removedPaths, added, touchedManifests)
-    writeMetadata(location, md.copy(
-      lastSequenceNumber = snapshot.sequenceNumber,
-      lastUpdatedMs = snapshot.timestampMs,
-      snapshots = md.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapshot.snapshotId),
-      snapshotLog = md.snapshotLog :+
-        SnapshotLogEntry(snapshot.snapshotId, snapshot.timestampMs),
-      refs = advRef(md.refs, TableMetadata.MainBranch, snapshot.snapshotId),
-      nextRowId = nextRowIdAfter(md, snapshot)),
-      table.loadedVersion + 1)
-    IcebergTables.load(location)
+    val snapshot =
+      stageReplaceSnapshot(table, removed, added, touchedManifests, order, op)
+    // staged from (and head-pinned to) the caller's handle; lands through
+    // the handle the sort-order registration returned
+    val (requirements, updates) = snapshotChange(table.metadata, snapshot)
+    target.ops.commit(target.metadata, requirements, updates)
   }
 
-  /** Copy-on-write replace against a REST-catalog table: stage rewritten +
-    * added manifests like the local path, then commit `add-snapshot` +
-    * `set-snapshot-ref` through the catalog's `updateTable` route. The
-    * branch-position guard plays the role [[replaceFiles]]' expectedVersion
-    * pin plays locally: if main moved since the caller's scan, the server
-    * answers 409 → [[graft.catalog.CommitConflictError]], and the caller
-    * re-scans and retries. */
-  def replaceFilesRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                       removedPaths: Set[String],
-                       added: Seq[graft.spark.CowFileOut],
-                       touchedManifests: Option[Set[String]] = None,
-                       basedOn: Option[graft.catalog.LoadedTable] = None,
-                       sortOrder: Option[SortOrder] = None)
-      : graft.catalog.LoadedTable = {
-    val (change, _) = stageRestReplaceChange(catalog, identifier,
-      removedPaths, added, touchedManifests, basedOn, sortOrder)
-    catalog.commitTable(identifier, change.requirements, change.updates)
-  }
-
-  /** How a sorted REST rewrite registers its order: reuse an IDENTICAL
+  /** How a sorted rewrite registers its order: reuse an IDENTICAL
     * already-registered order's id, else commit `add-sort-order` +
     * `set-default-sort-order(-1)` FIRST, in its own commit, and stamp
-    * files with the id the SERVER assigned — ids can be reassigned on
+    * files with the id the catalog assigned — ids can be reassigned on
     * conflict, and stamping a guessed id that a racing engine's different
     * order ends up owning would let SupportsReportOrdering claim the
     * WRONG ordering for these files. Once registered, an order's id is
-    * immutable, so the stamp is safe. */
-  private def registerSortOrderRest(catalog: graft.catalog.RestCatalog,
-                                    identifier: Seq[String],
-                                    md: TableMetadata,
-                                    order: SortOrder): SortOrder =
+    * immutable, so the stamp is safe. Returns the handle after
+    * registration and the registered order. */
+  private def registerSortOrder(table: IcebergTable, order: SortOrder)
+      : (IcebergTable, Option[SortOrder]) = {
+    val md = table.metadata
     md.sortOrders.find(_.fields == order.fields) match {
       case Some(existing) =>
-        if (md.defaultSortOrderId != existing.orderId)
-          catalog.commitTable(identifier,
-            Seq(graft.catalog.AssertTableUuid(md.tableUuid)),
-            Seq(graft.catalog.SetDefaultSortOrder(existing.orderId)))
-        existing
+        if (md.defaultSortOrderId == existing.orderId) (table, Some(existing))
+        else (commitUpdates(table, Seq(SetDefaultSortOrder(existing.orderId))),
+          Some(existing))
       case None =>
         val guess = order.copy(orderId =
           (md.sortOrders.map(_.orderId) :+ 0).max + 1)
-        val committed = catalog.commitTable(identifier,
-          Seq(graft.catalog.AssertTableUuid(md.tableUuid)),
-          Seq(graft.catalog.AddSortOrder(guess),
-            graft.catalog.SetDefaultSortOrder(-1)))
-        committed.metadata.sortOrders.find(_.fields == order.fields)
-          .getOrElse(guess)
+        val t = commitUpdates(table,
+          Seq(AddSortOrder(guess), SetDefaultSortOrder(-1)))
+        (t, Some(t.metadata.sortOrders.find(_.fields == order.fields)
+          .getOrElse(guess)))
     }
-
-  /** Stage a CoW replace against a REST table WITHOUT committing — the
-    * [[RestTransaction]] counterpart of [[stageRestAppendChange]].
-    * V3 lineage is client-assigned from the loaded `next-row-id`, and a
-    * CAS conflict sends the caller back through loadTable to re-stage.
-    *
-    * `basedOn` pins the commit to a load the caller ALREADY computed its
-    * removed/added sets from (a row-level scan, an overwrite's file
-    * enumeration): the staged snapshot derives from that metadata and the
-    * assert-ref guard holds ITS main head, so a commit that landed between
-    * the caller's scan and this stage conflicts (409) at the server
-    * instead of silently basing a rewrite on files the scan never saw —
-    * the REST-plane twin of [[replaceFiles]]' expectedVersion pin. */
-  private def stageRestReplaceChange(catalog: graft.catalog.RestCatalog,
-                                     identifier: Seq[String],
-                                     removedPaths: Set[String],
-                                     added: Seq[graft.spark.CowFileOut],
-                                     touchedManifests: Option[Set[String]],
-                                     basedOn: Option[graft.catalog.LoadedTable] = None,
-                                     sortOrder: Option[SortOrder] = None)
-      : (graft.catalog.TableChange, Option[Long]) = {
-    val loaded = basedOn.getOrElse(catalog.loadTable(identifier))
-    val md = loaded.metadata
-    val table = new IcebergTable(md.location, loaded.metadataLocation, md,
-      IOConfig.fileIO(loaded.ioProps), ioProps = loaded.ioProps)
-    // register the sort order first (own commit; moves no ref, so the
-    // rewrite's head pin below stays valid) and stamp the SERVER's id
-    val effOrder = sortOrder.filterNot(_.isUnsorted)
-      .map(o => registerSortOrderRest(catalog, identifier, md, o))
-    val snapshot = stageReplaceSnapshot(table, removedPaths, added,
-      touchedManifests, effOrder)
-    val change = graft.catalog.TableChange(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-            .orElse(md.currentSnapshotId))),
-      Seq(graft.catalog.AddSnapshot(snapshot),
-        setMainRefUpdate(md, snapshot.snapshotId)))
-    (change, snapshot.firstRowId.map(_ + added.map(_.rows).sum))
   }
 
   /** Per-commit V3 row-lineage assignment (spec v3 "Row Lineage"): ADDED
     * data-file entries take `first_row_id` sequentially from the table's
-    * `next-row-id`; the snapshot records the base; `next-row-id` advances
-    * past every added row. Identity below V3.
+    * `next-row-id`; the snapshot records the base, and committing it
+    * (`add-snapshot`) advances `next-row-id` past every added row.
+    * Identity below V3.
     *
     * Rewrites ([[compact]] and friends) MATERIALIZE each surviving row's
     * `_row_id`/`_last_updated_sequence_number` into the new files under
@@ -1186,18 +897,12 @@ object TableWriter {
     * range is mostly unused) is allowed: row ids need not be contiguous. */
   private[spark] final case class Lineage(entries: Seq[ManifestEntry],
                                           manifestFirstRowId: Option[Long],
-                                          snapshotFirstRowId: Option[Long],
-                                          nextRowId: Option[Long])
+                                          snapshotFirstRowId: Option[Long])
 
   private[spark] def assignLineage(md: TableMetadata,
-                                   entries: Seq[ManifestEntry]): Lineage =
-    assignLineage(md.formatVersion, md.nextRowId, entries)
-
-  private[spark] def assignLineage(formatVersion: Int,
-                                   nextRowId: Option[Long],
                                    entries: Seq[ManifestEntry]): Lineage = {
-    if (formatVersion < 3) return Lineage(entries, None, None, nextRowId)
-    val base = nextRowId.getOrElse(0L)
+    if (md.formatVersion < 3) return Lineage(entries, None, None)
+    val base = md.nextRowId.getOrElse(0L)
     var cursor = base
     val stamped = entries.map { e =>
       if (e.dataFile.content == DataFileContent.Data &&
@@ -1207,8 +912,7 @@ object TableWriter {
         r
       } else e
     }
-    Lineage(stamped, if (cursor > base) Some(base) else None,
-      Some(base), Some(cursor))
+    Lineage(stamped, if (cursor > base) Some(base) else None, Some(base))
   }
 
   /** Manifests whose entries are all DELETED carry no live files — they
@@ -1217,35 +921,33 @@ object TableWriter {
     * Iceberg: delete-recording manifests live exactly one snapshot). Both
     * contents: data manifests emptied by a REPLACE, delete manifests
     * emptied by DV supersede ([[supersedeDeleteEntries]]). */
-  private def liveManifests(ms: Seq[ManifestFile]): Seq[ManifestFile] =
-    ms.filter(m => m.addedFilesCount + m.existingFilesCount > 0)
+  private def liveManifests(table: IcebergTable,
+                            snapshot: Option[Snapshot]): Seq[ManifestFile] =
+    snapshot.toSeq.flatMap(s =>
+      ManifestIO.readManifestList(table.io.open(s.manifestList)))
+      .filter(m => m.addedFilesCount + m.existingFilesCount > 0)
 
-  /** Stage an OVERWRITE (CoW) snapshot: manifests containing replaced
-    * paths rewritten under their own spec, untouched manifests carried by
-    * reference, added files in one new manifest. Pure staging shared by
-    * the local CAS and REST commit paths. */
-  private def stageReplaceSnapshot(table: IcebergTable, removedPaths: Set[String],
+  private def liveManifests(table: IcebergTable): Seq[ManifestFile] =
+    liveManifests(table, table.currentSnapshot)
+
+  /** Stage a replace snapshot: manifests containing replaced paths
+    * rewritten under their own spec, untouched manifests carried by
+    * reference, added files in one new manifest. `removedPaths` = None
+    * replaces EVERY live data file; then no data file predates the
+    * snapshot's deletes' targets any more, so delete manifests drop too. */
+  private def stageReplaceSnapshot(table: IcebergTable,
+                                   removedPaths: Option[Set[String]],
                                    added: Seq[graft.spark.CowFileOut],
                                    touchedManifests: Option[Set[String]],
-                                   sortOrder: Option[SortOrder] = None): Snapshot = {
+                                   sortOrder: Option[SortOrder],
+                                   op: SnapshotOp): Snapshot = {
     val md = table.metadata
-    val location = table.location
     val seq = md.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(location, "metadata"); metaDir.mkdirs()
-
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val (dataManifests, deleteManifests) = prevManifests.partition(_.content == 0)
-    // ADDED files are written under the CURRENT spec; rewritten manifests
-    // keep their OWN spec's partition type (specs may have evolved — writing
-    // old tuples under the new partition struct would drop their values)
-    val partType = table.spec.partitionType(table.schema)
-    val partTypeOf: Int => StructT = specId =>
-      md.partitionSpecs.find(_.specId == specId)
-        .map(_.partitionType(table.schema)).getOrElse(partType)
-
+    val metaDir = metadataDir(table)
+    val isRemoved: String => Boolean = p => removedPaths.forall(_.contains(p))
+    val (dataManifests, deleteManifests) =
+      liveManifests(table).partition(_.content == 0)
     // scan provenance (when the caller has it) bounds the metadata work to
     // O(affected manifests): only manifests the scan actually read files
     // from can reference a replaced path. Without provenance, one parallel
@@ -1262,75 +964,35 @@ object TableWriter {
       }.seq.toSeq
     }
     val (touched, untouchedRead) = withEntries.partition { case (_, es) =>
-      es.exists(e => removedPaths.contains(e.dataFile.path))
+      es.exists(e => isRemoved(e.dataFile.path))
     }
     val untouched = untouchedRead.map(_._1) ++ skipped
 
+    // rewritten manifests keep their OWN spec's partition type (specs may
+    // have evolved — writing old tuples under the new partition struct
+    // would drop their values); the NEXT commit drops all-DELETED ones
     val rewritten = touched.zipWithIndex.map { case ((m, es), i) =>
-      // removed files stay in the rewritten manifest as DELETED-status
-      // entries (Iceberg spec): the committing snapshot names what it
-      // removed, so `entries` forensics and changelog readers never diff
-      // whole snapshots. The NEXT commit drops all-DELETED manifests.
-      val (gone, kept0) = es.partition(e => removedPaths.contains(e.dataFile.path))
-      val kept = kept0.map(_.copy(status = ManifestEntryStatus.Existing))
-      val removed = gone.map(_.copy(status = ManifestEntryStatus.Deleted,
-        snapshotId = Some(snapId)))
-      val mf = new File(metaDir, s"manifest-cow-$snapId-$i.avro")
-      ManifestIO.writeManifest(mf, kept ++ removed, partTypeOf(m.partitionSpecId))
-      ManifestFile(
-        path = mf.getPath, length = mf.length(),
-        partitionSpecId = m.partitionSpecId, content = 0,
-        sequenceNumber = seq,
-        minSequenceNumber =
-          (kept ++ removed).flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-        addedSnapshotId = snapId,
-        addedFilesCount = 0, existingFilesCount = kept.size,
-        deletedFilesCount = removed.size,
-        addedRowsCount = 0,
-        existingRowsCount = kept.map(_.dataFile.recordCount).sum,
-        deletedRowsCount = removed.map(_.dataFile.recordCount).sum,
-        partitions = partitionSummaries(kept, partTypeOf(m.partitionSpecId)),
-        formatVersion = 2)
+      val (gone, kept) = es.partition(e => isRemoved(e.dataFile.path))
+      writeManifest(table, s"manifest-cow-$snapId-$i", 0, m.partitionSpecId,
+        partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
+        retire(kept, gone, snapId), snapId, seq)
     }
 
-    val addedEntries0 = added.map { f =>
-      val info0 = statsFromFooter(new File(f.path), table.schema,
-        f.partition.filter(_._2 != null), DataFileContent.Data, None, f.nanCounts)
-      // a sorted rewrite stamps its order so readers can claim per-file
-      // ordering (SupportsReportOrdering gates on this exact id)
-      val info = sortOrder.fold(info0)(o =>
-        info0.copy(sortOrderId = Some(o.orderId)))
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-        info)
-    }
-    val lineage = assignLineage(md, addedEntries0)
+    // a sorted rewrite stamps its order so readers can claim per-file
+    // ordering (SupportsReportOrdering gates on this exact id)
+    val lineage = assignLineage(md, added.map(addedEntry(table, _, snapId, seq,
+      sortOrder.fold(0)(_.orderId))))
     val addedEntries = lineage.entries
-    val addManifest =
-      if (addedEntries.isEmpty) None
-      else {
-        val mf = new File(metaDir, s"manifest-cow-$snapId.avro")
-        ManifestIO.writeManifest(mf, addedEntries, partType)
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 0,
-          sequenceNumber = seq, minSequenceNumber = seq,
-          addedSnapshotId = snapId,
-          addedFilesCount = addedEntries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = addedEntries.map(_.dataFile.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = partitionSummaries(addedEntries, partType),
-          formatVersion = 2,
-          firstRowId = lineage.manifestFirstRowId))
-      }
-
     val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      untouched ++ rewritten ++ addManifest ++ deleteManifests)
+    ManifestIO.writeManifestList(listFile, untouched ++ rewritten ++
+      addedManifest(table, addedEntries, "manifest-cow", snapId, seq,
+        lineage.manifestFirstRowId) ++
+      (if (removedPaths.isEmpty) Nil else deleteManifests))
     Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
       System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(OpOverwrite,
-        Map("replaced-data-files" -> removedPaths.size.toString,
+      Some(SnapshotSummary(op,
+        Map("replaced-data-files" ->
+          rewritten.map(_.deletedFilesCount).sum.toString,
           "added-data-files" -> addedEntries.size.toString,
           "added-records" ->
             addedEntries.map(_.dataFile.recordCount).sum.toString))),
@@ -1386,13 +1048,7 @@ object TableWriter {
               zOrderBy: Seq[String] = Nil,
               where: Option[BooleanExpression] = None,
               minFileSizeBytes: Option[Long] = None,
-              deleteFileThreshold: Option[Int] = None,
-              // set when the table's catalog of record is a REST server:
-              // the rewrite commits through replaceFilesRest pinned to
-              // `basedOn` (the load `table` was built from), never by
-              // writing metadata behind the server
-              restCommit: Option[(graft.catalog.RestCatalog, Seq[String],
-                graft.catalog.LoadedTable)] = None): IcebergTable = {
+              deleteFileThreshold: Option[Int] = None): IcebergTable = {
     require(sortBy.isEmpty || zOrderBy.isEmpty,
       "compact takes sortBy or zOrderBy, not both")
     // V3 row lineage survives the rewrite (spec: writers must preserve row
@@ -1450,60 +1106,20 @@ object TableWriter {
             else df.repartitionByRange(cols: _*))
         .sortWithinPartitions(cols: _*)
     } else if (targetFiles > 0) df = df.repartition(targetFiles)
+    val outs = writeDistributed(df,
+      new File(table.location, s"data/compact-${java.util.UUID.randomUUID()}"),
+      table.schema, table.spec, table.properties, order, preClustered = true)
     scoped match {
+      // scoped rewrite: swap exactly the selected files in one OVERWRITE
+      // snapshot — manifests without a selected file are carried by
+      // reference, untouched partitions' files stay byte-identical
       case Some((selected, manifests)) =>
-        // scoped rewrite: write the replacement files with the shared task
-        // writers, then swap exactly the selected files in one OVERWRITE
-        // snapshot — manifests without a selected file are carried by
-        // reference, untouched partitions' files stay byte-identical
-        val dataDir = new File(table.location,
-          s"data/compact-${java.util.UUID.randomUUID()}")
-        val outs = writeDistributed(df, dataDir, table.schema, table.spec,
-          table.properties, order, preClustered = true)
-        restCommit match {
-          case Some((rc, id, basedOn)) =>
-            val committed = replaceFilesRest(rc, id, selected, outs,
-              touchedManifests = if (manifests.nonEmpty) Some(manifests)
-                                 else None,
-              basedOn = Some(basedOn),
-              sortOrder = Some(order).filterNot(_.isUnsorted))
-            restTableOf(committed, rc)
-          case None =>
-            replaceFiles(table.location, selected, outs,
-              expectedVersion = Some(table.loadedVersion),
-              touchedManifests = if (manifests.nonEmpty) Some(manifests)
-                                 else None)
-        }
+        replaceFiles(table, selected, outs,
+          touchedManifests = Some(manifests).filter(_.nonEmpty),
+          sortOrder = Some(order))
+      // whole-table rewrite: ONE replace snapshot retires every live file
       case None =>
-        restCommit match {
-          case Some((rc, id, basedOn)) =>
-            // whole-table rewrite over REST = a replace of every live
-            // data file, committed head-pinned (the same OVERWRITE
-            // supersession shape as the scoped path with full scope)
-            val removed = table.newScan().planFiles()
-              .map(_.file.path).toSet
-            val dataDir = new File(table.location,
-              s"data/compact-${java.util.UUID.randomUUID()}")
-            val outs = writeDistributed(df, dataDir, table.schema, table.spec,
-              table.properties, order, preClustered = true)
-            val committed = replaceFilesRest(rc, id, removed, outs,
-              basedOn = Some(basedOn),
-              sortOrder = Some(order).filterNot(_.isUnsorted))
-            restTableOf(committed, rc)
-          case None =>
-            val version = table.loadedVersion + 1
-            val committed = commit(df, table.location, table.schema, table.spec,
-              table.properties, version, table.currentSnapshot,
-              Nil, Nil, // replace: the new manifest list carries ONLY the new files
-              table.metadata.lastSequenceNumber + 1,
-              sortOrder = order, preClustered = true)
-            // rewrite the snapshot op to REPLACE for an honest history
-            val md = committed.metadata
-            val fixed = md.copy(snapshots = md.snapshots.init :+
-              md.snapshots.last.copy(summary = Some(SnapshotSummary(OpReplace))))
-            writeMetadata(table.location, fixed, currentVersion(table.location) + 1)
-            IcebergTables.load(table.location)
-        }
+        replace(table, None, outs, None, Some(order), OpReplace)
     }
   }
 
@@ -1639,15 +1255,7 @@ object TableWriter {
       StructT(s.fields :+ NestedField(newId, leaf, assigned, required = required,
         doc, initialDefault = initialDefault, writeDefault = writeDefault))
     }
-    val newSchema = Schema(md.currentSchemaId + 1, newStruct,
-      md.currentSchema.identifierFieldIds)
-    val version = table.loadedVersion + 1
-    writeMetadata(table.location, md.copy(
-      lastColumnId = nextId,
-      schemas = md.schemas :+ newSchema,
-      currentSchemaId = newSchema.schemaId,
-      lastUpdatedMs = System.currentTimeMillis()), version)
-    IcebergTables.load(table.location)
+    commitSchema(table, newStruct, lastColumnId = nextId)
   }
 
   /** Partition spec evolution: add a partition field (metadata-only; spec
@@ -1657,10 +1265,7 @@ object TableWriter {
     * `ADD PARTITION FIELD`. */
   def addPartitionField(table: IcebergTable, srcCol: String,
                         transform: Transform,
-                        name: Option[String] = None,
-                        restCommit: Option[(graft.catalog.RestCatalog,
-                          Seq[String], graft.catalog.LoadedTable)] = None)
-      : IcebergTable = {
+                        name: Option[String] = None): IcebergTable = {
     val md = table.metadata
     val src = md.currentSchema.findFieldByName(srcCol).getOrElse(
       throw new IllegalArgumentException(s"column '$srcCol' not found"))
@@ -1676,31 +1281,13 @@ object TableWriter {
     val newSpec = PartitionSpec(
       md.partitionSpecs.map(_.specId).maxOption.getOrElse(-1) + 1,
       spec.fields :+ PartitionField(src.id, nextFieldId, fieldName, transform))
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        // spec evolution commits the spec's add-spec + set-default-spec(-1)
-        // actions; the server owns id assignment on conflict
-        restTableOf(rc.commitTable(id,
-          Seq(graft.catalog.AssertTableUuid(basedOn.metadata.tableUuid)),
-          Seq(graft.catalog.AddPartitionSpec(newSpec),
-            graft.catalog.SetDefaultSpec(-1))), rc)
-      case None =>
-        writeMetadata(table.location, md.copy(
-          partitionSpecs = md.partitionSpecs :+ newSpec,
-          defaultSpecId = newSpec.specId,
-          lastPartitionId = Some(nextFieldId),
-          lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-        IcebergTables.load(table.location)
-    }
+    commitSpec(table, newSpec)
   }
 
   /** Partition spec evolution: drop a partition field from the default spec
     * (metadata-only). Files written under older specs stay pruned by their
     * own spec; new writes stop partitioning on the dropped field. */
-  def dropPartitionField(table: IcebergTable, fieldName: String,
-                         restCommit: Option[(graft.catalog.RestCatalog,
-                           Seq[String], graft.catalog.LoadedTable)] = None)
-      : IcebergTable = {
+  def dropPartitionField(table: IcebergTable, fieldName: String): IcebergTable = {
     val md = table.metadata
     val spec = table.spec
     require(spec.fields.exists(_.name == fieldName),
@@ -1708,20 +1295,14 @@ object TableWriter {
     val newSpec = PartitionSpec(
       md.partitionSpecs.map(_.specId).maxOption.getOrElse(-1) + 1,
       spec.fields.filterNot(_.name == fieldName))
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        return restTableOf(rc.commitTable(id,
-          Seq(graft.catalog.AssertTableUuid(basedOn.metadata.tableUuid)),
-          Seq(graft.catalog.AddPartitionSpec(newSpec),
-            graft.catalog.SetDefaultSpec(-1))), rc)
-      case None => ()
-    }
-    writeMetadata(table.location, md.copy(
-      partitionSpecs = md.partitionSpecs :+ newSpec,
-      defaultSpecId = newSpec.specId,
-      lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    commitSpec(table, newSpec)
   }
+
+  /** Commit a partition-spec evolution as the spec's `add-spec` +
+    * `set-default-spec(-1)` — the catalog owns spec-id assignment on
+    * conflict and advances `last-partition-id`. Metadata-only. */
+  private def commitSpec(table: IcebergTable, spec: PartitionSpec): IcebergTable =
+    commitUpdates(table, Seq(AddPartitionSpec(spec), SetDefaultSpec(-1)))
 
   /** Schema evolution: rename a top-level column. Field-ID-based resolution
     * makes this safe — the field keeps its id, so data files written under
@@ -1746,13 +1327,7 @@ object TableWriter {
       s.copy(fields = s.fields.map(x =>
         if (x.id == f.id && x.name == leaf) x.copy(name = to) else x))
     }
-    val newSchema = Schema(md.schemas.map(_.schemaId).max + 1, newStruct,
-      md.currentSchema.identifierFieldIds)
-    writeMetadata(table.location, md.copy(
-      schemas = md.schemas :+ newSchema,
-      currentSchemaId = newSchema.schemaId,
-      lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    commitSchema(table, newStruct, md.lastColumnId)
   }
 
   /** Schema evolution: drop a top-level column (metadata-only — data files
@@ -1783,13 +1358,7 @@ object TableWriter {
         else s"cannot drop the last field of struct '${parent.mkString(".")}'")
       s.copy(fields = s.fields.filterNot(x => x.id == f.id && x.name == leaf))
     }
-    val newSchema = Schema(md.schemas.map(_.schemaId).max + 1, newStruct,
-      md.currentSchema.identifierFieldIds)
-    writeMetadata(table.location, md.copy(
-      schemas = md.schemas :+ newSchema,
-      currentSchemaId = newSchema.schemaId,
-      lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    commitSchema(table, newStruct, md.lastColumnId)
   }
 
   /** Schema evolution: widen a column's type per the Iceberg promotion
@@ -1825,13 +1394,7 @@ object TableWriter {
       s.copy(fields = s.fields.map(x =>
         if (x.id == f.id && x.name == leaf) x.copy(fieldType = to) else x))
     }
-    val newSchema = Schema(md.schemas.map(_.schemaId).max + 1, newStruct,
-      md.currentSchema.identifierFieldIds)
-    writeMetadata(table.location, md.copy(
-      schemas = md.schemas :+ newSchema,
-      currentSchemaId = newSchema.schemaId,
-      lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    commitSchema(table, newStruct, md.lastColumnId)
   }
 
   /** Shared ALTER COLUMN plumbing: resolve `path`, apply `change` to the
@@ -1850,13 +1413,22 @@ object TableWriter {
       st.copy(fields = st.fields.map(x =>
         if (x.id == f.id && x.name == leaf) change(x) else x))
     }
-    val newSchema = Schema(md.schemas.map(_.schemaId).max + 1, newStruct,
+    commitSchema(table, newStruct, md.lastColumnId)
+  }
+
+  /** Commit `struct` as a new current schema (id max + 1 — immune to
+    * current-id regressions) via the spec's `add-schema` +
+    * `set-current-schema(-1)`, guarded by `assert-current-schema-id` so two
+    * racing evolutions based on the same schema cannot both land.
+    * Metadata-only. */
+  private def commitSchema(table: IcebergTable, struct: StructT,
+                           lastColumnId: Int): IcebergTable = {
+    val md = table.metadata
+    val schema = Schema(md.schemas.map(_.schemaId).max + 1, struct,
       md.currentSchema.identifierFieldIds)
-    writeMetadata(table.location, md.copy(
-      schemas = md.schemas :+ newSchema,
-      currentSchemaId = newSchema.schemaId,
-      lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    table.ops.commit(md,
+      Seq(AssertTableUuid(md.tableUuid), AssertCurrentSchemaId(md.currentSchemaId)),
+      Seq(AddSchema(schema, Some(lastColumnId)), SetCurrentSchema(-1)))
   }
 
   /** Resolve a column path to its Iceberg type (DDL plumbing). */
@@ -1913,13 +1485,13 @@ object TableWriter {
 
   /** Metadata-only property update (SET/UNSET TBLPROPERTIES). */
   def updateProperties(table: IcebergTable, set: Map[String, String],
-                       unset: Seq[String] = Nil): IcebergTable = {
-    val version = table.loadedVersion + 1
-    writeMetadata(table.location, table.metadata.copy(
-      properties = table.metadata.properties ++ set -- unset,
-      lastUpdatedMs = System.currentTimeMillis()), version)
-    IcebergTables.load(table.location)
-  }
+                       unset: Seq[String] = Nil): IcebergTable =
+    commitUpdates(table, propertyUpdates(set, unset))
+
+  private def propertyUpdates(set: Map[String, String],
+                              unset: Seq[String]): Seq[TableUpdate] =
+    Seq(SetProperties(set)).filter(_ => set.nonEmpty) ++
+      Seq(RemoveProperties(unset)).filter(_ => unset.nonEmpty)
 
   /** Roll `main` back to an earlier snapshot (metadata-only): the current
     * pointer moves, history is preserved, rolled-back snapshots stay
@@ -1976,9 +1548,7 @@ object TableWriter {
   }
 
   def rewritePositionDeletes(table: IcebergTable,
-                             spark: org.apache.spark.sql.SparkSession,
-                             restCommit: Option[(graft.catalog.RestCatalog,
-                               Seq[String], graft.catalog.LoadedTable)] = None)
+                             spark: org.apache.spark.sql.SparkSession)
       : (IcebergTable, Int, Int) = {
     val md = table.metadata
     val snap = table.currentSnapshot.getOrElse(return (table, 0, 0))
@@ -2063,44 +1633,14 @@ object TableWriter {
     // spec, partition type preserved so tuples survive the rewrite.
     val eqManifests = eqEntries.groupBy(_._1).toSeq.sortBy(_._1).map {
       case (specId, tagged) =>
-        val es = tagged.map(_._2.copy(status = ManifestEntryStatus.Existing))
-        val partType = md.partitionSpecs.find(_.specId == specId)
-          .map(_.partitionType(table.schema)).getOrElse(StructT(Nil))
-        val emf = new File(metaDir, s"manifest-del-rw-eq-$snapId-$specId.avro")
-        ManifestIO.writeManifest(emf, es, partType)
-        ManifestFile(
-          path = emf.getPath, length = emf.length(),
-          partitionSpecId = specId, content = 1,
-          sequenceNumber = seq,
-          minSequenceNumber =
-            es.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-          addedSnapshotId = snapId,
-          addedFilesCount = 0, existingFilesCount = es.size,
-          deletedFilesCount = 0,
-          addedRowsCount = 0,
-          existingRowsCount = es.map(_.dataFile.recordCount).sum,
-          deletedRowsCount = 0,
-          partitions = partitionSummaries(es, partType), formatVersion = 2)
+        writeManifest(table, s"manifest-del-rw-eq-$snapId-$specId", 1, specId,
+          partTypeOf(table, specId, StructT(Nil)),
+          retire(tagged.map(_._2), Nil, snapId), snapId, seq)
     }
     val dvManifests =
       if (dvRescued.isEmpty) Nil
-      else {
-        val dmf = new File(metaDir, s"manifest-del-rw-dv-$snapId.avro")
-        ManifestIO.writeManifest(dmf, dvRescued, StructT(Nil))
-        Seq(ManifestFile(
-          path = dmf.getPath, length = dmf.length(),
-          partitionSpecId = table.spec.specId, content = 1,
-          sequenceNumber = seq,
-          minSequenceNumber =
-            dvRescued.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-          addedSnapshotId = snapId,
-          addedFilesCount = 0, existingFilesCount = dvRescued.size,
-          deletedFilesCount = 0,
-          addedRowsCount = 0,
-          existingRowsCount = dvRescued.map(_.dataFile.recordCount).sum,
-          deletedRowsCount = 0,
-          partitions = Nil, formatVersion = 2))
-      }
+      else Seq(writeManifest(table, s"manifest-del-rw-dv-$snapId", 1,
+        table.spec.specId, StructT(Nil), dvRescued, snapId, seq))
 
     val listFile = new File(metaDir, s"snap-$snapId.avro")
     ManifestIO.writeManifestList(listFile,
@@ -2113,30 +1653,10 @@ object TableWriter {
         Map("delete-files-rewritten" -> posFiles.size.toString,
           "delete-files-created" -> mergedEntries.size.toString))),
       Some(table.schema.schemaId))
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        // maintenance on a REST table commits through the server, pinned
-        // to the enumerating load's main head (racing commits 409)
-        val change = restChangeFor(basedOn.metadata, id, snapshot)
-        val committed = rc.commitTable(id, change.requirements, change.updates)
-        (restTableOf(committed, rc), posFiles.size, mergedEntries.size)
-      case None =>
-        writeMetadata(table.location, md.copy(
-          lastSequenceNumber = seq,
-          lastUpdatedMs = now,
-          snapshots = md.snapshots :+ snapshot,
-          currentSnapshotId = Some(snapId),
-          snapshotLog = md.snapshotLog :+ SnapshotLogEntry(snapId, now),
-          refs = advRef(md.refs, TableMetadata.MainBranch, snapId)),
-          table.loadedVersion + 1)
-        (IcebergTables.load(table.location), posFiles.size, mergedEntries.size)
-    }
+    (publish(table, snapshot), posFiles.size, mergedEntries.size)
   }
 
-  def rewriteManifests(table: IcebergTable,
-                       restCommit: Option[(graft.catalog.RestCatalog,
-                         Seq[String], graft.catalog.LoadedTable)] = None)
-      : IcebergTable = {
+  def rewriteManifests(table: IcebergTable): IcebergTable = {
     val md = table.metadata
     val snap = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"${table.location} has no snapshot"))
@@ -2148,7 +1668,7 @@ object TableWriter {
 
     val seq = md.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
+    val metaDir = metadataDir(table)
 
     val bySpec = dataManifests.groupBy(_.partitionSpecId).toSeq.sortBy(_._1)
     val rewritten = bySpec.flatMap { case (specId, ms) =>
@@ -2161,30 +1681,15 @@ object TableWriter {
       }
       if (entries.isEmpty) Nil
       else {
-        val partType = md.partitionSpecs.find(_.specId == specId)
-          .map(_.partitionType(table.schema))
-          .getOrElse(table.spec.partitionType(table.schema))
+        val partType = partTypeOf(table, specId,
+          table.spec.partitionType(table.schema))
         val totalBytes = ms.map(_.length).sum
         val groups = math.max(1, math.min(entries.size,
           math.ceil(totalBytes.toDouble / targetBytes).toInt))
         val perGroup = math.ceil(entries.size.toDouble / groups).toInt
         entries.grouped(perGroup).zipWithIndex.map { case (es, i) =>
-          val mf = new File(metaDir, s"manifest-rw-$snapId-$specId-$i.avro")
-          ManifestIO.writeManifest(mf, es, partType)
-          ManifestFile(
-            path = mf.getPath, length = mf.length(),
-            partitionSpecId = specId, content = 0,
-            sequenceNumber = seq,
-            minSequenceNumber =
-              es.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-            addedSnapshotId = snapId,
-            addedFilesCount = 0, existingFilesCount = es.size,
-            deletedFilesCount = 0,
-            addedRowsCount = 0,
-            existingRowsCount = es.map(_.dataFile.recordCount).sum,
-            deletedRowsCount = 0,
-            partitions = partitionSummaries(es, partType),
-            formatVersion = 2)
+          writeManifest(table, s"manifest-rw-$snapId-$specId-$i", 0, specId,
+            partType, es, snapId, seq)
         }.toSeq
       }
     }
@@ -2198,74 +1703,45 @@ object TableWriter {
         Map("manifests-rewritten" -> dataManifests.size.toString,
           "manifests-created" -> rewritten.size.toString))),
       Some(table.schema.schemaId))
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        val change = restChangeFor(basedOn.metadata, id, snapshot)
-        restTableOf(rc.commitTable(id, change.requirements, change.updates), rc)
-      case None =>
-        writeMetadata(table.location, md.copy(
-          lastSequenceNumber = seq,
-          lastUpdatedMs = now,
-          snapshots = md.snapshots :+ snapshot,
-          currentSnapshotId = Some(snapId),
-          snapshotLog = md.snapshotLog :+ SnapshotLogEntry(snapId, now),
-          refs = advRef(md.refs, TableMetadata.MainBranch, snapId)),
-          table.loadedVersion + 1)
-        IcebergTables.load(table.location)
-    }
+    publish(table, snapshot)
   }
 
   def rollbackTo(table: IcebergTable, snapshotId: Long): IcebergTable = {
     val md = table.metadata
     require(md.snapshotById(snapshotId).isDefined, s"snapshot $snapshotId not found")
-    val now = System.currentTimeMillis()
-    writeMetadata(table.location, md.copy(
-      currentSnapshotId = Some(snapshotId),
-      lastUpdatedMs = now,
-      snapshotLog = md.snapshotLog :+ SnapshotLogEntry(snapshotId, now),
-      refs = advRef(md.refs, TableMetadata.MainBranch, snapshotId)), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    // head-pinned: a commit between load and rollback conflicts instead of
+    // being silently undone
+    table.ops.commit(md, headGuard(md), Seq(setRefUpdate(md, MainBranch, snapshotId)))
   }
 
   /** The effect of one expiry pass over `md0` at time `now`: the refs that
-    * aged out, and the snapshot partition into kept/expired — shared
-    * verbatim by the local-FS route ([[expireSnapshots]], which rewrites
-    * metadata) and the REST route ([[expireSnapshotsRest]], which commits
-    * `remove-snapshot-ref` + `remove-snapshots` update actions), so the two
-    * catalog planes retain IDENTICAL history under identical policies. */
+    * aged out, and the snapshot partition into kept/expired. */
   private[spark] final case class ExpiryPlan(agedOutRefs: Set[String],
                                              kept: Seq[Snapshot],
                                              expired: Seq[Snapshot])
 
   /** Expire snapshots older than `olderThanMs`, always retaining the
-    * current snapshot, the newest `retainLast`, and every ref target.
-    * Metadata-only by default; with `deleteFiles` the data/manifest files
-    * reachable ONLY from expired snapshots are removed from disk. */
+    * current snapshot, the newest `retainLast`, and every ref target —
+    * landed as `remove-snapshot-ref` + `remove-snapshots` updates pinned
+    * to main's head, so a concurrent commit conflicts instead of this pass
+    * expiring history computed against a stale snapshot set. With
+    * `deleteFiles` the data/manifest files reachable ONLY from expired
+    * snapshots are removed from disk — only AFTER the commit landed, so a
+    * conflict leaves every file of the still-live history intact. */
   def expireSnapshots(table: IcebergTable, olderThanMs: Long,
                       retainLast: Int = 1,
                       deleteFiles: Boolean = false): IcebergTable = {
-    val md0 = table.metadata
-    val now = System.currentTimeMillis()
-    val plan = computeExpiry(md0, olderThanMs, retainLast, now)
-    val agedOut = plan.agedOutRefs
-    val md = md0.copy(refs = md0.refs -- agedOut)
-    val (kept, expired) = (plan.kept, plan.expired)
-    if (expired.isEmpty && agedOut.isEmpty) return table
-    if (expired.isEmpty) {
-      writeMetadata(table.location, md.copy(
-        lastUpdatedMs = System.currentTimeMillis()), table.loadedVersion + 1)
-      return IcebergTables.load(table.location)
-    }
-
-    if (deleteFiles) deleteExpiredFiles(table, kept, expired)
-
-    writeMetadata(table.location, md.copy(
-      snapshots = kept,
-      snapshotLog = md.snapshotLog.filter(e =>
-        kept.exists(_.snapshotId == e.snapshotId)),
-      lastUpdatedMs = System.currentTimeMillis()),
-      table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    val md = table.metadata
+    val plan = computeExpiry(md, olderThanMs, retainLast,
+      System.currentTimeMillis())
+    if (plan.expired.isEmpty && plan.agedOutRefs.isEmpty) return table
+    val committed = table.ops.commit(md, headGuard(md),
+      plan.agedOutRefs.toSeq.sorted.map(RemoveSnapshotRef(_)) ++
+        Seq(RemoveSnapshots(plan.expired.map(_.snapshotId)))
+          .filter(_ => plan.expired.nonEmpty))
+    if (deleteFiles && plan.expired.nonEmpty)
+      deleteExpiredFiles(table, plan.kept, plan.expired)
+    committed
   }
 
   /** Remove from disk every file reachable ONLY from `expired` snapshots.
@@ -2278,123 +1754,6 @@ object TableWriter {
                                  expired: Seq[Snapshot]): Unit = {
     val live = reachablePaths(table, kept, liveOnly = true)
     (reachablePaths(table, expired) -- live).foreach(p => new File(p).delete())
-  }
-
-  /** Expire snapshots of a REST-cataloged table THROUGH the catalog: the
-    * same per-branch retention computation as [[expireSnapshots]], landed
-    * as `remove-snapshot-ref` + `remove-snapshots` update actions guarded
-    * by assert-table-uuid + assert-ref-snapshot-id(main) — a concurrent
-    * commit moves main and the server answers 409 instead of this pass
-    * silently expiring history computed against a stale snapshot set.
-    * (The reference panics on every commit, rest.go:418-424; its expiry
-    * story is absent entirely.) */
-  def expireSnapshotsRest(catalog: graft.catalog.RestCatalog,
-                          identifier: Seq[String], olderThanMs: Long,
-                          retainLast: Int = 1,
-                          deleteFiles: Boolean = false)
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val plan = computeExpiry(md, olderThanMs, retainLast,
-      System.currentTimeMillis())
-    if (plan.agedOutRefs.isEmpty && plan.expired.isEmpty) return loaded
-    val updates: Seq[graft.catalog.TableUpdate] =
-      plan.agedOutRefs.toSeq.sorted.map(graft.catalog.RemoveSnapshotRef(_)) ++
-        (if (plan.expired.isEmpty) Nil
-         else Seq(graft.catalog.RemoveSnapshots(plan.expired.map(_.snapshotId))))
-    val committed = catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-            .orElse(md.currentSnapshotId))),
-      updates)
-    // file sweep only AFTER the server accepted the commit — a 409 above
-    // must leave every data/manifest file of the still-live history intact
-    if (deleteFiles && plan.expired.nonEmpty) {
-      val table = new IcebergTable(md.location, loaded.metadataLocation, md,
-        IOConfig.fileIO(loaded.ioProps), ioProps = loaded.ioProps)
-      deleteExpiredFiles(table, plan.kept, plan.expired)
-    }
-    committed
-  }
-
-  /** Ref maintenance on a REST-cataloged table — create/advance a branch
-    * or tag. One UpdateTableRequest (`set-snapshot-ref`), uuid-guarded;
-    * same semantics and refusals as [[createRef]]. */
-  def createRefRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                    name: String, refType: RefType,
-                    snapshotId: Option[Long] = None,
-                    maxRefAgeMs: Option[Long] = None,
-                    minSnapshotsToKeep: Option[Int] = None,
-                    maxSnapshotAgeMs: Option[Long] = None)
-      : graft.catalog.LoadedTable = {
-    require(refType == BranchRef ||
-      (minSnapshotsToKeep.isEmpty && maxSnapshotAgeMs.isEmpty),
-      "snapshot retention (min-snapshots-to-keep / max-snapshot-age-ms) " +
-        "applies to branches only; tags pin exactly their target")
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val id = snapshotId.orElse(md.currentSnapshotId).getOrElse(
-      throw new IllegalArgumentException("table has no snapshot to reference"))
-    require(md.snapshotById(id).isDefined, s"snapshot $id not found")
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid)),
-      Seq(graft.catalog.SetSnapshotRef(name, id,
-        if (refType == BranchRef) "branch" else "tag",
-        minSnapshotsToKeep, maxSnapshotAgeMs, maxRefAgeMs)))
-  }
-
-  /** [[setRefRetention]] on the REST plane: re-SET the ref at its current
-    * target with the new policy (the spec's set-snapshot-ref REPLACES the
-    * ref node), CAS-guarded at the ref's current position. */
-  def setRefRetentionRest(catalog: graft.catalog.RestCatalog,
-                          identifier: Seq[String], name: String,
-                          minSnapshotsToKeep: Option[Int],
-                          maxSnapshotAgeMs: Option[Long])
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val r = md.refs.getOrElse(name,
-      throw new IllegalArgumentException(s"ref '$name' not found"))
-    require(r.refType == BranchRef,
-      s"snapshot retention applies to branches only; '$name' is a tag")
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(name, Some(r.snapshotId))),
-      Seq(graft.catalog.SetSnapshotRef(name, r.snapshotId, "branch",
-        minSnapshotsToKeep, maxSnapshotAgeMs, r.maxRefAgeMs)))
-  }
-
-  /** [[dropRef]] on the REST plane (`remove-snapshot-ref`; main protected). */
-  def dropRefRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                  name: String): graft.catalog.LoadedTable = {
-    require(name != TableMetadata.MainBranch, "cannot drop the main branch")
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    require(md.refs.contains(name), s"ref '$name' not found")
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid)),
-      Seq(graft.catalog.RemoveSnapshotRef(name)))
-  }
-
-  /** [[rollbackTo]] on the REST plane: move main back to an existing
-    * snapshot with a CAS on its current position — a concurrent commit
-    * between load and rollback 409s instead of being silently undone. */
-  def rollbackToRest(catalog: graft.catalog.RestCatalog,
-                     identifier: Seq[String], snapshotId: Long)
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    require(md.snapshotById(snapshotId).isDefined,
-      s"snapshot $snapshotId not found")
-    val main = md.refs.get(TableMetadata.MainBranch)
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          main.map(_.snapshotId).orElse(md.currentSnapshotId))),
-      Seq(graft.catalog.SetSnapshotRef(TableMetadata.MainBranch, snapshotId,
-        "branch", main.flatMap(_.minSnapshotsToKeep),
-        main.flatMap(_.maxSnapshotAgeMs), main.flatMap(_.maxRefAgeMs))))
   }
 
   /** The shared expiry computation (see [[ExpiryPlan]]). */
@@ -2509,44 +1868,25 @@ object TableWriter {
   }
 
   /** Stage an APPEND snapshot for already-written data files: footer stats
-    * + task-side NaN counts, one new manifest, previous manifests carried
-    * by reference, new manifest list. Pure staging — the returned Snapshot
-    * is not yet committed, so the same staging serves both the local-FS
-    * CAS commit ([[appendFiles]]) and the REST-catalog `updateTable`
-    * commit ([[appendFilesRest]]). */
+    * + task-side NaN counts, one new manifest, the parent's manifests
+    * carried by reference, new manifest list. Pure staging — the returned
+    * Snapshot is not yet committed. */
   private def stageAppendSnapshot(table: IcebergTable,
                                   added: Seq[graft.spark.CowFileOut],
                                   extraSummary: Map[String, String],
+                                  sortOrderId: Int = 0,
                                   parentOverride: Option[Snapshot] = None)
       : Snapshot = {
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val partType = table.spec.partitionType(table.schema)
-    val entries0 = added.sortBy(_.path).map { f =>
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-        statsFromFooter(new File(f.path), table.schema,
-          f.partition.filter(_._2 != null), DataFileContent.Data, None, f.nanCounts))
-    }
-    val lineage = assignLineage(table.metadata, entries0)
+    val lineage = assignLineage(table.metadata, added.sortBy(_.path)
+      .map(addedEntry(table, _, snapId, seq, sortOrderId)))
     val entries = lineage.entries
-    val mf = new File(metaDir, s"manifest-$snapId.avro")
-    ManifestIO.writeManifest(mf, entries, partType)
-    val newManifest = ManifestFile(
-      path = mf.getPath, length = mf.length(),
-      partitionSpecId = table.spec.specId, content = 0,
-      sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-      addedFilesCount = entries.size, existingFilesCount = 0, deletedFilesCount = 0,
-      addedRowsCount = entries.map(_.dataFile.recordCount).sum,
-      existingRowsCount = 0, deletedRowsCount = 0,
-      partitions = partitionSummaries(entries, partType), formatVersion = 2,
-      firstRowId = lineage.manifestFirstRowId)
     val parent = parentOverride.orElse(table.currentSnapshot)
-    val prevManifests = liveManifests(parent.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, prevManifests :+ newManifest)
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, liveManifests(table, parent) ++
+      addedManifest(table, entries, "manifest", snapId, seq,
+        lineage.manifestFirstRowId))
     Snapshot(snapId, parent.map(_.snapshotId), seq,
       System.currentTimeMillis(), listFile.getPath, Some(SnapshotSummary(OpAppend,
         Map("added-data-files" -> entries.size.toString,
@@ -2559,56 +1899,43 @@ object TableWriter {
       firstRowId = lineage.snapshotFirstRowId)
   }
 
-  /** The table's next-row-id after `snapshot` commits: its first-row-id
-    * advanced by the rows it added (from the staged summary). Unchanged
-    * below V3. */
-  private def nextRowIdAfter(md: TableMetadata, snapshot: Snapshot): Option[Long] =
-    snapshot.firstRowId match {
-      case Some(base) => Some(base + snapshot.summary
-        .flatMap(_.properties.get("added-records")).map(_.toLong).getOrElse(0L))
-      case None => md.nextRowId
-    }
-
-  /** Append an APPEND snapshot from already-written data files (the
-    * streaming sink's per-epoch commit) to a local-FS CAS table. */
-  def appendFiles(location: String, added: Seq[graft.spark.CowFileOut],
+  /** Commit an APPEND snapshot of already-written data files (the
+    * streaming sink's per-epoch commit, `add_files`, and every DataFrame
+    * append): to main, or — with `branch` — to that branch only (WAP
+    * staging). The snapshot stages against the plane's append base
+    * ([[TableOperations.appendBase]]). */
+  def appendFiles(table: IcebergTable, added: Seq[graft.spark.CowFileOut],
                   extraSummary: Map[String, String] = Map.empty,
                   branch: Option[String] = None): IcebergTable = {
-    val table = IcebergTables.load(location)
-    val md = table.metadata
-    branch.filter(_ != TableMetadata.MainBranch) match {
-      case Some(b) =>
-        // staged append (WAP): parent at the branch head, only the branch
-        // ref moves — main / snapshot log / current are published state
-        val parent = md.refs.get(b) match {
-          case Some(r) =>
-            require(r.refType == BranchRef, s"ref '$b' is a tag, not a branch")
-            md.snapshotById(r.snapshotId)
-          case None => table.currentSnapshot
-        }
-        val snapshot = stageAppendSnapshot(table,
-          added, extraSummary + ("branch" -> b), parentOverride = parent)
-        writeMetadata(location, md.copy(
-          lastSequenceNumber = snapshot.sequenceNumber,
-          lastUpdatedMs = snapshot.timestampMs,
-          snapshots = md.snapshots :+ snapshot,
-          refs = advRef(md.refs, b, snapshot.snapshotId),
-          nextRowId = nextRowIdAfter(md, snapshot)),
-          table.loadedVersion + 1)
-      case None =>
-        val snapshot = stageAppendSnapshot(table, added, extraSummary)
-        writeMetadata(location, md.copy(
-          lastSequenceNumber = snapshot.sequenceNumber,
-          lastUpdatedMs = snapshot.timestampMs,
-          snapshots = md.snapshots :+ snapshot,
-          currentSnapshotId = Some(snapshot.snapshotId),
-          snapshotLog = md.snapshotLog :+
-            SnapshotLogEntry(snapshot.snapshotId, snapshot.timestampMs),
-          refs = advRef(md.refs, TableMetadata.MainBranch, snapshot.snapshotId),
-          nextRowId = nextRowIdAfter(md, snapshot)),
-          table.loadedVersion + 1)
+    val base = table.ops.appendBase(table)
+    branch.filter(_ != MainBranch) match {
+      case Some(b) => commitToBranch(base, added, b, extraSummary)
+      case None => publish(base, stageAppendSnapshot(base, added, extraSummary))
     }
-    IcebergTables.load(location)
+  }
+
+  /** [[appendFiles]] against the latest state of the table at `location`. */
+  def appendFiles(location: String, added: Seq[graft.spark.CowFileOut]): IcebergTable =
+    appendFiles(IcebergTables.load(location), added)
+
+  /** Staged append (WAP): the snapshot forks from the branch head (or
+    * main, for a new branch) and ONLY the branch ref moves — main, the
+    * snapshot log and the current snapshot are published state. Pinned to
+    * the branch's head, so concurrent commits to the branch conflict. */
+  private def commitToBranch(table: IcebergTable,
+                             added: Seq[graft.spark.CowFileOut], branch: String,
+                             extraSummary: Map[String, String]): IcebergTable = {
+    val md = table.metadata
+    val parent = md.refs.get(branch) match {
+      case Some(r) =>
+        require(r.refType == BranchRef, s"ref '$branch' is a tag, not a branch")
+        md.snapshotById(r.snapshotId)
+      case None => table.currentSnapshot
+    }
+    val snapshot = stageAppendSnapshot(table, added,
+      extraSummary + ("branch" -> branch), parentOverride = parent)
+    table.ops.commit(md, headGuard(md, branch),
+      Seq(AddSnapshot(snapshot), setRefUpdate(md, branch, snapshot.snapshotId)))
   }
 
   /** Write-audit-publish: append `df` to a BRANCH — the snapshot forks
@@ -2618,30 +1945,8 @@ object TableWriter {
     * main-line append. */
   def appendToBranch(table: IcebergTable, df: DataFrame,
                      branch: String): IcebergTable = {
-    require(branch != TableMetadata.MainBranch,
-      "use append() for the main branch")
-    val md = table.metadata
-    val parent = md.refs.get(branch) match {
-      case Some(r) =>
-        require(r.refType == BranchRef, s"ref '$branch' is a tag, not a branch")
-        md.snapshotById(r.snapshotId)
-      case None => table.currentSnapshot
-    }
-    val snapId0 = System.nanoTime()
-    val dataDir = new File(table.location, s"data/snap-$snapId0")
-    val outs = writeDistributed(df, dataDir, table.schema, table.spec,
-      table.properties, SortOrder.unsorted, preClustered = false)
-    val snapshot = stageAppendSnapshot(table, outs,
-      Map("branch" -> branch), parentOverride = parent)
-    writeMetadata(table.location, md.copy(
-      lastSequenceNumber = snapshot.sequenceNumber,
-      lastUpdatedMs = snapshot.timestampMs,
-      snapshots = md.snapshots :+ snapshot,
-      // current snapshot, snapshot log, and main are all UNPUBLISHED state
-      refs = advRef(md.refs, branch, snapshot.snapshotId),
-      nextRowId = nextRowIdAfter(md, snapshot)),
-      table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    require(branch != MainBranch, "use append() for the main branch")
+    appendFiles(table, writeData(table, df), branch = Some(branch))
   }
 
   /** Stage-commit WAP (Iceberg's `spark.wap.id` flavor): append `df` as a
@@ -2658,33 +1963,25 @@ object TableWriter {
   def stageWapAppend(table: IcebergTable, df: DataFrame,
                      wapId: String): IcebergTable = {
     require(wapId.trim.nonEmpty, "wap id must be non-empty")
-    val md = table.metadata
-    val dup = md.snapshots.find(_.summary.exists(s =>
+    val dup = table.metadata.snapshots.find(_.summary.exists(s =>
       s.properties.get("wap.id").contains(wapId) ||
         s.properties.get("published-wap-id").contains(wapId)))
     require(dup.isEmpty,
       s"wap.id '$wapId' was already staged or published " +
         s"(snapshot ${dup.map(_.snapshotId).getOrElse(-1L)})")
-    val snapId0 = System.nanoTime()
-    val dataDir = new File(table.location, s"data/snap-$snapId0")
-    val outs = writeDistributed(df, dataDir, table.schema, table.spec,
-      table.properties, SortOrder.unsorted, preClustered = false)
-    val snapshot = stageAppendSnapshot(table, outs, Map("wap.id" -> wapId))
-    writeMetadata(table.location, md.copy(
-      lastSequenceNumber = snapshot.sequenceNumber,
-      lastUpdatedMs = snapshot.timestampMs,
-      snapshots = md.snapshots :+ snapshot,
-      // deliberately NO ref / current-snapshot / snapshot-log change: the
-      // stage is invisible until cherrypickSnapshot publishes it
-      nextRowId = nextRowIdAfter(md, snapshot)),
-      table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    val outs = writeData(table, df)
+    val base = table.ops.appendBase(table)
+    // deliberately NO ref / current-snapshot / snapshot-log change: the
+    // stage is invisible until cherrypickSnapshot publishes it
+    commitUpdates(base,
+      Seq(AddSnapshot(stageAppendSnapshot(base, outs, Map("wap.id" -> wapId)))))
   }
 
   /** Publish a branch: fast-forward `toRef` onto main. Requires main's
     * head to be an ancestor of the branch head (pure fast-forward — no
     * merge semantics), which also makes the move safe for readers: every
-    * main row survives on the branch unless a branch commit removed it. */
+    * main row survives on the branch unless a branch commit removed it.
+    * Pinned to both the branch head and main's head. */
   def fastForward(table: IcebergTable, branch: String): IcebergTable = {
     val md = table.metadata
     val ref = md.refs.getOrElse(branch,
@@ -2701,14 +1998,9 @@ object TableWriter {
     }
     require(isAncestor(Some(head.snapshotId)),
       s"main is not an ancestor of '$branch' — cannot fast-forward")
-    val now = System.currentTimeMillis()
-    writeMetadata(table.location, md.copy(
-      currentSnapshotId = Some(head.snapshotId),
-      lastUpdatedMs = now,
-      snapshotLog = md.snapshotLog :+ SnapshotLogEntry(head.snapshotId, now),
-      refs = advRef(md.refs, TableMetadata.MainBranch, head.snapshotId)),
-      table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    table.ops.commit(md,
+      headGuard(md) :+ AssertRefSnapshotId(branch, Some(head.snapshotId)),
+      Seq(setRefUpdate(md, MainBranch, head.snapshotId)))
   }
 
   /** Cherry-pick an APPEND snapshot onto the current main head (Iceberg's
@@ -2724,24 +2016,11 @@ object TableWriter {
     * Re-publishing is metadata-only — the source manifests' ADDED entries
     * are rewritten (per their ORIGINAL spec) with the new snapshot's
     * sequence number; the data files are referenced in place. */
-  def cherrypickSnapshot(table: IcebergTable, snapshotId: Long): IcebergTable = {
-    val md = table.metadata
-    val snapshot = stageCherrypick(table, snapshotId)
-    val now = snapshot.timestampMs
-    writeMetadata(table.location, md.copy(
-      lastSequenceNumber = snapshot.sequenceNumber, lastUpdatedMs = now,
-      snapshots = md.snapshots :+ snapshot,
-      currentSnapshotId = Some(snapshot.snapshotId),
-      snapshotLog = md.snapshotLog :+
-        SnapshotLogEntry(snapshot.snapshotId, now),
-      refs = advRef(md.refs, TableMetadata.MainBranch, snapshot.snapshotId)),
-      table.loadedVersion + 1)
-    IcebergTables.load(table.location)
-  }
+  def cherrypickSnapshot(table: IcebergTable, snapshotId: Long): IcebergTable =
+    publish(table, stageCherrypick(table, snapshotId))
 
   /** The staging body of [[cherrypickSnapshot]] (re-written manifests +
-    * manifest list on disk, no metadata commit) — shared with the REST
-    * plane ([[cherrypickSnapshotRest]]). */
+    * manifest list on disk, no metadata commit). */
   private def stageCherrypick(table: IcebergTable,
                               snapshotId: Long): Snapshot = {
     val md = table.metadata
@@ -2776,38 +2055,20 @@ object TableWriter {
 
     val seq = md.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val partTypeOf: Int => StructT = specId =>
-      md.partitionSpecs.find(_.specId == specId)
-        .map(_.partitionType(table.schema))
-        .getOrElse(table.spec.partitionType(table.schema))
     val newManifests = addedManifests.zipWithIndex.map { case (m, i) =>
       val added = ManifestIO.readManifestEntries(table.io.open(m.path), m)
         .filter(e => e.status == ManifestEntryStatus.Added &&
           e.snapshotId.contains(snap.snapshotId))
-      val entries = added.map(e => ManifestEntry(
-        ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), e.dataFile))
-      val mf = new File(metaDir, s"manifest-pick-$snapId-$i.avro")
-      ManifestIO.writeManifest(mf, entries, partTypeOf(m.partitionSpecId))
-      ManifestFile(
-        path = mf.getPath, length = mf.length(),
-        partitionSpecId = m.partitionSpecId, content = 0,
-        sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-        addedFilesCount = entries.size, existingFilesCount = 0,
-        deletedFilesCount = 0,
-        addedRowsCount = entries.map(_.dataFile.recordCount).sum,
-        existingRowsCount = 0, deletedRowsCount = 0,
-        partitions = partitionSummaries(entries, partTypeOf(m.partitionSpecId)),
-        formatVersion = 2)
+      writeManifest(table, s"manifest-pick-$snapId-$i", 0, m.partitionSpecId,
+        partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
+        added.map(e => ManifestEntry(
+          ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), e.dataFile)),
+        snapId, seq)
     }
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, prevManifests ++ newManifests)
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      now, listFile.getPath,
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, liveManifests(table) ++ newManifests)
+    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
+      System.currentTimeMillis(), listFile.getPath,
       Some(SnapshotSummary(OpAppend, Map(
         "source-snapshot-id" -> snapshotId.toString,
         "added-data-files" -> newManifests.map(_.addedFilesCount).sum.toString,
@@ -2817,155 +2078,6 @@ object TableWriter {
         ++ snap.summary.flatMap(_.properties.get("wap.id"))
           .map("published-wap-id" -> _))),
       Some(table.schema.schemaId))
-    snapshot
-  }
-
-  /** [[cherrypickSnapshot]] against a REST-catalog table: the same
-    * metadata-only re-commit, landing as add-snapshot + set-snapshot-ref
-    * through the server, pinned to the loaded main head (a concurrent
-    * publish conflicts instead of double-applying). */
-  def cherrypickSnapshotRest(catalog: graft.catalog.RestCatalog,
-                             identifier: Seq[String], snapshotId: Long)
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val snapshot = stageCherrypick(restTableOf(loaded), snapshotId)
-    val change = restChangeFor(loaded.metadata, identifier, snapshot)
-    catalog.commitTable(identifier, change.requirements, change.updates)
-  }
-
-  /** [[fastForward]] against a REST-catalog table: the ancestry guard
-    * runs on the loaded metadata; the publish itself is ONE
-    * set-snapshot-ref(main) update pinned to both the branch head and
-    * main's current head. */
-  def fastForwardRest(catalog: graft.catalog.RestCatalog,
-                      identifier: Seq[String], branch: String)
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val ref = md.refs.getOrElse(branch,
-      throw new IllegalArgumentException(s"ref '$branch' not found"))
-    val head = md.snapshotById(ref.snapshotId).getOrElse(
-      throw new IllegalStateException(s"branch '$branch' head missing"))
-    val mainHead = md.currentSnapshotId
-    @annotation.tailrec
-    def isAncestor(of: Option[Long]): Boolean = of match {
-      case None => mainHead.isEmpty
-      case Some(id) if mainHead.contains(id) => true
-      case Some(id) => isAncestor(md.snapshotById(id).flatMap(_.parentSnapshotId))
-    }
-    require(isAncestor(Some(head.snapshotId)),
-      s"main is not an ancestor of '$branch' — cannot fast-forward")
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-            .orElse(mainHead)),
-        graft.catalog.AssertRefSnapshotId(branch, Some(head.snapshotId))),
-      Seq(graft.catalog.SetSnapshotRef(TableMetadata.MainBranch,
-        head.snapshotId)))
-  }
-
-  /** [[stageWapAppend]] against a REST-catalog table: the staged snapshot
-    * commits as add-snapshot with NO ref move — invisible to every reader
-    * until published ([[cherrypickSnapshotRest]]). */
-  def stageWapAppendRest(catalog: graft.catalog.RestCatalog,
-                         identifier: Seq[String], df: DataFrame,
-                         wapId: String): graft.catalog.LoadedTable = {
-    require(wapId.trim.nonEmpty, "wap id must be non-empty")
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val dup = md.snapshots.find(_.summary.exists(s =>
-      s.properties.get("wap.id").contains(wapId) ||
-        s.properties.get("published-wap-id").contains(wapId)))
-    require(dup.isEmpty,
-      s"wap.id '$wapId' was already staged or published " +
-        s"(snapshot ${dup.map(_.snapshotId).getOrElse(-1L)})")
-    val table = restTableOf(loaded)
-    val dataDir = new File(table.location, s"data/snap-${System.nanoTime()}")
-    val outs = writeDistributed(alignForWrite(df, table.schema), dataDir,
-      table.schema, table.spec, table.properties, SortOrder.unsorted,
-      preClustered = false)
-    val snapshot = stageAppendSnapshot(table, outs, Map("wap.id" -> wapId))
-    val committed = catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid)),
-      Seq(graft.catalog.AddSnapshot(snapshot)))
-    snapshot.firstRowId.foreach(base => verifyLineageAdvanced(identifier,
-      base + outs.map(_.rows).sum,
-      committed.metadata.nextRowId.getOrElse(0L)))
-    committed
-  }
-
-  /** [[appendToBranch]] against a REST-catalog table: the snapshot forks
-    * from the branch head (or main, for a new branch) and ONLY the branch
-    * ref moves — add-snapshot + set-snapshot-ref(branch), pinned to the
-    * branch's loaded head so concurrent branch commits conflict. */
-  def appendToBranchRest(catalog: graft.catalog.RestCatalog,
-                         identifier: Seq[String], df: DataFrame,
-                         branch: String): graft.catalog.LoadedTable = {
-    require(branch != TableMetadata.MainBranch,
-      "use appendRest() for the main branch")
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val parent = md.refs.get(branch) match {
-      case Some(r) =>
-        require(r.refType == BranchRef, s"ref '$branch' is a tag, not a branch")
-        md.snapshotById(r.snapshotId)
-      case None => md.currentSnapshot
-    }
-    val table = restTableOf(loaded)
-    val dataDir = new File(table.location, s"data/snap-${System.nanoTime()}")
-    val outs = writeDistributed(alignForWrite(df, table.schema), dataDir,
-      table.schema, table.spec, table.properties, SortOrder.unsorted,
-      preClustered = false)
-    commitFilesToBranchRest(catalog, identifier, loaded, parent, outs, branch,
-      Map.empty)
-  }
-
-  /** Files-based twin of [[appendToBranchRest]] — already-written data
-    * files commit as one APPEND on `branch` through the server (the
-    * streaming sink's WAP-branch epoch path). */
-  def appendFilesToBranchRest(catalog: graft.catalog.RestCatalog,
-                              identifier: Seq[String],
-                              added: Seq[graft.spark.CowFileOut],
-                              branch: String,
-                              extraSummary: Map[String, String] = Map.empty)
-      : graft.catalog.LoadedTable = {
-    require(branch != TableMetadata.MainBranch,
-      "use appendFilesRest() for the main branch")
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val parent = md.refs.get(branch) match {
-      case Some(r) =>
-        require(r.refType == BranchRef, s"ref '$branch' is a tag, not a branch")
-        md.snapshotById(r.snapshotId)
-      case None => md.currentSnapshot
-    }
-    commitFilesToBranchRest(catalog, identifier, loaded, parent, added,
-      branch, extraSummary)
-  }
-
-  private def commitFilesToBranchRest(catalog: graft.catalog.RestCatalog,
-                                      identifier: Seq[String],
-                                      loaded: graft.catalog.LoadedTable,
-                                      parent: Option[Snapshot],
-                                      outs: Seq[graft.spark.CowFileOut],
-                                      branch: String,
-                                      extraSummary: Map[String, String])
-      : graft.catalog.LoadedTable = {
-    val md = loaded.metadata
-    val table = restTableOf(loaded)
-    val snapshot = stageAppendSnapshot(table, outs,
-      Map("branch" -> branch) ++ extraSummary, parentOverride = parent)
-    val committed = catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(branch,
-          md.refs.get(branch).map(_.snapshotId))),
-      Seq(graft.catalog.AddSnapshot(snapshot),
-        graft.catalog.SetSnapshotRef(branch, snapshot.snapshotId)))
-    snapshot.firstRowId.foreach(base => verifyLineageAdvanced(identifier,
-      base + outs.map(_.rows).sum,
-      committed.metadata.nextRowId.getOrElse(0L)))
-    committed
   }
 
   /** Import EXISTING parquet files into the table without rewriting them
@@ -2974,9 +2086,7 @@ object TableWriter {
     * path segments map to identity partition values. The files are
     * referenced in place — id-less footers are fine, the read path
     * resolves them by name. */
-  def addFiles(table: IcebergTable, sourceDir: String,
-               restCommit: Option[(graft.catalog.RestCatalog, Seq[String],
-                 graft.catalog.LoadedTable)] = None): IcebergTable = {
+  def addFiles(table: IcebergTable, sourceDir: String): IcebergTable = {
     def walk(f: File): Seq[File] = {
       val fs = Option(f.listFiles()).getOrElse(Array.empty)
       fs.filter(x => x.isFile && x.getName.endsWith(".parquet") &&
@@ -3018,375 +2128,41 @@ object TableWriter {
           "partition values cannot be inferred from paths")
     val outs = files.map(f =>
       graft.spark.CowFileOut(f.getPath, 0L, partitionOf(f), Map.empty))
-    restCommit match {
-      case Some((rc, id, _)) =>
-        // appends commute: no head pin needed, same as appendFilesRest's
-        // own INSERT path (stageRestAppendChange re-loads fresh)
-        restTableOf(
-          appendFilesRest(rc, id, outs, Map("added-by" -> "add_files")), rc)
-      case None =>
-        appendFiles(table.location, outs, Map("added-by" -> "add_files"))
-    }
+    appendFiles(table, outs, Map("added-by" -> "add_files"))
   }
 
-  /** Append already-written data files to a REST-catalog table: stage the
-    * manifest + manifest list under the table location, then commit via
-    * the catalog's `updateTable` route as `add-snapshot` +
-    * `set-snapshot-ref`, guarded by `assert-table-uuid` and
-    * `assert-ref-snapshot-id(main)` so a concurrent commit surfaces as
-    * [[graft.catalog.CommitConflictError]] instead of clobbering. (The
-    * reference's REST catalog panics on any commit, rest.go:418-424.) */
-  def appendFilesRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                      added: Seq[graft.spark.CowFileOut],
-                      extraSummary: Map[String, String] = Map.empty)
-      : graft.catalog.LoadedTable = {
-    val (change, stampedPast) =
-      stageRestAppendChange(catalog, identifier, added, extraSummary)
-    val committed = catalog.commitTable(identifier, change.requirements,
-      change.updates)
-    stampedPast.foreach(p =>
-      verifyLineageAdvanced(identifier, p,
-        committed.metadata.nextRowId.getOrElse(0L)))
-    committed
-  }
-
-  /** Stage an append against a REST table WITHOUT committing — the
-    * manifest + manifest list land under the table location, the commit
-    * (requirements + updates) is returned for [[RestTransaction]].
-    * V3 lineage is client-assigned from the loaded `next-row-id`, exactly
-    * as [[appendFilesRest]]. Returns the change and, for V3, the row-id
-    * watermark the server must advance past. */
-  private def stageRestAppendChange(catalog: graft.catalog.RestCatalog,
-                                    identifier: Seq[String],
-                                    added: Seq[graft.spark.CowFileOut],
-                                    extraSummary: Map[String, String])
-      : (graft.catalog.TableChange, Option[Long]) = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val table = new IcebergTable(md.location, loaded.metadataLocation, md,
-      IOConfig.fileIO(loaded.ioProps), ioProps = loaded.ioProps)
-    val snapshot = stageAppendSnapshot(table, added, extraSummary)
-    val change = graft.catalog.TableChange(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-            .orElse(md.currentSnapshotId))),
-      Seq(graft.catalog.AddSnapshot(snapshot),
-        setMainRefUpdate(md, snapshot.snapshotId)))
-    (change, snapshot.firstRowId.map(_ + added.map(_.rows).sum))
-  }
-
-  /** A server whose update applier ignores AddSnapshot's first-row-id
-    * would hand the SAME base to the next commit — duplicate _row_id is
-    * silent corruption for every incremental consumer, so fail loudly. */
-  private def verifyLineageAdvanced(identifier: Seq[String],
-                                    stampedPast: Long,
-                                    serverNext: Long): Unit =
-    require(serverNext >= stampedPast,
-      s"REST catalog did not advance next-row-id past " +
-        s"${identifier.mkString(".")}'s committed rows (stamped through " +
-        s"$stampedPast, server next-row-id $serverNext): the server does " +
-        "not apply AddSnapshot row lineage — refusing to continue with " +
-        "duplicate _row_id assignment")
-
-  // ------------------------------------------------- SQL DML on REST tables
-  // DataFrame-level twins of append/overwrite/deleteWhere/deleteEquality
-  // that commit through the server's update actions instead of writing
-  // metadata files behind it — the bridge that lets SQL INSERT/DELETE/
-  // UPDATE/MERGE run on REST-cataloged tables (the reference PANICS on any
-  // REST commit, rest.go:418-424).
-
-  /** Schema evolution on a REST-cataloged table: run `evolve` (any chain
-    * of the TableWriter evolution functions) against a local SCRATCH copy
-    * of the loaded metadata — metadata-only, nothing under the real table
-    * location is touched — then commit only the RESULT as the spec's
-    * `add-schema` + `set-current-schema(-1)` actions, guarded by
-    * `assert-current-schema-id` so racing evolutions conflict instead of
-    * clobbering. The write-time `mergeSchema` path and SQL ALTER both ride
-    * this, so the two planes can never diverge on evolution semantics. */
-  def evolveSchemaRest(catalog: graft.catalog.RestCatalog,
-                       identifier: Seq[String],
-                       evolve: IcebergTable => IcebergTable)
-      : graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val md = loaded.metadata
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_rest_evolve").toFile
-    val metaDir = new File(scratch, "metadata"); metaDir.mkdirs()
-    Files.writeString(new File(metaDir, "v1.metadata.json").toPath, md.toJson)
-    val t = evolve(IcebergTables.load(scratch.getPath))
-    if (t.metadata.currentSchemaId == md.currentSchemaId &&
-        t.metadata.currentSchema == md.currentSchema) return loaded
-    catalog.commitTable(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertCurrentSchemaId(md.currentSchemaId)),
-      Seq(graft.catalog.AddSchema(t.metadata.currentSchema,
-        Some(t.metadata.lastColumnId)),
-        graft.catalog.SetCurrentSchema(-1)))
-  }
-
-  /** SQL INSERT INTO (append) on a REST-cataloged table: one distributed
-    * parquet write under the table location, then the [[appendFilesRest]]
-    * commit. No pin needed — appends commute, and the commit's
-    * assert-ref guard still surfaces genuinely conflicting table changes
-    * (schema swap, uuid change) as [[graft.catalog.CommitConflictError]]. */
+  /** SQL INSERT INTO on a REST-cataloged table — [[append]] on the
+    * table's REST handle. */
   def appendRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                 df: DataFrame): graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val table = restTableOf(loaded)
-    val dataDir = new File(table.location, s"data/snap-${System.nanoTime()}")
-    val outs = writeDistributed(alignForWrite(df, table.schema), dataDir,
-      table.schema, table.spec, table.properties, table.sortOrder,
-      preClustered = false)
-    appendFilesRest(catalog, identifier, outs)
-  }
+                 df: DataFrame): IcebergTable =
+    append(restTableOf(catalog.loadTable(identifier), catalog), df)
 
-  /** SQL INSERT OVERWRITE / TRUNCATE on a REST-cataloged table: every live
-    * data file at THIS load retracts and the new rows land in one
-    * OVERWRITE snapshot. The commit pins main to this load's head
-    * (`basedOn`), so a commit that lands between the file enumeration and
-    * this commit conflicts at the server instead of being silently
-    * clobbered. */
-  def overwriteRest(catalog: graft.catalog.RestCatalog, identifier: Seq[String],
-                    df: DataFrame): graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val table = restTableOf(loaded)
-    val removed = table.newScan().planFilesLocal().map(_.file.path).toSet
-    val dataDir = new File(table.location, s"data/snap-${System.nanoTime()}")
-    val outs = writeDistributed(alignForWrite(df, table.schema), dataDir,
-      table.schema, table.spec, table.properties, table.sortOrder,
-      preClustered = false)
-    replaceFilesRest(catalog, identifier, removed, outs, basedOn = Some(loaded))
-  }
-
-  /** SQL DELETE with key-equality predicates on a REST-cataloged table:
-    * the [[deleteEquality]] shape — an equality-delete manifest, zero data
-    * scan, O(keys) — committed through the server, pinned to the load's
-    * main head. */
-  def deleteEqualityRest(catalog: graft.catalog.RestCatalog,
-                         identifier: Seq[String], keys: DataFrame,
-                         keyCols: Seq[String]): graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val table = restTableOf(loaded)
-    val spark = keys.sparkSession
-    val emptyRows = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      SchemaConv.toSparkSchema(table.schema))
-    val snapshot = stageEqualitySnapshot(table, keys, keyCols, emptyRows)
-    val change = restChangeFor(loaded.metadata, identifier, snapshot)
-    catalog.commitTable(identifier, change.requirements, change.updates)
-  }
-
-  /** SQL DELETE with an arbitrary pushable predicate on a REST-cataloged
-    * table: ONE distributed scan computes (file, pos) tombstones —
-    * [[deleteWhere]]'s plan shape — and the delta snapshot commits
-    * through the server, pinned to the scanned load's main head. V2
-    * commits the tombstone files directly; V3 re-homes them into
-    * deletion vectors ([[commitDeltaDvRest]]), the same fork the local
-    * path takes. */
-  def deleteWhereRest(catalog: graft.catalog.RestCatalog,
-                      identifier: Seq[String],
-                      spark: org.apache.spark.sql.SparkSession,
-                      predicate: Column): graft.catalog.LoadedTable = {
-    val loaded = catalog.loadTable(identifier)
-    val table = restTableOf(loaded)
-    val snapId = System.nanoTime()
-    val delDir = new File(table.location, s"data/deletes-$snapId")
-    table.newScan().toDF(spark, keepProvenance = true)
-      .filter(predicate)
-      .select(col("__path").as("file_path"), col("__pos").as("pos"))
-      .orderBy("file_path", "pos")
-      .write.parquet(delDir.getPath)
-    val delFiles = listParquet(delDir).map(_.getPath)
-    if (loaded.metadata.formatVersion >= 3)
-      commitDeltaDvRest(catalog, identifier, loaded, Nil, delFiles)
-    else commitDeltaRest(catalog, identifier, loaded, Nil, delFiles)
-  }
-
-  /** MoR delta commit (positional tombstones + appended files in ONE
-    * snapshot — [[commitDelta]]'s shape) against a REST table, pinned to
-    * `basedOn`'s main head: the scan that produced the tombstone
-    * coordinates read that load, so any commit in between invalidates the
-    * positions and must conflict (serializable semantics; the local
-    * path's opt-in snapshot isolation is not expressible in an assert-ref
-    * guard, so REST deltas stay at the stricter default). */
-  def commitDeltaRest(catalog: graft.catalog.RestCatalog,
-                      identifier: Seq[String],
-                      basedOn: graft.catalog.LoadedTable,
-                      added: Seq[graft.spark.CowFileOut],
-                      posDeleteFiles: Seq[String]): graft.catalog.LoadedTable = {
-    val table = restTableOf(basedOn)
-    val snapshot = stageDeltaSnapshot(table, added, posDeleteFiles)
-    val change = restChangeFor(basedOn.metadata, identifier, snapshot)
-    val committed = catalog.commitTable(identifier, change.requirements,
-      change.updates)
-    snapshot.firstRowId.foreach(base => verifyLineageAdvanced(identifier,
-      base + added.map(_.rows).sum,
-      committed.metadata.nextRowId.getOrElse(0L)))
-    committed
-  }
-
-  /** V3 twin of [[commitDeltaRest]] — MoR SQL DML on a V3 REST table: the
-    * task tombstones re-home into deletion vectors exactly as
-    * [[commitDeltaDv]] does locally (fold prior deletes, one DV per
-    * touched file), and the DV snapshot commits through the server pinned
-    * to `basedOn`'s main head. The table must already BE V3: DML never
-    * silently upgrades the format ([[upgradeFormatVersionRest]] is the
-    * explicit flip, via ALTER TABLE SET TBLPROPERTIES). */
-  def commitDeltaDvRest(catalog: graft.catalog.RestCatalog,
-                        identifier: Seq[String],
-                        basedOn: graft.catalog.LoadedTable,
-                        added: Seq[graft.spark.CowFileOut],
-                        posDeleteFiles: Seq[String])
-      : graft.catalog.LoadedTable = {
-    if (posDeleteFiles.isEmpty)
-      return commitDeltaRest(catalog, identifier, basedOn, added, Nil)
-    require(basedOn.metadata.formatVersion >= 3,
-      "DV delta over REST requires a V3 table (DML must not silently " +
-        "upgrade the format — run ALTER TABLE ... SET TBLPROPERTIES " +
-        "('format-version'='3') first)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val table = restTableOf(basedOn)
-    import org.apache.spark.sql.functions.regexp_replace
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
-    val newDead = spark.read.parquet(posDeleteFiles: _*)
-      .select(regexp_replace(col("file_path"), "^file:(//)?", "")
-        .as("file_path"), col("pos"))
-    val (dead, priorDvs) =
-      foldPriorDeletes(spark, newDead, table.newScan().planFiles())
-    val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
-    val (snapshot, _) = stageDvSnapshot(table, added, dvFiles, _ => false,
-      if (added.isEmpty) OpDelete else OpOverwrite, Map.empty,
-      snapId, seq, metaDir)
-    val change = restChangeFor(basedOn.metadata, identifier, snapshot)
-    val committed = catalog.commitTable(identifier, change.requirements,
-      change.updates)
-    posDeleteFiles.foreach(p => new File(p).delete())
-    snapshot.firstRowId.foreach(base => verifyLineageAdvanced(identifier,
-      base + added.map(_.rows).sum,
-      committed.metadata.nextRowId.getOrElse(0L)))
-    committed
-  }
-
-  /** REST twin of [[upgradeFormatVersion]] — `ALTER TABLE ... SET
-    * TBLPROPERTIES ('format-version'='N')` on a REST-cataloged table.
-    * 1→2, and →3 with no live positional tombstones, is ONE
-    * `upgrade-format-version` update action (pure metadata flip, no
-    * snapshot). →3 with live parquet tombstones stages the SAME DV
-    * re-home snapshot the local plane commits (dangling tombstones of
-    * vanished files drop; files that already have DVs keep them and their
-    * dead-weight tombstone entries retire without folding) and rides it
-    * in the SAME commit as the format flip, pinned to the enumerating
-    * load's main head — so a racing commit 409s rather than having its
-    * tombstones silently ignored under V3, and a reader observes either
-    * the V2 table with tombstones or the V3 table with DVs, never the
-    * broken intermediate. At 100 TB the re-home is O(live tombstone
-    * rows), not O(table): data files are untouched; only delete
-    * coordinates shuffle (grouped per touched data file). */
-  def upgradeFormatVersionRest(catalog: graft.catalog.RestCatalog,
-                               identifier: Seq[String],
-                               basedOn: graft.catalog.LoadedTable,
-                               spark: org.apache.spark.sql.SparkSession,
-                               target: Int): graft.catalog.LoadedTable = {
-    import org.apache.spark.sql.functions.regexp_replace
-    val md = basedOn.metadata
-    require(target >= 2 && target <= 3,
-      s"unsupported format-version $target (this engine writes 2 and 3)")
-    require(target >= md.formatVersion,
-      s"cannot downgrade format-version ${md.formatVersion} -> $target")
-    if (target == md.formatVersion) return basedOn
-    val table = restTableOf(basedOn)
-    val tasks =
-      if (table.currentSnapshot.isEmpty) Nil else table.newScan().planFiles()
-    val posPaths = tasks.flatMap(_.deleteFiles.filter(d =>
-      d.content == DataFileContent.PositionDeletes && !d.isDeletionVector)
-      .map(_.path)).distinct
-    if (target == 2 || posPaths.isEmpty)
-      // head-pinned even for the "pure" flip: the no-tombstones decision
-      // came from THIS load's scan — a MoR DELETE landing in between
-      // would otherwise leave a V3 table with live parquet tombstones
-      // readers silently ignore (the 409-and-retry re-scans instead)
-      return catalog.commitTable(identifier,
-        Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-          graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-            md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-              .orElse(md.currentSnapshotId))),
-        Seq(graft.catalog.UpgradeFormatVersion(target)))
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
-    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
-    val dvFiles = rehomeDvFiles(table, spark, tasks, posPaths, delDir,
-      snapId, seq)
-    val (snapshot, _) = stageDvSnapshot(table, Nil, dvFiles,
-      alsoSuperseded = d =>
-        d.content == DataFileContent.PositionDeletes && !d.isDeletionVector,
-      op = OpReplace,
-      extraSummary = Map("format-version" -> "3",
-        "position-delete-files-removed" -> posPaths.size.toString),
-      snapId, seq, metaDir)
-    val change = restChangeFor(md, identifier, snapshot)
-    // format flip FIRST in the update list: the server's metadata is
-    // already V3 when the DV snapshot lands in the same commit
-    catalog.commitTable(identifier, change.requirements,
-      graft.catalog.UpgradeFormatVersion(3) +: change.updates)
-  }
-
-  /** Stage the atomic retract-and-replace snapshot ([[replaceEquality]]'s
-    * commit shape: ONE snapshot carrying an equality-delete manifest on
-    * `keyCols` plus the appended `rows`) WITHOUT committing — manifests and
-    * the manifest list land on disk under the table location; the commit
-    * rides a REST UpdateTableRequest. The same-sequence exemption holds
-    * identically: the delete applies only to strictly-smaller sequence
-    * numbers, so the staged rows are exempt by construction. */
+  /** Stage an equality-delete snapshot WITHOUT committing: an
+    * equality-delete manifest on `keyCols` (a `delete`) plus, for the
+    * atomic retract-and-replace ([[replaceEquality]]), the appended `rows`
+    * (an `overwrite`) — manifests and the manifest list land on disk
+    * under the table location. The delete applies only to
+    * strictly-smaller sequence numbers, so same-snapshot rows are exempt
+    * by construction. */
   private def stageEqualitySnapshot(table: IcebergTable, keys: DataFrame,
                                     keyCols: Seq[String],
-                                    rows: DataFrame): Snapshot = {
-    val md = table.metadata
-    val seq = md.lastSequenceNumber + 1
+                                    rows: Option[DataFrame]): Snapshot = {
+    val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata"); metaDir.mkdirs()
     val delManifest = writeEqDeleteManifest(table, keys, keyCols, snapId, seq)
-    val dataDir = new File(table.location, s"data/snap-$snapId")
-    val outs = writeDistributed(rows, dataDir, table.schema, table.spec,
-      table.properties, SortOrder.unsorted, preClustered = false)
-    val partType = table.spec.partitionType(table.schema)
-    val entries0 = outs.sortBy(_.path).map { o =>
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-        statsFromFooter(new File(o.path), table.schema,
-          o.partition.filter(_._2 != null), DataFileContent.Data, None,
-          o.nanCounts))
-    }
-    val lineage = assignLineage(md, entries0)
+    val outs = rows.toSeq.flatMap(df => writeDistributed(df, newDataDir(table),
+      table.schema, table.spec, table.properties, SortOrder.unsorted,
+      preClustered = false))
+    val lineage = assignLineage(table.metadata,
+      outs.sortBy(_.path).map(addedEntry(table, _, snapId, seq)))
     val entries = lineage.entries
-    val newManifest: Option[ManifestFile] =
-      if (entries.isEmpty) None // pure retraction window
-      else {
-        val mf = new File(metaDir, s"manifest-eq-$snapId.avro")
-        ManifestIO.writeManifest(mf, entries, partType)
-        Some(ManifestFile(
-          path = mf.getPath, length = mf.length(),
-          partitionSpecId = table.spec.specId, content = 0,
-          sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId,
-          addedFilesCount = entries.size, existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = entries.map(_.dataFile.recordCount).sum,
-          existingRowsCount = 0, deletedRowsCount = 0,
-          partitions = partitionSummaries(entries, partType), formatVersion = 2,
-          firstRowId = lineage.manifestFirstRowId))
-      }
-    val prevManifests = liveManifests(table.currentSnapshot.toSeq.flatMap { s =>
-      ManifestIO.readManifestList(table.io.open(s.manifestList))
-    })
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      prevManifests ++ Seq(delManifest) ++ newManifest)
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, liveManifests(table) ++
+      Seq(delManifest) ++ addedManifest(table, entries, "manifest-eq", snapId,
+        seq, lineage.manifestFirstRowId))
     Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
       System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(OpOverwrite, Map(
+      Some(SnapshotSummary(if (rows.isEmpty) OpDelete else OpOverwrite, Map(
         "added-data-files" -> entries.size.toString,
         "added-records" -> entries.map(_.dataFile.recordCount).sum.toString,
         "added-delete-files" -> "1"))),
@@ -3394,26 +2170,13 @@ object TableWriter {
       firstRowId = lineage.snapshotFirstRowId)
   }
 
-  /** Load-table-and-stage helper shared by the REST delta/equality change
-    * builders — mirrors [[stageRestAppendChange]]'s guard shape. */
-  private def restChangeFor(md: TableMetadata, identifier: Seq[String],
-                            snapshot: Snapshot,
-                            extraProperties: Map[String, String] = Map.empty)
-      : graft.catalog.TableChange =
-    graft.catalog.TableChange(identifier,
-      Seq(graft.catalog.AssertTableUuid(md.tableUuid),
-        graft.catalog.AssertRefSnapshotId(TableMetadata.MainBranch,
-          md.refs.get(TableMetadata.MainBranch).map(_.snapshotId)
-            .orElse(md.currentSnapshotId))),
-      Seq(graft.catalog.AddSnapshot(snapshot),
-        setMainRefUpdate(md, snapshot.snapshotId)) ++
-        (if (extraProperties.isEmpty) Nil
-         else Seq(graft.catalog.SetProperties(extraProperties))))
-
-  /** A read-capable [[IcebergTable]] over a REST-loaded table — the handle
-    * the maintained-model sync layer scans through. */
+  /** An [[IcebergTable]] over a REST-loaded table. With `catalog` the
+    * handle commits through it ([[RestTableOperations]]; `afterCommit`
+    * runs after each landed commit) and plans/reports scans through it
+    * when the server advertises those routes; without, it is read-only. */
   def restTableOf(loaded: graft.catalog.LoadedTable,
-                  catalog: graft.catalog.RestCatalog = null): IcebergTable = {
+                  catalog: graft.catalog.RestCatalog = null,
+                  afterCommit: () => Unit = () => ()): IcebergTable = {
     val md = loaded.metadata
     // catalog-side scan planning, when the serving catalog advertises the
     // spec's plan endpoints: scans resolve their pin LOCALLY (so client and
@@ -3480,13 +2243,19 @@ object TableWriter {
       }
     new IcebergTable(md.location, loaded.metadataLocation, md,
       IOConfig.fileIO(loaded.ioProps), ioProps = loaded.ioProps,
-      remotePlanner = planner, scanMetricsReporter = reporter)
+      remotePlanner = planner, scanMetricsReporter = reporter,
+      bindOps = _ =>
+        if (catalog == null) throw new UnsupportedOperationException(
+          s"${loaded.identifier.mkString(".")}: read-only REST handle " +
+            "(no catalog bound to commit through)")
+        else new RestTableOperations(catalog, loaded, afterCommit))
   }
 
-  /** Atomic multi-table REST transaction: stage appends across tables,
+  /** Atomic multi-table REST transaction: stage changes across tables,
     * then [[commit]] lands ALL of them or NONE via the spec's
-    * `POST /v1/transactions/commit`. Each staged table is guarded by
-    * assert-table-uuid + assert-ref-snapshot-id(main), so any concurrent
+    * `POST /v1/transactions/commit`. Each table's change is staged by the
+    * same code its single-table commit uses and guarded the same way
+    * (assert-table-uuid + assert-ref-snapshot-id(main)), so any concurrent
     * commit to any member rolls the whole transaction back
     * ([[graft.catalog.CommitConflictError]]) — the consistency a pipeline
     * needs to move a source table and its maintained derived tables
@@ -3494,28 +2263,35 @@ object TableWriter {
   final class RestTransaction private[TableWriter] (
       catalog: graft.catalog.RestCatalog) {
     private val changes = Vector.newBuilder[graft.catalog.TableChange]
-    private val lineageWatermarks =
-      Vector.newBuilder[(Seq[String], Long)]
     private var staged = Set.empty[Seq[String]]
 
-    private def guard(identifier: Seq[String]): Unit = {
+    /** Load `identifier` for staging — each table joins at most once: two
+      * snapshots for one table would chain on the same parent and overlap
+      * row-id ranges. */
+    private def member(identifier: Seq[String]): IcebergTable = {
       require(!staged.contains(identifier),
         s"table ${identifier.mkString(".")} already staged in this " +
           "transaction: two snapshots for one table would chain on the " +
           "same parent and overlap row-id ranges")
       staged += identifier
+      restTableOf(catalog.loadTable(identifier), catalog)
+    }
+
+    private def add(identifier: Seq[String], table: IcebergTable,
+                    snapshot: Snapshot,
+                    extra: Seq[TableUpdate] = Nil): this.type = {
+      val (requirements, updates) = snapshotChange(table.metadata, snapshot)
+      changes += graft.catalog.TableChange(identifier, requirements,
+        updates ++ extra)
+      this
     }
 
     def stageAppend(identifier: Seq[String],
                     added: Seq[graft.spark.CowFileOut],
                     extraSummary: Map[String, String] = Map.empty)
         : this.type = {
-      guard(identifier)
-      val (change, watermark) =
-        stageRestAppendChange(catalog, identifier, added, extraSummary)
-      changes += change
-      watermark.foreach(w => lineageWatermarks += ((identifier, w)))
-      this
+      val t = member(identifier)
+      add(identifier, t, stageAppendSnapshot(t, added, extraSummary))
     }
 
     /** Stage a CoW replace (rewrite `removedPaths` into `added`) for this
@@ -3525,12 +2301,9 @@ object TableWriter {
                      added: Seq[graft.spark.CowFileOut],
                      touchedManifests: Option[Set[String]] = None)
         : this.type = {
-      guard(identifier)
-      val (change, watermark) = stageRestReplaceChange(catalog, identifier,
-        removedPaths, added, touchedManifests)
-      changes += change
-      watermark.foreach(w => lineageWatermarks += ((identifier, w)))
-      this
+      val t = member(identifier)
+      add(identifier, t, stageReplaceSnapshot(t, Some(removedPaths), added,
+        touchedManifests, None, OpOverwrite))
     }
 
     /** Stage a MoR delta ([[commitDelta]]'s shape: positional tombstones +
@@ -3540,14 +2313,8 @@ object TableWriter {
     def stageDelta(identifier: Seq[String],
                    added: Seq[graft.spark.CowFileOut],
                    posDeleteFiles: Seq[String]): this.type = {
-      guard(identifier)
-      val loaded = catalog.loadTable(identifier)
-      val table = restTableOf(loaded)
-      val snapshot = stageDeltaSnapshot(table, added, posDeleteFiles)
-      changes += restChangeFor(loaded.metadata, identifier, snapshot)
-      snapshot.firstRowId.foreach(base => lineageWatermarks +=
-        ((identifier, base + added.map(_.rows).sum)))
-      this
+      val t = member(identifier)
+      add(identifier, t, stageDeltaSnapshot(t, added, posDeleteFiles))
     }
 
     /** Stage an atomic retract-and-replace ([[replaceEquality]]'s shape:
@@ -3563,26 +2330,19 @@ object TableWriter {
                              keyCols: Seq[String], rows: DataFrame,
                              extraProperties: Map[String, String] = Map.empty)
         : this.type = {
-      guard(identifier)
-      val loaded = catalog.loadTable(identifier)
-      val table = restTableOf(loaded)
-      val snapshot = stageEqualitySnapshot(table, keys, keyCols, rows)
-      changes += restChangeFor(loaded.metadata, identifier, snapshot,
-        extraProperties)
-      snapshot.firstRowId.foreach(base => lineageWatermarks +=
-        ((identifier, base + snapshot.summary
-          .flatMap(_.properties.get("added-records")).map(_.toLong)
-          .getOrElse(0L))))
-      this
+      val t = member(identifier)
+      add(identifier, t, stageEqualitySnapshot(t, keys, keyCols, Some(rows)),
+        propertyUpdates(extraProperties, Nil))
     }
 
     /** All-or-nothing commit; on success, verifies per-table V3 lineage
       * advancement by reloading (the transaction route returns no body). */
     def commit(): Unit = {
-      catalog.commitTransaction(changes.result())
-      lineageWatermarks.result().foreach { case (ident, stampedPast) =>
-        verifyLineageAdvanced(ident, stampedPast,
-          catalog.loadTable(ident).metadata.nextRowId.getOrElse(0L))
+      val all = changes.result()
+      catalog.commitTransaction(all)
+      all.foreach { c =>
+        RestTableOperations.verifyLineage(c.identifier, c.updates,
+          catalog.loadTable(c.identifier).metadata.nextRowId)
       }
     }
   }
@@ -3591,7 +2351,7 @@ object TableWriter {
   def transaction(catalog: graft.catalog.RestCatalog): RestTransaction =
     new RestTransaction(catalog)
 
-  /** Create a branch or tag pointing at a snapshot. Branch-only
+  /** Create (or move) a branch or tag pointing at a snapshot. Branch-only
     * `minSnapshotsToKeep` / `maxSnapshotAgeMs` set the branch's own
     * snapshot-retention policy, enforced by [[expireSnapshots]]. */
   def createRef(table: IcebergTable, name: String, refType: RefType,
@@ -3601,43 +2361,38 @@ object TableWriter {
                 maxSnapshotAgeMs: Option[Long] = None): IcebergTable = {
     val id = snapshotId.orElse(table.currentSnapshot.map(_.snapshotId)).getOrElse(
       throw new IllegalArgumentException("table has no snapshot to reference"))
+    require(table.metadata.snapshotById(id).isDefined, s"snapshot $id not found")
     require(refType == BranchRef ||
       (minSnapshotsToKeep.isEmpty && maxSnapshotAgeMs.isEmpty),
       "snapshot retention (min-snapshots-to-keep / max-snapshot-age-ms) " +
         "applies to branches only; tags pin exactly their target")
-    val version = table.loadedVersion + 1
-    writeMetadata(table.location, table.metadata.copy(
-      refs = table.metadata.refs +
-        (name -> SnapshotRef(id, refType, minSnapshotsToKeep, maxSnapshotAgeMs,
-          maxRefAgeMs))), version)
-    IcebergTables.load(table.location)
+    commitUpdates(table, Seq(SetSnapshotRef(name, id, refType.repr,
+      minSnapshotsToKeep, maxSnapshotAgeMs, maxRefAgeMs)))
   }
 
   /** Set (or clear, with None) a branch's snapshot-retention policy —
     * Iceberg's `ALTER BRANCH ... WITH SNAPSHOT RETENTION`. Works on main
     * too: a policy on main overrides [[expireSnapshots]]'s global args
-    * for main's own lineage. */
+    * for main's own lineage. Re-sets the ref at its current target (the
+    * spec's set-snapshot-ref REPLACES the ref), pinned to that target. */
   def setRefRetention(table: IcebergTable, name: String,
                       minSnapshotsToKeep: Option[Int],
                       maxSnapshotAgeMs: Option[Long]): IcebergTable = {
-    val r = table.metadata.refs.getOrElse(name,
+    val md = table.metadata
+    val r = md.refs.getOrElse(name,
       throw new IllegalArgumentException(s"ref '$name' not found"))
     require(r.refType == BranchRef,
       s"snapshot retention applies to branches only; '$name' is a tag")
-    writeMetadata(table.location, table.metadata.copy(
-      refs = table.metadata.refs + (name -> r.copy(
-        minSnapshotsToKeep = minSnapshotsToKeep,
-        maxSnapshotAgeMs = maxSnapshotAgeMs))), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    table.ops.commit(md, headGuard(md, name),
+      Seq(SetSnapshotRef(name, r.snapshotId, BranchRef.repr,
+        minSnapshotsToKeep, maxSnapshotAgeMs, r.maxRefAgeMs)))
   }
 
   /** Drop a branch or tag (`main` is protected). */
   def dropRef(table: IcebergTable, name: String): IcebergTable = {
-    require(name != TableMetadata.MainBranch, "cannot drop the main branch")
+    require(name != MainBranch, "cannot drop the main branch")
     require(table.metadata.refs.contains(name), s"ref '$name' not found")
-    writeMetadata(table.location, table.metadata.copy(
-      refs = table.metadata.refs - name), table.loadedVersion + 1)
-    IcebergTables.load(table.location)
+    commitUpdates(table, Seq(RemoveSnapshotRef(name)))
   }
 
   val posDeleteSchema: Schema = Schema(0, StructT(Seq(
@@ -3647,25 +2402,124 @@ object TableWriter {
   // ------------------------------------------------------------------ guts
 
 
-  /** The REST `set-snapshot-ref` update advancing main — carrying the
-    * loaded ref's retention policy, since the spec's update REPLACES the
-    * ref server-side. */
-  private def setMainRefUpdate(md: TableMetadata, snapId: Long)
-      : graft.catalog.SetSnapshotRef = {
-    val prev = md.refs.get(TableMetadata.MainBranch)
-    graft.catalog.SetSnapshotRef(TableMetadata.MainBranch, snapId,
+  private val MainBranch = TableMetadata.MainBranch
+
+  /** The head of `ref` as `md` saw it (main falls back to the current
+    * snapshot; None = the ref does not exist). */
+  private def refHead(md: TableMetadata, ref: String): Option[Long] =
+    md.refs.get(ref).map(_.snapshotId)
+      .orElse(if (ref == MainBranch) md.currentSnapshotId else None)
+
+  /** A commit pinned to `ref`'s head as `md` saw it. */
+  private def headGuard(md: TableMetadata,
+                        ref: String = MainBranch): Seq[TableRequirement] =
+    Seq(AssertTableUuid(md.tableUuid), AssertRefSnapshotId(ref, refHead(md, ref)))
+
+  /** The `set-snapshot-ref` update moving branch `name` — carrying the
+    * existing ref's retention policy, since the update REPLACES the ref. */
+  private def setRefUpdate(md: TableMetadata, name: String,
+                           snapId: Long): SetSnapshotRef = {
+    val prev = md.refs.get(name).filter(_.refType == BranchRef)
+    SetSnapshotRef(name, snapId, BranchRef.repr,
       minSnapshotsToKeep = prev.flatMap(_.minSnapshotsToKeep),
       maxSnapshotAgeMs = prev.flatMap(_.maxSnapshotAgeMs),
       maxRefAgeMs = prev.flatMap(_.maxRefAgeMs))
   }
 
-  /** Advance branch `name` to a new HEAD, preserving the existing ref's
-    * retention policy ([[SnapshotRef.advanced]]) — every branch-moving
-    * commit path routes through here so `min-snapshots-to-keep` /
-    * `max-snapshot-age-ms` / `max-ref-age-ms` survive commits. */
-  private def advRef(refs: Map[String, SnapshotRef], name: String,
-                     snapId: Long): Map[String, SnapshotRef] =
-    refs + (name -> SnapshotRef.advanced(refs, name, snapId))
+  /** The requirements + updates that publish `snapshot` as main's new
+    * head, pinned to main's head as `md` saw it. */
+  private def snapshotChange(md: TableMetadata, snapshot: Snapshot)
+      : (Seq[TableRequirement], Seq[TableUpdate]) =
+    (headGuard(md),
+      Seq(AddSnapshot(snapshot), setRefUpdate(md, MainBranch, snapshot.snapshotId)))
+
+  /** Commit `snapshot` as main's new head through the table's ops;
+    * `leading`/`trailing` updates ride the same commit. */
+  private def publish(table: IcebergTable, snapshot: Snapshot,
+                      leading: Seq[TableUpdate] = Nil,
+                      trailing: Seq[TableUpdate] = Nil): IcebergTable = {
+    val (requirements, updates) = snapshotChange(table.metadata, snapshot)
+    table.ops.commit(table.metadata, requirements, leading ++ updates ++ trailing)
+  }
+
+  /** A metadata-only commit guarded by the table's identity alone. */
+  private def commitUpdates(table: IcebergTable,
+                            updates: Seq[TableUpdate]): IcebergTable =
+    table.ops.commit(table.metadata,
+      Seq(AssertTableUuid(table.metadata.tableUuid)), updates)
+
+  private def metadataDir(table: IcebergTable): File = {
+    val d = new File(table.location, "metadata"); d.mkdirs(); d
+  }
+
+  /** One ADDED data-file entry for a freshly written file: footer stats
+    * (parquet, ORC; AVRO carries counts only) + task-side NaN counts,
+    * stamped with the sort order it was written under. */
+  private def addedEntry(table: IcebergTable, f: CowFileOut, snapId: Long,
+                         seq: Long, sortOrderId: Int = 0): ManifestEntry = {
+    val file = new File(f.path)
+    val partition = f.partition.filter(_._2 != null)
+    val info = f.path.toLowerCase match {
+      case p if p.endsWith(".orc") =>
+        statsFromOrc(file, table.schema, partition, f.nanCounts)
+      case p if p.endsWith(".avro") =>
+        DataFileInfo(DataFileContent.Data, f.path, "AVRO", partition, f.rows,
+          file.length(), Map.empty, Map.empty, Map.empty, f.nanCounts,
+          Map.empty, Map.empty, Nil, Nil, None)
+      case _ => statsFromFooter(file, table.schema, partition,
+        DataFileContent.Data, None, f.nanCounts)
+    }
+    ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
+      info.copy(sortOrderId = Some(sortOrderId)))
+  }
+
+  /** The manifest holding one snapshot's ADDED entries — data (under the
+    * current spec's partition type) or deletes — or None when empty. */
+  private def addedManifest(table: IcebergTable, entries: Seq[ManifestEntry],
+                            name: String, snapId: Long, seq: Long,
+                            firstRowId: Option[Long] = None): Option[ManifestFile] =
+    entries.headOption.map { head =>
+      val data = head.dataFile.content == DataFileContent.Data
+      writeManifest(table, s"$name-$snapId", if (data) 0 else 1,
+        table.spec.specId,
+        if (data) table.spec.partitionType(table.schema) else StructT(Nil),
+        entries, snapId, seq, firstRowId)
+    }
+
+  /** Write `entries` as manifest `<name>.avro` of snapshot `snapId` (at
+    * sequence `seq`) and return its manifest-list row: file and row counts
+    * per entry status, the lowest entry sequence number, and the partition
+    * summary of the entries still live. */
+  private def writeManifest(table: IcebergTable, name: String, content: Int,
+                            specId: Int, partType: StructT,
+                            entries: Seq[ManifestEntry], snapId: Long, seq: Long,
+                            firstRowId: Option[Long] = None): ManifestFile = {
+    val mf = new File(metadataDir(table), s"$name.avro")
+    ManifestIO.writeManifest(mf, entries, partType)
+    val by = entries.groupBy(_.status).withDefaultValue(Nil)
+    def rows(status: Int): Long = by(status).map(_.dataFile.recordCount).sum
+    ManifestFile(
+      path = mf.getPath, length = mf.length(),
+      partitionSpecId = specId, content = content, sequenceNumber = seq,
+      minSequenceNumber = entries.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
+      addedSnapshotId = snapId,
+      addedFilesCount = by(ManifestEntryStatus.Added).size,
+      existingFilesCount = by(ManifestEntryStatus.Existing).size,
+      deletedFilesCount = by(ManifestEntryStatus.Deleted).size,
+      addedRowsCount = rows(ManifestEntryStatus.Added),
+      existingRowsCount = rows(ManifestEntryStatus.Existing),
+      deletedRowsCount = rows(ManifestEntryStatus.Deleted),
+      partitions = partitionSummaries(
+        entries.filter(_.status != ManifestEntryStatus.Deleted), partType),
+      formatVersion = 2, firstRowId = firstRowId)
+  }
+
+  /** Partition type of spec `specId` over the current schema (unknown
+    * spec: `orElse`). */
+  private def partTypeOf(table: IcebergTable, specId: Int,
+                         orElse: => StructT): StructT =
+    table.metadata.partitionSpecs.find(_.specId == specId)
+      .map(_.partitionType(table.schema)).getOrElse(orElse)
 
   private def partName(src: String, t: Transform): String = t match {
     case IdentityTransform => src
@@ -3695,7 +2549,7 @@ object TableWriter {
 
   private def srcName(c: Column): String = c.toString
 
-  /** The distributed data write shared by [[commit]] and branch appends:
+  /** The distributed data write shared by every DataFrame write:
     * optional range clustering per the sort order, hash distribution by
     * the transformed partition value, then the task writers (one open
     * file per partition tuple, inline NaN counts, attempt-unique names).
@@ -3810,192 +2664,20 @@ object TableWriter {
     outs
   }
 
-  private def commit(df: DataFrame, location: String, schema: Schema,
-                     spec: PartitionSpec, properties: Map[String, String],
-                     version: Int, parentSnapshot: Option[Snapshot],
-                     existingEntries: Seq[ManifestEntry],
-                     existingManifests: Seq[ManifestFile],
-                     sequenceNumber: Long,
-                     sortOrder: SortOrder = SortOrder.unsorted,
-                     preClustered: Boolean = false,
-                     // extra manifests minted for THIS snapshot (the id is
-                     // only known in here) — lets one commit carry e.g. an
-                     // equality-delete manifest next to the appended data
-                     extraManifestsFor: Long => Seq[ManifestFile] = _ => Nil,
-                     op: graft.core.SnapshotOp = OpAppend,
-                     // floor on the written format-version: createWithSchema
-                     // passes 3 when the schema carries V3-only types, so
-                     // the FIRST metadata write is already spec-valid (a
-                     // V2 JSON declaring geometry columns is not)
-                     minFormatVersion: Int = 2): IcebergTable = {
-    val snapId = System.nanoTime()
-    val dataDir = new File(location, s"data/snap-$snapId")
-    val metaDir = new File(location, "metadata")
-    metaDir.mkdirs()
-    val outs = writeDistributed(df, dataDir, schema, spec, properties,
-      sortOrder, preClustered)
-
-    val partType = spec.partitionType(schema)
-    val dataFormat = FormatWriters.dataFormatOf(properties)
-    val entries = outs.sortBy(_.path).map { o =>
-      val info = (dataFormat match {
-        case "PARQUET" => statsFromFooter(new File(o.path), schema,
-          o.partition.filter(_._2 != null), DataFileContent.Data, None, o.nanCounts)
-        case "ORC" => statsFromOrc(new File(o.path), schema,
-          o.partition.filter(_._2 != null), o.nanCounts)
-        case _ /* AVRO: no footer stats — counts only */ =>
-          DataFileInfo(DataFileContent.Data, o.path, "AVRO",
-            o.partition.filter(_._2 != null), o.rows,
-            new File(o.path).length(), Map.empty, Map.empty, Map.empty,
-            o.nanCounts, Map.empty, Map.empty, Nil, Nil, None)
-      }).copy(sortOrderId = Some(sortOrder.orderId))
-      ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(sequenceNumber),
-        Some(sequenceNumber), info)
-    }
-
-    val prevMeta: Option[TableMetadata] =
-      if (version == 1) None
-      else Some(IcebergTables.load(location).metadata)
-    // V3 row lineage: stamp first_row_id onto the added files before the
-    // manifest is written; below V3 this is the identity
-    val lineage = prevMeta match {
-      case Some(m) => assignLineage(m, entries)
-      // a table BORN V3 (createWithSchema with V3-only types) assigns row
-      // lineage from 0 on its very first commit, per spec
-      case None => assignLineage(minFormatVersion, None, entries)
-    }
-
-    val manifestFile = new File(metaDir, s"manifest-$snapId.avro")
-    ManifestIO.writeManifest(manifestFile, lineage.entries, partType)
-    val newManifest = ManifestFile(
-      path = manifestFile.getPath, length = manifestFile.length(),
-      partitionSpecId = spec.specId, content = 0,
-      sequenceNumber = sequenceNumber, minSequenceNumber = sequenceNumber,
-      addedSnapshotId = snapId,
-      addedFilesCount = entries.size, existingFilesCount = 0, deletedFilesCount = 0,
-      addedRowsCount = entries.map(_.dataFile.recordCount).sum,
-      existingRowsCount = 0, deletedRowsCount = 0,
-      partitions = partitionSummaries(entries, partType),
-      formatVersion = 2,
-      firstRowId = lineage.manifestFirstRowId)
-
-    // REPLACE/OVERWRITE (no carried manifests but a parent exists): record
-    // the parent's live files as DELETED-status entries, per the Iceberg
-    // spec — the committing snapshot's manifests name what it removed, so
-    // `entries` forensics and changelog readers see removals without
-    // diffing whole snapshots. Reading the parent manifests here is
-    // O(files replaced) — the same order as the rewrite itself.
-    val removedManifest: Option[ManifestFile] =
-      if (existingManifests.nonEmpty) None
-      else parentSnapshot.flatMap { ps =>
-        val prev = ManifestIO.readManifestList(
-          new java.io.BufferedInputStream(new java.io.FileInputStream(ps.manifestList)))
-        val removed = {
-          import scala.collection.parallel.CollectionConverters._
-          prev.filter(_.content == 0).par.flatMap { m =>
-            ManifestIO.readManifestEntries(
-              new java.io.BufferedInputStream(new java.io.FileInputStream(m.path)), m)
-          }.seq
-        }.map(e => e.copy(status = ManifestEntryStatus.Deleted,
-          snapshotId = Some(snapId),
-          // partition tuples may span evolved specs; deleted entries are
-          // never pruned by partition, so strip rather than re-encode
-          dataFile = e.dataFile.copy(partition = Map.empty)))
-        if (removed.isEmpty) None
-        else {
-          val mf = new File(metaDir, s"manifest-removed-$snapId.avro")
-          ManifestIO.writeManifest(mf, removed.toSeq, StructT(Nil))
-          Some(ManifestFile(
-            path = mf.getPath, length = mf.length(),
-            partitionSpecId = spec.specId, content = 0,
-            sequenceNumber = sequenceNumber,
-            minSequenceNumber =
-              removed.flatMap(_.sequenceNumber).minOption.getOrElse(sequenceNumber),
-            addedSnapshotId = snapId,
-            addedFilesCount = 0, existingFilesCount = 0,
-            deletedFilesCount = removed.size,
-            addedRowsCount = 0, existingRowsCount = 0,
-            deletedRowsCount = removed.map(_.dataFile.recordCount).sum,
-            partitions = Nil, formatVersion = 2))
-        }
-      }
-
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      existingManifests ++ extraManifestsFor(snapId) ++
-        Seq(newManifest) ++ removedManifest)
-
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, parentSnapshot.map(_.snapshotId), sequenceNumber,
-      now, listFile.getPath, Some(SnapshotSummary(op,
-        Map("added-data-files" -> entries.size.toString,
-          "added-records" -> entries.map(_.dataFile.recordCount).sum.toString))),
-      Some(schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
-
-    val md = TableMetadata(
-      // a table that moved to V3 (deletion vectors) must STAY V3 — its
-      // Puffin delete entries are illegal under V2
-      formatVersion = math.max(minFormatVersion,
-        prevMeta.map(_.formatVersion).getOrElse(2)),
-      tableUuid = prevMeta.map(_.tableUuid).getOrElse(java.util.UUID.randomUUID().toString),
-      location = location,
-      lastSequenceNumber = sequenceNumber,
-      lastUpdatedMs = now,
-      lastColumnId = math.max(schema.highestFieldId,
-        prevMeta.map(_.lastColumnId).getOrElse(0)),
-      // carry prior schema versions so older snapshots keep resolving
-      schemas = (prevMeta.map(_.schemas.filterNot(_.schemaId == schema.schemaId))
-        .getOrElse(Nil) :+ schema),
-      currentSchemaId = schema.schemaId,
-      // spec HISTORY is preserved: older manifests reference their spec by
-      // id, and scans resolve per-manifest evaluators from this list
-      partitionSpecs = (prevMeta.map(_.partitionSpecs.filterNot(_.specId == spec.specId))
-        .getOrElse(Nil) :+ spec).sortBy(_.specId),
-      defaultSpecId = spec.specId,
-      lastPartitionId = Some((spec.fields.map(_.fieldId) ++
-        prevMeta.flatMap(_.lastPartitionId)).maxOption.getOrElse(999)),
-      properties = properties,
-      snapshots = prevMeta.map(_.snapshots).getOrElse(Nil) :+ snapshot,
-      currentSnapshotId = Some(snapId),
-      snapshotLog = prevMeta.map(_.snapshotLog).getOrElse(Nil) :+
-        SnapshotLogEntry(snapId, now),
-      metadataLog = prevMeta.map(m => m.metadataLog :+
-        MetadataLogEntry(m.location + s"/metadata/v${version - 1}.metadata.json",
-          m.lastUpdatedMs)).getOrElse(Nil),
-      sortOrders = (prevMeta.map(_.sortOrders).getOrElse(Seq(SortOrder.unsorted)) :+
-        sortOrder).distinctBy(_.orderId),
-      defaultSortOrderId = sortOrder.orderId,
-      // carry existing branches/tags forward; only main advances
-      refs = advRef(prevMeta.map(_.refs).getOrElse(Map.empty),
-        TableMetadata.MainBranch, snapId),
-      nextRowId = lineage.nextRowId,
-      // foreign-engine statistics files ride through untouched
-      statisticsJson = prevMeta.flatMap(_.statisticsJson),
-      partitionStatisticsJson = prevMeta.flatMap(_.partitionStatisticsJson))
-    writeMetadata(location, md, version)
-    IcebergTables.load(location)
-  }
-
-  /** Thrown when another writer committed the same version first —
-    * optimistic concurrency, the caller may reload + retry. */
-  final class CommitConflictException(version: Int, location: String)
-    extends RuntimeException(
-      s"metadata version $version of $location was committed concurrently")
-
-  /** Optimistic-concurrency retry loop: run `op` against a FRESH load of
-    * the table, reloading and retrying on [[CommitConflictException]] —
-    * the standard commit pattern for concurrent writers (appends and MoR
+  /** Optimistic-concurrency retry loop: run `op` against a FRESH handle
+    * on the table (reloaded through its ops, so REST tables retry too),
+    * reloading and retrying on [[graft.catalog.CommitConflictError]] — the
+    * standard commit pattern for concurrent writers (appends and MoR
     * deletes compose with any concurrent commit; CoW ops re-plan against
     * the new snapshot on reload, so the retry is semantically a re-run).
     * The final attempt's conflict propagates. */
-  def withCommitRetry[T](location: String, maxAttempts: Int = 4)
+  def withCommitRetry[T](table: IcebergTable, maxAttempts: Int = 4)
                         (op: IcebergTable => T): T = {
     var attempt = 1
     while (true) {
-      try return op(IcebergTables.load(location))
+      try return op(table.ops.current())
       catch {
-        case e: CommitConflictException if attempt < maxAttempts =>
+        case _: graft.catalog.CommitConflictError if attempt < maxAttempts =>
           attempt += 1
       }
     }
@@ -4015,9 +2697,7 @@ object TableWriter {
     * never retained. The output is O(partitions) by definition (it IS the
     * stats file), written once as a single parquet. */
   def computePartitionStats(table: IcebergTable,
-                            spark: org.apache.spark.sql.SparkSession,
-                            restCommit: Option[(graft.catalog.RestCatalog,
-                              Seq[String], graft.catalog.LoadedTable)] = None)
+                            spark: org.apache.spark.sql.SparkSession)
       : (IcebergTable, Int) = {
     val snap = table.currentSnapshot.getOrElse(throw new IllegalArgumentException(
       "compute_partition_stats: table has no snapshot"))
@@ -4204,35 +2884,15 @@ object TableWriter {
     Files.move(src.toPath, dest.toPath)
     stage.listFiles().foreach(_.delete()); stage.delete()
 
-    // register: replace any entry for THIS snapshot, keep others
+    // register: the set-partition-statistics update replaces any entry
+    // for THIS snapshot and keeps the others
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    md.partitionStatisticsJson.foreach { raw =>
-      val prev = mapper.readTree(raw)
-      if (prev.isArray) prev.forEach { n =>
-        val sid = Option(n.get("snapshot-id")).map(_.asLong())
-        if (!sid.contains(snap.snapshotId))
-          arr.add(n): Unit
-      }
-    }
     val entry = mapper.createObjectNode()
     entry.put("snapshot-id", snap.snapshotId)
     entry.put("statistics-path", dest.getPath)
     entry.put("file-size-in-bytes", dest.length())
-    arr.add(entry)
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        val committed = rc.commitTable(id,
-          Seq(graft.catalog.AssertTableUuid(basedOn.metadata.tableUuid)),
-          Seq(graft.catalog.SetPartitionStatistics(
-            mapper.writeValueAsString(entry))))
-        (restTableOf(committed, rc), rows.size)
-      case None =>
-        writeMetadata(table.location, md.copy(
-          partitionStatisticsJson = Some(mapper.writeValueAsString(arr))),
-          table.loadedVersion + 1)
-        (IcebergTables.load(table.location), rows.size)
-    }
+    (commitUpdates(table, Seq(SetPartitionStatistics(
+      mapper.writeValueAsString(entry)))), rows.size)
   }
 
   /** Compute per-column NDV statistics for the CURRENT snapshot and
@@ -4254,10 +2914,7 @@ object TableWriter {
     * the authoritative summary. */
   def computeTableStats(table: IcebergTable,
                         spark: org.apache.spark.sql.SparkSession,
-                        columns: Seq[String] = Nil,
-                        restCommit: Option[(graft.catalog.RestCatalog,
-                          Seq[String], graft.catalog.LoadedTable)] = None)
-      : (IcebergTable, Int) = {
+                        columns: Seq[String] = Nil): (IcebergTable, Int) = {
     val snap = table.currentSnapshot.getOrElse(throw new IllegalArgumentException(
       "compute_table_stats: table has no snapshot"))
     val eligible: IcebergType => Boolean = {
@@ -4334,20 +2991,11 @@ object TableWriter {
     })
     val footerSize = puffin.length() - (metas.last.offset + metas.last.length)
 
-    // register: replace any existing entry for THIS snapshot, keep others
+    // register: the set-statistics update replaces any existing entry for
+    // THIS snapshot and carries foreign/older entries through as their
+    // ORIGINAL raw nodes (reconstructing from the parsed model would zero
+    // file sizes and blob sequence numbers a foreign Puffin reader trusts)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    // carry foreign/older entries through as the ORIGINAL raw nodes —
-    // reconstructing from the parsed model would zero file sizes and blob
-    // sequence numbers, corrupting entries a foreign Puffin reader trusts
-    table.metadata.statisticsJson.foreach { raw =>
-      val prev = mapper.readTree(raw)
-      if (prev.isArray) prev.forEach { n =>
-        val sid = Option(n.get("snapshot-id")).map(_.asLong())
-        if (!sid.contains(snap.snapshotId))
-          arr.add(n): Unit
-      }
-    }
     val entry = mapper.createObjectNode()
     entry.put("snapshot-id", snap.snapshotId)
     entry.put("statistics-path", puffin.getPath)
@@ -4363,79 +3011,8 @@ object TableWriter {
       bn.putObject("properties").put("ndv", ndv.toString)
       ()
     }
-    arr.add(entry)
-    restCommit match {
-      case Some((rc, id, basedOn)) =>
-        // the spec's set-statistics action ships ONE entry node; the
-        // server owns the array merge (same-snapshot replace)
-        val committed = rc.commitTable(id,
-          Seq(graft.catalog.AssertTableUuid(basedOn.metadata.tableUuid)),
-          Seq(graft.catalog.SetStatistics(mapper.writeValueAsString(entry))))
-        (restTableOf(committed, rc), targets.size)
-      case None =>
-        writeMetadata(table.location, table.metadata.copy(
-          statisticsJson = Some(mapper.writeValueAsString(arr))),
-          table.loadedVersion + 1)
-        (IcebergTables.load(table.location), targets.size)
-    }
-  }
-
-  /** How many PREVIOUS metadata files a table retains (spec property;
-    * Iceberg's default). The current file never counts against it. */
-  private def previousVersionsMax(md: TableMetadata): Int =
-    md.properties.get("write.metadata.previous-versions-max")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100)
-
-  private def writeMetadata(location: String, md0: TableMetadata, version: Int): Unit = {
-    val metaDir = new File(location, "metadata"); metaDir.mkdirs()
-    // metadata-log retention (spec `write.metadata.previous-versions-max`):
-    // the log tracks previous metadata files and is truncated oldest-first
-    // beyond the cap on EVERY commit — a 100-TB table commits millions of
-    // times, and an unbounded log makes the metadata file itself grow
-    // without bound
-    val keep = previousVersionsMax(md0)
-    val md = if (md0.metadataLog.size > keep)
-      md0.copy(metadataLog = md0.metadataLog.takeRight(keep)) else md0
-    val tmp = new File(metaDir, s".v$version.metadata.json.tmp-${System.nanoTime()}")
-    Files.write(tmp.toPath, md.toJson.getBytes(StandardCharsets.UTF_8))
-    val dst = new File(metaDir, s"v$version.metadata.json")
-    // COMPARE-AND-SWAP commit: a hard link creation is atomic and FAILS if
-    // the target exists (unlike POSIX rename, which silently replaces), so
-    // two writers racing to version N cannot clobber each other — the
-    // loser gets a CommitConflictException and can reload + retry. Readers
-    // see either the old or the new version, never a partial file.
-    try Files.createLink(dst.toPath, tmp.toPath)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp.toPath)
-        throw new CommitConflictException(version, location)
-    }
-    Files.deleteIfExists(tmp.toPath)
-    Files.write(new File(metaDir, "version-hint.text").toPath,
-      version.toString.getBytes(StandardCharsets.UTF_8))
-    // `write.metadata.delete-after-commit.enabled`: after a SUCCESSFUL
-    // commit, physically delete metadata files older than the retained
-    // window (current + the newest `keep` previous). Opt-in — the failure
-    // mode of deleting under a concurrent slow reader is the operator's
-    // call, exactly as in Iceberg. Only version files are touched; the
-    // deletion happens after the CAS, so a failed commit never deletes.
-    if (md.properties.get("write.metadata.delete-after-commit.enabled")
-        .exists(_.equalsIgnoreCase("true"))) {
-      val cutoff = version - keep // keep (cutoff..version-1) + current
-      Option(metaDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("v\\d+\\.metadata\\.json"))
-        .filter(f => f.getName.stripPrefix("v")
-          .stripSuffix(".metadata.json").toInt < cutoff)
-        .foreach(f => Files.deleteIfExists(f.toPath))
-    }
-  }
-
-  private def currentVersion(location: String): Int = {
-    val metaDir = new File(location, "metadata")
-    Option(metaDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("v\\d+\\.metadata\\.json"))
-      .map(_.getName.stripPrefix("v").stripSuffix(".metadata.json").toInt)
-      .maxOption.getOrElse(0)
+    (commitUpdates(table, Seq(SetStatistics(mapper.writeValueAsString(entry)))),
+      targets.size)
   }
 
   private def listParquet(dir: File): Seq[File] = {

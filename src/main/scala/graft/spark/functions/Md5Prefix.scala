@@ -73,17 +73,16 @@ final case class Md5PrefixLongExpr(child: Expression, nHex: Int)
         case _ => in
       }
       val shiftExpr = if (shift == 0) be else s"($be >>> $shift)"
+      // the OR chain stays on ONE line: Spark strips a leading `|` from
+      // generated lines as a margin, and Janino then reads `(a)\n(b)` as
+      // a cast that does not compile
+      val beExpr = (0 until 8)
+        .map(i => s"(((long) ($dig[$i] & 0xff)) << ${56 - 8 * i})")
+        .mkString(" | ")
       s"""
          byte[] $bytes = $byteExpr;
          byte[] $dig = $md.digest($bytes);
-         long $be = (((long) ($dig[0] & 0xff)) << 56)
-                  | (((long) ($dig[1] & 0xff)) << 48)
-                  | (((long) ($dig[2] & 0xff)) << 40)
-                  | (((long) ($dig[3] & 0xff)) << 32)
-                  | (((long) ($dig[4] & 0xff)) << 24)
-                  | (((long) ($dig[5] & 0xff)) << 16)
-                  | (((long) ($dig[6] & 0xff)) << 8)
-                  |  ((long) ($dig[7] & 0xff));
+         long $be = $beExpr;
          ${ev.value} = $shiftExpr;
        """
     })

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-import graft.spark.{GraftCowCommit, GraftCowWriterFactory, IcebergTables, PartFieldSpec, RestDmlBinding, TableWriter}
+import graft.spark.{GraftCowCommit, GraftCowWriterFactory, IcebergTable, PartFieldSpec, TableWriter}
 
 /** Structured Streaming SINK over an Iceberg table:
   * `df.writeStream.format("icegopher").start(dir)` — each epoch commits one
@@ -24,22 +24,19 @@ import graft.spark.{GraftCowCommit, GraftCowWriterFactory, IcebergTables, PartFi
   * A replayed epoch deletes its files and returns without a new snapshot.
   * Readers (including the streaming SOURCE) see each epoch atomically —
   * a table can sit mid-pipeline as both sink and source. */
-final class GraftStreamingWrite(location: String, schema: StructType,
-                                queryId: String,
-                                // the table's catalog of record when it is
-                                // a REST server: every epoch loads fresh
-                                // metadata through it and commits via the
-                                // server's update actions — the sink twin
-                                // of the source's `reload`
-                                restDml: Option[RestDmlBinding] = None)
+final class GraftStreamingWrite(table: IcebergTable, schema: StructType,
+                                queryId: String)
     extends StreamingWrite {
 
   private val writeDir =
-    new File(location, s"data/stream-${java.util.UUID.randomUUID()}")
+    new File(table.location, s"data/stream-${java.util.UUID.randomUUID()}")
 
-  private def currentTable(): graft.spark.IcebergTable =
-    restDml.map(b => TableWriter.restTableOf(b.load(), b.catalog))
-      .getOrElse(IcebergTables.load(location))
+  /** Every epoch loads fresh metadata through the table's catalog of
+    * record and commits through it — on a REST table, pinned to the loaded
+    * head: a racing commit 409s and Spark's epoch retry re-runs against
+    * fresh metadata (the dedup scan then recognizes an already-landed
+    * epoch). */
+  private def currentTable(): IcebergTable = table.ops.current()
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
@@ -95,24 +92,8 @@ final class GraftStreamingWrite(location: String, schema: StructType,
     }
     val stamps = Map(GraftStreamingWrite.EpochKey -> epochId.toString,
       GraftStreamingWrite.QueryKey -> queryId)
-    restDml match {
-      case Some(b) =>
-        // REST plane: the epoch snapshot commits through the server,
-        // pinned to the loaded head — a racing commit 409s and Spark's
-        // epoch retry re-runs against fresh metadata (the dedup scan
-        // above then recognizes an already-landed epoch)
-        graft.spark.GraftSparkTable.wapBranch match {
-          case Some(br) =>
-            TableWriter.appendFilesToBranchRest(b.catalog, b.identifier,
-              added, br, stamps)
-          case None =>
-            TableWriter.appendFilesRest(b.catalog, b.identifier, added, stamps)
-        }
-        b.afterCommit()
-      case None =>
-        TableWriter.appendFiles(location, added, stamps,
-          branch = graft.spark.GraftSparkTable.wapBranch)
-    }
+    TableWriter.appendFiles(current, added, stamps,
+      branch = graft.spark.GraftSparkTable.wapBranch)
     ()
   }
 

@@ -291,7 +291,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tx = graft.spark.TableWriter.transaction(catalog)
       .stageAppend(Seq("it_txf", "src"), Seq(fileFor(locS, "s2")))
       .stageAppend(Seq("it_txf", "idx"), Seq(fileFor(locI, "i2")))
-    graft.spark.TableWriter.appendFilesRest(catalog, Seq("it_txf", "idx"),
+    graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(Seq("it_txf", "idx")), catalog),
       Seq(fileFor(locI, "sneak")))
     intercept[CommitConflictError](tx.commit())
     assert(catalog.loadTable(Seq("it_txf", "src"))
@@ -315,7 +315,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dest = new java.io.File(new java.io.File(loc, "data"), s"$tag.parquet")
       dest.getParentFile.mkdirs()
       java.nio.file.Files.copy(src.toPath, dest.toPath)
-      graft.spark.TableWriter.appendFilesRest(catalog, ident,
+      graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(ident), catalog),
         Seq(graft.spark.CowFileOut(dest.getPath, 1, Map.empty)))
         .metadata.currentSnapshotId.get
     }
@@ -337,7 +337,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // aggressive expiry: keep main's newest (s3) + the branch target under
     // its policy (s1); s2 — referenced but retained by NO policy — expires
-    val after = graft.spark.TableWriter.expireSnapshotsRest(catalog, ident,
+    val after = graft.spark.TableWriter.expireSnapshots(graft.spark.TableWriter.restTableOf(catalog.loadTable(ident), catalog),
       olderThanMs = System.currentTimeMillis() + 1000, retainLast = 1,
       deleteFiles = true)
     val ids = after.metadata.snapshots.map(_.snapshotId).toSet
@@ -362,13 +362,13 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     catalog.commitTable(ident, Nil,
       Seq(SetSnapshotRef("stale", s1, "branch", maxRefAgeMs = Some(0L))))
     Thread.sleep(5)
-    val after2 = graft.spark.TableWriter.expireSnapshotsRest(catalog, ident,
+    val after2 = graft.spark.TableWriter.expireSnapshots(graft.spark.TableWriter.restTableOf(catalog.loadTable(ident), catalog),
       olderThanMs = 0L, retainLast = 10)
     assert(!after2.metadata.refs.contains("stale"), after2.metadata.refs.keySet)
     assert(after2.metadata.refs.contains("audit"))
 
     // idempotent: nothing left to expire → no commit, same state back
-    val again = graft.spark.TableWriter.expireSnapshotsRest(catalog, ident,
+    val again = graft.spark.TableWriter.expireSnapshots(graft.spark.TableWriter.restTableOf(catalog.loadTable(ident), catalog),
       olderThanMs = 0L, retainLast = 10)
     assert(again.metadata.snapshots.map(_.snapshotId).toSet == Set(s1, s3))
   }
@@ -443,7 +443,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .stageAppend(docsId, Seq(stagedFile(b3, "b3")))
     assert(graft.queries.Bm25Index.stageChanges(tx3, catalog, idxId,
       asWindow(b3, 3L), p))
-    graft.spark.TableWriter.appendFilesRest(catalog, docsId,
+    graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(docsId), catalog),
       Seq(stagedFile(Seq((99L, "sneak")).toDF("doc_id", "text"), "sneak")))
     intercept[CommitConflictError](tx3.commit())
     assert(catalog.loadTable(idxId).metadata.currentSnapshotId == idxSnapBefore,
@@ -544,7 +544,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .stageAppend(corpusId, Seq(stagedFile(b3, "b3")))
     assert(GraphIndex.stageChanges(tx3, catalog, assignId, graphId,
       all.union(b3), asWindow(b3, 3L), cents, p))
-    graft.spark.TableWriter.appendFilesRest(catalog, corpusId,
+    graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(corpusId), catalog),
       Seq(stagedFile(corpusDf(Seq(99L)), "sneak")))
     intercept[CommitConflictError](tx3.commit())
     assert(catalog.loadTable(graphId).metadata.currentSnapshotId == idxSnapBefore,
@@ -573,7 +573,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.spark.CowFileOut(dest.getPath, df.count(), Map.empty)
     }
     val seed = fileAt(locA, Seq((1L, "x"), (2L, "y")).toDF("id", "data"), "seed")
-    graft.spark.TableWriter.appendFilesRest(catalog, aId, Seq(seed))
+    graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(aId), catalog), Seq(seed))
 
     // positional tombstone for row 0 of the seed file (drops id=1)
     val delDir = java.nio.file.Files.createTempDirectory("mor_del").toFile
@@ -662,7 +662,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       // WRITE path on a remote-signing table: the append stages manifests
       // and commits through the catalog with no storage keys anywhere
-      graft.spark.TableWriter.appendFilesRest(catalog, ident,
+      graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(ident), catalog),
         Seq(fileAt(Seq((1L, "a"), (2L, "b")).toDF("id", "data"), "w1")))
 
       val loaded = catalog.loadTable(ident)
@@ -760,7 +760,7 @@ class RestIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val destF = new java.io.File(new java.io.File(locV, "data"), "boot.parquet")
     destF.getParentFile.mkdirs()
     java.nio.file.Files.copy(srcF.toPath, destF.toPath)
-    graft.spark.TableWriter.appendFilesRest(catalog, viewId,
+    graft.spark.TableWriter.appendFiles(graft.spark.TableWriter.restTableOf(catalog.loadTable(viewId), catalog),
       Seq(graft.spark.CowFileOut(destF.getPath, boot.count(), Map.empty)))
 
     // both sources move after the watermark

@@ -170,7 +170,7 @@ class CliSpec extends AnyFunSuite {
         val dest = new java.io.File(new java.io.File(loc, "data"), s"$tag.parquet")
         dest.getParentFile.mkdirs()
         java.nio.file.Files.copy(src.toPath, dest.toPath)
-        TableWriter.appendFilesRest(cat, Seq("m", "t"),
+        TableWriter.appendFiles(TableWriter.restTableOf(cat.loadTable(Seq("m", "t")), cat),
           Seq(graft.spark.CowFileOut(dest.getPath, 1, Map.empty)))
           .metadata.currentSnapshotId.get
       }

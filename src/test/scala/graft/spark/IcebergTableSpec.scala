@@ -356,7 +356,7 @@ class IcebergTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two writers load the SAME table state, both try to commit version 2
     val stale = IcebergTables.load(loc)
     TableWriter.append(t1, src) // wins
-    intercept[TableWriter.CommitConflictException] {
+    intercept[graft.catalog.CommitConflictError] {
       TableWriter.append(stale, src) // loser must not silently clobber
     }
     // the winning commit is intact
@@ -370,7 +370,7 @@ class IcebergTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // N writers race from the same observed state; every append must land
     val threads = (1 to 3).map { _ =>
       new Thread(() =>
-        TableWriter.withCommitRetry(loc)(t => TableWriter.append(t, src)))
+        TableWriter.withCommitRetry(IcebergTables.load(loc))(t => TableWriter.append(t, src)))
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(IcebergTables.load(loc).newScan().toDF(spark).count() == 4 * src.count())

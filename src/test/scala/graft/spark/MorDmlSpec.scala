@@ -236,10 +236,7 @@ class MorDmlSpec extends AnyFunSuite {
     val scanned1 = IcebergTables.load(loc)
     TableWriter.append(scanned1,
       spark.sql("SELECT CAST(3 AS BIGINT) AS id, CAST(3.0 AS DOUBLE) AS v"))
-    TableWriter.commitDelta(loc, Nil, Nil,
-      expectedVersion = Some(scanned1.loadedVersion),
-      scannedSnapshotId = scanned1.currentSnapshot.map(_.snapshotId),
-      isolation = "snapshot")
+    TableWriter.commitDelta(scanned1, Nil, Nil, isolation = "snapshot")
     assert(spark.sql("SELECT count(*) FROM graft.mor.iso")
       .collect()(0).getLong(0) == 3, "concurrent append must survive")
 
@@ -248,21 +245,16 @@ class MorDmlSpec extends AnyFunSuite {
     val scanned2 = IcebergTables.load(loc)
     TableWriter.deleteWhere(scanned2, spark,
       org.apache.spark.sql.functions.col("id") === 2L)
-    intercept[TableWriter.CommitConflictException] {
-      TableWriter.commitDelta(loc, Nil, Nil,
-        expectedVersion = Some(scanned2.loadedVersion),
-        scannedSnapshotId = scanned2.currentSnapshot.map(_.snapshotId),
-        isolation = "snapshot")
+    intercept[graft.catalog.CommitConflictError] {
+      TableWriter.commitDelta(scanned2, Nil, Nil, isolation = "snapshot")
     }
 
     // serializable (the default) conflicts even on a pure append
     val scanned3 = IcebergTables.load(loc)
     TableWriter.append(scanned3,
       spark.sql("SELECT CAST(4 AS BIGINT) AS id, CAST(4.0 AS DOUBLE) AS v"))
-    intercept[TableWriter.CommitConflictException] {
-      TableWriter.commitDelta(loc, Nil, Nil,
-        expectedVersion = Some(scanned3.loadedVersion),
-        scannedSnapshotId = scanned3.currentSnapshot.map(_.snapshotId))
+    intercept[graft.catalog.CommitConflictError] {
+      TableWriter.commitDelta(scanned3, Nil, Nil)
     }
   }
 
@@ -320,9 +312,8 @@ class MorDmlSpec extends AnyFunSuite {
     // concurrent commit lands → the pinned delta commit must conflict
     TableWriter.append(scanned,
       spark.sql("SELECT CAST(3 AS BIGINT) AS id, CAST(3.0 AS DOUBLE) AS v"))
-    intercept[TableWriter.CommitConflictException] {
-      TableWriter.commitDelta(loc, Nil, Nil,
-        expectedVersion = Some(scanned.loadedVersion))
+    intercept[graft.catalog.CommitConflictError] {
+      TableWriter.commitDelta(scanned, Nil, Nil)
     }
   }
 }

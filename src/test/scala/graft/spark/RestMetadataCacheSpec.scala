@@ -36,7 +36,7 @@ class RestMetadataCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dest = new java.io.File(new java.io.File(loc, "data"), s"$tag.parquet")
     dest.getParentFile.mkdirs()
     Files.copy(src.toPath, dest.toPath)
-    TableWriter.appendFilesRest(catalog, ident,
+    TableWriter.appendFiles(TableWriter.restTableOf(catalog.loadTable(ident), catalog),
       Seq(CowFileOut(dest.getPath, 1L, Map.empty)))
     ()
   }

@@ -50,7 +50,7 @@ class RestSqlCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dest = new java.io.File(new java.io.File(loc, "data"), s"$tag.parquet")
     dest.getParentFile.mkdirs()
     java.nio.file.Files.copy(src.toPath, dest.toPath)
-    TableWriter.appendFilesRest(rc, ident,
+    TableWriter.appendFiles(TableWriter.restTableOf(rc.loadTable(ident), rc),
       Seq(CowFileOut(dest.getPath, rows.size, Map.empty)))
     ()
   }
@@ -577,8 +577,7 @@ class RestSqlCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a concurrent writer lands between scan and commit
     appendRest(Seq("cas", "t"), loc, Seq((2L, "b")), "c2")
     intercept[graft.catalog.CommitConflictError] {
-      TableWriter.replaceFilesRest(rc, Seq("cas", "t"), paths, Nil,
-        basedOn = Some(scanned))
+      TableWriter.replaceFiles(TableWriter.restTableOf(scanned, rc), paths, Nil)
     }
     // nothing lost: both rows still present, and a RE-SCANNED rewrite lands
     assert(rowsOf("grest.cas.t") == Seq((1L, "a"), (2L, "b")))
@@ -766,7 +765,7 @@ class RestSqlCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dest = new java.io.File(new java.io.File(locD, "data"), s"$tag.parquet")
       dest.getParentFile.mkdirs()
       java.nio.file.Files.copy(src.toPath, dest.toPath)
-      TableWriter.appendFilesRest(rc, Seq("sy", "docs"),
+      TableWriter.appendFiles(TableWriter.restTableOf(rc.loadTable(Seq("sy", "docs")), rc),
         Seq(CowFileOut(dest.getPath, df.count(), Map.empty)))
       ()
     }

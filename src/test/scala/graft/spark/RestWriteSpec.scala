@@ -108,7 +108,7 @@ class RestWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("appendFilesRest stages manifests and commits via updateTable") {
     val cat = new RestCatalog("r", s"http://localhost:$port", Map.empty)
-    val committed = TableWriter.appendFilesRest(cat, Seq("db", "t"),
+    val committed = TableWriter.appendFiles(TableWriter.restTableOf(cat.loadTable(Seq("db", "t")), cat),
       Seq(dataFile("f1")), Map("source" -> "spec"))
 
     val body = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -158,7 +158,7 @@ class RestWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(src.toPath, dest.toPath)
 
     val cat = new RestCatalog("r", s"http://localhost:$port", Map.empty)
-    TableWriter.replaceFilesRest(cat, Seq("db", "cow"),
+    TableWriter.replaceFiles(TableWriter.restTableOf(cat.loadTable(Seq("db", "cow")), cat),
       Set(victim), Seq(CowFileOut(dest.getPath, 2, Map.empty)))
 
     val body = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -198,7 +198,7 @@ class RestWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
             "\"next-row-id\": 42"))
       })
     val cat = new RestCatalog("r", s"http://localhost:$port", Map.empty)
-    TableWriter.appendFilesRest(cat, Seq("db", "v3t"), Seq(dataFile("f3")))
+    TableWriter.appendFiles(TableWriter.restTableOf(cat.loadTable(Seq("db", "v3t")), cat), Seq(dataFile("f3")))
     val body = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(lastCommitBody)
     val sn = body.get("updates").get(0).get("snapshot")
@@ -221,7 +221,7 @@ class RestWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
         case _ => send(ex, 200, v3Json) // next-row-id still 40
       })
     val e = intercept[IllegalArgumentException] {
-      TableWriter.appendFilesRest(cat, Seq("db", "v3bad"), Seq(dataFile("f4")))
+      TableWriter.appendFiles(TableWriter.restTableOf(cat.loadTable(Seq("db", "v3bad")), cat), Seq(dataFile("f4")))
     }
     assert(e.getMessage.contains("next-row-id"), e.getMessage)
   }
@@ -229,7 +229,7 @@ class RestWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("409 on the data commit surfaces as CommitConflictError") {
     val cat = new RestCatalog("r", s"http://localhost:$port", Map.empty)
     val e = intercept[CommitConflictError] {
-      TableWriter.appendFilesRest(cat, Seq("db", "busy"), Seq(dataFile("f2")))
+      TableWriter.appendFiles(TableWriter.restTableOf(cat.loadTable(Seq("db", "busy")), cat), Seq(dataFile("f2")))
     }
     assert(e.getMessage.contains("branch main moved"))
   }

@@ -281,7 +281,7 @@ class RowLevelOpsSpec extends AnyFunSuite {
     val t2 = IcebergTables.load(loc)
     val target = t2.newScan().planFiles().find(_.file.recordCount == 1).get
     val reads0 = graft.core.ManifestIO.entryReads.get()
-    TableWriter.replaceFiles(loc, Set(target.file.path), Nil,
+    TableWriter.replaceFiles(t2, Set(target.file.path), Nil,
       touchedManifests = Some(Set(target.manifestPath)))
     val commitReads = graft.core.ManifestIO.entryReads.get() - reads0
     assert(commitReads == 1,
@@ -299,9 +299,8 @@ class RowLevelOpsSpec extends AnyFunSuite {
     // reference the file the CoW is about to replace — carrying on would
     // silently resurrect the deleted row, so the commit must conflict
     TableWriter.deleteWhere(scanned, spark, org.apache.spark.sql.functions.col("id") === 2)
-    intercept[TableWriter.CommitConflictException] {
-      TableWriter.replaceFiles(loc, files.toSet, Nil,
-        expectedVersion = Some(scanned.loadedVersion))
+    intercept[graft.catalog.CommitConflictError] {
+      TableWriter.replaceFiles(scanned, files.toSet, Nil)
     }
     // the concurrent delete survived
     assert(spark.sql("SELECT id FROM graft.rlo.race ORDER BY id").collect()

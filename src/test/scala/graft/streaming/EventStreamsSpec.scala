@@ -201,7 +201,7 @@ class EventStreamsSpec extends AnyFunSuite {
       graft.spark.GraftCowCommit(Seq(graft.spark.CowFileOut(path, 1, Map.empty))))
     def snapCount = graft.spark.IcebergTables.load(loc).metadata.snapshots.size
 
-    val wA = new GraftStreamingWrite(loc, schema, "queryA")
+    val wA = new GraftStreamingWrite(graft.spark.IcebergTables.load(loc), schema, "queryA")
     wA.commit(0, msgs(dataFile("a0", (2L, "b"))))
     assert(snapCount == 2)
 
@@ -218,7 +218,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
     // a NEW query whose epoch numbering restarts at 0 must NOT be deduped
     // against queryA's epoch-0 marker
-    val wB = new GraftStreamingWrite(loc, schema, "queryB")
+    val wB = new GraftStreamingWrite(graft.spark.IcebergTables.load(loc), schema, "queryB")
     wB.commit(0, msgs(dataFile("b0", (4L, "d"))))
     assert(snapCount == 4, "fresh query's first epoch must commit")
     assert(spark.read.format("icegopher").load(loc).count() == 4)
