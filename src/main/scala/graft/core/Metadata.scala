@@ -349,6 +349,21 @@ final case class TableMetadata(
       .sortBy(_.timestampMs).lastOption
       .flatMap(e => snapshotById(e.snapshotId))
 
+  /** The snapshot a time-travel pin selects — snapshot id first, then ref,
+    * then as-of time; None when no pin is given. An unresolvable pin is an
+    * error, never a silent read of the current snapshot. */
+  def pinnedSnapshot(snapshotId: Option[Long], ref: Option[String],
+                     asOfTimestampMs: Option[Long]): Option[Snapshot] =
+    (snapshotId, ref, asOfTimestampMs) match {
+      case (Some(id), _, _) => Some(snapshotById(id).getOrElse(
+        throw new IllegalArgumentException(s"snapshot $id not found")))
+      case (_, Some(r), _) => Some(snapshotByName(r).getOrElse(
+        throw new IllegalArgumentException(s"ref '$r' not found")))
+      case (_, _, Some(ts)) => Some(snapshotAsOfTime(ts).getOrElse(
+        throw new IllegalArgumentException(s"no snapshot as of $ts")))
+      case _ => None
+    }
+
   /** Invariant checks, matching metadata.go:212-273. */
   def validate(): Unit = {
     if (!schemas.exists(_.schemaId == currentSchemaId))

@@ -342,15 +342,8 @@ final class ScanPlanner(io: FileIO, metadata: TableMetadata) {
       useSnapshotSchema: Option[Boolean] = None)
       : Seq[FileScanTask] = {
 
-    val snapshot = (snapshotId, ref, asOfTimestampMs) match {
-      case (Some(id), _, _) => metadata.snapshotById(id).getOrElse(
-        throw new IllegalArgumentException(s"snapshot $id not found"))
-      case (_, Some(r), _) => metadata.snapshotByName(r).getOrElse(
-        throw new IllegalArgumentException(s"ref '$r' not found"))
-      case (_, _, Some(ts)) => metadata.snapshotAsOfTime(ts).getOrElse(
-        throw new IllegalArgumentException(s"no snapshot as of $ts"))
-      case _ => metadata.currentSnapshot.getOrElse(return Nil)
-    }
+    val snapshot = metadata.pinnedSnapshot(snapshotId, ref, asOfTimestampMs)
+      .orElse(metadata.currentSnapshot).getOrElse(return Nil)
 
     // time-travel scans resolve the SNAPSHOT's schema version; current-table
     // scans use the CURRENT schema (the current snapshot may predate a

@@ -160,8 +160,8 @@ object AnnIndex {
     *
     * The codes relation is what a resident ANN server holds in memory —
     * slot-cached (keyed: ann07/ann09/ann15 serve different tables, and
-    * `toDF` bakes the planned file list into the plan so an evolved table
-    * state is a different key, never a stale hit). Without the slot every
+    * a `toDF` plan is keyed on the table state, so an evolved table state
+    * is a different key, never a stale hit). Without the slot every
     * pass re-read the index TABLE from parquet. */
   def topK(spark: SparkSession, codes: IcebergTable, codebook: DataFrame,
            corpus: DataFrame, queries: DataFrame, p: Params,

@@ -123,7 +123,7 @@ object IcebergOps {
     """SELECT c_mktsegment, COUNT(*) AS n FROM customer
        WHERE c_nationkey < 10 GROUP BY c_mktsegment ORDER BY c_mktsegment"""
 
-  /** Merge-on-read: positional deletes anti-joined at read time. */
+  /** Merge-on-read: positional deletes applied at read time. */
   def ice04MorDelete(s: SparkSession, d: String): DataFrame = {
     val table = cached("events_mor", d) { loc =>
       val t1 = TableWriter.create(Tables.events(s, d)
@@ -1223,12 +1223,13 @@ object IcebergOps {
       cat.registerTable(Seq("p", "events"), table.metadataPath)
       val remote = graft.spark.TableWriter.restTableOf(
         cat.loadTable(Seq("p", "events")), cat)
-      // planning is EAGER in toDF, so it happens while the server is live;
-      // execution later reads the (local) parquet directly
+      // plan now, while the server is live (toDF plans lazily); execution
+      // later reads the (local) parquet directly
       val df = remote.newScan(filter).toDF(s)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_v"))
         .orderBy("day")
+      df.queryExecution.executedPlan
       require(server.planRequests > 0,
         "ice33: the scan silently fell back to local planning")
       require(remote.newScan(filter).planFiles().map(_.file.path).sorted ==

@@ -20,11 +20,8 @@ final class CacheSlot {
       // so handing a cached one to a sibling session would silently switch
       // the caller's session (and its conf) mid-plan
       case Some(c) if (c.sparkSession eq df.sparkSession) && c.sameSemantics(df) =>
-        if (CacheSlot.debug) System.err.println(s"[slot ${hashCode()}] hit")
         c
       case prev =>
-        if (CacheSlot.debug)
-          System.err.println(s"[slot ${hashCode()}] MISS (had=${prev.isDefined})")
         prev.foreach(_.unpersist())
         val p = df.persist()
         cur = Some(p)
@@ -58,12 +55,14 @@ final class CacheSlot {
   * removed the corpus-stream slots for exactly that reason.
   *
   * Freshness precondition (r19, ADVICE): a slotted input must bake its
-  * identity into the PLAN — e.g. `IcebergTable.newScan().toDF` embeds the
-  * planned FILE LIST, so an evolved table state is a different key and a
-  * stale hit is impossible. A directory-rooted read (`spark.read.parquet`
-  * on a mutating path) would NOT be (InMemoryFileIndex equality is
-  * rootPaths-based) — do not slot one. Pinned by Bm25IndexSpec's and
-  * AnnIndexSpec's serve→sync→serve tests. */
+  * identity into the PLAN — e.g. `IcebergTable.newScan().toDF` is a
+  * relation over a `GraftSparkTable` whose equality is the table STATE
+  * (table UUID + metadata file, pinned snapshot, read mode), so an evolved
+  * table, or one dropped and recreated at the same location, is a
+  * different key and a stale hit is impossible. A directory-rooted read
+  * (`spark.read.parquet` on a mutating path) would NOT be
+  * (InMemoryFileIndex equality is rootPaths-based) — do not slot one.
+  * Pinned by Bm25IndexSpec's and AnnIndexSpec's serve→sync→serve tests. */
 final class CacheSlots(capacity: Int) {
   private val slots =
     scala.collection.mutable.ArrayDeque.empty[org.apache.spark.sql.DataFrame]
@@ -77,14 +76,10 @@ final class CacheSlots(capacity: Int) {
         (c.sparkSession eq df.sparkSession) && c.sameSemantics(df)
       } match {
         case Some((c, i)) =>
-          if (CacheSlot.debug)
-            System.err.println(s"[slots ${hashCode()}] hit (${slots.size} resident)")
           slots.remove(i) // LRU: re-append so stable hot entries survive churn
           slots.append(c)
           c
         case None =>
-          if (CacheSlot.debug)
-            System.err.println(s"[slots ${hashCode()}] MISS (${slots.size} resident)")
           if (slots.size >= capacity) slots.removeHead().unpersist()
           val p = df.persist()
           slots.append(p)
@@ -94,10 +89,6 @@ final class CacheSlots(capacity: Int) {
 }
 
 object CacheSlot {
-  /** Diagnostic: `SPARK_GRAFT_CACHE_DEBUG=1` logs each slot hit/miss to
-    * stderr (a slot that misses on every battery pass re-materializes its
-    * persist each time — worse than no cache at all). */
-  private[queries] val debug = sys.env.contains("SPARK_GRAFT_CACHE_DEBUG")
   private val slots = new java.util.concurrent.ConcurrentLinkedQueue[CacheSlot]()
   private def register(s: CacheSlot): Unit = slots.add(s)
 

@@ -43,7 +43,7 @@ private[spark] object DefaultValues {
   /** Is this top-level field missing from the data file? Parquet files with
     * field ids answer by id; everything else by the field's name candidates
     * (current name first, then historical names the id has had). */
-  def absentFromFile(f: StructField, format: String, path: String): Boolean =
+  private def absentFromFile(f: StructField, format: String, path: String): Boolean =
     format.toUpperCase match {
       case "PARQUET" =>
         val footer = GraftReaders.footerInfo(path)

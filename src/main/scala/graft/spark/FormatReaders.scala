@@ -70,75 +70,6 @@ private[spark] object FormatReaders {
     if (size <= maxSplit) return Seq((0L, size))
     (0L until size by maxSplit).map(s => (s, math.min(maxSplit, size - s)))
   }
-
-  /** Library-scan DataFrame over non-parquet files: one RDD partition per
-    * byte-range split (stripe/sync-block granularity at read time),
-    * decoded executor-side through the row readers — with optional
-    * `__path`/`__pos` provenance (the readers synthesize the
-    * FILE-ABSOLUTE row position from stripe/block metadata, so MoR
-    * positional deletes apply to ORC/Avro files exactly as to parquet). */
-  def nonParquetDF(spark: org.apache.spark.sql.SparkSession, format: String,
-                   files: Seq[(String, Long)], schema: StructType,
-                   withProvenance: Boolean): org.apache.spark.sql.DataFrame = {
-    val readSchema =
-      if (withProvenance)
-        schema.add(StructField(GraftReaders.RowIndexCol, LongType, nullable = true))
-      else schema
-    val outSchema =
-      if (withProvenance)
-        StructType(schema.fields :+ StructField("__path", StringType) :+
-          StructField("__pos", LongType))
-      else schema
-    val n = schema.length
-    val fmt = format
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val splits = files.flatMap { case (path, size) =>
-      byteRanges(size, maxSplit).map { case (s, l) => (path, s, l) }
-    }
-    val rdd = spark.sparkContext
-      .parallelize(splits.toIndexedSeq, math.max(1, splits.size))
-      .mapPartitions { it =>
-        it.flatMap { case (path, start, len) =>
-          val normed = UTF8String.fromString(
-            path.replaceFirst("^file:(//)?", ""))
-          val reader = rowReader(fmt, path, readSchema, start, len)
-          // a task that stops consuming early (limit, failure) must not
-          // leak the open stream — close on task completion, like Spark's
-          // own file readers
-          var closed = false
-          def closeOnce(): Unit = if (!closed) { closed = true; reader.close() }
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-          new Iterator[InternalRow] {
-            private var advanced = false
-            private var has = false
-            override def hasNext: Boolean = {
-              if (!advanced) {
-                has = reader.nextKeyValue()
-                if (!has) closeOnce()
-                advanced = true
-              }
-              has
-            }
-            override def next(): InternalRow = {
-              if (!hasNext) throw new NoSuchElementException
-              advanced = false
-              val r = reader.getCurrentValue
-              if (!withProvenance) r
-              else {
-                val values = new Array[Any](n + 2)
-                var i = 0
-                while (i < n) { values(i) = r.get(i, schema(i).dataType); i += 1 }
-                values(n) = normed
-                values(n + 1) = r.getLong(n) // reader-synthesized row index
-                new GenericInternalRow(values)
-              }
-            }
-          }
-        }
-      }
-    org.apache.spark.sql.graft.ColumnShim.internalDF(spark, rdd, outSchema)
-  }
 }
 
 /** Avro OCF decode via the avro-core reader (no spark-avro needed),

@@ -96,19 +96,40 @@ object GraftSparkTable {
 }
 
 /** `pinnedSnapshotId` is set by the catalog's time-travel hooks
-  * (`VERSION AS OF` / `TIMESTAMP AS OF`): the scan is pinned to that
-  * snapshot and the table reports the SNAPSHOT's schema, so old reads
-  * resolve the schema they were written under. SQL writes — DML, WAP
-  * staging, mergeSchema evolution, V3 DV deltas — re-load through the
-  * handle's [[TableOperations]] and commit through them, so a
+  * (`VERSION AS OF` / `TIMESTAMP AS OF`) and by time-traveling
+  * `TableScan.toDF`: the scan is pinned to that snapshot and the table
+  * reports the SNAPSHOT's schema, so old reads resolve the schema they
+  * were written under. `wapReads` lets un-pinned scans follow
+  * `spark.wap.branch` (audit reads of a table resolved by name); a handle
+  * read (`TableScan.toDF`) always reads the handle's own state. SQL writes
+  * — DML, WAP staging, mergeSchema evolution, V3 DV deltas — re-load
+  * through the handle's [[TableOperations]] and commit through them, so a
   * REST-cataloged table commits THROUGH its server. */
 final class GraftSparkTable(table: IcebergTable,
                             pinnedSnapshotId: Option[Long] = None,
-                            readChanges: Boolean = false) extends Table
+                            readChanges: Boolean = false,
+                            wapReads: Boolean = true) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+
+  /** Read-state identity: relations over the same table state read the
+    * same rows, so plans over them are `sameResult` — the key
+    * [[graft.queries.CacheSlots]] and Spark's cache manager match on. A
+    * committed state is its metadata file under the table's UUID (a table
+    * dropped and recreated at the same location rewrites
+    * `v1.metadata.json` under a new UUID); a handle without a metadata
+    * file keys on the metadata itself. */
+  private def stateKey: (String, Any, Option[Long], Boolean, Boolean) =
+    (table.metadata.tableUuid,
+      if (table.metadataPath.nonEmpty) table.metadataPath else table.metadata,
+      pinnedSnapshotId, readChanges, wapReads)
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftSparkTable => stateKey == t.stateKey
+    case _ => false
+  }
+  override def hashCode(): Int = stateKey.hashCode()
 
   /** SQL UPDATE / MERGE / non-pushable DELETE: copy-on-write rewrite of
     * only the affected files by default (see [[GraftRowLevelOperation]]);
@@ -344,7 +365,7 @@ final class GraftSparkTable(table: IcebergTable,
     new GraftScanBuilder(table, schema(), options, pinnedSnapshotId,
       // streaming reads poll the table's catalog of record for fresh
       // metadata (a REST table's local listing may lag or not exist)
-      streamReload = Some(() => table.ops.current()))
+      streamReload = Some(() => table.ops.current()), wapReads = wapReads)
 
   /** Write path: the V1Write bridge hands us the source DataFrame intact, so
     * INSERT INTO / df.writeTo(...).append() reuse the same distributed
@@ -454,7 +475,8 @@ final class GraftSparkTable(table: IcebergTable,
 final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
                              options: CaseInsensitiveStringMap,
                              pinnedSnapshotId: Option[Long] = None,
-                             streamReload: Option[() => IcebergTable] = None)
+                             streamReload: Option[() => IcebergTable] = None,
+                             wapReads: Boolean = true)
     extends ScanBuilder with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates
@@ -462,6 +484,11 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
 
   private var pushed: Array[
     org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
+  // static `_file = ...` / `_file IN (...)` conjuncts and the file set they
+  // pin: exact (every row of a kept file satisfies them), so not residuals
+  private var pathPushed: Array[
+    org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
+  private var filePaths: Option[Set[String]] = None
   private var required: StructType = fullSchema
   private var limit: Option[Int] = None
   private var topN: Option[(Seq[(String, Boolean, Boolean)], Int)] = None
@@ -523,16 +550,32 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
     // a geo column converts fine but Expr.bind rejects it at scan planning,
     // failing a query that evaluates correctly as a residual) — so a
     // predicate only prunes if it also BINDS against the table schema
-    pushed = predicates.filter(p => FilterConv.fromV2Predicate(p).exists(e =>
+    val (onFile, rest) = predicates.partition(p => pathsOf(p).isDefined)
+    pathPushed = onFile
+    filePaths = onFile.flatMap(pathsOf).reduceOption(_ intersect _)
+    pushed = rest.filter(p => FilterConv.fromV2Predicate(p).exists(e =>
       try {
         graft.core.Expr.bind(table.schema, graft.core.Expr.rewriteNot(e))
         true
       } catch { case scala.util.control.NonFatal(_) => false }))
-    predicates
+    rest
   }
   override def pushedPredicates()
       : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    pushed
+    pushed ++ pathPushed
+
+  /** The file set a `_file = 'p'` / `_file IN ('p', ...)` predicate on the
+    * metadata column selects (a data column named `_file` shadows it). */
+  private def pathsOf(
+      p: org.apache.spark.sql.connector.expressions.filter.Predicate)
+      : Option[Set[String]] =
+    if (fullSchema.fieldNames.contains(GraftReaders.FileCol)) None
+    else FilterConv.fromV2Predicate(p).collect {
+      case graft.core.UnboundPredicate(graft.core.OpEq | graft.core.OpIn,
+          GraftReaders.FileCol, lits)
+          if lits.forall(_.isInstanceOf[graft.core.StrLit]) =>
+        lits.collect { case graft.core.StrLit(v) => v }.toSet
+    }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -588,7 +631,7 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
       // commit yet → main, matching Iceberg); any explicit pin
       // (VERSION/TIMESTAMP AS OF, .option) wins, so `VERSION AS OF 'main'`
       // still reads the published state during an audit
-      case (None, None, None) =>
+      case (None, None, None) if wapReads =>
         (None,
           GraftSparkTable.wapBranch.filter(table.metadata.refs.contains),
           None)
@@ -600,7 +643,8 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Array[Array[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate._
-    if (pushed.nonEmpty || limit.nonEmpty || topN.nonEmpty) return None
+    if (pushed.nonEmpty || filePaths.nonEmpty || limit.nonEmpty || topN.nonEmpty)
+      return None
     // incremental reads answer from the appended-file window, not the
     // snapshot's full stats
     if (options.get("start-snapshot-id") != null) return None
@@ -861,7 +905,8 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
         options.getBoolean("read-changes", false),
         bbox = bboxRow,
         requestedTopN = topN,
-        streamReload = streamReload)
+        streamReload = streamReload,
+        filePaths = filePaths)
   }
 }
 
@@ -922,7 +967,9 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
                       // fresh-metadata loader for streaming reads when the
                       // table's catalog of record is not the filesystem
                       // (REST): each micro-batch poll follows the server
-                      streamReload: Option[() => IcebergTable] = None)
+                      streamReload: Option[() => IcebergTable] = None,
+                      // the data files a static `_file` predicate keeps
+                      filePaths: Option[Set[String]] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1021,9 +1068,10 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     * them into the scan filter and re-plan the file set before any task
     * launches. Metadata-only — no data read to prune. Filters on the
     * `_file` metadata column restrict the file set directly (the group
-    * filter of copy-on-write row-level operations). */
+    * filter of copy-on-write row-level operations), intersected with any
+    * static `_file` predicate's set. */
   private var runtimeFilter: BooleanExpression = AlwaysTrue
-  private var filePathFilter: Option[Set[String]] = None
+  private var filePathFilter: Option[Set[String]] = filePaths
 
   override def filterAttributes(): Array[NamedReference] = {
     val partCols = table.spec.fields.flatMap { pf =>
@@ -1052,7 +1100,7 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     }.reduceOption(_ intersect _)
     val converted = rest.flatMap(FilterConv.fromSparkFilter)
     if (paths.isDefined || converted.nonEmpty) {
-      paths.foreach(p => filePathFilter = Some(p))
+      paths.foreach(p => filePathFilter = Some(filePathFilter.fold(p)(_ intersect p)))
       if (converted.nonEmpty) runtimeFilter = converted.reduce(CoreAnd(_, _))
       plannedTasks = null // re-plan with the tighter filter
     }
@@ -1737,11 +1785,10 @@ final class GraftRowReader(p: GraftInputPartition)
   private val readSchema = DataType.fromJson(p.readJson).asInstanceOf[StructType]
   private val required = DataType.fromJson(p.requiredJson).asInstanceOf[StructType]
   private val reader: RowFileReader = p.format.toUpperCase match {
-    case "AVRO" => new AvroRowFileReader(p.path, readSchema, p.start, p.length)
-    case "ORC" => new OrcRowFileReader(p.path, readSchema, p.start, p.length)
-    case _ => new ParquetRowFileReader(
+    case "PARQUET" => new ParquetRowFileReader(
       GraftReaders.createVectorized(p.path, p.start, p.length, readSchema,
         p.rowGroupFilter, p.rowGroupFilterCols))
+    case fmt => FormatReaders.rowReader(fmt, p.path, readSchema, p.start, p.length)
   }
 
   // V3 column defaults: ordinal → constant for columns ABSENT from this

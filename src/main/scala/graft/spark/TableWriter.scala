@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, expr => sexpr, to_date, udf, year => syear}
+import org.apache.spark.sql.functions.{col, expr => sexpr, regexp_replace, to_date, udf, year => syear}
 
 import graft.catalog.{AddPartitionSpec, AddSchema, AddSnapshot, AddSortOrder, AssertCurrentSchemaId, AssertRefSnapshotId, AssertTableUuid, RemoveProperties, RemoveSnapshotRef, RemoveSnapshots, SetCurrentSchema, SetDefaultSortOrder, SetDefaultSpec, SetPartitionStatistics, SetProperties, SetSnapshotRef, SetStatistics, TableRequirement, TableUpdate, UpgradeFormatVersion}
 import graft.core._
@@ -177,13 +177,9 @@ object TableWriter {
     // DV-bearing files — writing one would silently drop the delete)
     if (table.metadata.formatVersion >= 3)
       return deleteWhereDv(table, spark, predicate)
-    // compute tombstones with one distributed scan over current data;
-    // provenance comes from the scan itself (the `_metadata` pseudo-column
-    // would not resolve above MoR anti-joins when deletes already exist)
+    // compute tombstones with one distributed scan over current data
     val delDir = new File(table.location, s"data/deletes-${System.nanoTime()}")
-    table.newScan().toDF(spark, keepProvenance = true)
-      .filter(predicate)
-      .select(col("__path").as("file_path"), col("__pos").as("pos"))
+    deadRows(table.newScan(), spark, predicate)
       .orderBy("file_path", "pos")
       .write.parquet(delDir.getPath)
     publish(table, stageDeltaSnapshot(table, Nil, listParquet(delDir).map(_.getPath)))
@@ -191,6 +187,15 @@ object TableWriter {
 
   /** Path as tombstone coordinates store it: no `file:`/`file://` scheme. */
   private def normFsPath(p: String): String = p.replaceFirst("^file:(//)?", "")
+
+  /** The (file_path, pos) tombstone coordinates of the rows of `scan`
+    * matching `predicate`: the scan's `_file`/`_pos` metadata columns,
+    * the path in its scheme-less tombstone form. */
+  private def deadRows(scan: TableScan, spark: org.apache.spark.sql.SparkSession,
+                       predicate: Column): DataFrame =
+    scan.toDF(spark).filter(predicate)
+      .select(regexp_replace(col(GraftReaders.FileCol), "^file:(//)?", "").as("file_path"),
+        col(GraftReaders.PosCol).as("pos"))
 
   /** V3 deletion-vector MoR delete: rows matching `predicate` become
     * roaring-bitmap DELETION VECTORS in Puffin files — one blob per
@@ -207,16 +212,12 @@ object TableWriter {
     * DV-less file, its positional-parquet tombstones. */
   def deleteWhereDv(table: IcebergTable, spark: org.apache.spark.sql.SparkSession,
                     predicate: Column): IcebergTable = {
-    import org.apache.spark.sql.functions.regexp_replace
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
     val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
 
     val scan = table.newScan()
-    val newDead = scan.toDF(spark, keepProvenance = true)
-      .filter(predicate)
-      .select(regexp_replace(col("__path"), "^file:(//)?", "").as("file_path"),
-        col("__pos").as("pos"))
+    val newDead = deadRows(scan, spark, predicate)
     val (dead, priorDvs) = foldPriorDeletes(spark, newDead, scan.planFiles())
     val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
     commitDvSnapshot(table, stageDvSnapshot(table, Nil, dvFiles, _ => false,
@@ -235,7 +236,6 @@ object TableWriter {
   private def foldPriorDeletes(spark: org.apache.spark.sql.SparkSession,
                                newDead: DataFrame, tasks: Seq[FileScanTask])
       : (DataFrame, Map[String, Seq[(String, Long, Long)]]) = {
-    import org.apache.spark.sql.functions.regexp_replace
     val priorDvs: Map[String, Seq[(String, Long, Long)]] = tasks.map { t =>
       normFsPath(t.file.path) -> t.deleteFiles.filter(_.isDeletionVector)
         .map(d => (normFsPath(d.path), d.contentOffset.get,
@@ -539,7 +539,6 @@ object TableWriter {
   private def commitDeltaDv(table: IcebergTable,
                             added: Seq[graft.spark.CowFileOut],
                             posDeleteFiles: Seq[String]): IcebergTable = {
-    import org.apache.spark.sql.functions.regexp_replace
     val spark = org.apache.spark.sql.SparkSession.active
     val seq = table.metadata.lastSequenceNumber + 1
     val snapId = System.nanoTime()
@@ -617,7 +616,6 @@ object TableWriter {
                             posPaths: Seq[String],
                             delDir: File, snapId: Long, seq: Long)
       : Seq[DataFileInfo] = {
-    import org.apache.spark.sql.functions.regexp_replace
     val dvByFile = tasks.filter(_.deleteFiles.exists(_.isDeletionVector))
       .map(t => normFsPath(t.file.path)).toSet
     val liveNoDv = tasks.map(t => normFsPath(t.file.path))
@@ -681,9 +679,9 @@ object TableWriter {
     * appended. Only the MATCHING rows are ever rewritten; untouched data
     * files are untouched. (Two commits: delete, then append.)
     *
-    * The updated projection is planned against the PRE-delete snapshot
-    * (planFiles resolves eagerly), so the lazily-executed append still
-    * reads the original rows after the tombstones commit. */
+    * The updated projection reads the PRE-delete snapshot (the frame is
+    * pinned to `table`'s immutable metadata), so the lazily-executed
+    * append still reads the original rows after the tombstones commit. */
   def updateWhere(table: IcebergTable, spark: org.apache.spark.sql.SparkSession,
                   predicate: Column,
                   assignments: Map[String, Column]): IcebergTable = {
@@ -1081,11 +1079,13 @@ object TableWriter {
           else Set.empty[String]))
       }
     scoped.foreach { case (paths, _) => if (paths.isEmpty) return table }
-    var df =
-      if (materializeLineage || scoped.isDefined)
-        table.newScan().toDF(spark, keepProvenance = false,
-          pathFilter = scoped.map(_._1), keepLineage = materializeLineage)
-      else table.newScan().toDF(spark)
+    var df = table.newScan().toDF(spark)
+    scoped.foreach { case (paths, _) =>
+      df = df.filter(col(GraftReaders.FileCol).isin(paths.toSeq: _*))
+    }
+    if (materializeLineage)
+      df = df.select(col("*"), col(GraftReaders.RowIdCol),
+        col(GraftReaders.LastUpdatedSeqCol))
     val order = sortOrderFor(table.schema, sortBy)
     if (zOrderBy.nonEmpty) {
       // z-ordered rewrite: range-cluster on the interleaved-bits curve

@@ -26,15 +26,4 @@ object ColumnShim {
   def v2Literal(v: Any, dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.connector.expressions.Literal[Any] =
     org.apache.spark.sql.connector.expressions.LiteralValue(v, dt)
-
-  /** `internalCreateDataFrame` is `private[sql]`: a DataFrame straight
-    * over an RDD[InternalRow] (the non-parquet file readers produce
-    * catalyst rows executor-side). */
-  def internalDF(spark: org.apache.spark.sql.SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[
-                   org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 }

@@ -134,6 +134,19 @@ object Changelog {
         .withColumn("_commit_snapshot_id", lit(s.snapshotId))
         .withColumn("_commit_sequence", lit(s.sequenceNumber))
     val project = (df: DataFrame) => df.select(outCols.map(col).toIndexedSeq: _*)
+    // rows live at `snapshotId`, as output columns (+ the scheme-less file
+    // path and row position, the coordinates tombstones name)
+    def rowsAt(snapshotId: Option[Long]): DataFrame =
+      project(table.newScan(snapshotId = snapshotId).toDF(spark))
+    def rowsWithPosAt(snapshotId: Option[Long]): DataFrame =
+      table.newScan(snapshotId = snapshotId).toDF(spark)
+        .select(outCols.map(col).toIndexedSeq ++ Seq(
+          norm(col(graft.spark.GraftReaders.FileCol)).as("__path"),
+          col(graft.spark.GraftReaders.PosCol).as("__pos")): _*)
+    // rows of just `paths` (scan pruned to those files)
+    def fileRowsAt(snapshotId: Option[Long], paths: Set[String]): DataFrame =
+      project(table.newScan(snapshotId = snapshotId).toDF(spark)
+        .filter(col(graft.spark.GraftReaders.FileCol).isin(paths.toSeq: _*)))
 
     val pieces = changedFilesInWindow(table, fromSeq, toSeq,
       stopAtRetained = fromSnapshotId.isEmpty).flatMap { c =>
@@ -141,22 +154,16 @@ object Changelog {
       val ins = Seq.newBuilder[DataFrame]
       val del = Seq.newBuilder[DataFrame]
       if (c.addedPaths.nonEmpty)
-        ins += project(table.newScan(snapshotId = Some(s.snapshotId))
-          .toDF(spark, keepProvenance = false, pathFilter = Some(c.addedPaths),
-            keepLineage = includeRowLineage))
+        ins += fileRowsAt(Some(s.snapshotId), c.addedPaths)
       val parent = s.parentSnapshotId
       if (c.removedPaths.nonEmpty) {
         // removed files read at the PARENT snapshot so tombstones that
         // already applied there don't resurface as deletes here
         require(parent.isDefined, "removed files in a parentless snapshot")
-        del += project(table.newScan(snapshotId = parent)
-          .toDF(spark, keepProvenance = false, pathFilter = Some(c.removedPaths),
-            keepLineage = includeRowLineage))
+        del += fileRowsAt(parent, c.removedPaths)
       }
       if (c.posDeletePaths.nonEmpty && parent.isDefined) {
-        val parentRows = table.newScan(snapshotId = parent)
-          .toDF(spark, keepProvenance = true, pathFilter = None,
-            keepLineage = includeRowLineage)
+        val parentRows = rowsWithPosAt(parent)
         val tombstones = spark.read.parquet(c.posDeletePaths: _*)
           .select(norm(col("file_path")).as("__del_path"),
             col("pos").as("__del_pos"))
@@ -182,9 +189,7 @@ object Changelog {
             bm.forEach(p => out += ((target, p)))
             out.result()
           }.toDF("__dv_path", "__dv_pos")
-        val parentRows = table.newScan(snapshotId = parent)
-          .toDF(spark, keepProvenance = true, pathFilter = None,
-            keepLineage = includeRowLineage)
+        val parentRows = rowsWithPosAt(parent)
         del += project(parentRows.join(tombstones,
           col("__path") === col("__dv_path") &&
             col("__pos") === col("__dv_pos"), "left_semi"))
@@ -196,10 +201,8 @@ object Changelog {
             s"equality ids $eqIds not resolvable in current schema")
           val keys = spark.read.parquet(files.map(_._2).distinct: _*)
             .select(keyCols.map(col).toIndexedSeq: _*).distinct()
-          val parentRows = table.newScan(snapshotId = parent)
-            .toDF(spark, keepProvenance = false, pathFilter = None,
-              keepLineage = includeRowLineage)
-          del += project(parentRows.join(broadcast(keys), keyCols, "left_semi"))
+          // a USING join leads with its keys: re-project to outCols order
+          del += project(rowsAt(parent).join(broadcast(keys), keyCols, "left_semi"))
         }
       }
       val insDF = ins.result().reduceOption(_.unionAll(_))

@@ -68,8 +68,7 @@ class CompactionLineageSpec extends AnyFunSuite {
     assert(lineageOf(loc) == before)
 
     // library scan path agrees
-    val lib = t.newScan().toDF(s, keepProvenance = false, pathFilter = None,
-        keepLineage = true)
+    val lib = t.newScan().toDF(s)
       .select("id", "_row_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lib == before.map { case (k, (r, _)) => (k, r) }.toSet)

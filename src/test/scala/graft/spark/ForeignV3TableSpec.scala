@@ -486,8 +486,7 @@ class ForeignV3TableSpec extends AnyFunSuite {
       (3L, "c", "basic", 102L, 1L)), rows)
 
     // core toDF path: same composition (defaults + DV + lineage)
-    val core = t.newScan().toDF(spark, keepProvenance = false,
-        pathFilter = None, keepLineage = true)
+    val core = t.newScan().toDF(spark)
       .select("id", "tier", "_row_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(core == Set((1L, "basic", 100L), (3L, "basic", 102L)), core)

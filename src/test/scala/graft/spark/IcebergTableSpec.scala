@@ -17,6 +17,10 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a generated-code compile failure fails the spec instead of falling
+      // back to interpreted evaluation
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -572,8 +572,8 @@ class RestSqlCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // the pin the SQL row-level path passes: basedOn = the scanned load
     val scanned = rc.loadTable(Seq("cas", "t"))
-    val paths = TableWriter.restTableOf(scanned).newScan()
-      .planFilesLocal().map(_.file.path).toSet
+    val paths = TableWriter.restTableOf(scanned).newScan(remotePlanningOk = false)
+      .planFiles().map(_.file.path).toSet
     // a concurrent writer lands between scan and commit
     appendRest(Seq("cas", "t"), loc, Seq((2L, "b")), "c2")
     intercept[graft.catalog.CommitConflictError] {

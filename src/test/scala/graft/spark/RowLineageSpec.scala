@@ -104,8 +104,7 @@ class RowLineageSpec extends AnyFunSuite {
     assert(rows == Set((1L, 0L, "insert"), (2L, 1L, "insert"),
       (3L, 2L, "insert"), (2L, 1L, "delete")), rows)
     // library read path serves the same columns
-    val live = t.newScan().toDF(s, keepProvenance = false, pathFilter = None,
-        keepLineage = true)
+    val live = t.newScan().toDF(s)
       .select("id", "_row_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(live == Set((1L, 0L), (3L, 2L)), live)
