@@ -124,14 +124,14 @@ object Main {
               s""""sequence":${c.snapshot.sequenceNumber},""" +
               s""""added_files":${c.addedPaths.size},""" +
               s""""removed_files":${c.removedPaths.size},""" +
-              s""""new_delete_files":${c.posDeletePaths.size + c.eqDeletes.size}}"""
+              s""""new_delete_files":${c.newDeletePaths.size}}"""
           }
           println(rows.mkString("[", ",", "]"))
         } else {
           println("sequence\tsnapshot_id\tadded\tremoved\tnew_delete_files")
           sets.foreach(c => println(s"${c.snapshot.sequenceNumber}\t" +
             s"${c.snapshot.snapshotId}\t${c.addedPaths.size}\t" +
-            s"${c.removedPaths.size}\t${c.posDeletePaths.size + c.eqDeletes.size}"))
+            s"${c.removedPaths.size}\t${c.newDeletePaths.size}"))
         }
       case _ => die(usage)
     }

@@ -173,7 +173,7 @@ object AnnIndex {
   // (codes scans, re-rank corpus projections, dequantized SQ vectors) —
   // the resident-index discipline of the session-built ANN entries
   // (Similarity.pqCodesSlot etc.), applied to the table-served paths
-  private val serveSlot = new CacheSlots(16)
+  private val serveSlot = new CacheSlot(16)
 
   /** Serve-time QUALITY telemetry: recall@k of the PQ index against a
     * sampled exact top-k. Drift stats say the codebook aged; recall says

@@ -25,14 +25,14 @@ object Dedup {
   private val simhashPairsSlot = new CacheSlot
   // keyed: the battery's d10 corpus and the spec's planted fixtures pass
   // through the same semanticDedup
-  private val semanticVSlot = new CacheSlots(2)
+  private val semanticVSlot = new CacheSlot(2)
   // keyed multi-slot: d01 (raw documents) and d08 (post-changefeed state)
   // verify through the same pairsFromKeyed — a single slot would miss on
   // every alternating battery call
-  private val minhashCandShinglesSlot = new CacheSlots(4)
+  private val minhashCandShinglesSlot = new CacheSlot(4)
   // (doc_id, shingle-hash) indexes: d05's 5-gram index, d07's corpus-side
   // 8-gram index and its benchmark probe set — three distinct plans
-  private val shingleSlot = new CacheSlots(4)
+  private val shingleSlot = new CacheSlot(4)
 
   /** Distinct word n-gram shingles of `text` (space-tokenized). */
   def wordShingles(text: Column, n: Int): Column = {

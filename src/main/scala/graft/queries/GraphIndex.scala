@@ -46,9 +46,9 @@ object GraphIndex {
 
   // serve-side resident state (see topK); keyed because the maintenance
   // specs serve successive table states through the same path
-  private val serveEnSlot = new CacheSlots(2)
-  private val serveGraphSlot = new CacheSlots(2)
-  private val serveCentsSlot = new CacheSlots(2)
+  private val serveEnSlot = new CacheSlot(2)
+  private val serveGraphSlot = new CacheSlot(2)
+  private val serveCentsSlot = new CacheSlot(2)
 
   private def en(corpus: DataFrame): DataFrame =
     GraphAnn.withNorm(Similarity.pqEmb(corpus))

@@ -158,7 +158,7 @@ object Multimodal {
   // same corpus through this one downstream — the (media_id, h) chunk
   // index is tiny and is each operator's entire derived state, so it
   // stays resident like the d01/d02 index frames
-  private val chunksSlot = new CacheSlots(4)
+  private val chunksSlot = new CacheSlot(4)
 
   private[queries] def sharedChunkStats(chunks0: DataFrame): DataFrame = {
     val chunks = chunksSlot(chunks0)

@@ -4,46 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** One-slot semantic-plan-keyed persist: returns a cached DataFrame for the
-  * given plan, reusing the previous persist while the plan is semantically
-  * unchanged (and built on the same session) and releasing it when either
-  * changes. Pipeline operators return lazy DataFrames, so callers can never
-  * scope an unpersist; this bounds executor storage to ONE resident set per
-  * slot across repeated battery/spec runs instead of leaking every run's
-  * cache. */
-final class CacheSlot {
-  CacheSlot.register(this)
-  private var cur: Option[DataFrame] = None
-  def apply(df: DataFrame): DataFrame = synchronized {
-    cur match {
-      // same-session only: a Dataset is bound to the session that built it,
-      // so handing a cached one to a sibling session would silently switch
-      // the caller's session (and its conf) mid-plan
-      case Some(c) if (c.sparkSession eq df.sparkSession) && c.sameSemantics(df) =>
-        c
-      case prev =>
-        prev.foreach(_.unpersist())
-        val p = df.persist()
-        cur = Some(p)
-        p
-    }
-  }
-  def release(): Unit = synchronized {
-    cur.foreach(_.unpersist())
-    cur = None
-  }
-}
-
-/** A small LRU of [[CacheSlot]]-style persists keyed by plan semantics —
-  * for call sites that serve SEVERAL distinct inputs round-robin (e.g. one
-  * scoring function serving two different index tables in the same battery
-  * pass): a single slot would MISS on every call and re-persist each time,
-  * strictly worse than no cache. Capacity-bounded; eviction unpersists;
-  * a HIT moves the entry to the tail (r19, ADVICE): under sustained
-  * incremental syncs each evolved snapshot inserts a new entry, and
-  * insertion-order FIFO would evict the most-reused stable entries
-  * (corpus projections, codebooks — filled first) while stale one-shot
-  * snapshot entries lingered holding executor storage.
+/** Semantic-plan-keyed persists: returns a cached DataFrame for the given
+  * plan, reusing a resident persist while the plan is semantically
+  * unchanged (and built on the same session). Pipeline operators return
+  * lazy DataFrames, so callers can never scope an unpersist; this bounds
+  * executor storage to `capacity` resident frames per slot across
+  * repeated battery/spec runs instead of leaking every run's cache.
+  * Capacity above 1 is for call sites that serve SEVERAL distinct inputs
+  * round-robin (e.g. one scoring function serving two different index
+  * tables in the same battery pass), where a single frame would MISS on
+  * every call and re-persist each time, strictly worse than no cache.
+  * Eviction unpersists; a HIT moves the entry to the tail (r19, ADVICE):
+  * under sustained incremental syncs each evolved snapshot inserts a new
+  * entry, and insertion-order FIFO would evict the most-reused stable
+  * entries (corpus projections, codebooks — filled first) while stale
+  * one-shot snapshot entries lingered holding executor storage.
   *
   * Storage discipline (r19, VERDICT item 7): a slot entry should hold
   * MODEL/METADATA-SIZED derived state — counts, codebooks, centroids,
@@ -63,29 +38,32 @@ final class CacheSlot {
   * (`spark.read.parquet` on a mutating path) would NOT be
   * (InMemoryFileIndex equality is rootPaths-based) — do not slot one.
   * Pinned by Bm25IndexSpec's and AnnIndexSpec's serve→sync→serve tests. */
-final class CacheSlots(capacity: Int) {
+final class CacheSlot(capacity: Int = 1) {
+  CacheSlot.register(this)
   private val slots =
-    scala.collection.mutable.ArrayDeque.empty[org.apache.spark.sql.DataFrame]
-  CacheSlot.onReleaseAll(() => synchronized {
+    scala.collection.mutable.ArrayDeque.empty[DataFrame]
+  def apply(df: DataFrame): DataFrame = synchronized {
+    // same-session only: a Dataset is bound to the session that built it,
+    // so handing a cached one to a sibling session would silently switch
+    // the caller's session (and its conf) mid-plan
+    slots.zipWithIndex.find { case (c, _) =>
+      (c.sparkSession eq df.sparkSession) && c.sameSemantics(df)
+    } match {
+      case Some((c, i)) =>
+        slots.remove(i) // LRU: re-append so stable hot entries survive churn
+        slots.append(c)
+        c
+      case None =>
+        if (slots.size >= capacity) slots.removeHead().unpersist()
+        val p = df.persist()
+        slots.append(p)
+        p
+    }
+  }
+  private def release(): Unit = synchronized {
     slots.foreach(_.unpersist())
     slots.clear()
-  })
-  def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    synchronized {
-      slots.zipWithIndex.find { case (c, _) =>
-        (c.sparkSession eq df.sparkSession) && c.sameSemantics(df)
-      } match {
-        case Some((c, i)) =>
-          slots.remove(i) // LRU: re-append so stable hot entries survive churn
-          slots.append(c)
-          c
-        case None =>
-          if (slots.size >= capacity) slots.removeHead().unpersist()
-          val p = df.persist()
-          slots.append(p)
-          p
-      }
-    }
+  }
 }
 
 object CacheSlot {

@@ -143,10 +143,10 @@ object Retrieval {
   // keyed multi-slots: t28 and t33 serve DIFFERENT postings tables through
   // this one function in the same battery pass — a single slot would miss
   // (and re-persist) on every alternating call
-  private val dlSlot = new CacheSlots(4)
-  private val tfSlot = new CacheSlots(4)
+  private val dlSlot = new CacheSlot(4)
+  private val tfSlot = new CacheSlot(4)
   // 1-row corpus stats per served corpus (t22 and ann12 share one entry)
-  private val statsSlot = new CacheSlots(4)
+  private val statsSlot = new CacheSlot(4)
 
   /** Shared scoring tail: `tfq` is (doc_id, w, dl, tf) already restricted
     * to query terms; `stats` is the 1-row (n_docs, sum_dl). Document

@@ -27,7 +27,7 @@ object Similarity {
   // multi-slot so a serve pass reuses the trained model instead of
   // re-running the sample TakeOrdered + training aggregations per pass.
   // The frames are derived corpus state exactly like the code slots below.
-  private val modelSlot = new CacheSlots(16)
+  private val modelSlot = new CacheSlot(16)
 
   // The OPQ rotation solve collects the bounded sample to the driver and
   // runs a breeze SVD — deterministic, so memoize per (sample plan,
@@ -1589,7 +1589,7 @@ object Similarity {
   // keyed multi-slot: ann04 (k=4) and d10 (k=10) assign the same corpus
   // through this one core — the assignment is each caller's entire
   // derived state (3 narrow columns), so it stays resident per (emb, k)
-  private val kmeansAssignSlot = new CacheSlots(4)
+  private val kmeansAssignSlot = new CacheSlot(4)
 
   private[queries] def oneStepKmeansAssign(emb: DataFrame, k: Int): DataFrame = {
     val c0 = emb.filter(col("vec_id") < k)

@@ -21,10 +21,10 @@ object TextOps {
   private val t18TriSlot = new CacheSlot
   // temperature-mixture inputs: t27's corpus (doc_id, source, n_tok) and
   // t32's surviving-candidates frame serve through one selection function
-  private val mixDocsSlot = new CacheSlots(4)
+  private val mixDocsSlot = new CacheSlot(4)
   // t19's sharded token-count frame (feeds the per-shard base offsets AND
   // the local running sums — 4 scan+regex replays per pass without it)
-  private val packShardSlot = new CacheSlots(2)
+  private val packShardSlot = new CacheSlot(2)
 
   /** Per-document structural stats: chars, tokens, punctuation ratio. */
   def t01TextStats(s: SparkSession, d: String): DataFrame =

@@ -359,9 +359,9 @@ object Training {
   // counts and t31's maintained-table counts serve through this one
   // scorer in the same battery pass. The corpus bigram STREAM is never
   // slotted — an O(corpus) resident traded away exchange reuse and lost
-  // at sf1 (r18's own soak), and is the frame class the CacheSlots
+  // at sf1 (r18's own soak), and is the frame class the CacheSlot
   // scaladoc forbids.
-  private val countsSlot = new CacheSlots(8)
+  private val countsSlot = new CacheSlot(8)
 
   private[queries] def lmScoreAgainst(counts0: DataFrame, pairs: DataFrame,
                                       topK: Int): DataFrame = {

@@ -15,14 +15,12 @@ import graft.core._
   * anyway to assemble FileScanTasks, so driver memory is unchanged; only
   * the decode CPU and manifest I/O move off the driver.
   *
-  * Activation: table property `plan.distributed.threshold` beats the
-  * session conf `spark.graft.plan.distributed-threshold` beats the default
-  * (1000). Planning without an active session (pure-core callers, tests of
-  * the metadata plane) always uses the driver path. */
+  * Activation: table property `plan.distributed.threshold`, default 1000.
+  * Planning without an active session (pure-core callers, tests of the
+  * metadata plane) always uses the driver path. */
 object DistributedPlanner {
 
   val ThresholdProp = "plan.distributed.threshold"
-  val ThresholdConf = "spark.graft.plan.distributed-threshold"
   val DefaultThreshold = 1000
 
   /** Diagnostic: distributed planning jobs run in this JVM (spec hook). */
@@ -39,13 +37,9 @@ object DistributedPlanner {
     val ioProps = table.effectiveIoProps
     (metadata, schema, rowFilter, caseSensitive, manifests) => {
       val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-      def intOf(src: String, v: String): Int = v.trim.toIntOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"$src must be an integer, got '$v'"))
-      val threshold = props.get(ThresholdProp)
-        .map(intOf(ThresholdProp, _))
-        .orElse(sparkOpt.flatMap(s =>
-          Option(s.conf.get(ThresholdConf, null)).map(intOf(ThresholdConf, _))))
+      val threshold = props.get(ThresholdProp).map(v =>
+        v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$ThresholdProp must be an integer, got '$v'")))
         .getOrElse(DefaultThreshold)
       if (sparkOpt.isEmpty || manifests.size < math.max(1, threshold)) None
       else {

@@ -46,7 +46,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   * surface matches the batch changelog's default (CoW carryover delete+
   * insert pairs cancelled per commit) instead of emitting spurious churn
   * for every merely-copied row. `.option("cdc-carryovers", "emit")` keeps
-  * the raw pair surface (also the behavior without these extensions).
+  * the raw pair surface (also the behavior without these extensions,
+  * and of a batch `read-changes` read; `Changelog.changelogDF` cancels
+  * batch carryovers itself).
   * The substitution preserves the relation's output exprIds, and a marker
   * option on the wrapped relation keeps the rule idempotent across
   * analyzer iterations. */

@@ -116,7 +116,7 @@ final class GraftSparkTable(table: IcebergTable,
 
   /** Read-state identity: relations over the same table state read the
     * same rows, so plans over them are `sameResult` — the key
-    * [[graft.queries.CacheSlots]] and Spark's cache manager match on. A
+    * [[graft.queries.CacheSlot]] and Spark's cache manager match on. A
     * committed state is its metadata file under the table's UUID (a table
     * dropped and recreated at the same location rewrites
     * `v1.metadata.json` under a new UUID); a handle without a metadata
@@ -365,7 +365,8 @@ final class GraftSparkTable(table: IcebergTable,
     new GraftScanBuilder(table, schema(), options, pinnedSnapshotId,
       // streaming reads poll the table's catalog of record for fresh
       // metadata (a REST table's local listing may lag or not exist)
-      streamReload = Some(() => table.ops.current()), wapReads = wapReads)
+      streamReload = Some(() => table.ops.current()), wapReads = wapReads,
+      readChanges = readChanges)
 
   /** Write path: the V1Write bridge hands us the source DataFrame intact, so
     * INSERT INTO / df.writeTo(...).append() reuse the same distributed
@@ -476,7 +477,10 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
                              options: CaseInsensitiveStringMap,
                              pinnedSnapshotId: Option[Long] = None,
                              streamReload: Option[() => IcebergTable] = None,
-                             wapReads: Boolean = true)
+                             wapReads: Boolean = true,
+                             // the table reads changes: its schema carries
+                             // the CDC columns (GraftSparkTable.readChanges)
+                             readChanges: Boolean = false)
     extends ScanBuilder with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownAggregates
@@ -493,6 +497,12 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
   private var limit: Option[Int] = None
   private var topN: Option[(Seq[(String, Boolean, Boolean)], Int)] = None
   private var aggResult: Option[(StructType, Array[Array[Any]])] = None
+  // a table resolved without `read-changes` has no CDC columns: reading
+  // its changes would return inserted and deleted rows unlabelled
+  require(readChanges || !options.getBoolean("read-changes", false),
+    "read-changes needs a table whose schema has the change columns: read " +
+      "it by path (format(\"icegopher\").option(\"read-changes\", true)" +
+      ".load(path)) or through graft.streaming.Changelog.changelogDF")
 
   /** PARTIAL top-N pushdown over SORTED tables: when the requested order
     * is a prefix of the table's identity sort order, each partition — a
@@ -565,11 +575,12 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
     pushed ++ pathPushed
 
   /** The file set a `_file = 'p'` / `_file IN ('p', ...)` predicate on the
-    * metadata column selects (a data column named `_file` shadows it). */
+    * metadata column selects (a data column named `_file` shadows it; a
+    * change read plans commits, not a file set, so it stays a residual). */
   private def pathsOf(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate)
       : Option[Set[String]] =
-    if (fullSchema.fieldNames.contains(GraftReaders.FileCol)) None
+    if (readChanges || fullSchema.fieldNames.contains(GraftReaders.FileCol)) None
     else FilterConv.fromV2Predicate(p).collect {
       case graft.core.UnboundPredicate(graft.core.OpEq | graft.core.OpIn,
           GraftReaders.FileCol, lits)
@@ -645,9 +656,9 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
     import org.apache.spark.sql.connector.expressions.aggregate._
     if (pushed.nonEmpty || filePaths.nonEmpty || limit.nonEmpty || topN.nonEmpty)
       return None
-    // incremental reads answer from the appended-file window, not the
+    // incremental and change reads answer from a commit window, not the
     // snapshot's full stats
-    if (options.get("start-snapshot-id") != null) return None
+    if (options.get("start-snapshot-id") != null || readChanges) return None
     // a bbox option is a row filter the manifest stats can't see — a
     // pushed COUNT would answer over ALL rows of surviving files
     if (options.get("bbox") != null) return None
@@ -896,13 +907,13 @@ final class GraftScanBuilder(table: IcebergTable, fullSchema: StructType,
       val expr = (pushed.flatMap(FilterConv.fromV2Predicate) ++ bboxExpr)
         .reduceOption(CoreAnd(_, _)).getOrElse(AlwaysTrue)
       val (snap, ref, asOf) = snapshotPins
-      val incremental = Option(options.get("start-snapshot-id")).map(s =>
-        (s.toLong, Option(options.get("end-snapshot-id")).map(_.toLong)))
+      val window = (Option(options.get("start-snapshot-id")).map(_.toLong),
+        Option(options.get("end-snapshot-id")).map(_.toLong))
       new GraftScan(table, expr, required, snap, ref, asOf, limit,
-        Option(options.get("stream-start")).getOrElse("earliest"), incremental,
+        Option(options.get("stream-start")).getOrElse("earliest"), window,
         Option(options.get("maxFilesPerTrigger")).map(_.toInt),
         Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-        options.getBoolean("read-changes", false),
+        readChanges,
         bbox = bboxRow,
         requestedTopN = topN,
         streamReload = streamReload,
@@ -948,7 +959,12 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
                       required: StructType, snapshotId: Option[Long],
                       branch: Option[String], asOf: Option[Long],
                       limit: Option[Int], streamStart: String = "earliest",
-                      incremental: Option[(Long, Option[Long])] = None,
+                      // `start-snapshot-id` / `end-snapshot-id`: a batch
+                      // read with a start covers the files appended in
+                      // (start, end]; a read-changes batch read the
+                      // row-level changes of that window, where no start
+                      // means everything retained
+                      window: (Option[Long], Option[Long]) = (None, None),
                       maxFilesPerTrigger: Option[Int] = None,
                       maxBytesPerTrigger: Option[Long] = None,
                       readChanges: Boolean = false,
@@ -974,6 +990,8 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
+  private def incremental: Option[Long] = window._1.filter(_ => !readChanges)
+
   /** Report the table's sort order as per-partition output ordering when
     * the scan provably delivers it: every scanned data file was written
     * under the CURRENT sort order (file.sort_order_id matches), so each
@@ -992,6 +1010,7 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     // the every-file-sorted forall is O(tasks) and need only run once;
     // `eq` invalidates after a runtime-filter re-plan, same discipline as
     // colStatsCache)
+    if (readChanges || incremental.isDefined) return Array.empty
     val t0 = tasks
     val cached = orderingCache
     if (cached != null && (cached._1 eq t0)) return cached._2
@@ -1007,7 +1026,6 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{
       Expressions, SortDirection => V2Dir, NullOrdering => V2Null}
-    if (readChanges || incremental.isDefined) return Array.empty
     val so = table.sortOrder
     if (so.isUnsorted || tasks.isEmpty) return Array.empty
     if (!tasks.forall(_.file.sortOrderId.contains(so.orderId)))
@@ -1036,7 +1054,7 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.expressions.Expressions
     val specFields = table.spec.fields
-    if (specFields.isEmpty)
+    if (specFields.isEmpty || readChanges)
       return new org.apache.spark.sql.connector.read.partitioning
         .UnknownPartitioning(0)
     val keys = specFields.map { pf =>
@@ -1114,7 +1132,8 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
         // batch form of the streaming changefeed (replace/overwrite
         // snapshots carry rows a reader at `start` already saw); no file
         // skipping here, Spark's residual filters keep row correctness
-        case Some((from, to)) =>
+        case Some(from) =>
+          val to = window._2
           // incremental batch reads may also plan through a plan-capable
           // REST catalog (the request's start/end-snapshot-id form); the
           // local changefeed walk is the universal fallback. Same gates as
@@ -1172,26 +1191,37 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
   }
 
   override def readSchema(): StructType = required
-  override def toBatch: Batch = {
-    if (readChanges) throw new UnsupportedOperationException(
-      "read-changes is a streaming option (readStream); for batch CDC use " +
-        "CALL create_changelog_view or Changelog.changelogDF")
-    this
-  }
+  override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new graft.streaming.GraftMicroBatchStream(table.location, required,
       streamStart, maxFilesPerTrigger, maxBytesPerTrigger, readChanges,
       reload = streamReload)
   override def description(): String =
-    s"icegopher ${table.location} [${tasks.size} files after pruning]"
+    if (readChanges) s"icegopher ${table.location} [changes $window]"
+    else s"icegopher ${table.location} [${tasks.size} files after pruning]"
+
+  /** A read-changes batch scan: the change partitions of its window,
+    * planned once. */
+  private lazy val changePartitions: Array[InputPartition] =
+    graft.streaming.Changelog.changePartitions(table, required,
+      graft.streaming.Changelog.changesBetween(table, window._1, window._2))
+      .toArray
 
   /** Planned-file stats (SupportsReportStatistics): lets Spark's CBO size
     * this relation from metadata — broadcast decisions without scanning.
     * Column NDVs come from preserved theta-sketch `statistics` (foreign
     * engines' sketches included), feeding join-cardinality estimation
-    * under `spark.sql.cbo.enabled`. */
-  override def estimateStatistics(): Statistics = new Statistics {
+    * under `spark.sql.cbo.enabled`. A read-changes scan reports only the
+    * bytes its change partitions read. */
+  override def estimateStatistics(): Statistics =
+    if (readChanges) new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(changePartitions
+          .map(_.asInstanceOf[GraftInputPartition].length).sum)
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+    } else new Statistics {
     /** Manifest recordCount ignores MoR deletes; when a partition-stats
       * registry exists FOR THE PINNED SNAPSHOT (ice23's
       * `compute_partition_stats`), subtract the planned partitions'
@@ -1306,23 +1336,11 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
   /** One InputPartition per row-group range: each file is split on its
     * stored `splitOffsets`, adjacent row groups coalesced up to
     * `spark.sql.files.maxPartitionBytes` — so a single large file fans out
-    * across the cluster instead of pinning one task. */
+    * across the cluster instead of pinning one task. A read-changes scan
+    * reads its window's change partitions instead. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // Spark's own split sizing: cap at files.maxPartitionBytes, but don't
-    // produce splits smaller than the open cost, and aim for one split per
-    // core when the scan is small (FilePartition.maxSplitBytes semantics)
-    val maxSplit = {
-      val (confMax, openCost) =
-        try {
-          val c = org.apache.spark.sql.internal.SQLConf.get
-          (c.filesMaxPartitionBytes, c.filesOpenCostInBytes)
-        } catch { case _: Exception => (128L * 1024 * 1024, 4L * 1024 * 1024) }
-      val parallelism =
-        try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-        catch { case _: Exception => 1 }
-      val totalBytes = tasks.map(t => t.file.fileSizeInBytes + openCost).sum
-      math.min(confMax, math.max(openCost, totalBytes / math.max(1, parallelism)))
-    }
+    if (readChanges) return changePartitions
+    val maxSplit = GraftScan.maxSplitBytes(tasks)
     // partial top-N: the per-partition reader cap applies ONLY when the
     // scan provably delivers the requested ordering (same gate as
     // outputOrdering — every file under the current sort order); on a
@@ -1362,79 +1380,135 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
     val rowGroupPredicate = ParquetRowGroupFilter.convert(rgExpr, table.schema)
     val rowGroupPredicateCols =
       ParquetRowGroupFilter.referencedTypes(rgExpr, table.schema)
-    tasks.flatMap { t =>
-      // V3 deletion vectors: the planner hands them through deleteFiles as
-      // PUFFIN entries carrying the blob coordinates; position-delete
-      // parquet files are the V2 path (never both for one file — the
-      // planner drops parquet matches when a DV exists, per the V3 spec)
-      val dvs = t.deleteFiles.filter(_.isDeletionVector)
-        .map(d => DvRef(d.path, d.contentOffset.get, d.contentSizeInBytes.get))
-      val pos = t.deleteFiles.filter(d =>
-          d.content == graft.core.DataFileContent.PositionDeletes &&
-            !d.isDeletionVector)
-        .map(_.path)
-      val eq = t.deleteFiles.filter(_.content == graft.core.DataFileContent.EqualityDeletes)
-        .map(d => EqDelete(d.path,
-          d.equalityIds.flatMap(id => table.schema.findColumnName(id)),
-          // every name each key field id has had, newest first: delete
-          // files written before a RENAME carry the old column name
-          d.equalityIds.map(id =>
-            (table.schema.findColumnName(id).toSeq ++
-              table.metadata.schemas.reverse.flatMap(s =>
-                s.findFieldById(id).map(_.name))).distinct)))
-      // historical names ride along so the per-file name fallback (id-less
-      // files) resolves renamed columns executor-side
-      val read = SchemaConv.withNameCandidates(
-        readerSchema(pos.nonEmpty || dvs.nonEmpty, eq), table.metadata.schemas,
-        SchemaConv.nameMappingOf(table.metadata.properties))
-      // partition tuple in spec-field order, catalyst-typed — the key for
-      // storage-partitioned join grouping
-      val partValues: Array[Any] = table.spec.fields.map { pf =>
-        t.file.partition.get(pf.name).orNull match {
-          case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-          case u: org.apache.avro.util.Utf8 =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(u.toString)
-          case other => other
-        }
-      }.toArray
-      // non-parquet files split on byte ranges: ORC owns the stripes and
-      // Avro the sync blocks whose first byte lands in the range, and the
-      // readers recover the FILE-ABSOLUTE row index from stripe/block
-      // metadata — so positional deletes keep applying across splits
-      val fmt = t.file.format.toUpperCase
-      val ranges =
-        if (fmt == "PARQUET")
-          splitRanges(t.file.splitOffsets, t.file.fileSizeInBytes, maxSplit)
-        else FormatReaders.byteRanges(t.file.fileSizeInBytes, maxSplit)
-      ranges.map {
-        case (start, len) =>
-          GraftInputPartition(t.file.path, start, len, required.json, read.json,
-            effLimit, pos, eq, columnar, partValues, fmt,
-            rowGroupPredicate, rowGroupPredicateCols,
-            dvDeletes = dvs,
-            firstRowId = t.file.firstRowId,
-            dataSeq = t.dataSequenceNumber,
-            bbox = bbox.map { case (c, xmin, ymin, xmax, ymax) =>
-              (c, xmin, ymin, xmax, ymax, table.schema.findFieldByName(c)
-                .exists(_.fieldType.isInstanceOf[graft.core.GeographyT]))
-            }): InputPartition
-      }
-    }.toArray
+    tasks.flatMap(t => GraftScan.taskPartitions(table, required, t, maxSplit,
+      effLimit, columnar, rowGroupPredicate, rowGroupPredicateCols, bbox))
+      .toArray
   }
 
-  /** What the parquet reader materializes: the projected columns, plus
-    * equality-delete key columns (needed for tombstone checks even when
-    * projected away), plus the row-index column Spark's vectorized reader
-    * fills with file row positions (needed to match positional deletes). */
-  private lazy val fullSpark = SchemaConv.toSparkSchema(table.schema)
+  override def createReaderFactory(): PartitionReaderFactory =
+    new GraftReaderFactory()
+}
 
-  private def readerSchema(needRowIndex: Boolean, eq: Seq[EqDelete]): StructType = {
-    // `_file`/`_pos` are synthesized by the reader, never read from parquet
-    // (`_pos` from the same row-index channel positional deletes use)
-    var s = StructType(required.fields.filterNot(f =>
-      f.name == GraftReaders.FileCol || f.name == GraftReaders.PosCol ||
-        f.name == GraftReaders.RowIdCol ||
-        f.name == GraftReaders.LastUpdatedSeqCol))
+object GraftScan {
+
+  /** Spark's own split sizing (FilePartition.maxSplitBytes): cap at
+    * files.maxPartitionBytes, but don't produce splits smaller than the
+    * open cost, and aim for one split per core when the read is small. */
+  private[graft] def maxSplitBytes(tasks: Seq[FileScanTask]): Long = {
+    val (confMax, openCost) =
+      try {
+        val c = org.apache.spark.sql.internal.SQLConf.get
+        (c.filesMaxPartitionBytes, c.filesOpenCostInBytes)
+      } catch { case _: Exception => (128L * 1024 * 1024, 4L * 1024 * 1024) }
+    val parallelism =
+      try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+      catch { case _: Exception => 1 }
+    val totalBytes = tasks.map(t => t.file.fileSizeInBytes + openCost).sum
+    math.min(confMax, math.max(openCost, totalBytes / math.max(1, parallelism)))
+  }
+
+  /** The input partitions that read one planned task — the one place a
+    * [[GraftInputPartition]] is built, for batch scans, streams and change
+    * reads alike. The task's delete files split into positional files,
+    * deletion vectors and equality keys (under every name each key field
+    * has had); the reader schema adds what those need plus the row index
+    * and lineage columns; historical names and the name mapping ride along
+    * for id-less files; each row-group (parquet) or byte (ORC/Avro) range
+    * is one partition. A change read stamps its rows with `cdc` (change
+    * type, commit snapshot id, commit sequence); when `cdcMatch` (a
+    * commit's NEW tombstones) is non-empty the reader emits only the rows
+    * they kill, while the task's own deletes still drop rows already dead. */
+  private[graft] def taskPartitions(table: IcebergTable, required: StructType,
+      task: FileScanTask, maxSplit: Long, limit: Option[Int] = None,
+      columnar: Boolean = false,
+      rowGroupFilter: Option[
+        org.apache.parquet.filter2.predicate.FilterPredicate] = None,
+      rowGroupFilterCols: Seq[(String, String)] = Nil,
+      bbox: Option[(String, Double, Double, Double, Double)] = None,
+      cdc: Option[(String, Long, Long)] = None,
+      cdcMatch: Seq[graft.core.DataFileInfo] = Nil): Seq[InputPartition] = {
+    val (pos, dvs, eq) = deletesOf(table, task.deleteFiles)
+    val (matchPos, matchDv, matchEq) = deletesOf(table, cdcMatch)
+    // historical names ride along so the per-file name fallback (id-less
+    // files) resolves renamed columns executor-side
+    val read = SchemaConv.withNameCandidates(
+      readerSchema(table, required, bbox,
+        Seq(pos, dvs, matchPos, matchDv).exists(_.nonEmpty), eq ++ matchEq),
+      table.metadata.schemas,
+      SchemaConv.nameMappingOf(table.metadata.properties))
+    // partition tuple in spec-field order, catalyst-typed — the key for
+    // storage-partitioned join grouping
+    val partValues: Array[Any] = table.spec.fields.map { pf =>
+      task.file.partition.get(pf.name).orNull match {
+        case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+        case u: org.apache.avro.util.Utf8 =>
+          org.apache.spark.unsafe.types.UTF8String.fromString(u.toString)
+        case other => other
+      }
+    }.toArray
+    // non-parquet files split on byte ranges: ORC owns the stripes and
+    // Avro the sync blocks whose first byte lands in the range, and the
+    // readers recover the FILE-ABSOLUTE row index from stripe/block
+    // metadata — so positional deletes keep applying across splits
+    val fmt = task.file.format.toUpperCase
+    val ranges =
+      if (fmt == "PARQUET")
+        splitRanges(task.file.splitOffsets, task.file.fileSizeInBytes, maxSplit)
+      else FormatReaders.byteRanges(task.file.fileSizeInBytes, maxSplit)
+    ranges.map { case (start, len) =>
+      GraftInputPartition(task.file.path, start, len, required.json, read.json,
+        limit, pos, eq, columnar, partValues, fmt,
+        rowGroupFilter, rowGroupFilterCols,
+        cdc = cdc, cdcMatchPos = matchPos, cdcMatchEq = matchEq,
+        dvDeletes = dvs, cdcMatchDv = matchDv,
+        firstRowId = task.file.firstRowId,
+        dataSeq = task.dataSequenceNumber,
+        bbox = bbox.map { case (c, xmin, ymin, xmax, ymax) =>
+          (c, xmin, ymin, xmax, ymax, table.schema.findFieldByName(c)
+            .exists(_.fieldType.isInstanceOf[graft.core.GeographyT]))
+        }): InputPartition
+    }
+  }
+
+  /** Delete files as the reader applies them: positional file paths, V3
+    * deletion vectors (the planner hands them through as PUFFIN entries
+    * carrying the blob coordinates, never alongside positional files for
+    * one data file), and equality deletes. */
+  private def deletesOf(table: IcebergTable, files: Seq[graft.core.DataFileInfo])
+      : (Seq[String], Seq[DvRef], Seq[EqDelete]) = {
+    val (dvs, pos) = files
+      .filter(_.content == graft.core.DataFileContent.PositionDeletes)
+      .partition(_.isDeletionVector)
+    val eq = files.filter(_.content == graft.core.DataFileContent.EqualityDeletes)
+      .map(d => EqDelete(d.path,
+        d.equalityIds.flatMap(id => table.schema.findColumnName(id)),
+        // every name each key field id has had, newest first: delete
+        // files written before a RENAME carry the old column name
+        d.equalityIds.map(id =>
+          (table.schema.findColumnName(id).toSeq ++
+            table.metadata.schemas.reverse.flatMap(s =>
+              s.findFieldById(id).map(_.name))).distinct)))
+    (pos.map(_.path),
+      dvs.map(d => DvRef(d.path, d.contentOffset.get, d.contentSizeInBytes.get)),
+      eq)
+  }
+
+  /** What the file reader materializes: the projected columns, plus
+    * equality-delete key and bbox columns (needed for row checks even
+    * when projected away), plus the row-index column Spark's vectorized
+    * reader fills with file row positions (needed to match positional
+    * deletes). */
+  private def readerSchema(table: IcebergTable, required: StructType,
+                           bbox: Option[(String, Double, Double, Double, Double)],
+                           needRowIndex: Boolean, eq: Seq[EqDelete]): StructType = {
+    // `_file`/`_pos` and the CDC stamp are synthesized by the reader, never
+    // read from the file (`_pos` from the same row-index channel
+    // positional deletes use)
+    val synthesized = Set(GraftReaders.FileCol, GraftReaders.PosCol,
+      GraftReaders.RowIdCol, GraftReaders.LastUpdatedSeqCol) ++
+      GraftReaders.CdcCols.map(_.name)
+    var s = StructType(required.fields.filterNot(f => synthesized(f.name)))
+    lazy val fullSpark = SchemaConv.toSparkSchema(table.schema)
     (eq.flatMap(_.cols) ++ bbox.map(_._1)).distinct
       .filterNot(c => s.fieldNames.contains(c)).foreach { c =>
         s = s.add(fullSpark(fullSpark.fieldIndex(c)).copy(nullable = true))
@@ -1449,11 +1523,9 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
       StructField(name, LongType, nullable = true,
         metadata = new org.apache.spark.sql.types.MetadataBuilder()
           .putLong(SchemaConv.FieldIdKey, id.toLong).build())
-    if (required.fieldNames.contains(GraftReaders.RowIdCol) &&
-        !s.fieldNames.contains(GraftReaders.RowIdCol))
+    if (required.fieldNames.contains(GraftReaders.RowIdCol))
       s = s.add(lineagePhys(GraftReaders.RowIdCol, GraftReaders.RowIdFieldId))
-    if (required.fieldNames.contains(GraftReaders.LastUpdatedSeqCol) &&
-        !s.fieldNames.contains(GraftReaders.LastUpdatedSeqCol))
+    if (required.fieldNames.contains(GraftReaders.LastUpdatedSeqCol))
       s = s.add(lineagePhys(GraftReaders.LastUpdatedSeqCol,
         GraftReaders.LastUpdatedSeqFieldId))
     if (needRowIndex || required.fieldNames.contains(GraftReaders.PosCol) ||
@@ -1484,9 +1556,6 @@ final class GraftScan(table: IcebergTable, filter: BooleanExpression,
       case r => r
     }
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory()
 }
 
 /** One equality-delete file: `cols` are the key columns under their CURRENT

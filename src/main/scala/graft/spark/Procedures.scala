@@ -273,11 +273,7 @@ object GraftProcedures {
         val spark = org.apache.spark.sql.SparkSession.active
         val df = graft.streaming.Changelog.changelogDF(spark, table, from, to)
         df.createOrReplaceTempView(view)
-        val commits = graft.streaming.Changelog.changedFilesInWindow(table,
-          from.flatMap(id => table.metadata.snapshotById(id))
-            .map(_.sequenceNumber).getOrElse(0L),
-          to.flatMap(id => table.metadata.snapshotById(id))
-            .orElse(table.currentSnapshot).map(_.sequenceNumber).getOrElse(0L)).size
+        val commits = graft.streaming.Changelog.changesBetween(table, from, to).size
         Array[Any](view, commits)
       }
       case "rewrite_zorder" => proc(name,

@@ -183,15 +183,17 @@ object EventStreams {
     appendedFilesInWindow(table, from.sequenceNumber, to.sequenceNumber)
   }
 
-  /** Incremental read as a DataFrame: the rows added after a snapshot. */
+  /** Incremental read as a DataFrame: the rows of the files appended
+    * after a snapshot, read through the icegopher scan's
+    * `start-snapshot-id` window (field ids, name mapping, defaults and
+    * every file format, as any table read). */
   def incrementalRead(table: IcebergTable, spark: SparkSession,
-                      fromSnapshotId: Long): DataFrame = {
-    val tasks = appendedFilesBetween(table, fromSnapshotId)
-    val schema = graft.spark.SchemaConv.toSparkSchema(table.schema)
-    if (tasks.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(tasks.map(_.file.path): _*)
-  }
+                      fromSnapshotId: Long): DataFrame =
+    org.apache.spark.sql.graft.ColumnShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.spark.GraftSparkTable(table, wapReads = false), None, None,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of("start-snapshot-id", fromSnapshotId.toString))))
 
   /** Executor-side helpers for [[cancelCarryovers]] — a standalone
     * serializable holder so the task closures don't capture
@@ -247,16 +249,16 @@ object EventStreams {
   /** Cancel copy-on-write carryover pairs in a CDC row stream: a CoW
     * rewrite surfaces every merely-copied row as a `delete` (old file) +
     * `insert` (new file) pair within the same commit; only the surplus on
-    * either side is a genuine change. This is the streaming equivalent of
-    * the batch changelog's per-commit `exceptAll` (Changelog.scala) —
-    * multiset semantics on full row content, scoped per commit.
+    * either side is a genuine change. [[Changelog.changelogDF]] applies
+    * the same cancel — multiset semantics on full row content, scoped per
+    * commit.
     *
     * Shape for 100 TB: one shuffle of the batch's CHANGED rows keyed by
     * md5(commit, row content) — pairs meet in the same task, groups are
     * O(duplicate count) tiny, and no state is retained across batches
     * (carryover pairs are always intra-commit, and a commit never spans
-    * micro-batches), so state-store size is zero. Works identically on the
-    * batch changelog DataFrame (Spark's unified API).
+    * micro-batches), so state-store size is zero. Works identically on
+    * batch DataFrames (Spark's unified API).
     *
     * Registered automatically on `.option("read-changes", true)` streams
     * by [[graft.spark.GraftSparkExtensions]]; pass

@@ -6,9 +6,8 @@ import org.apache.spark.sql.connector.read.streaming.{
   ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{FileScanTask, ManifestIO}
-import graft.spark.{DvRef, EqDelete, GraftInputPartition, GraftReaderFactory,
-  IcebergTable, IcebergTables, SchemaConv}
+import graft.core.ManifestIO
+import graft.spark.{GraftReaderFactory, GraftScan, IcebergTable, IcebergTables}
 
 /** Snapshot-sequence offset: a micro-batch covers the data files appended
   * in `(fromSeq, toSeq]`. `full` marks an INITIAL offset whose snapshot must
@@ -55,8 +54,9 @@ object GraftOffset {
   * against a large existing table plans the entire history into one
   * giant first batch.
   *
-  * Execution reuses the batch read path's vectorized row readers,
-  * including MoR delete matching for the initial full scan. */
+  * Execution reuses the batch read path's input partitions
+  * ([[GraftScan.taskPartitions]]) and row readers, including MoR delete
+  * matching for the initial full scan. */
 final class GraftMicroBatchStream(location: String, required: StructType,
                                   streamStart: String,
                                   maxFilesPerTrigger: Option[Int] = None,
@@ -198,196 +198,35 @@ final class GraftMicroBatchStream(location: String, required: StructType,
 
   override def deserializeOffset(json: String): Offset = GraftOffset.fromJson(json)
 
+  /** A batch covers the commits in `(start, end]`: their appended files,
+    * or with `read-changes` their row-level changes
+    * ([[Changelog.changePartitions]]), stamped with `_change_type` /
+    * `_commit_snapshot_id` / `_commit_sequence` — the streaming twin of
+    * [[Changelog.changelogDF]]. A `full` start offset first delivers its
+    * own snapshot as a complete MoR-correct scan (as inserts of that
+    * commit when reading changes). A copy-on-write rewrite surfaces copied
+    * rows as a delete+insert pair within the SAME batch;
+    * [[graft.spark.GraftSparkExtensions]] wraps read-changes streams with
+    * [[EventStreams.cancelCarryovers]] so the delivered stream matches the
+    * batch changelog's default, and `.option("cdc-carryovers", "emit")`
+    * (or running without the extensions) yields the raw pair surface.
+    * Exactly-once: offsets partition the sequence window. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftOffset]
     val toSeq = end.asInstanceOf[GraftOffset].seq
     val t = freshTable()
-    if (readChanges) return planCdcPartitions(t, s, toSeq)
-    // initial full scan (earliest over expired history): the offset's own
-    // snapshot as a complete MoR-correct scan, plus any appends that landed
-    // in (s.seq, toSeq] after it
-    val initialScan: Seq[InputPartition] =
-      if (!s.full) Nil
-      else fullScanPartitions(t, s.seq)
-    if (!s.full && toSeq <= s.seq) return Array.empty
-    val appended = EventStreams.appendedFilesInWindow(t, s.seq, toSeq)
-      .map(task => GraftInputPartition(task.file.path, 0L,
-        task.file.fileSizeInBytes,
-        required.json, required.json, limit = None): InputPartition)
-    (initialScan ++ appended).toArray
-  }
-
-  /** Streaming CDC (`.option("read-changes", true)`): each micro-batch
-    * carries the row-level changes of the commits in `(fromSeq, toSeq]`,
-    * stamped with `_change_type` / `_commit_snapshot_id` /
-    * `_commit_sequence` — the streaming twin of
-    * [[Changelog.changelogDF]], resolved through the same main-lineage
-    * walk and commit provenance, planned as input partitions so the rows
-    * decode executor-side:
-    *   - appended files → `insert` rows (the commit's deletes applied)
-    *   - removed files → `delete` rows, read at the PARENT snapshot so
-    *     rows already dead there are not re-reported
-    *   - new pos/eq tombstones → `delete` rows: the reader emits exactly
-    *     the rows the NEW tombstones kill (older tombstones still
-    *     filter), O(affected files) via the planner's delete matching
-    *   - REPLACE (compaction) commits are invisible, as in batch
-    *
-    * A copy-on-write rewrite surfaces copied rows as a delete+insert
-    * pair within the SAME batch (net-effect-correct). The partition
-    * planner itself cannot cancel those pairs (a per-commit row join),
-    * but [[graft.spark.GraftSparkExtensions]] wraps read-changes streams
-    * with [[EventStreams.cancelCarryovers]] so the delivered stream
-    * matches the batch changelog's default; `.option("cdc-carryovers",
-    * "emit")` (or running without the extensions) yields this raw pair
-    * surface. Exactly-once: offsets partition the sequence window. */
-  private def planCdcPartitions(t: IcebergTable, s: GraftOffset,
-                                toSeq: Long): Array[InputPartition] = {
-    val parts = Vector.newBuilder[InputPartition]
-    if (s.full) {
-      // earliest over expired history: the oldest retained snapshot is the
-      // initial load, delivered as inserts of that commit
-      val snap = t.metadata.snapshots.find(_.sequenceNumber == s.seq).getOrElse(
+    val initial = Option.when(s.full)(
+      t.metadata.snapshots.find(_.sequenceNumber == s.seq).getOrElse(
         throw new IllegalStateException(
-          s"initial-offset snapshot (sequence ${s.seq}) of $location was expired"))
-      parts ++= cdcPartitions(t, snap.snapshotId, snap, "insert", None, Set.empty)
-    }
-    Changelog.changedFilesInWindow(t, s.seq, toSeq).foreach { c =>
-      val snap = c.snapshot
-      if (c.addedPaths.nonEmpty)
-        parts ++= cdcPartitions(t, snap.snapshotId, snap, "insert",
-          Some(c.addedPaths), Set.empty)
-      val parent = snap.parentSnapshotId
-      if (c.removedPaths.nonEmpty && parent.isDefined)
-        parts ++= cdcPartitions(t, parent.get, snap, "delete",
-          Some(c.removedPaths), Set.empty)
-      val newDel = c.posDeletePaths.toSet ++ c.eqDeletes.map(_._2) ++
-        c.dvDeletes.map(_._2)
-      if (newDel.nonEmpty)
-        parts ++= cdcPartitions(t, snap.snapshotId, snap, "delete",
-          None, newDel)
-    }
-    parts.result().toArray
-  }
-
-  /** Plan CDC row partitions over the files of `snapshotId`, stamped with
-    * `commit`: optionally restricted to `pathFilter`; when `newDeletes`
-    * is non-empty, only tasks those tombstone files touch are planned and
-    * the reader emits only the rows they kill. */
-  private def cdcPartitions(t: IcebergTable, snapshotId: Long,
-                            commit: graft.core.Snapshot, tpe: String,
-                            pathFilter: Option[Set[String]],
-                            newDeletes: Set[String]): Seq[InputPartition] = {
-    val dataRequired = StructType(required.fields.filterNot(f =>
-      f.name == graft.spark.GraftReaders.ChangeTypeCol ||
-        f.name == graft.spark.GraftReaders.CommitSnapshotCol ||
-        f.name == graft.spark.GraftReaders.CommitSequenceCol))
-    val read = SchemaConv.withNameCandidates(dataRequired, t.metadata.schemas,
-      SchemaConv.nameMappingOf(t.metadata.properties))
-    // parent-snapshot tombstones, planned lazily ONCE per changed commit:
-    // needed when a NEW deletion vector merged prior tombstones (the V3
-    // rule) — the merged-in positions were dead BEFORE this commit and
-    // must be suppressed, not re-emitted as deletes
-    lazy val parentDeletes: Map[String, Seq[graft.core.DataFileInfo]] =
-      commit.parentSnapshotId.map { pid =>
-        t.newScan(snapshotId = Some(pid)).planFiles()
-          .map(pt => pt.file.path -> pt.deleteFiles).toMap
-      }.getOrElse(Map.empty)
-    t.newScan(snapshotId = Some(snapshotId)).planFiles()
-      .filter(task => pathFilter.forall(_.contains(task.file.path)))
-      .filter(task => newDeletes.isEmpty ||
-        task.deleteFiles.exists(d => newDeletes.contains(d.path)))
-      .map { task =>
-        def eqOf(files: Seq[graft.core.DataFileInfo]): Seq[EqDelete] =
-          files.map(d => EqDelete(d.path,
-            d.equalityIds.flatMap(id => t.schema.findColumnName(id)),
-            d.equalityIds.map(id =>
-              (t.schema.findColumnName(id).toSeq ++
-                t.metadata.schemas.reverse.flatMap(sc =>
-                  sc.findFieldById(id).map(_.name))).distinct)))
-        def dvOf(files: Seq[graft.core.DataFileInfo]): Seq[DvRef] =
-          files.map(d => DvRef(d.path, d.contentOffset.get,
-            d.contentSizeInBytes.get))
-        val (dvAll, posAll) = task.deleteFiles
-          .filter(_.content == graft.core.DataFileContent.PositionDeletes)
-          .partition(_.isDeletionVector)
-        val eqAll = task.deleteFiles
-          .filter(_.content == graft.core.DataFileContent.EqualityDeletes)
-        var pos = posAll.filterNot(d => newDeletes.contains(d.path)).map(_.path)
-        val matchPos = posAll.filter(d => newDeletes.contains(d.path)).map(_.path)
-        var dvs = dvOf(dvAll.filterNot(d => newDeletes.contains(d.path)))
-        val matchDv = dvOf(dvAll.filter(d => newDeletes.contains(d.path)))
-        if (matchDv.nonEmpty) {
-          // new DV for this file: restore the PARENT's tombstones as the
-          // already-dead filter (the current plan hides positional files
-          // once a DV exists, and the DV itself merged them)
-          val prior = parentDeletes.getOrElse(task.file.path, Nil)
-          pos = (pos ++ prior.filter(d =>
-            d.content == graft.core.DataFileContent.PositionDeletes &&
-              !d.isDeletionVector).map(_.path)).distinct
-          dvs = (dvs ++ dvOf(prior.filter(_.isDeletionVector))).distinct
-        }
-        val eq = eqOf(eqAll.filterNot(d => newDeletes.contains(d.path)))
-        val matchEq = eqOf(eqAll.filter(d => newDeletes.contains(d.path)))
-        var readSchema = read
-        (eq ++ matchEq).flatMap(_.cols).distinct
-          .filterNot(c => readSchema.fieldNames.contains(c)).foreach { c =>
-            val full = SchemaConv.toSparkSchema(t.schema)
-            readSchema = readSchema.add(full(full.fieldIndex(c)).copy(nullable = true))
-          }
-        if (pos.nonEmpty || matchPos.nonEmpty || dvs.nonEmpty || matchDv.nonEmpty)
-          readSchema = readSchema.add(org.apache.spark.sql.types.StructField(
-            graft.spark.GraftReaders.RowIndexCol,
-            org.apache.spark.sql.types.LongType, nullable = true))
-        GraftInputPartition(task.file.path, 0L, task.file.fileSizeInBytes,
-          required.json, readSchema.json, limit = None, pos, eq,
-          columnar = false, partitionValues = Array.empty,
-          format = task.file.format,
-          cdc = Some((tpe, commit.snapshotId, commit.sequenceNumber)),
-          cdcMatchPos = matchPos, cdcMatchEq = matchEq,
-          dvDeletes = dvs, cdcMatchDv = matchDv): InputPartition
-      }
-  }
-
-  /** Complete scan of the snapshot at `seq`, with positional/equality
-    * deletes attached — the streaming twin of the batch read path. */
-  private def fullScanPartitions(t: IcebergTable, seq: Long): Seq[InputPartition] = {
-    val snap = t.metadata.snapshots.find(_.sequenceNumber == seq).getOrElse(
-      throw new IllegalStateException(
-        s"initial-offset snapshot (sequence $seq) of $location was expired"))
-    val read = SchemaConv.withNameCandidates(required, t.metadata.schemas,
-      SchemaConv.nameMappingOf(t.metadata.properties))
-    t.newScan(snapshotId = Some(snap.snapshotId)).planFiles().map { task =>
-      val (dvFiles, posFiles) = task.deleteFiles
-        .filter(_.content == graft.core.DataFileContent.PositionDeletes)
-        .partition(_.isDeletionVector)
-      val pos = posFiles.map(_.path)
-      val dvs = dvFiles.map(d =>
-        DvRef(d.path, d.contentOffset.get, d.contentSizeInBytes.get))
-      val eq = task.deleteFiles
-        .filter(_.content == graft.core.DataFileContent.EqualityDeletes)
-        .map(d => EqDelete(d.path,
-          d.equalityIds.flatMap(id => t.schema.findColumnName(id)),
-          d.equalityIds.map(id =>
-            (t.schema.findColumnName(id).toSeq ++
-              t.metadata.schemas.reverse.flatMap(sc =>
-                sc.findFieldById(id).map(_.name))).distinct)))
-      // reader needs the row-index column for positional tombstones and the
-      // eq-delete key columns even when projected away
-      var readSchema = read
-      eq.flatMap(_.cols).distinct
-        .filterNot(c => readSchema.fieldNames.contains(c)).foreach { c =>
-          val full = SchemaConv.toSparkSchema(t.schema)
-          readSchema = readSchema.add(full(full.fieldIndex(c)).copy(nullable = true))
-        }
-      if (pos.nonEmpty || dvs.nonEmpty)
-        readSchema = readSchema.add(org.apache.spark.sql.types.StructField(
-          org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-            .ROW_INDEX_TEMPORARY_COLUMN_NAME,
-          org.apache.spark.sql.types.LongType, nullable = true))
-      GraftInputPartition(task.file.path, 0L, task.file.fileSizeInBytes,
-        required.json, readSchema.json, limit = None, pos, eq,
-        dvDeletes = dvs): InputPartition
-    }
+          s"initial-offset snapshot (sequence ${s.seq}) of $location was expired")))
+    if (readChanges)
+      return Changelog.changePartitions(t, required,
+        Changelog.changedFilesInWindow(t, s.seq, toSeq), initial).toArray
+    val tasks = initial.toSeq.flatMap(snap =>
+      t.newScan(snapshotId = Some(snap.snapshotId)).planFiles()) ++
+      EventStreams.appendedFilesInWindow(t, s.seq, toSeq)
+    val maxSplit = GraftScan.maxSplitBytes(tasks)
+    tasks.flatMap(GraftScan.taskPartitions(t, required, _, maxSplit)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new GraftReaderFactory()

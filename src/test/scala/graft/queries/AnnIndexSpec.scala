@@ -299,7 +299,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // serving again MUST re-fill against the evolved state, never hit
     // stale (InMemoryFileIndex equality is rootPaths-based, so a
     // directory-rooted input would NOT give this guarantee — see the
-    // CacheSlots scaladoc precondition).
+    // CacheSlot scaladoc precondition).
     val loc = Files.createTempDirectory("ann_corpus5").toFile.getPath
     val t1 = TableWriter.create(embDF(0L until 20L), loc)
     val c1 = t1.currentSnapshot.get.snapshotId

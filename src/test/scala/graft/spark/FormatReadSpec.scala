@@ -352,6 +352,26 @@ class FormatReadSpec extends AnyFunSuite {
     assert(t1.newScan().toDF(spark).count() == 90)
   }
 
+  test("write.format-default=orc: a read stream delivers every appended row") {
+    val loc = tmpDir("tbl_orc_stream")
+    val rows = (i: Range) => i.map(n => (n.toLong, s"row-$n"))
+    TableWriter.create(rows(0 until 10).toDF("id", "name").coalesce(1), loc,
+      properties = Map("write.format-default" -> "orc"))
+    val q = spark.readStream.format("icegopher").load(loc)
+      .writeStream.format("memory").queryName("orc_stream")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
+    try {
+      q.processAllAvailable()
+      val t1 = TableWriter.append(IcebergTables.load(loc),
+        rows(10 until 15).toDF("id", "name").coalesce(1))
+      assert(t1.newScan().planFiles().forall(_.file.format == "ORC"))
+      q.processAllAvailable()
+      val got = spark.table("orc_stream").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(got.sorted == rows(0 until 15), got)
+    } finally q.stop()
+  }
+
   test("unknown data format still fails loudly at plan time") {
     val loc = tmpDir("tbl_fmt_bad")
     TableWriter.create(Seq((1L, "pq")).toDF("id", "name").coalesce(1), loc)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `TableScan.toDF` is a DataFrame over the DSv2 scan: `_file` predicates
   * prune the planned file set, a read leaves the caller's session conf
-  * alone, plans are keyed on the table state (the `CacheSlots` freshness
+  * alone, plans are keyed on the table state (the `CacheSlot` freshness
   * contract), and a handle read ignores `spark.wap.branch`. */
 class ReadPathSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
