@@ -2014,33 +2014,61 @@ final class GraftRowReader(p: GraftInputPartition)
 /** Executor-wide parse-once cache for delete files.
   *
   * A delete file is typically matched to MANY data files; without a cache
-  * every task re-reads it (O(deleteFiles × dataFiles) I/O — the round-2
-  * scale bug). Here each executor JVM parses a delete file once and shares
-  * the decoded set across all its tasks; distinct executors each read it
-  * once — strictly better than driver-side broadcast for large delete sets,
-  * and the same strategy Apache Iceberg's Spark runtime uses. Bounded LRU so
-  * pathological delete counts can't pin executor memory. */
-private[spark] object DeleteFileCache {
-  import org.apache.parquet.example.data.Group
+  * every task re-reads it (O(deleteFiles × dataFiles) I/O). Here each
+  * executor JVM parses a delete file once and shares the decoded form
+  * across all its tasks; distinct executors each read it once — the
+  * strategy of Apache Iceberg's Spark executor cache.
+  *
+  * The bound is on the decoded size of what the cache holds — the keys of
+  * an equality-delete file, the positions of a positional one, the blob
+  * bytes of a deletion vector — against a fixed share of the JVM's heap,
+  * not on an entry count: every task over a table asks for its delete files
+  * in the same order, so a count bound below a data file's delete-file
+  * count evicts each file just before its next use. A file heavier than
+  * the whole budget is returned to its caller and not kept.
+  *
+  * Each file is loaded at most once and outside the map's lock: concurrent
+  * callers of one file wait for its single parse, callers of other files
+  * do not wait at all. Cached values are shared and never mutated. */
+private[spark] class DeleteFileCache(budgetBytes: Long) {
+  import DeleteFileCache._
+  import java.util.concurrent.ExecutionException
+  import com.google.common.cache.{Cache, CacheBuilder}
+  import com.google.common.util.concurrent.{ExecutionError, UncheckedExecutionException}
   import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.GroupReadSupport
 
-  /** Number of delete-file parses performed in this JVM (spec hook). */
+  /** Number of delete-file parses performed by this cache (spec hook). */
   val fileReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val MaxEntries = 64
-  private def lru[K, V](): java.util.Map[K, V] =
-    new java.util.LinkedHashMap[K, V](MaxEntries * 2, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > MaxEntries
-    }
-  private val posCache = lru[String, Map[String, java.util.HashSet[java.lang.Long]]]()
-  private val eqCache = lru[(String, Seq[Seq[String]]), java.util.HashSet[Seq[Any]]]()
-  // (puffin path, blob offset) → raw blob bytes (decoded per caller —
-  // the bitmap class is not thread-safe, so no decoded instance is shared)
-  private val dvCache = lru[(String, Long), Array[Byte]]()
+  // one segment: Guava splits the weight budget evenly across segments,
+  // so only with one does the bound cover the whole map; the segment lock
+  // guards bookkeeping only, `get` runs the loader outside it
+  private val entries: Cache[Key, Decoded] = CacheBuilder.newBuilder()
+    .concurrencyLevel(1)
+    .maximumWeight(budgetBytes)
+    .weigher[Key, Decoded]((_: Key, d: Decoded) => d.weight)
+    .build[Key, Decoded]()
 
-  private def norm(path: String): String = path.stripPrefix("file:")
+  /** Estimated heap bytes of the decoded delete files held now. */
+  def retainedBytes: Long =
+    entries.asMap.values.asScala.map(_.weight.toLong).sum
+
+  /** `key`'s decoded value; `load` (value, its estimated heap bytes) runs
+    * at most once per key while the entry is held. */
+  private def cached[V](key: Key)(load: => (V, Long)): V = {
+    val d = try entries.get(key, () => {
+      fileReads.incrementAndGet()
+      val (value, bytes) = load
+      val weight = ElementBytes + 2L * key.file.length + bytes
+      Decoded(value, math.min(weight, Int.MaxValue.toLong).toInt)
+    }) catch {
+      // rethrow the loader's own failure, not Guava's wrapper
+      case e @ (_: ExecutionException | _: UncheckedExecutionException |
+                _: ExecutionError) if e.getCause != null => throw e.getCause
+    }
+    d.value.asInstanceOf[V]
+  }
 
   /** Union of tombstoned positions for `dataPath` across `deleteFiles`. */
   def positionsFor(deleteFiles: Seq[String],
@@ -2048,12 +2076,7 @@ private[spark] object DeleteFileCache {
     val target = norm(dataPath)
     val out = new java.util.HashSet[java.lang.Long]()
     deleteFiles.foreach { df =>
-      val byPath = posCache.synchronized {
-        val cached = posCache.get(df)
-        if (cached != null) cached
-        else { val loaded = loadPositions(df); posCache.put(df, loaded); loaded }
-      }
-      byPath.get(target).foreach(out.addAll)
+      cached(PosKey(df))(loadPositions(df)).get(target).foreach(out.addAll)
     }
     out
   }
@@ -2070,17 +2093,9 @@ private[spark] object DeleteFileCache {
   def deletionVector(refs: Seq[DvRef])
       : org.roaringbitmap.longlong.Roaring64NavigableMap = {
     val blobs = refs.map { ref =>
-      dvCache.synchronized {
-        val key = (ref.path, ref.offset)
-        val cached = dvCache.get(key)
-        if (cached != null) cached
-        else {
-          fileReads.incrementAndGet()
-          val blob = graft.core.Puffin.readBlob(
-            norm(ref.path), ref.offset, ref.length)
-          dvCache.put(key, blob)
-          blob
-        }
+      cached(DvKey(ref.path, ref.offset)) {
+        val blob = graft.core.Puffin.readBlob(norm(ref.path), ref.offset, ref.length)
+        (blob, ArrayBytes + blob.length)
       }
     }
     val bms = blobs.map(graft.core.Puffin.readDvBlob)
@@ -2095,40 +2110,35 @@ private[spark] object DeleteFileCache {
   /** Decoded key tuples of one equality-delete file for `cols`. */
   def equalityKeys(deleteFile: String, colCandidates: Seq[Seq[String]],
                    fields: Array[StructField]): java.util.HashSet[Seq[Any]] =
-    eqCache.synchronized {
-      val key = (deleteFile, colCandidates)
-      val cached = eqCache.get(key)
-      if (cached != null) cached
-      else {
-        val loaded = loadEqualityKeys(deleteFile, colCandidates, fields)
-        eqCache.put(key, loaded)
-        loaded
-      }
-    }
+    cached(EqKey(deleteFile, colCandidates))(
+      loadEqualityKeys(deleteFile, colCandidates, fields))
 
   private def loadPositions(deleteFile: String)
-      : Map[String, java.util.HashSet[java.lang.Long]] = {
-    fileReads.incrementAndGet()
+      : (Map[String, java.util.HashSet[java.lang.Long]], Long) = {
     val out = scala.collection.mutable.Map[String, java.util.HashSet[java.lang.Long]]()
+    var bytes = 0L
     val r = ParquetReader.builder(new GroupReadSupport(),
       new org.apache.hadoop.fs.Path(deleteFile)).build()
     try {
       var g = r.read()
       while (g != null) {
         val fp = norm(g.getBinary("file_path", 0).toStringUsingUTF8)
-        out.getOrElseUpdate(fp, new java.util.HashSet[java.lang.Long]())
-          .add(g.getLong("pos", 0))
+        val set = out.getOrElseUpdate(fp, {
+          bytes += ElementBytes + ArrayBytes + 2L * fp.length
+          new java.util.HashSet[java.lang.Long]()
+        })
+        if (set.add(g.getLong("pos", 0))) bytes += ElementBytes
         g = r.read()
       }
     } finally r.close()
-    out.toMap
+    (out.toMap, bytes)
   }
 
   private def loadEqualityKeys(deleteFile: String, colCandidates: Seq[Seq[String]],
                                fields: Array[StructField])
-      : java.util.HashSet[Seq[Any]] = {
-    fileReads.incrementAndGet()
+      : (java.util.HashSet[Seq[Any]], Long) = {
     val set = new java.util.HashSet[Seq[Any]]()
+    var bytes = 0L
     val r = ParquetReader.builder(new GroupReadSupport(),
       new org.apache.hadoop.fs.Path(deleteFile)).build()
     try {
@@ -2150,12 +2160,40 @@ private[spark] object DeleteFileCache {
           if (g.getFieldRepetitionCount(gi) == 0) null
           else canonical(readGroupValue(g, gi, fields(i).dataType))
         }
-        set.add(key)
+        if (set.add(key)) bytes += keyBytes(key)
         g = r.read()
       }
     } finally r.close()
-    set
+    (set, bytes)
   }
+}
+
+/** The JVM's delete-file cache; its budget is an eighth of the heap the
+  * JVM may grow to. */
+private[spark] object DeleteFileCache
+    extends DeleteFileCache(Runtime.getRuntime.maxMemory / 8) {
+  import org.apache.parquet.example.data.Group
+
+  private sealed trait Key { def file: String }
+  private final case class PosKey(file: String) extends Key
+  private final case class EqKey(file: String, cols: Seq[Seq[String]]) extends Key
+  private final case class DvKey(file: String, offset: Long) extends Key
+  private final case class Decoded(value: Any, weight: Int)
+
+  // rough heap bytes: a map or hash-set element (node, table slot, boxed
+  // position or key Seq; also the cost of an entry itself beside its key's
+  // path) and an array or object header
+  private final val ElementBytes = 64L
+  private final val ArrayBytes = 16L
+
+  /** Estimated heap bytes of one decoded equality key. */
+  private def keyBytes(key: Seq[Any]): Long = key.foldLeft(ElementBytes) {
+    case (n, s: org.apache.spark.unsafe.types.UTF8String) => n + 40 + s.numBytes
+    case (n, b: Seq[_]) => n + 40 + b.size
+    case (n, _) => n + 24
+  }
+
+  private def norm(path: String): String = path.stripPrefix("file:")
 
   /** Canonical comparable form shared by the delete-file decode and the
     * data-row decode (arrays have reference equality; box them). */
