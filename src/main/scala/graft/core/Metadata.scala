@@ -51,19 +51,6 @@ final case class SnapshotRef(
     maxSnapshotAgeMs: Option[Long] = None,
     maxRefAgeMs: Option[Long] = None)
 
-object SnapshotRef {
-  /** Advance (or create) a branch ref to a new HEAD, PRESERVING the
-    * existing ref's retention policy — a commit moves the pointer, it
-    * does not reset `min-snapshots-to-keep`/`max-snapshot-age-ms`/
-    * `max-ref-age-ms`. Every branch-advancing commit path must build its
-    * new ref through here. */
-  def advanced(refs: Map[String, SnapshotRef], name: String,
-               snapshotId: Long): SnapshotRef =
-    refs.get(name).filter(_.refType == BranchRef)
-      .map(_.copy(snapshotId = snapshotId))
-      .getOrElse(SnapshotRef(snapshotId, BranchRef))
-}
-
 final case class SnapshotLogEntry(snapshotId: Long, timestampMs: Long)
 final case class MetadataLogEntry(metadataFile: String, timestampMs: Long)
 

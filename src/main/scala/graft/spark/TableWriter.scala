@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr => sexpr, regexp_replace, to_date, udf, year => syear}
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 import graft.catalog.{AddPartitionSpec, AddSchema, AddSnapshot, AddSortOrder, AssertCurrentSchemaId, AssertRefSnapshotId, AssertTableUuid, RemoveProperties, RemoveSnapshotRef, RemoveSnapshots, SetCurrentSchema, SetDefaultSortOrder, SetDefaultSpec, SetPartitionStatistics, SetProperties, SetSnapshotRef, SetStatistics, TableRequirement, TableUpdate, UpgradeFormatVersion}
 import graft.core._
@@ -212,16 +213,13 @@ object TableWriter {
     * DV-less file, its positional-parquet tombstones. */
   def deleteWhereDv(table: IcebergTable, spark: org.apache.spark.sql.SparkSession,
                     predicate: Column): IcebergTable = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
-
     val scan = table.newScan()
-    val newDead = deadRows(scan, spark, predicate)
-    val (dead, priorDvs) = foldPriorDeletes(spark, newDead, scan.planFiles())
-    val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
-    commitDvSnapshot(table, stageDvSnapshot(table, Nil, dvFiles, _ => false,
-      OpDelete, Map.empty, snapId, seq))
+    val (dead, priorDvs) =
+      foldPriorDeletes(spark, deadRows(scan, spark, predicate), scan.planFiles())
+    commitDvSnapshot(table) { (snapId, seq) =>
+      dvChanges(table, Nil, writeDvFiles(spark, dead, priorDvs, table, snapId, seq),
+        _ => false, OpDelete, Map.empty, snapId, seq)
+    }
   }
 
   /** Prior deletes of the files a new DV write touches, resolved exactly as
@@ -283,9 +281,10 @@ object TableWriter {
   private def writeDvFiles(spark: org.apache.spark.sql.SparkSession,
                            dead: DataFrame,
                            priorDvs: Map[String, Seq[(String, Long, Long)]],
-                           delDir: File, snapId: Long, seq: Long)
+                           table: IcebergTable, snapId: Long, seq: Long)
       : Seq[DataFileInfo] = {
     import spark.implicits._
+    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
     val dvInfos: Seq[(String, String, Long, Long, Long, Long)] = dead
       .repartition(col("file_path"))
       .sortWithinPartitions("file_path", "pos")
@@ -294,37 +293,47 @@ object TableWriter {
         if (!it.hasNext) Iterator.empty
         else {
           // one Puffin container per task, one DV blob per data file
-          val byFile = scala.collection.mutable.LinkedHashMap[String,
-            org.roaringbitmap.longlong.Roaring64NavigableMap]()
+          val byFile =
+            scala.collection.mutable.LinkedHashMap[String, Roaring64NavigableMap]()
           it.foreach { case (f, p) =>
-            byFile.getOrElseUpdate(f,
-              new org.roaringbitmap.longlong.Roaring64NavigableMap(false))
+            byFile.getOrElseUpdate(f, new Roaring64NavigableMap(false))
               .addLong(p)
           }
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val puffin = new File(delDir, f"dv-$pid%05d.puffin").getPath
-          val blobs = byFile.toSeq.map { case (target, bm) =>
+          byFile.foreach { case (target, bm) =>
             priorDvs.getOrElse(target, Nil).foreach { case (path, off, len) =>
               bm.or(graft.core.Puffin.readDvBlob(
                 graft.core.Puffin.readBlob(path, off, len)))
             }
-            val bytes = graft.core.Puffin.dvBlobBytesOf(bm)
-            (bytes, graft.core.Puffin.BlobMetadata(
-              graft.core.Puffin.DeletionVectorV1, fields = Nil,
-              snapshotId = snapId, sequenceNumber = seq, offset = 0, length = 0,
-              properties = Map("referenced-data-file" -> target,
-                "cardinality" -> bm.getLongCardinality.toString)))
           }
-          val metas = graft.core.Puffin.write(puffin, blobs)
-          val size = new File(puffin).length()
-          metas.iterator.map { m =>
-            (puffin, m.properties("referenced-data-file"),
-              m.offset, m.length, m.properties("cardinality").toLong, size)
-          }
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          writeDvContainer(new File(delDir, f"dv-$pid%05d.puffin").getPath,
+            byFile.toSeq, snapId, seq)
         }
       }.collect().toSeq // one row per touched data file: metadata-sized
 
     dvDataFiles(dvInfos)
+  }
+
+  /** Write one Puffin container holding a deletion-vector-v1 blob per
+    * (referenced data file, positions) pair, recorded under snapshot
+    * `snapId` at sequence `seq` (executor-side). Returns one
+    * [[dvDataFiles]] row per blob. */
+  private def writeDvContainer(puffin: String,
+                               dvs: Seq[(String, Roaring64NavigableMap)],
+                               snapId: Long, seq: Long)
+      : Iterator[(String, String, Long, Long, Long, Long)] = {
+    val metas = graft.core.Puffin.write(puffin, dvs.map { case (target, bm) =>
+      (graft.core.Puffin.dvBlobBytesOf(bm), graft.core.Puffin.BlobMetadata(
+        graft.core.Puffin.DeletionVectorV1, fields = Nil,
+        snapshotId = snapId, sequenceNumber = seq, offset = 0, length = 0,
+        properties = Map("referenced-data-file" -> target,
+          "cardinality" -> bm.getLongCardinality.toString)))
+    })
+    val size = new File(puffin).length()
+    metas.iterator.map { m =>
+      (puffin, m.properties("referenced-data-file"),
+        m.offset, m.length, m.properties("cardinality").toLong, size)
+    }
   }
 
   /** Manifest rows for freshly-written DV blobs: (puffin path, referenced
@@ -390,53 +399,39 @@ object TableWriter {
     if (containersBefore <= 1 && allDvEntries.size == live.size)
       return (table, 0, containersBefore, containersBefore)
 
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val delDir = new File(table.location, s"data/dv-rw-$snapId"); delDir.mkdirs()
-
-    val dvInfos: Seq[(String, String, Long, Long, Long, Long)] =
-      if (live.isEmpty) Nil
-      else {
-        import spark.implicits._
-        // one output container per ~4k blobs keeps containers near the
-        // manifest-target sweet spot without a byte-level size estimate
-        val parts = math.max(1, math.ceil(live.size / 4096.0).toInt)
-        live.toDF("target", "src", "off", "len")
-          .repartitionByRange(parts, col("target"))
-          .sortWithinPartitions("target")
-          .as[(String, String, Long, Long)]
-          .mapPartitions { it =>
-            val rows = it.toArray
-            if (rows.isEmpty) Iterator.empty
-            else {
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              val puffin = new File(delDir, f"dv-rw-$pid%05d.puffin").getPath
-              val blobs = rows.toSeq.map { case (target, src, off, len) =>
-                val bm = graft.core.Puffin.readDvBlob(
-                  graft.core.Puffin.readBlob(src, off, len))
-                (graft.core.Puffin.dvBlobBytesOf(bm),
-                  graft.core.Puffin.BlobMetadata(
-                    graft.core.Puffin.DeletionVectorV1, fields = Nil,
-                    snapshotId = snapId, sequenceNumber = seq,
-                    offset = 0, length = 0,
-                    properties = Map("referenced-data-file" -> target,
-                      "cardinality" -> bm.getLongCardinality.toString)))
+    var containersAfter = 0
+    val out = commitDvSnapshot(table) { (snapId, seq) =>
+      val delDir = new File(table.location, s"data/dv-rw-$snapId"); delDir.mkdirs()
+      val dvInfos: Seq[(String, String, Long, Long, Long, Long)] =
+        if (live.isEmpty) Nil
+        else {
+          import spark.implicits._
+          // one output container per ~4k blobs keeps containers near the
+          // manifest-target sweet spot without a byte-level size estimate
+          val parts = math.max(1, math.ceil(live.size / 4096.0).toInt)
+          live.toDF("target", "src", "off", "len")
+            .repartitionByRange(parts, col("target"))
+            .sortWithinPartitions("target")
+            .as[(String, String, Long, Long)]
+            .mapPartitions { it =>
+              val rows = it.toArray
+              if (rows.isEmpty) Iterator.empty
+              else {
+                val pid = org.apache.spark.TaskContext.getPartitionId()
+                writeDvContainer(new File(delDir, f"dv-rw-$pid%05d.puffin").getPath,
+                  rows.toSeq.map { case (target, src, off, len) =>
+                    target -> graft.core.Puffin.readDvBlob(
+                      graft.core.Puffin.readBlob(src, off, len))
+                  }, snapId, seq)
               }
-              val metas = graft.core.Puffin.write(puffin, blobs)
-              val size = new File(puffin).length()
-              metas.iterator.map { m =>
-                (puffin, m.properties("referenced-data-file"),
-                  m.offset, m.length, m.properties("cardinality").toLong, size)
-              }
-            }
-          }.collect().toSeq // one row per live DV: metadata-sized
-      }
-
-    val out = commitDvSnapshot(table, stageDvSnapshot(table, Nil,
-      dvDataFiles(dvInfos), alsoSuperseded = _.isDeletionVector, OpReplace,
-      Map("deletion-vectors-rewritten" -> allDvEntries.size.toString),
-      snapId, seq))
-    (out, live.size, containersBefore, dvInfos.map(_._1).distinct.size)
+            }.collect().toSeq // one row per live DV: metadata-sized
+        }
+      containersAfter = dvInfos.map(_._1).distinct.size
+      dvChanges(table, Nil, dvDataFiles(dvInfos), alsoSuperseded = _.isDeletionVector,
+        OpReplace, Map("deletion-vectors-rewritten" -> allDvEntries.size.toString),
+        snapId, seq)
+    }
+    (out, live.size, containersBefore, containersAfter)
   }
 
   /** Rewrite delete manifests so superseded entries leave the live set: V3
@@ -445,22 +440,24 @@ object TableWriter {
     * (whose positions it merged); format upgrade likewise retires every
     * positional-parquet tombstone it re-homed. Kept entries carry as
     * EXISTING, superseded ones stay in the rewritten manifest as
-    * DELETED-status entries recording this snapshot (the
-    * [[stageReplaceSnapshot]] forensics convention); a manifest with
-    * nothing superseded carries by reference, and one with nothing live
-    * left is dropped by [[liveManifests] ] at the NEXT commit. */
+    * DELETED-status entries recording this snapshot ([[retire]]). Returns
+    * the manifests with nothing superseded, carried by reference, and the
+    * rewritten ones; one with nothing live left is dropped by
+    * [[liveManifests]] at the NEXT commit. */
   private def supersedeDeleteEntries(table: IcebergTable,
                                      deleteManifests: Seq[ManifestFile],
                                      superseded: DataFileInfo => Boolean,
-                                     snapId: Long, seq: Long): Seq[ManifestFile] = {
-    deleteManifests.zipWithIndex.map { case (m, i) =>
-      val es = ManifestIO.readManifestEntries(table.io.open(m.path), m)
-      val (gone, kept) = es.partition(e => superseded(e.dataFile))
-      if (gone.isEmpty) m
-      else writeManifest(table, s"manifest-del-ss-$snapId-$i", 1,
-        m.partitionSpecId, partTypeOf(table, m.partitionSpecId, StructT(Nil)),
-        retire(kept, gone, snapId), snapId, seq)
+                                     snapId: Long)
+      : (Seq[ManifestFile], Seq[NewManifest]) = {
+    val split = deleteManifests.map { m =>
+      m -> ManifestIO.readManifestEntries(table.io.open(m.path), m)
+        .partition(e => superseded(e.dataFile))
     }
+    (split.collect { case (m, (gone, _)) if gone.isEmpty => m },
+      split.collect { case (m, (gone, kept)) if gone.nonEmpty =>
+        NewManifest("manifest-del-ss", 1, m.partitionSpecId,
+          partTypeOf(table, m.partitionSpecId, StructT(Nil)), retire(kept, gone, snapId))
+      })
   }
 
   /** A rewritten manifest's entries: `kept` carry as EXISTING, `gone`
@@ -473,57 +470,38 @@ object TableWriter {
     kept.map(_.copy(status = ManifestEntryStatus.Existing)) ++
       gone.map(_.copy(status = ManifestEntryStatus.Deleted, snapshotId = Some(snapId)))
 
-  /** Commit a snapshot carrying deletion vectors. DVs are a V3
+  /** Stage and commit a snapshot carrying deletion vectors. DVs are a V3
     * construct, so a table below V3 moves to 3 in the same commit — the
     * format flip first, so the snapshot lands on V3 metadata and a reader
-    * never sees DVs under an older format. */
-  private def commitDvSnapshot(table: IcebergTable, snapshot: Snapshot): IcebergTable =
-    publish(table, snapshot, leading =
+    * never sees DVs under an older format; lineage is assigned under that
+    * target version. */
+  private def commitDvSnapshot(table: IcebergTable)
+                              (body: (Long, Long) => SnapshotChanges): IcebergTable =
+    publish(table, stageSnapshot(table, table.currentSnapshot,
+      table.metadata.copy(formatVersion = 3))(body), leading =
       if (table.metadata.formatVersion >= 3) Nil else Seq(UpgradeFormatVersion(3)))
 
-  /** Stage ONE snapshot carrying appended data files, new deletion
-    * vectors, and the retirement of whatever those DVs supersede (prior
-    * DVs of the touched files always; `alsoSuperseded` lets format upgrade
-    * retire parquet tombstones too) — manifests + manifest list on disk,
-    * committed by [[commitDvSnapshot]]. */
-  private def stageDvSnapshot(table: IcebergTable,
-                              added: Seq[graft.spark.CowFileOut],
-                              dvFiles: Seq[DataFileInfo],
-                              alsoSuperseded: DataFileInfo => Boolean,
-                              op: SnapshotOp, extraSummary: Map[String, String],
-                              snapId: Long, seq: Long): Snapshot = {
-    val addedEntries0 = added.map(addedEntry(table, _, snapId, seq))
-    // the committed metadata is V3 (DVs force it) even when the loaded
-    // table was not yet — lineage must be assigned under the TARGET version
-    val lineage = assignLineage(table.metadata.copy(formatVersion = 3), addedEntries0)
-    val addedEntries = lineage.entries
-    val dvEntries = dvFiles.map(info => ManifestEntry(
-      ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info))
+  /** The changes of ONE snapshot carrying appended data files, new
+    * deletion vectors, and the retirement of whatever those DVs supersede
+    * (prior DVs of the touched files always; `alsoSuperseded` lets format
+    * upgrade retire parquet tombstones too). */
+  private def dvChanges(table: IcebergTable,
+                        added: Seq[graft.spark.CowFileOut],
+                        dvFiles: Seq[DataFileInfo],
+                        alsoSuperseded: DataFileInfo => Boolean,
+                        op: SnapshotOp, extraSummary: Map[String, String],
+                        snapId: Long, seq: Long): SnapshotChanges = {
     val (prevData, prevDelete) = liveManifests(table).partition(_.content == 0)
     val touched = dvFiles.flatMap(_.referencedDataFile).map(normFsPath).toSet
     val isSuperseded: DataFileInfo => Boolean = d =>
       (d.isDeletionVector &&
         touched(normFsPath(d.referencedDataFile.get))) || alsoSuperseded(d)
-    val newDelete =
-      supersedeDeleteEntries(table, prevDelete, isSuperseded, snapId, seq)
-
-    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, prevData ++
-      addedManifest(table, addedEntries, "manifest-dv-add", snapId, seq,
-        lineage.manifestFirstRowId) ++ newDelete ++
-      addedManifest(table, dvEntries, "manifest-dv", snapId, seq))
-    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(op, Map(
-        "added-data-files" -> addedEntries.size.toString,
-        // added-records makes V3 lineage advance exact for the appends
-        "added-records" ->
-          addedEntries.map(_.dataFile.recordCount).sum.toString,
-        "added-delete-files" -> dvEntries.size.toString,
-        "added-position-deletes" -> dvFiles.map(_.recordCount).sum.toString,
-        "deletion-vectors-added" -> dvEntries.size.toString) ++ extraSummary)),
-      Some(table.schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
+    val (kept, rewritten) =
+      supersedeDeleteEntries(table, prevDelete, isSuperseded, snapId)
+    SnapshotChanges(op, prevData ++ kept,
+      (manifestOf(table, "manifest-dv-add", added.map(addedEntry(table, _, snapId, seq))) +:
+        rewritten) :+ manifestOf(table, "manifest-dv", dvFiles.map(addedFile(_, snapId, seq))),
+      Map("deletion-vectors-added" -> dvFiles.size.toString) ++ extraSummary)
   }
 
   /** V3 variant of [[commitDelta]] — SQL MoR DML on a format-version-3
@@ -540,18 +518,16 @@ object TableWriter {
                             added: Seq[graft.spark.CowFileOut],
                             posDeleteFiles: Seq[String]): IcebergTable = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
     val newDead = spark.read.parquet(posDeleteFiles: _*)
       .select(regexp_replace(col("file_path"), "^file:(//)?", "")
         .as("file_path"), col("pos"))
     val (dead, priorDvs) =
       foldPriorDeletes(spark, newDead, table.newScan().planFiles())
-    val dvFiles = writeDvFiles(spark, dead, priorDvs, delDir, snapId, seq)
-    val committed = commitDvSnapshot(table, stageDvSnapshot(table, added,
-      dvFiles, _ => false, if (added.isEmpty) OpDelete else OpOverwrite,
-      Map.empty, snapId, seq))
+    val committed = commitDvSnapshot(table) { (snapId, seq) =>
+      dvChanges(table, added, writeDvFiles(spark, dead, priorDvs, table, snapId, seq),
+        _ => false, if (added.isEmpty) OpDelete else OpOverwrite, Map.empty,
+        snapId, seq)
+    }
     // the task tombstone parquet files were commit intermediates only
     posDeleteFiles.foreach(p => new File(p).delete())
     committed
@@ -590,42 +566,35 @@ object TableWriter {
     if (target == 2 || posPaths.isEmpty)
       return table.ops.commit(md, headGuard(md),
         Seq(UpgradeFormatVersion(target)))
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val delDir = new File(table.location, s"data/dv-$snapId"); delDir.mkdirs()
-    val dvFiles = rehomeDvFiles(table, spark, tasks, posPaths, delDir,
-      snapId, seq)
-    commitDvSnapshot(table, stageDvSnapshot(table, Nil, dvFiles,
-      alsoSuperseded = d =>
-        d.content == DataFileContent.PositionDeletes && !d.isDeletionVector,
-      op = OpReplace,
-      extraSummary = Map("format-version" -> "3",
-        "position-delete-files-removed" -> posPaths.size.toString),
-      snapId, seq))
+    val dead = rehomedTombstones(spark, tasks, posPaths)
+    commitDvSnapshot(table) { (snapId, seq) =>
+      dvChanges(table, Nil, writeDvFiles(spark, dead, Map.empty, table, snapId, seq),
+        alsoSuperseded = d =>
+          d.content == DataFileContent.PositionDeletes && !d.isDeletionVector,
+        op = OpReplace,
+        extraSummary = Map("format-version" -> "3",
+          "position-delete-files-removed" -> posPaths.size.toString),
+        snapId, seq)
+    }
   }
 
-  /** Staging of the V2→V3 tombstone re-home ([[upgradeFormatVersion]]):
-    * group live tombstone coordinates by
-    * data file — dangling tombstones of vanished files drop; a file that
-    * already has a DV keeps it untouched and its parquet tombstone entries
-    * (dead weight readers already ignore) retire WITHOUT folding — then
-    * write one DV per touched file. */
-  private def rehomeDvFiles(table: IcebergTable,
-                            spark: org.apache.spark.sql.SparkSession,
-                            tasks: Seq[graft.core.FileScanTask],
-                            posPaths: Seq[String],
-                            delDir: File, snapId: Long, seq: Long)
-      : Seq[DataFileInfo] = {
+  /** The tombstone coordinates the V2→V3 re-home ([[upgradeFormatVersion]])
+    * turns into one DV per touched file: dangling tombstones of vanished
+    * files drop; a file that already has a DV keeps it untouched and its
+    * parquet tombstone entries (dead weight readers already ignore) retire
+    * WITHOUT folding. */
+  private def rehomedTombstones(spark: org.apache.spark.sql.SparkSession,
+                                tasks: Seq[graft.core.FileScanTask],
+                                posPaths: Seq[String]): DataFrame = {
     val dvByFile = tasks.filter(_.deleteFiles.exists(_.isDeletionVector))
       .map(t => normFsPath(t.file.path)).toSet
     val liveNoDv = tasks.map(t => normFsPath(t.file.path))
       .filterNot(dvByFile).distinct
-    val dead = filterLiveTombstones(
+    filterLiveTombstones(
       spark.read.parquet(posPaths: _*)
         .select(regexp_replace(col("file_path"), "^file:(//)?", "")
           .as("file_path"), col("pos")),
       liveNoDv, spark)
-    writeDvFiles(spark, dead, Map.empty, delDir, snapId, seq)
   }
 
   /** Equality MoR delete: any row whose `equalityCols` tuple appears in
@@ -635,25 +604,22 @@ object TableWriter {
                      equalityCols: Seq[String]): IcebergTable =
     publish(table, stageEqualitySnapshot(table, keys, equalityCols, None))
 
-  /** Write `keys` as equality-delete parquet + its content=1 manifest for
+  /** Write `keys` as equality-delete parquet (one file per non-empty
+    * partition of their distinct) and stage its content=1 manifest for
     * snapshot `snapId` at sequence `seq`; shared by [[deleteEquality]]
     * (own commit) and [[replaceEquality]] (same commit as the data). */
-  private def writeEqDeleteManifest(table: IcebergTable, keys: DataFrame,
-                                    equalityCols: Seq[String],
-                                    snapId: Long, seq: Long): ManifestFile = {
+  private def eqDeleteManifest(table: IcebergTable, keys: DataFrame,
+                               equalityCols: Seq[String],
+                               snapId: Long, seq: Long): NewManifest = {
     val delDir = new File(table.location, s"data/eqdeletes-$snapId")
     keys.select(equalityCols.map(col): _*).distinct().write.parquet(delDir.getPath)
     val eqIds = equalityCols.map(c => table.schema.findFieldByName(c).getOrElse(
       throw new IllegalArgumentException(s"equality column '$c' not in schema")).id)
-    val delFiles = listParquet(delDir).map { f =>
-      statsFromFooter(f, table.schema, Map.empty,
+    manifestOf(table, "manifest-eqdel", listParquet(delDir).map { f =>
+      addedFile(statsFromFooter(f, table.schema, Map.empty,
         content = graft.core.DataFileContent.EqualityDeletes, None)
-        .copy(equalityIds = eqIds)
-    }
-    writeManifest(table, s"manifest-eqdel-$snapId", 1, table.spec.specId,
-      StructT(Nil), delFiles.map(info => ManifestEntry(
-        ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info)),
-      snapId, seq)
+        .copy(equalityIds = eqIds), snapId, seq)
+    })
   }
 
   /** ATOMIC retract-and-replace: ONE snapshot carrying an equality-delete
@@ -750,41 +716,22 @@ object TableWriter {
     else publish(table, stageDeltaSnapshot(table, added, posDeleteFiles))
   }
 
-  /** Stage the MoR delta snapshot (manifests + manifest list on disk, no
-    * metadata commit) — the body of [[commitDelta]], shared with
-    * [[RestTransaction.stageDelta]]. */
+  /** Stage the MoR delta snapshot — the body of [[commitDelta]], shared
+    * with [[RestTransaction.stageDelta]]. */
   private def stageDeltaSnapshot(table: IcebergTable,
                                  added: Seq[graft.spark.CowFileOut],
                                  posDeleteFiles: Seq[String]): Snapshot = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val lineage = assignLineage(table.metadata,
-      added.map(addedEntry(table, _, snapId, seq)))
-    val addedEntries = lineage.entries
     val delInfos = posDeleteFiles.map { p =>
       statsFromFooter(new File(p), table.schema, Map.empty,
         content = DataFileContent.PositionDeletes,
         overrideSchema = Some(posDeleteSchema))
     }
-    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, liveManifests(table) ++
-      addedManifest(table, addedEntries, "manifest-mor", snapId, seq,
-        lineage.manifestFirstRowId) ++
-      addedManifest(table, delInfos.map(info => ManifestEntry(
-        ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info)),
-        "manifest-mor-del", snapId, seq))
-    val op = if (addedEntries.isEmpty) OpDelete else OpOverwrite
-    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(op, Map(
-        "added-data-files" -> addedEntries.size.toString,
-        // added-records makes the V3 next-row-id advance exact for the
-        // delta commit's appended rows
-        "added-records" -> addedEntries.map(_.dataFile.recordCount).sum.toString,
-        "added-delete-files" -> delInfos.size.toString,
-        "added-position-deletes" -> delInfos.map(_.recordCount).sum.toString))),
-      Some(table.schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
+    stageSnapshot(table) { (snapId, seq) =>
+      SnapshotChanges(if (added.isEmpty) OpDelete else OpOverwrite,
+        liveManifests(table),
+        Seq(manifestOf(table, "manifest-mor", added.map(addedEntry(table, _, snapId, seq))),
+          manifestOf(table, "manifest-mor-del", delInfos.map(addedFile(_, snapId, seq)))))
+    }
   }
 
   /** Every commit between `sinceSnapshotId` and the current head is a
@@ -893,24 +840,105 @@ object TableWriter {
     * whose materialized id is null (pre-lineage files), exactly the
     * spec's assignment rule. The id-space gap this leaves (the rewrite's
     * range is mostly unused) is allowed: row ids need not be contiguous. */
-  private[spark] final case class Lineage(entries: Seq[ManifestEntry],
-                                          manifestFirstRowId: Option[Long],
-                                          snapshotFirstRowId: Option[Long])
+  private final case class Lineage(manifests: Seq[(NewManifest, Option[Long])],
+                                   snapshotFirstRowId: Option[Long])
 
-  private[spark] def assignLineage(md: TableMetadata,
-                                   entries: Seq[ManifestEntry]): Lineage = {
-    if (md.formatVersion < 3) return Lineage(entries, None, None)
+  /** Stamps the ADDED data entries of `manifests`, in order; each manifest
+    * pairs with the first id it stamped (None when it stamped none). */
+  private def assignLineage(md: TableMetadata,
+                            manifests: Seq[NewManifest]): Lineage = {
+    if (md.formatVersion < 3) return Lineage(manifests.map(_ -> None), None)
     val base = md.nextRowId.getOrElse(0L)
     var cursor = base
-    val stamped = entries.map { e =>
-      if (e.dataFile.content == DataFileContent.Data &&
-          e.status == ManifestEntryStatus.Added && e.dataFile.firstRowId.isEmpty) {
-        val r = e.copy(dataFile = e.dataFile.copy(firstRowId = Some(cursor)))
-        cursor += e.dataFile.recordCount
-        r
-      } else e
+    val stamped = manifests.map { m =>
+      val first = cursor
+      val entries = m.entries.map { e =>
+        if (e.dataFile.content == DataFileContent.Data &&
+            e.status == ManifestEntryStatus.Added && e.dataFile.firstRowId.isEmpty) {
+          val r = e.copy(dataFile = e.dataFile.copy(firstRowId = Some(cursor)))
+          cursor += e.dataFile.recordCount
+          r
+        } else e
+      }
+      (m.copy(entries = entries), if (cursor > first) Some(first) else None)
     }
-    Lineage(stamped, if (cursor > base) Some(base) else None, Some(base))
+    Lineage(stamped, Some(base))
+  }
+
+  /** One manifest a staged snapshot writes: `entries` under spec `specId`
+    * and its partition type; content 0 holds data files, 1 delete files.
+    * `tag` names the file. */
+  private final case class NewManifest(tag: String, content: Int, specId: Int,
+                                       partType: StructT,
+                                       entries: Seq[ManifestEntry])
+
+  /** What one operation's snapshot is made of: the manifests it carries by
+    * reference, the ones it writes (its ADDED entries, and rewritten
+    * manifests whose removals stay as DELETED entries, see [[retire]]),
+    * and the operation's own summary keys. */
+  private final case class SnapshotChanges(op: SnapshotOp,
+                                           carried: Seq[ManifestFile],
+                                           written: Seq[NewManifest],
+                                           extraSummary: Map[String, String] = Map.empty)
+
+  /** The one snapshot producer: every commit that adds a snapshot stages it
+    * here. It allocates the snapshot id and sequence number and hands them
+    * to `body` (DV blobs and delete directories record them before
+    * staging), assigns row lineage to the added data entries under
+    * `landsOn` (the metadata the commit lands on), writes the non-empty
+    * manifests of `body`'s changes and one manifest list over the carried
+    * and written manifests, and summarizes the entries it wrote. Pure
+    * staging: the returned snapshot is not yet committed. */
+  private def stageSnapshot(table: IcebergTable, parent: Option[Snapshot],
+                            landsOn: TableMetadata)
+                           (body: (Long, Long) => SnapshotChanges): Snapshot = {
+    val seq = table.metadata.lastSequenceNumber + 1
+    val snapId = System.nanoTime()
+    val changes = body(snapId, seq)
+    val lineage = assignLineage(landsOn, changes.written)
+    val written = lineage.manifests.filter(_._1.entries.nonEmpty).zipWithIndex.map {
+      case ((m, firstRowId), i) =>
+        writeManifest(table, s"${m.tag}-$snapId-$i", m, snapId, seq, firstRowId)
+    }
+    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
+    ManifestIO.writeManifestList(listFile, changes.carried ++ written)
+    Snapshot(snapId, parent.map(_.snapshotId), seq, System.currentTimeMillis(),
+      listFile.getPath,
+      Some(SnapshotSummary(changes.op,
+        summaryOf(lineage.manifests.flatMap(_._1.entries)) ++ changes.extraSummary)),
+      Some(table.schema.schemaId), firstRowId = lineage.snapshotFirstRowId)
+  }
+
+  /** [[stageSnapshot]] on main's head, landing on the table's metadata. */
+  private def stageSnapshot(table: IcebergTable)
+                           (body: (Long, Long) => SnapshotChanges): Snapshot =
+    stageSnapshot(table, table.currentSnapshot, table.metadata)(body)
+
+  /** The spec's summary counts of one snapshot, from the entries it wrote:
+    * ADDED data and delete files, and DELETED data files. Every key is
+    * written, 0 included. `added-records` is what a V3 commit advances
+    * `next-row-id` by; streaming admission control reads `added-files-size`
+    * for maxBytesPerTrigger without touching manifests. */
+  private def summaryOf(entries: Seq[ManifestEntry]): Map[String, String] = {
+    def files(status: Int) = entries.filter(_.status == status).map(_.dataFile)
+    val (addedData, addedDeletes) =
+      files(ManifestEntryStatus.Added).partition(_.content == DataFileContent.Data)
+    val deletedData =
+      files(ManifestEntryStatus.Deleted).filter(_.content == DataFileContent.Data)
+    def records(fs: Seq[DataFileInfo]): Long = fs.map(_.recordCount).sum
+    def deletes(content: Int): Long = records(addedDeletes.filter(_.content == content))
+    Map(
+      "added-data-files" -> addedData.size,
+      "added-records" -> records(addedData),
+      // a deletion vector counts its blob, not the Puffin container it shares
+      "added-files-size" -> (addedData ++ addedDeletes).map(f =>
+        if (f.isDeletionVector) f.contentSizeInBytes.get else f.fileSizeInBytes).sum,
+      "added-delete-files" -> addedDeletes.size,
+      "added-position-deletes" -> deletes(DataFileContent.PositionDeletes),
+      "added-equality-deletes" -> deletes(DataFileContent.EqualityDeletes),
+      "deleted-data-files" -> deletedData.size,
+      "deleted-records" -> records(deletedData)
+    ).map { case (k, v) => k -> v.toString }
   }
 
   /** Manifests whose entries are all DELETED carry no live files — they
@@ -939,10 +967,6 @@ object TableWriter {
                                    touchedManifests: Option[Set[String]],
                                    sortOrder: Option[SortOrder],
                                    op: SnapshotOp): Snapshot = {
-    val md = table.metadata
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val metaDir = metadataDir(table)
     val isRemoved: String => Boolean = p => removedPaths.forall(_.contains(p))
     val (dataManifests, deleteManifests) =
       liveManifests(table).partition(_.content == 0)
@@ -965,37 +989,28 @@ object TableWriter {
       es.exists(e => isRemoved(e.dataFile.path))
     }
     val untouched = untouchedRead.map(_._1) ++ skipped
-
-    // rewritten manifests keep their OWN spec's partition type (specs may
-    // have evolved — writing old tuples under the new partition struct
-    // would drop their values); the NEXT commit drops all-DELETED ones
-    val rewritten = touched.zipWithIndex.map { case ((m, es), i) =>
-      val (gone, kept) = es.partition(e => isRemoved(e.dataFile.path))
-      writeManifest(table, s"manifest-cow-$snapId-$i", 0, m.partitionSpecId,
-        partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
-        retire(kept, gone, snapId), snapId, seq)
+    val split = touched.map { case (m, es) =>
+      m -> es.partition(e => isRemoved(e.dataFile.path))
     }
 
-    // a sorted rewrite stamps its order so readers can claim per-file
-    // ordering (SupportsReportOrdering gates on this exact id)
-    val lineage = assignLineage(md, added.map(addedEntry(table, _, snapId, seq,
-      sortOrder.fold(0)(_.orderId))))
-    val addedEntries = lineage.entries
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, untouched ++ rewritten ++
-      addedManifest(table, addedEntries, "manifest-cow", snapId, seq,
-        lineage.manifestFirstRowId) ++
-      (if (removedPaths.isEmpty) Nil else deleteManifests))
-    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(op,
+    stageSnapshot(table) { (snapId, seq) =>
+      // rewritten manifests keep their OWN spec's partition type (specs may
+      // have evolved — writing old tuples under the new partition struct
+      // would drop their values); the NEXT commit drops all-DELETED ones
+      val rewritten = split.map { case (m, (gone, kept)) =>
+        NewManifest("manifest-cow", 0, m.partitionSpecId,
+          partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
+          retire(kept, gone, snapId))
+      }
+      // a sorted rewrite stamps its order so readers can claim per-file
+      // ordering (SupportsReportOrdering gates on this exact id)
+      SnapshotChanges(op,
+        untouched ++ (if (removedPaths.isEmpty) Nil else deleteManifests),
+        rewritten :+ manifestOf(table, "manifest-cow", added.map(
+          addedEntry(table, _, snapId, seq, sortOrder.fold(0)(_.orderId)))),
         Map("replaced-data-files" ->
-          rewritten.map(_.deletedFilesCount).sum.toString,
-          "added-data-files" -> addedEntries.size.toString,
-          "added-records" ->
-            addedEntries.map(_.dataFile.recordCount).sum.toString))),
-      Some(table.schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
+          split.map { case (_, (gone, _)) => gone.size }.sum.toString))
+    }
   }
 
   /** Compaction: rewrite the current snapshot's live rows (MoR deletes
@@ -1581,11 +1596,6 @@ object TableWriter {
       .filter(_.dataFile.isDeletionVector)
       .map(_.copy(status = ManifestEntryStatus.Existing))
 
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val metaDir = new File(table.location, "metadata")
-    val delDir = new File(table.location, s"data/deletes-rw-$snapId")
-
     // a DV-covered file's parquet tombstones are reader-ignored (their
     // positions were merged into the DV when it was created) — dropping
     // them here is exact, like danglers
@@ -1605,55 +1615,35 @@ object TableWriter {
         livePaths.toSeq.map(_.stripPrefix("file:")), spark)
       .repartitionByRange(outFiles, col("file_path"), col("pos"))
       .sortWithinPartitions("file_path", "pos")
-    merged.write.parquet(delDir.getPath)
 
-    val mergedInfos = listParquet(delDir).map { f =>
-      statsFromFooter(f, table.schema, Map.empty,
-        content = DataFileContent.PositionDeletes,
-        overrideSchema = Some(posDeleteSchema))
-    }
-    val mergedEntries = mergedInfos.map(i => ManifestEntry(
-      ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), i))
-    val mf = new File(metaDir, s"manifest-del-rw-$snapId.avro")
-    ManifestIO.writeManifest(mf, mergedEntries, StructT(Nil))
-    val posManifest = ManifestFile(
-      path = mf.getPath, length = mf.length(),
-      partitionSpecId = table.spec.specId, content = 1,
-      sequenceNumber = seq,
-      minSequenceNumber =
-        mergedEntries.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-      addedSnapshotId = snapId,
-      addedFilesCount = mergedEntries.size, existingFilesCount = 0,
-      deletedFilesCount = posFiles.size,
-      addedRowsCount = mergedInfos.map(_.recordCount).sum,
-      existingRowsCount = 0,
-      deletedRowsCount = posFiles.map(_.dataFile.recordCount).sum,
-      partitions = Nil, formatVersion = 2)
-    // Eq entries rescued from mixed manifests: one manifest per original
-    // spec, partition type preserved so tuples survive the rewrite.
-    val eqManifests = eqEntries.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (specId, tagged) =>
-        writeManifest(table, s"manifest-del-rw-eq-$snapId-$specId", 1, specId,
-          partTypeOf(table, specId, StructT(Nil)),
-          retire(tagged.map(_._2), Nil, snapId), snapId, seq)
-    }
-    val dvManifests =
-      if (dvRescued.isEmpty) Nil
-      else Seq(writeManifest(table, s"manifest-del-rw-dv-$snapId", 1,
-        table.spec.specId, StructT(Nil), dvRescued, snapId, seq))
-
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile,
-      manifests.filter(_.content == 0) ++ eqOnlyManifests.map(_._1) ++
-        (posManifest +: eqManifests) ++ dvManifests)
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, Some(snap.snapshotId), seq, now,
-      listFile.getPath,
-      Some(SnapshotSummary(OpReplace,
+    val snapshot = stageSnapshot(table) { (snapId, seq) =>
+      val delDir = new File(table.location, s"data/deletes-rw-$snapId")
+      merged.write.parquet(delDir.getPath)
+      val mergedInfos = listParquet(delDir).map { f =>
+        statsFromFooter(f, table.schema, Map.empty,
+          content = DataFileContent.PositionDeletes,
+          overrideSchema = Some(posDeleteSchema))
+      }
+      // Eq entries rescued from mixed manifests: one manifest per original
+      // spec, partition type preserved so tuples survive the rewrite.
+      val eqManifests = eqEntries.groupBy(_._1).toSeq.sortBy(_._1).map {
+        case (specId, tagged) =>
+          NewManifest("manifest-del-rw-eq", 1, specId,
+            partTypeOf(table, specId, StructT(Nil)),
+            retire(tagged.map(_._2), Nil, snapId))
+      }
+      SnapshotChanges(OpReplace,
+        manifests.filter(_.content == 0) ++ eqOnlyManifests.map(_._1),
+        // the merged files replace the rewritten ones, which stay as
+        // DELETED entries of the same manifest
+        (manifestOf(table, "manifest-del-rw",
+          mergedInfos.map(addedFile(_, snapId, seq)) ++ retire(Nil, posFiles, snapId)) +:
+          eqManifests) :+ manifestOf(table, "manifest-del-rw-dv", dvRescued),
         Map("delete-files-rewritten" -> posFiles.size.toString,
-          "delete-files-created" -> mergedEntries.size.toString))),
-      Some(table.schema.schemaId))
-    (publish(table, snapshot), posFiles.size, mergedEntries.size)
+          "delete-files-created" -> mergedInfos.size.toString))
+    }
+    (publish(table, snapshot), posFiles.size,
+      snapshot.summary.get.properties("delete-files-created").toInt)
   }
 
   def rewriteManifests(table: IcebergTable): IcebergTable = {
@@ -1665,10 +1655,6 @@ object TableWriter {
     val manifests = ManifestIO.readManifestList(table.io.open(snap.manifestList))
     val (dataManifests, deleteManifests) = manifests.partition(_.content == 0)
     if (dataManifests.size <= 1) return table
-
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val metaDir = metadataDir(table)
 
     val bySpec = dataManifests.groupBy(_.partitionSpecId).toSeq.sortBy(_._1)
     val rewritten = bySpec.flatMap { case (specId, ms) =>
@@ -1687,23 +1673,15 @@ object TableWriter {
         val groups = math.max(1, math.min(entries.size,
           math.ceil(totalBytes.toDouble / targetBytes).toInt))
         val perGroup = math.ceil(entries.size.toDouble / groups).toInt
-        entries.grouped(perGroup).zipWithIndex.map { case (es, i) =>
-          writeManifest(table, s"manifest-rw-$snapId-$specId-$i", 0, specId,
-            partType, es, snapId, seq)
-        }.toSeq
+        entries.grouped(perGroup).map(es =>
+          NewManifest("manifest-rw", 0, specId, partType, es)).toSeq
       }
     }
-
-    val listFile = new File(metaDir, s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, rewritten ++ deleteManifests)
-    val now = System.currentTimeMillis()
-    val snapshot = Snapshot(snapId, Some(snap.snapshotId), seq, now,
-      listFile.getPath,
-      Some(SnapshotSummary(OpReplace,
+    publish(table, stageSnapshot(table) { (_, _) =>
+      SnapshotChanges(OpReplace, deleteManifests, rewritten,
         Map("manifests-rewritten" -> dataManifests.size.toString,
-          "manifests-created" -> rewritten.size.toString))),
-      Some(table.schema.schemaId))
-    publish(table, snapshot)
+          "manifests-created" -> rewritten.size.toString))
+    })
   }
 
   def rollbackTo(table: IcebergTable, snapshotId: Long): IcebergTable = {
@@ -1869,34 +1847,20 @@ object TableWriter {
 
   /** Stage an APPEND snapshot for already-written data files: footer stats
     * + task-side NaN counts, one new manifest, the parent's manifests
-    * carried by reference, new manifest list. Pure staging — the returned
-    * Snapshot is not yet committed. */
+    * carried by reference. */
   private def stageAppendSnapshot(table: IcebergTable,
                                   added: Seq[graft.spark.CowFileOut],
                                   extraSummary: Map[String, String],
                                   sortOrderId: Int = 0,
                                   parentOverride: Option[Snapshot] = None)
       : Snapshot = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val lineage = assignLineage(table.metadata, added.sortBy(_.path)
-      .map(addedEntry(table, _, snapId, seq, sortOrderId)))
-    val entries = lineage.entries
     val parent = parentOverride.orElse(table.currentSnapshot)
-    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, liveManifests(table, parent) ++
-      addedManifest(table, entries, "manifest", snapId, seq,
-        lineage.manifestFirstRowId))
-    Snapshot(snapId, parent.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath, Some(SnapshotSummary(OpAppend,
-        Map("added-data-files" -> entries.size.toString,
-          "added-records" -> entries.map(_.dataFile.recordCount).sum.toString,
-          // streaming admission control reads this for maxBytesPerTrigger
-          // without touching manifests
-          "added-files-size" -> entries.map(_.dataFile.fileSizeInBytes).sum.toString)
-          ++ extraSummary)),
-      Some(table.schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
+    stageSnapshot(table, parent, table.metadata) { (snapId, seq) =>
+      SnapshotChanges(OpAppend, liveManifests(table, parent),
+        Seq(manifestOf(table, "manifest", added.sortBy(_.path)
+          .map(addedEntry(table, _, snapId, seq, sortOrderId)))),
+        extraSummary)
+    }
   }
 
   /** Commit an APPEND snapshot of already-written data files (the
@@ -2053,31 +2017,23 @@ object TableWriter {
     require(addedManifests.forall(_.content == 0),
       s"snapshot $snapshotId added delete manifests — not cherry-pickable")
 
-    val seq = md.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val newManifests = addedManifests.zipWithIndex.map { case (m, i) =>
-      val added = ManifestIO.readManifestEntries(table.io.open(m.path), m)
+    val picked = addedManifests.map(m => m ->
+      ManifestIO.readManifestEntries(table.io.open(m.path), m)
         .filter(e => e.status == ManifestEntryStatus.Added &&
-          e.snapshotId.contains(snap.snapshotId))
-      writeManifest(table, s"manifest-pick-$snapId-$i", 0, m.partitionSpecId,
-        partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
-        added.map(e => ManifestEntry(
-          ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), e.dataFile)),
-        snapId, seq)
+          e.snapshotId.contains(snap.snapshotId)).map(_.dataFile))
+    stageSnapshot(table) { (snapId, seq) =>
+      SnapshotChanges(OpAppend, liveManifests(table),
+        picked.map { case (m, files) =>
+          NewManifest("manifest-pick", 0, m.partitionSpecId,
+            partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
+            files.map(addedFile(_, snapId, seq)))
+        },
+        Map("source-snapshot-id" -> snapshotId.toString)
+          // publishing a WAP stage stamps its id, so the duplicate-WAP
+          // guard holds even after the staged snapshot itself is expired
+          ++ snap.summary.flatMap(_.properties.get("wap.id"))
+            .map("published-wap-id" -> _))
     }
-    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, liveManifests(table) ++ newManifests)
-    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(OpAppend, Map(
-        "source-snapshot-id" -> snapshotId.toString,
-        "added-data-files" -> newManifests.map(_.addedFilesCount).sum.toString,
-        "added-records" -> newManifests.map(_.addedRowsCount).sum.toString)
-        // publishing a WAP stage stamps its id, so the duplicate-WAP
-        // guard holds even after the staged snapshot itself is expired
-        ++ snap.summary.flatMap(_.properties.get("wap.id"))
-          .map("published-wap-id" -> _))),
-      Some(table.schema.schemaId))
   }
 
   /** Import EXISTING parquet files into the table without rewriting them
@@ -2146,29 +2102,16 @@ object TableWriter {
     * by construction. */
   private def stageEqualitySnapshot(table: IcebergTable, keys: DataFrame,
                                     keyCols: Seq[String],
-                                    rows: Option[DataFrame]): Snapshot = {
-    val seq = table.metadata.lastSequenceNumber + 1
-    val snapId = System.nanoTime()
-    val delManifest = writeEqDeleteManifest(table, keys, keyCols, snapId, seq)
-    val outs = rows.toSeq.flatMap(df => writeDistributed(df, newDataDir(table),
-      table.schema, table.spec, table.properties, SortOrder.unsorted,
-      preClustered = false))
-    val lineage = assignLineage(table.metadata,
-      outs.sortBy(_.path).map(addedEntry(table, _, snapId, seq)))
-    val entries = lineage.entries
-    val listFile = new File(metadataDir(table), s"snap-$snapId.avro")
-    ManifestIO.writeManifestList(listFile, liveManifests(table) ++
-      Seq(delManifest) ++ addedManifest(table, entries, "manifest-eq", snapId,
-        seq, lineage.manifestFirstRowId))
-    Snapshot(snapId, table.currentSnapshot.map(_.snapshotId), seq,
-      System.currentTimeMillis(), listFile.getPath,
-      Some(SnapshotSummary(if (rows.isEmpty) OpDelete else OpOverwrite, Map(
-        "added-data-files" -> entries.size.toString,
-        "added-records" -> entries.map(_.dataFile.recordCount).sum.toString,
-        "added-delete-files" -> "1"))),
-      Some(table.schema.schemaId),
-      firstRowId = lineage.snapshotFirstRowId)
-  }
+                                    rows: Option[DataFrame]): Snapshot =
+    stageSnapshot(table) { (snapId, seq) =>
+      val deletes = eqDeleteManifest(table, keys, keyCols, snapId, seq)
+      val outs = rows.toSeq.flatMap(df => writeDistributed(df, newDataDir(table),
+        table.schema, table.spec, table.properties, SortOrder.unsorted,
+        preClustered = false))
+      SnapshotChanges(if (rows.isEmpty) OpDelete else OpOverwrite,
+        liveManifests(table), Seq(deletes, manifestOf(table, "manifest-eq",
+          outs.sortBy(_.path).map(addedEntry(table, _, snapId, seq)))))
+    }
 
   /** An [[IcebergTable]] over a REST-loaded table. With `catalog` the
     * handle commits through it ([[RestTableOperations]]; `afterCommit`
@@ -2469,38 +2412,37 @@ object TableWriter {
       case _ => statsFromFooter(file, table.schema, partition,
         DataFileContent.Data, None, f.nanCounts)
     }
-    ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq),
-      info.copy(sortOrderId = Some(sortOrderId)))
+    addedFile(info.copy(sortOrderId = Some(sortOrderId)), snapId, seq)
   }
 
-  /** The manifest holding one snapshot's ADDED entries — data (under the
-    * current spec's partition type) or deletes — or None when empty. */
-  private def addedManifest(table: IcebergTable, entries: Seq[ManifestEntry],
-                            name: String, snapId: Long, seq: Long,
-                            firstRowId: Option[Long] = None): Option[ManifestFile] =
-    entries.headOption.map { head =>
-      val data = head.dataFile.content == DataFileContent.Data
-      writeManifest(table, s"$name-$snapId", if (data) 0 else 1,
-        table.spec.specId,
-        if (data) table.spec.partitionType(table.schema) else StructT(Nil),
-        entries, snapId, seq, firstRowId)
-    }
+  /** The ADDED entry of snapshot `snapId` (at sequence `seq`) for `info`. */
+  private def addedFile(info: DataFileInfo, snapId: Long, seq: Long): ManifestEntry =
+    ManifestEntry(ManifestEntryStatus.Added, Some(snapId), Some(seq), Some(seq), info)
 
-  /** Write `entries` as manifest `<name>.avro` of snapshot `snapId` (at
-    * sequence `seq`) and return its manifest-list row: file and row counts
-    * per entry status, the lowest entry sequence number, and the partition
+  /** A manifest of `entries` under the current spec: data files under its
+    * partition type, delete files unpartitioned. */
+  private def manifestOf(table: IcebergTable, tag: String,
+                         entries: Seq[ManifestEntry]): NewManifest = {
+    val data = entries.forall(_.dataFile.content == DataFileContent.Data)
+    NewManifest(tag, if (data) 0 else 1, table.spec.specId,
+      if (data) table.spec.partitionType(table.schema) else StructT(Nil), entries)
+  }
+
+  /** Write `m` as manifest `<name>.avro` of snapshot `snapId` (at sequence
+    * `seq`) and return its manifest-list row: file and row counts per
+    * entry status, the lowest entry sequence number, and the partition
     * summary of the entries still live. */
-  private def writeManifest(table: IcebergTable, name: String, content: Int,
-                            specId: Int, partType: StructT,
-                            entries: Seq[ManifestEntry], snapId: Long, seq: Long,
-                            firstRowId: Option[Long] = None): ManifestFile = {
+  private def writeManifest(table: IcebergTable, name: String, m: NewManifest,
+                            snapId: Long, seq: Long,
+                            firstRowId: Option[Long]): ManifestFile = {
     val mf = new File(metadataDir(table), s"$name.avro")
-    ManifestIO.writeManifest(mf, entries, partType)
+    val entries = m.entries
+    ManifestIO.writeManifest(mf, entries, m.partType)
     val by = entries.groupBy(_.status).withDefaultValue(Nil)
     def rows(status: Int): Long = by(status).map(_.dataFile.recordCount).sum
     ManifestFile(
       path = mf.getPath, length = mf.length(),
-      partitionSpecId = specId, content = content, sequenceNumber = seq,
+      partitionSpecId = m.specId, content = m.content, sequenceNumber = seq,
       minSequenceNumber = entries.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
       addedSnapshotId = snapId,
       addedFilesCount = by(ManifestEntryStatus.Added).size,
@@ -2510,7 +2452,7 @@ object TableWriter {
       existingRowsCount = rows(ManifestEntryStatus.Existing),
       deletedRowsCount = rows(ManifestEntryStatus.Deleted),
       partitions = partitionSummaries(
-        entries.filter(_.status != ManifestEntryStatus.Deleted), partType),
+        entries.filter(_.status != ManifestEntryStatus.Deleted), m.partType),
       formatVersion = 2, firstRowId = firstRowId)
   }
 

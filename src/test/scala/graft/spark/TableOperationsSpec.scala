@@ -112,4 +112,124 @@ class TableOperationsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(file._3 == Map(TableMetadata.MainBranch -> (BranchRef, Some(2L)),
       "audit" -> (BranchRef, Some(4L))))
   }
+
+  /** The spec's summary counts every snapshot carries, 0 included. */
+  private val SpecSummaryKeys = Set("added-data-files", "added-records",
+    "added-files-size", "added-delete-files", "added-position-deletes",
+    "added-equality-deletes", "deleted-data-files", "deleted-records")
+
+  /** What is wrong with `snap`'s summary and manifest-list rows, measured
+    * against the entries of the manifests it wrote itself (DELETED ones
+    * included): nothing, when the list is empty. */
+  private def summaryProblems(t: IcebergTable, snap: Snapshot,
+                              extras: Set[String]): Seq[String] = {
+    import ManifestEntryStatus.{Added, Deleted, Existing}
+    val summary = snap.summary.get.properties
+    val keyProblem =
+      if (summary.keySet == SpecSummaryKeys ++ extras) Nil
+      else Seq(s"keys ${summary.keySet.toSeq.sorted}")
+    val own = ManifestIO.readManifestList(t.io.open(snap.manifestList))
+      .filter(_.addedSnapshotId == snap.snapshotId)
+    val read = own.map(m =>
+      m -> ManifestIO.readManifestEntries(t.io.open(m.path), m, discardDeleted = false))
+    val rowProblems = read.flatMap { case (m, es) =>
+      def of(status: Int) = es.filter(_.status == status)
+      val counted = Seq(Added, Existing, Deleted).map(s =>
+        (of(s).size, of(s).map(_.dataFile.recordCount).sum))
+      val listed = Seq((m.addedFilesCount, m.addedRowsCount),
+        (m.existingFilesCount, m.existingRowsCount),
+        (m.deletedFilesCount, m.deletedRowsCount))
+      if (counted == listed) Nil
+      else Seq(s"manifest-list row $listed, manifest entries $counted (${m.path})")
+    }
+    val entries = read.flatMap(_._2)
+    def files(status: Int, contents: Int*): Seq[DataFileInfo] =
+      entries.filter(e => e.status == status && contents.contains(e.dataFile.content))
+        .map(_.dataFile)
+    def records(fs: Seq[DataFileInfo]): Long = fs.map(_.recordCount).sum
+    import DataFileContent.{Data, EqualityDeletes, PositionDeletes}
+    val added = files(Added, Data, PositionDeletes, EqualityDeletes)
+    val expected = Map(
+      "added-data-files" -> files(Added, Data).size.toLong,
+      "added-records" -> records(files(Added, Data)),
+      "added-files-size" -> added.map(f =>
+        if (f.isDeletionVector) f.contentSizeInBytes.get else f.fileSizeInBytes).sum,
+      "added-delete-files" -> files(Added, PositionDeletes, EqualityDeletes).size.toLong,
+      "added-position-deletes" -> records(files(Added, PositionDeletes)),
+      "added-equality-deletes" -> records(files(Added, EqualityDeletes)),
+      "deleted-data-files" -> files(Deleted, Data).size.toLong,
+      "deleted-records" -> records(files(Deleted, Data)))
+    val countProblems = expected.toSeq.sortBy(_._1).collect {
+      case (k, v) if !summary.get(k).contains(v.toString) =>
+        s"$k = ${summary.get(k)}, manifests say $v"
+    }
+    val lineageProblem =
+      if (t.metadata.formatVersion < 3 || snap.firstRowId.isDefined) Nil
+      else Seq("V3 snapshot without first-row-id")
+    keyProblem ++ rowProblems ++ countProblems ++ lineageProblem
+  }
+
+  test("every snapshot's summary counts the entries of the manifests it " +
+      "wrote, and their manifest-list rows agree with them") {
+    val loc = tmpDir("ops_summary")
+    TableWriter.create(rows(1, 2, 3), loc)
+    def t = IcebergTables.load(loc)
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    // (operation, its own summary keys, the call)
+    val steps: Seq[(String, Set[String], () => Any)] = Seq(
+      ("append", Set.empty, () => TableWriter.append(t, rows(4, 5, 6))),
+      ("V2 deleteWhere", Set.empty,
+        () => TableWriter.deleteWhere(t, spark, col("k") === 2L)),
+      ("second V2 deleteWhere", Set.empty,
+        () => TableWriter.deleteWhere(t, spark, col("k") === 5L)),
+      // one equality-delete file per non-empty shuffle partition
+      ("deleteEquality", Set.empty, () => {
+        val was = spark.conf.getOption(coalesce)
+        spark.conf.set(coalesce, "false")
+        try TableWriter.deleteEquality(t, spark.range(6, 14, 1, 4).toDF("k"), Seq("k"))
+        finally was.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+      }),
+      ("replaceEquality", Set.empty,
+        () => TableWriter.replaceEquality(t, rows(1).select("k"), Seq("k"), rows(1))),
+      ("rewritePositionDeletes", Set("delete-files-rewritten", "delete-files-created"),
+        () => TableWriter.rewritePositionDeletes(t, spark)),
+      ("rewriteManifests", Set("manifests-rewritten", "manifests-created"),
+        () => TableWriter.rewriteManifests(t)),
+      ("cherrypickSnapshot", Set("source-snapshot-id", "published-wap-id"), () => {
+        val staged = TableWriter.stageWapAppend(t, rows(20), "summary-wap")
+        TableWriter.cherrypickSnapshot(staged, staged.metadata.snapshots.find(
+          _.summary.exists(_.properties.get("wap.id").contains("summary-wap")))
+          .get.snapshotId)
+      }),
+      ("compact", Set("replaced-data-files"), () => TableWriter.compact(t, spark)),
+      ("overwrite", Set("replaced-data-files"),
+        () => TableWriter.overwrite(t, rows(1, 2, 3))),
+      ("V2 deleteWhere before the upgrade", Set.empty,
+        () => TableWriter.deleteWhere(t, spark, col("k") === 1L)),
+      ("upgradeFormatVersion", Set("deletion-vectors-added", "format-version",
+        "position-delete-files-removed"),
+        () => TableWriter.upgradeFormatVersion(t, spark, 3)),
+      ("V3 deleteWhere", Set("deletion-vectors-added"),
+        () => TableWriter.deleteWhere(t, spark, col("k") === 2L)),
+      ("V3 append", Set.empty, () => TableWriter.append(t, rows(7))),
+      ("V3 rewriteManifests", Set("manifests-rewritten", "manifests-created"),
+        () => TableWriter.rewriteManifests(t)))
+    val snapshots = steps.map { case (name, extras, run) =>
+      val before = t.currentSnapshot.map(_.snapshotId)
+      run()
+      val table = t
+      val snap = table.currentSnapshot.get
+      assert(!before.contains(snap.snapshotId), s"$name committed no snapshot")
+      name -> (snap, summaryProblems(table, snap, extras))
+    }
+    val problems = snapshots.collect {
+      case (name, (_, ps)) if ps.nonEmpty => s"$name: ${ps.mkString("; ")}"
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+    val eq = snapshots.toMap.apply("deleteEquality")._1
+    assert(eq.summary.get.properties("added-delete-files").toInt > 1,
+      "the equality delete should write more than one file")
+    assert(t.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(3L, 7L))
+  }
 }
