@@ -249,6 +249,16 @@ object DeleteMatching extends Serializable {
     NestedField(2147483546, "file_path", StringT, required = true),
     NestedField(2147483545, "pos", LongT, required = true))))
 
+  /** The scheme prefix a path drops in its tombstone form, as a regex (the
+    * form Spark's `regexp_replace` takes for whole tombstone frames). */
+  val FileScheme = "^file:(//)?"
+  private val FileSchemeRe = java.util.regex.Pattern.compile(FileScheme)
+
+  /** A path as positional tombstones and deletion vectors address it: no
+    * `file:` or `file://` scheme, so `file:///x`, `file:/x` and `/x` are
+    * one data file. */
+  def tombstonePath(p: String): String = FileSchemeRe.matcher(p).replaceFirst("")
+
   /** scanner.go:162-193: keep delete entries whose seq number is ≥ the data
     * file's (a delete applies to files committed before it), then check the
     * delete file's file_path bounds actually cover this data file. `sorted`
@@ -265,8 +275,13 @@ object DeleteMatching extends Serializable {
     }
     val idx = if (lo < sorted.size) lo else -1
     if (idx < 0) return Nil
+    // a tombstone file may address the data file with or without a scheme
+    val path = data.dataFile.path
+    val bare = tombstonePath(path)
     val pathEval = new InclusiveMetricsEvaluator(PositionalDeleteSchema,
-      Expr.equalTo("file_path", StrLit(data.dataFile.path)), caseSensitive = false)
+      if (bare == path) Expr.equalTo("file_path", StrLit(path))
+      else Expr.in("file_path", Seq(StrLit(path), StrLit(bare))),
+      caseSensitive = false)
     sorted.drop(idx)
       .filter(e => pathEval.eval(e.dataFile.stats))
       .map(_.dataFile)
@@ -408,9 +423,9 @@ final class ScanPlanner(io: FileIO, metadata: TableMetadata) {
     val (dvEntries, posParquetEntries) = allDeleteEntries
       .filter(_.dataFile.content == DataFileContent.PositionDeletes)
       .partition(_.dataFile.isDeletionVector)
-    def normPath(p: String): String = p.replaceFirst("^file:(//)?", "")
+    import DeleteMatching.tombstonePath
     val dvByTarget: Map[String, Seq[ManifestEntry]] =
-      dvEntries.groupBy(e => normPath(e.dataFile.referencedDataFile.get))
+      dvEntries.groupBy(e => tombstonePath(e.dataFile.referencedDataFile.get))
     val posDeleteEntries = posParquetEntries
       .sortBy(_.sequenceNumber.getOrElse(0L)).toIndexedSeq
     val eqDeleteEntries = allDeleteEntries
@@ -449,7 +464,7 @@ final class ScanPlanner(io: FileIO, metadata: TableMetadata) {
       // committed at or before its sequence; when one exists for a file,
       // the spec says readers MUST ignore positional delete FILES for it
       // (the writer merged them into the DV when it was produced)
-      val dvs = dvByTarget.getOrElse(normPath(e.dataFile.path), Nil)
+      val dvs = dvByTarget.getOrElse(tombstonePath(e.dataFile.path), Nil)
         .filter(_.sequenceNumber.getOrElse(0L) >= dataSeq)
         .map(_.dataFile)
       val posDeletes =

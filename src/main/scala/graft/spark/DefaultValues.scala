@@ -46,10 +46,7 @@ private[spark] object DefaultValues {
   private def absentFromFile(f: StructField, format: String, path: String): Boolean =
     format.toUpperCase match {
       case "PARQUET" =>
-        val footer = GraftReaders.footerInfo(path)
-        if (footer.hasIds && f.metadata.contains(SchemaConv.FieldIdKey))
-          !footer.ids.contains(f.metadata.getLong(SchemaConv.FieldIdKey).toInt)
-        else !FormatReaders.candidates(f).exists(footer.names.contains)
+        !GraftReaders.holds(GraftReaders.footerInfo(path), f, FormatReaders.candidates(f))
       case fmt =>
         !FormatReaders.candidates(f).exists(fileNames(fmt, path).contains)
     }

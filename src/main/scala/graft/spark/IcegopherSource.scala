@@ -1410,10 +1410,10 @@ object GraftScan {
   /** The input partitions that read one planned task — the one place a
     * [[GraftInputPartition]] is built, for batch scans, streams and change
     * reads alike. The task's delete files split into positional files,
-    * deletion vectors and equality keys (under every name each key field
-    * has had); the reader schema adds what those need plus the row index
-    * and lineage columns; historical names and the name mapping ride along
-    * for id-less files; each row-group (parquet) or byte (ORC/Avro) range
+    * deletion vectors and equality keys; the reader schema adds what those
+    * need plus the row index and lineage columns; historical names and the
+    * name mapping ride along for id-less files, data and delete files
+    * alike; each row-group (parquet) or byte (ORC/Avro) range
     * is one partition. A change read stamps its rows with `cdc` (change
     * type, commit snapshot id, commit sequence); when `cdcMatch` (a
     * commit's NEW tombstones) is non-empty the reader emits only the rows
@@ -1481,13 +1481,7 @@ object GraftScan {
       .partition(_.isDeletionVector)
     val eq = files.filter(_.content == graft.core.DataFileContent.EqualityDeletes)
       .map(d => EqDelete(d.path,
-        d.equalityIds.flatMap(id => table.schema.findColumnName(id)),
-        // every name each key field id has had, newest first: delete
-        // files written before a RENAME carry the old column name
-        d.equalityIds.map(id =>
-          (table.schema.findColumnName(id).toSeq ++
-            table.metadata.schemas.reverse.flatMap(s =>
-              s.findFieldById(id).map(_.name))).distinct)))
+        d.equalityIds.flatMap(id => table.schema.findColumnName(id))))
     (pos.map(_.path),
       dvs.map(d => DvRef(d.path, d.contentOffset.get, d.contentSizeInBytes.get)),
       eq)
@@ -1559,14 +1553,10 @@ object GraftScan {
 }
 
 /** One equality-delete file: `cols` are the key columns under their CURRENT
-  * names (data-side ordinals); `fileCols` lists, per key, every name the
-  * field id has had (newest first) — the delete file matches whichever name
-  * it was written under. */
-final case class EqDelete(path: String, cols: Seq[String],
-                          fileCols: Seq[Seq[String]] = Nil) {
-  def candidates: Seq[Seq[String]] =
-    if (fileCols.nonEmpty) fileCols else cols.map(Seq(_))
-}
+  * names. The reader requests them from the delete file as the reader
+  * schema's fields, so each resolves as the data column does: by field id,
+  * or in an id-less file by its name candidates. */
+final case class EqDelete(path: String, cols: Seq[String])
 
 /** One V3 deletion-vector blob: the Puffin container path plus the blob's
   * byte range (from the manifest entry's content_offset/size). The DV is
@@ -1691,7 +1681,7 @@ private[graft] object GraftReaders {
     * the footer anyway. */
   final case class FooterInfo(hasIds: Boolean, names: Set[String],
                               primitiveTypes: Map[String, String],
-                              ids: Set[Int] = Set.empty)
+                              ids: Set[Int], length: Long)
   private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[String, FooterInfo]()
   // cache is an optimization only: bound its memory on huge tables by
@@ -1740,10 +1730,26 @@ private[graft] object GraftReaders {
               f.getName -> f.asPrimitiveType().getPrimitiveTypeName.name()
           }.toMap,
           ids = msg.getFields.asScala.flatMap(f =>
-            Option(f.getId).map(_.intValue())).toSet)
+            Option(f.getId).map(_.intValue())).toSet,
+          length = in.getLength)
       } finally r.close()
     })
   }
+
+  /** Whether a file with `footer` holds `f`, by the rule [[createVectorized]]
+    * resolves it by: its field id when both carry ids, otherwise one of
+    * `names` (the current name and its candidates). A requested column
+    * the file lacks reads as nulls, so callers that must not see those
+    * check here first. */
+  def holds(footer: FooterInfo, f: StructField, names: Seq[String]): Boolean =
+    if (footer.hasIds && f.metadata.contains(SchemaConv.FieldIdKey))
+      footer.ids(f.metadata.getLong(SchemaConv.FieldIdKey).toInt)
+    else names.exists(footer.names)
+
+  /** A whole parquet file read row by row through [[createVectorized]]. */
+  def fileRows(path: String, readSchema: StructType): ParquetRowFileReader =
+    new ParquetRowFileReader(
+      createVectorized(path, 0L, footerInfo(path).length, readSchema))
 
   def createVectorized(path: String, start: Long, length: Long,
                        readSchema: StructType,
@@ -1882,10 +1888,11 @@ final class GraftRowReader(p: GraftInputPartition)
       : Seq[(Array[Int], Array[DataType], java.util.HashSet[Seq[Any]])] =
     eqs.groupBy(_.cols).toSeq.collect { case (cols, files) if cols.nonEmpty =>
       val ords = cols.map(readSchema.fieldIndex).toArray
-      val dts = ords.map(readSchema(_).dataType)
+      val fields = ords.map(readSchema(_))
+      val dts = fields.map(_.dataType)
       val set = new java.util.HashSet[Seq[Any]]()
-      files.foreach(f => set.addAll(DeleteFileCache.equalityKeys(f.path, f.candidates,
-        ords.indices.map(i => readSchema(ords(i))).toArray)))
+      files.foreach(f => set.addAll(DeleteFileCache.equalityKeys(f.path,
+        fields.toSeq.map(FormatReaders.candidates), fields)))
       (ords, dts, set)
     }
   private val eqMatchers = buildEqMatchers(p.eqDeletes)
@@ -2019,6 +2026,14 @@ final class GraftRowReader(p: GraftInputPartition)
   * across all its tasks; distinct executors each read it once — the
   * strategy of Apache Iceberg's Spark executor cache.
   *
+  * Delete files are decoded by the data files' own reader
+  * ([[GraftReaders.fileRows]] over Spark's vectorized parquet reader):
+  * positional files as (`file_path`, `pos`) under their reserved field ids,
+  * equality files as the reader schema's key fields, so a key column
+  * resolves by the footer rule a data column does (id, else name
+  * candidates and the name mapping) and decodes to the same Catalyst
+  * value (INT96 and millisecond timestamps, decimals, int→long widening).
+  *
   * The bound is on the decoded size of what the cache holds — the keys of
   * an equality-delete file, the positions of a positional one, the blob
   * bytes of a deletion vector — against a fixed share of the JVM's heap,
@@ -2035,8 +2050,7 @@ private[spark] class DeleteFileCache(budgetBytes: Long) {
   import java.util.concurrent.ExecutionException
   import com.google.common.cache.{Cache, CacheBuilder}
   import com.google.common.util.concurrent.{ExecutionError, UncheckedExecutionException}
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
+  import graft.core.DeleteMatching.tombstonePath
 
   /** Number of delete-file parses performed by this cache (spec hook). */
   val fileReads = new java.util.concurrent.atomic.AtomicLong(0)
@@ -2073,7 +2087,7 @@ private[spark] class DeleteFileCache(budgetBytes: Long) {
   /** Union of tombstoned positions for `dataPath` across `deleteFiles`. */
   def positionsFor(deleteFiles: Seq[String],
                    dataPath: String): java.util.HashSet[java.lang.Long] = {
-    val target = norm(dataPath)
+    val target = tombstonePath(dataPath)
     val out = new java.util.HashSet[java.lang.Long]()
     deleteFiles.foreach { df =>
       cached(PosKey(df))(loadPositions(df)).get(target).foreach(out.addAll)
@@ -2094,7 +2108,8 @@ private[spark] class DeleteFileCache(budgetBytes: Long) {
       : org.roaringbitmap.longlong.Roaring64NavigableMap = {
     val blobs = refs.map { ref =>
       cached(DvKey(ref.path, ref.offset)) {
-        val blob = graft.core.Puffin.readBlob(norm(ref.path), ref.offset, ref.length)
+        val blob = graft.core.Puffin.readBlob(tombstonePath(ref.path), ref.offset,
+          ref.length)
         (blob, ArrayBytes + blob.length)
       }
     }
@@ -2107,62 +2122,56 @@ private[spark] class DeleteFileCache(budgetBytes: Long) {
     }
   }
 
-  /** Decoded key tuples of one equality-delete file for `cols`. */
-  def equalityKeys(deleteFile: String, colCandidates: Seq[Seq[String]],
+  /** Decoded key tuples of one equality-delete file: `fields` are the key
+    * columns as the data file is read (type, field id, name candidates),
+    * `names` per key the names an id-less file may hold it under. A file
+    * holding none of a key's id or names fails, naming the file: read as
+    * nulls, the key would delete every null-keyed row. */
+  def equalityKeys(deleteFile: String, names: Seq[Seq[String]],
                    fields: Array[StructField]): java.util.HashSet[Seq[Any]] =
-    cached(EqKey(deleteFile, colCandidates))(
-      loadEqualityKeys(deleteFile, colCandidates, fields))
+    cached(EqKey(deleteFile, names, fields.toSeq))(
+      loadEqualityKeys(deleteFile, names, fields))
 
   private def loadPositions(deleteFile: String)
       : (Map[String, java.util.HashSet[java.lang.Long]], Long) = {
     val out = scala.collection.mutable.Map[String, java.util.HashSet[java.lang.Long]]()
     var bytes = 0L
-    val r = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(deleteFile)).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        val fp = norm(g.getBinary("file_path", 0).toStringUsingUTF8)
-        val set = out.getOrElseUpdate(fp, {
+    // tombstones are sorted by path: resolve each run's path once
+    var raw: org.apache.spark.unsafe.types.UTF8String = null
+    var set: java.util.HashSet[java.lang.Long] = null
+    val r = GraftReaders.fileRows(deleteFile, PositionRequest)
+    try while (r.nextKeyValue()) {
+      val row = r.getCurrentValue
+      if (!row.getUTF8String(0).equals(raw)) {
+        raw = row.getUTF8String(0).copy()
+        val fp = tombstonePath(raw.toString)
+        set = out.getOrElseUpdate(fp, {
           bytes += ElementBytes + ArrayBytes + 2L * fp.length
           new java.util.HashSet[java.lang.Long]()
         })
-        if (set.add(g.getLong("pos", 0))) bytes += ElementBytes
-        g = r.read()
       }
+      if (set.add(row.getLong(1))) bytes += ElementBytes
     } finally r.close()
     (out.toMap, bytes)
   }
 
-  private def loadEqualityKeys(deleteFile: String, colCandidates: Seq[Seq[String]],
+  private def loadEqualityKeys(deleteFile: String, names: Seq[Seq[String]],
                                fields: Array[StructField])
       : (java.util.HashSet[Seq[Any]], Long) = {
+    val footer = GraftReaders.footerInfo(deleteFile)
+    fields.indices.find(i => !GraftReaders.holds(footer, fields(i), names(i)))
+      .foreach(i => throw new IllegalStateException(
+        s"equality-delete file $deleteFile has none of ${names(i).mkString("/")}"))
+    val dts = fields.map(_.dataType)
     val set = new java.util.HashSet[Seq[Any]]()
     var bytes = 0L
-    val r = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(deleteFile)).build()
-    try {
-      var g = r.read()
-      var resolved: Array[String] = null
-      while (g != null) {
-        if (resolved == null) {
-          // a delete file written before a RENAME carries the old column
-          // name — take each key's first historical name the file has
-          val schema = g.getType
-          resolved = colCandidates.map { cands =>
-            cands.find(c => schema.containsField(c)).getOrElse(
-              throw new IllegalStateException(
-                s"equality-delete file $deleteFile has none of ${cands.mkString("/")}"))
-          }.toArray
-        }
-        val key: Seq[Any] = resolved.indices.map { i =>
-          val gi = g.getType.getFieldIndex(resolved(i))
-          if (g.getFieldRepetitionCount(gi) == 0) null
-          else canonical(readGroupValue(g, gi, fields(i).dataType))
-        }
-        if (set.add(key)) bytes += keyBytes(key)
-        g = r.read()
+    val r = GraftReaders.fileRows(deleteFile, StructType(fields))
+    try while (r.nextKeyValue()) {
+      val row = r.getCurrentValue
+      val key: Seq[Any] = dts.indices.map { i =>
+        if (row.isNullAt(i)) null else owned(row.get(i, dts(i)))
       }
+      if (set.add(key)) bytes += keyBytes(key)
     } finally r.close()
     (set, bytes)
   }
@@ -2172,13 +2181,18 @@ private[spark] class DeleteFileCache(budgetBytes: Long) {
   * JVM may grow to. */
 private[spark] object DeleteFileCache
     extends DeleteFileCache(Runtime.getRuntime.maxMemory / 8) {
-  import org.apache.parquet.example.data.Group
+  import org.apache.spark.unsafe.types.UTF8String
 
   private sealed trait Key { def file: String }
   private final case class PosKey(file: String) extends Key
-  private final case class EqKey(file: String, cols: Seq[Seq[String]]) extends Key
+  private final case class EqKey(file: String, names: Seq[Seq[String]],
+                                 fields: Seq[StructField]) extends Key
   private final case class DvKey(file: String, offset: Long) extends Key
   private final case class Decoded(value: Any, weight: Int)
+
+  /** A positional delete file's columns under their reserved field ids. */
+  private val PositionRequest: StructType =
+    SchemaConv.toSparkSchema(graft.core.DeleteMatching.PositionalDeleteSchema)
 
   // rough heap bytes: a map or hash-set element (node, table slot, boxed
   // position or key Seq; also the cost of an entry itself beside its key's
@@ -2188,12 +2202,10 @@ private[spark] object DeleteFileCache
 
   /** Estimated heap bytes of one decoded equality key. */
   private def keyBytes(key: Seq[Any]): Long = key.foldLeft(ElementBytes) {
-    case (n, s: org.apache.spark.unsafe.types.UTF8String) => n + 40 + s.numBytes
+    case (n, s: UTF8String) => n + 40 + s.numBytes
     case (n, b: Seq[_]) => n + 40 + b.size
     case (n, _) => n + 24
   }
-
-  private def norm(path: String): String = path.stripPrefix("file:")
 
   /** Canonical comparable form shared by the delete-file decode and the
     * data-row decode (arrays have reference equality; box them). */
@@ -2202,42 +2214,10 @@ private[spark] object DeleteFileCache
     case other => other
   }
 
-  /** Primitive decode for equality-delete KEY columns (identifier fields are
-    * primitives per the Iceberg spec; nested keys are rejected upstream). */
-  private def readGroupValue(g: Group, gi: Int, dt: DataType): Any = dt match {
-    case BooleanType => g.getBoolean(gi, 0)
-    case IntegerType | DateType => g.getInteger(gi, 0)
-    case LongType => g.getLong(gi, 0)
-    case FloatType => g.getFloat(gi, 0)
-    case DoubleType => g.getDouble(gi, 0)
-    case StringType =>
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-    case BinaryType => g.getBinary(gi, 0).getBytes
-    case TimestampType | TimestampNTZType =>
-      val lt = g.getType.getType(gi).asPrimitiveType().getLogicalTypeAnnotation
-      val raw = g.getLong(gi, 0)
-      lt match {
-        case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          t.getUnit match {
-            case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-            case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS => raw
-            case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS => raw / 1000L
-          }
-        case _ => raw
-      }
-    case d: DecimalType =>
-      val prim = g.getType.getType(gi).asPrimitiveType()
-      prim.getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-          Decimal(BigDecimal(BigInt(g.getInteger(gi, 0)), d.scale), d.precision, d.scale)
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-          Decimal(BigDecimal(BigInt(g.getLong(gi, 0)), d.scale), d.precision, d.scale)
-        case _ =>
-          Decimal(BigDecimal(BigInt(new java.math.BigInteger(
-            g.getBinary(gi, 0).getBytes)), d.scale), d.precision, d.scale)
-      }
-    case other =>
-      throw new UnsupportedOperationException(
-        s"equality-delete key of type $other is not supported")
+  /** [[canonical]], owning its bytes: a string read from a column vector
+    * is a view into a buffer the reader reuses. */
+  private def owned(v: Any): Any = v match {
+    case s: UTF8String => s.copy()
+    case other => canonical(other)
   }
 }

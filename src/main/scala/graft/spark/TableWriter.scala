@@ -15,6 +15,7 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 import graft.catalog.{AddPartitionSpec, AddSchema, AddSnapshot, AddSortOrder, AssertCurrentSchemaId, AssertRefSnapshotId, AssertTableUuid, RemoveProperties, RemoveSnapshotRef, RemoveSnapshots, SetCurrentSchema, SetDefaultSortOrder, SetDefaultSpec, SetPartitionStatistics, SetProperties, SetSnapshotRef, SetStatistics, TableRequirement, TableUpdate, UpgradeFormatVersion}
 import graft.core._
+import graft.core.DeleteMatching.tombstonePath
 
 /** The write/commit path — "Writing is WIP" in the reference
   * (cmd/icegopher/main.go:314,330); here it's implemented: distributed task
@@ -186,17 +187,24 @@ object TableWriter {
     publish(table, stageDeltaSnapshot(table, Nil, listParquet(delDir).map(_.getPath)))
   }
 
-  /** Path as tombstone coordinates store it: no `file:`/`file://` scheme. */
-  private def normFsPath(p: String): String = p.replaceFirst("^file:(//)?", "")
-
   /** The (file_path, pos) tombstone coordinates of the rows of `scan`
     * matching `predicate`: the scan's `_file`/`_pos` metadata columns,
-    * the path in its scheme-less tombstone form. */
+    * the path in its tombstone form ([[DeleteMatching.tombstonePath]]). */
   private def deadRows(scan: TableScan, spark: org.apache.spark.sql.SparkSession,
                        predicate: Column): DataFrame =
     scan.toDF(spark).filter(predicate)
-      .select(regexp_replace(col(GraftReaders.FileCol), "^file:(//)?", "").as("file_path"),
-        col(GraftReaders.PosCol).as("pos"))
+      .select(tombstonePathCol(col(GraftReaders.FileCol)), col(GraftReaders.PosCol).as("pos"))
+
+  /** The (file_path, pos) coordinates held by positional delete files,
+    * the path in its tombstone form. */
+  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
+                           deleteFiles: Seq[String]): DataFrame =
+    spark.read.parquet(deleteFiles: _*)
+      .select(tombstonePathCol(col("file_path")), col("pos"))
+
+  /** [[DeleteMatching.tombstonePath]] over a frame's path column. */
+  private def tombstonePathCol(path: Column): Column =
+    regexp_replace(path, DeleteMatching.FileScheme, "").as("file_path")
 
   /** V3 deletion-vector MoR delete: rows matching `predicate` become
     * roaring-bitmap DELETION VECTORS in Puffin files — one blob per
@@ -235,12 +243,12 @@ object TableWriter {
                                newDead: DataFrame, tasks: Seq[FileScanTask])
       : (DataFrame, Map[String, Seq[(String, Long, Long)]]) = {
     val priorDvs: Map[String, Seq[(String, Long, Long)]] = tasks.map { t =>
-      normFsPath(t.file.path) -> t.deleteFiles.filter(_.isDeletionVector)
-        .map(d => (normFsPath(d.path), d.contentOffset.get,
+      tombstonePath(t.file.path) -> t.deleteFiles.filter(_.isDeletionVector)
+        .map(d => (tombstonePath(d.path), d.contentOffset.get,
           d.contentSizeInBytes.get))
     }.filter(_._2.nonEmpty).toMap
     val priorPaths = tasks.flatMap { t =>
-      if (priorDvs.contains(normFsPath(t.file.path))) Nil
+      if (priorDvs.contains(tombstonePath(t.file.path))) Nil
       else t.deleteFiles.filter(d =>
         d.content == DataFileContent.PositionDeletes && !d.isDeletionVector)
         .map(_.path)
@@ -252,9 +260,7 @@ object TableWriter {
         // only positions of files the new delete touches need re-homing
         // into DVs; untouched files keep their parquet tombstones (readers
         // keep honoring them — only DV'd files ignore parquet)
-        val prior = spark.read.parquet(priorPaths: _*)
-          .select(regexp_replace(col("file_path"), "^file:(//)?", "")
-            .as("file_path"), col("pos"))
+        val prior = tombstonesOf(spark, priorPaths)
           .join(newDead.select(col("file_path")).distinct(), Seq("file_path"),
             "left_semi")
         // a shared tombstone parquet can also carry positions of DV-bearing
@@ -383,7 +389,7 @@ object TableWriter {
     val live: Seq[(String, String, Long, Long)] =
       table.newScan().planFiles().flatMap { t =>
         t.deleteFiles.filter(_.isDeletionVector).map(d =>
-          (normFsPath(t.file.path), d.path, d.contentOffset.get,
+          (tombstonePath(t.file.path), d.path, d.contentOffset.get,
             d.contentSizeInBytes.get))
       }.distinct
     // every DV entry still live in the manifests — includes DANGLING DVs
@@ -492,10 +498,10 @@ object TableWriter {
                         op: SnapshotOp, extraSummary: Map[String, String],
                         snapId: Long, seq: Long): SnapshotChanges = {
     val (prevData, prevDelete) = liveManifests(table).partition(_.content == 0)
-    val touched = dvFiles.flatMap(_.referencedDataFile).map(normFsPath).toSet
+    val touched = dvFiles.flatMap(_.referencedDataFile).map(tombstonePath).toSet
     val isSuperseded: DataFileInfo => Boolean = d =>
       (d.isDeletionVector &&
-        touched(normFsPath(d.referencedDataFile.get))) || alsoSuperseded(d)
+        touched(tombstonePath(d.referencedDataFile.get))) || alsoSuperseded(d)
     val (kept, rewritten) =
       supersedeDeleteEntries(table, prevDelete, isSuperseded, snapId)
     SnapshotChanges(op, prevData ++ kept,
@@ -518,9 +524,7 @@ object TableWriter {
                             added: Seq[graft.spark.CowFileOut],
                             posDeleteFiles: Seq[String]): IcebergTable = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val newDead = spark.read.parquet(posDeleteFiles: _*)
-      .select(regexp_replace(col("file_path"), "^file:(//)?", "")
-        .as("file_path"), col("pos"))
+    val newDead = tombstonesOf(spark, posDeleteFiles)
     val (dead, priorDvs) =
       foldPriorDeletes(spark, newDead, table.newScan().planFiles())
     val committed = commitDvSnapshot(table) { (snapId, seq) =>
@@ -587,14 +591,10 @@ object TableWriter {
                                 tasks: Seq[graft.core.FileScanTask],
                                 posPaths: Seq[String]): DataFrame = {
     val dvByFile = tasks.filter(_.deleteFiles.exists(_.isDeletionVector))
-      .map(t => normFsPath(t.file.path)).toSet
-    val liveNoDv = tasks.map(t => normFsPath(t.file.path))
+      .map(t => tombstonePath(t.file.path)).toSet
+    val liveNoDv = tasks.map(t => tombstonePath(t.file.path))
       .filterNot(dvByFile).distinct
-    filterLiveTombstones(
-      spark.read.parquet(posPaths: _*)
-        .select(regexp_replace(col("file_path"), "^file:(//)?", "")
-          .as("file_path"), col("pos")),
-      liveNoDv, spark)
+    filterLiveTombstones(tombstonesOf(spark, posPaths), liveNoDv, spark)
   }
 
   /** Equality MoR delete: any row whose `equalityCols` tuple appears in
@@ -607,18 +607,23 @@ object TableWriter {
   /** Write `keys` as equality-delete parquet (one file per non-empty
     * partition of their distinct) and stage its content=1 manifest for
     * snapshot `snapId` at sequence `seq`; shared by [[deleteEquality]]
-    * (own commit) and [[replaceEquality]] (same commit as the data). */
+    * (own commit) and [[replaceEquality]] (same commit as the data). The
+    * data files' writer writes them: cast to the key columns' types, under
+    * their field ids, timestamps as INT64 micros. */
   private def eqDeleteManifest(table: IcebergTable, keys: DataFrame,
                                equalityCols: Seq[String],
                                snapId: Long, seq: Long): NewManifest = {
-    val delDir = new File(table.location, s"data/eqdeletes-$snapId")
-    keys.select(equalityCols.map(col): _*).distinct().write.parquet(delDir.getPath)
-    val eqIds = equalityCols.map(c => table.schema.findFieldByName(c).getOrElse(
-      throw new IllegalArgumentException(s"equality column '$c' not in schema")).id)
-    manifestOf(table, "manifest-eqdel", listParquet(delDir).map { f =>
-      addedFile(statsFromFooter(f, table.schema, Map.empty,
+    val keyFields = equalityCols.map(c => table.schema.findFieldByName(c).getOrElse(
+      throw new IllegalArgumentException(s"equality column '$c' not in schema")))
+    val distinctKeys = keys.select(equalityCols.zip(keyFields).map { case (c, f) =>
+      col(c).cast(SchemaConv.toSparkType(f.fieldType)).as(f.name) }: _*).distinct()
+    val written = writeDistributed(distinctKeys,
+      new File(table.location, s"data/eqdeletes-$snapId"), Schema(0, StructT(keyFields)),
+      PartitionSpec.unpartitioned, Map.empty, SortOrder.unsorted, preClustered = true)
+    manifestOf(table, "manifest-eqdel", written.sortBy(_.path).map { out =>
+      addedFile(statsFromFooter(new File(out.path), table.schema, Map.empty,
         content = graft.core.DataFileContent.EqualityDeletes, None)
-        .copy(equalityIds = eqIds), snapId, seq)
+        .copy(equalityIds = keyFields.map(_.id)), snapId, seq)
     })
   }
 
@@ -724,7 +729,7 @@ object TableWriter {
     val delInfos = posDeleteFiles.map { p =>
       statsFromFooter(new File(p), table.schema, Map.empty,
         content = DataFileContent.PositionDeletes,
-        overrideSchema = Some(posDeleteSchema))
+        overrideSchema = Some(DeleteMatching.PositionalDeleteSchema))
     }
     stageSnapshot(table) { (snapId, seq) =>
       SnapshotChanges(if (added.isEmpty) OpDelete else OpOverwrite,
@@ -960,7 +965,8 @@ object TableWriter {
     * rewritten under their own spec, untouched manifests carried by
     * reference, added files in one new manifest. `removedPaths` = None
     * replaces EVERY live data file; then no data file predates the
-    * snapshot's deletes' targets any more, so delete manifests drop too. */
+    * snapshot's deletes' targets any more, so every live delete file leaves
+    * too, recorded as a DELETED entry of this snapshot. */
   private def stageReplaceSnapshot(table: IcebergTable,
                                    removedPaths: Option[Set[String]],
                                    added: Seq[graft.spark.CowFileOut],
@@ -1002,11 +1008,14 @@ object TableWriter {
           partTypeOf(table, m.partitionSpecId, table.spec.partitionType(table.schema)),
           retire(kept, gone, snapId))
       }
+      val (keptDeletes, retiredDeletes) =
+        if (removedPaths.isEmpty)
+          supersedeDeleteEntries(table, deleteManifests, _ => true, snapId)
+        else (deleteManifests, Nil)
       // a sorted rewrite stamps its order so readers can claim per-file
       // ordering (SupportsReportOrdering gates on this exact id)
-      SnapshotChanges(op,
-        untouched ++ (if (removedPaths.isEmpty) Nil else deleteManifests),
-        rewritten :+ manifestOf(table, "manifest-cow", added.map(
+      SnapshotChanges(op, untouched ++ keptDeletes,
+        (rewritten ++ retiredDeletes) :+ manifestOf(table, "manifest-cow", added.map(
           addedEntry(table, _, snapId, seq, sortOrder.fold(0)(_.orderId)))),
         Map("replaced-data-files" ->
           split.map { case (_, (gone, _)) => gone.size }.sum.toString))
@@ -1611,8 +1620,8 @@ object TableWriter {
     val outFiles = math.max(1,
       math.ceil(liveBytesUb.toDouble / targetBytes).toInt)
     val merged = filterLiveTombstones(
-        spark.read.parquet(posFiles.map(_.dataFile.path).distinct: _*),
-        livePaths.toSeq.map(_.stripPrefix("file:")), spark)
+        tombstonesOf(spark, posFiles.map(_.dataFile.path).distinct),
+        livePaths.toSeq.map(tombstonePath), spark)
       .repartitionByRange(outFiles, col("file_path"), col("pos"))
       .sortWithinPartitions("file_path", "pos")
 
@@ -1622,7 +1631,7 @@ object TableWriter {
       val mergedInfos = listParquet(delDir).map { f =>
         statsFromFooter(f, table.schema, Map.empty,
           content = DataFileContent.PositionDeletes,
-          overrideSchema = Some(posDeleteSchema))
+          overrideSchema = Some(DeleteMatching.PositionalDeleteSchema))
       }
       // Eq entries rescued from mixed manifests: one manifest per original
       // spec, partition type preserved so tuples survive the rewrite.
@@ -2337,10 +2346,6 @@ object TableWriter {
     require(table.metadata.refs.contains(name), s"ref '$name' not found")
     commitUpdates(table, Seq(RemoveSnapshotRef(name)))
   }
-
-  val posDeleteSchema: Schema = Schema(0, StructT(Seq(
-    NestedField(2147483546, "file_path", StringT, required = true),
-    NestedField(2147483545, "pos", LongT, required = true))))
 
   // ------------------------------------------------------------------ guts
 
@@ -3074,8 +3079,9 @@ object TableWriter {
 
   /** Per-geo-column (lower, upper) bound bytes — envelope corners as POINT
     * WKB — computed by re-reading the written file projected to its geo
-    * columns. Empty when the schema has no geo columns. A column whose
-    * every value is null/unparseable gets no bounds (prune-safe). */
+    * columns through the scan's reader. Empty when the schema has no geo
+    * columns or the file holds none of them. A column whose every value is
+    * null/unparseable gets no bounds (prune-safe). */
   private def geoEnvelopeBounds(file: File, schema: Schema)
       : Map[Int, (Array[Byte], Array[Byte])] = {
     val geoFields = schema.fields.filter(f => f.fieldType match {
@@ -3083,43 +3089,25 @@ object TableWriter {
       case _ => false
     })
     if (geoFields.isEmpty) return Map.empty
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.api.ReadSupport
-    // project ONLY the geo columns, copying each field's type from the
-    // file's own footer (repetition must match or parquet refuses)
-    val fileSchema = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(file.getPath), new Configuration()))
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    val present = geoFields.filter(f => fileSchema.containsField(f.name))
-    if (present.isEmpty) return Map.empty
-    val conf = new Configuration()
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-      new org.apache.parquet.schema.MessageType("geo",
-        present.map(f =>
-          fileSchema.getType(Seq(f.name): _*)): _*).toString)
+    val footer = GraftReaders.footerInfo(file.getPath)
+    val sparkSchema = SchemaConv.toSparkSchema(schema)
+    val geo = geoFields.map(f => (sparkSchema(f.name), f.id))
+      .filter { case (sf, _) => GraftReaders.holds(footer, sf, Seq(sf.name)) }
+    if (geo.isEmpty) return Map.empty
     val env = scala.collection.mutable.Map[Int, (Double, Double, Double, Double)]()
-    val r = ParquetReader.builder(new GroupReadSupport(),
-      new Path(file.getPath)).withConf(conf).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        present.foreach { f =>
-          if (g.getFieldRepetitionCount(f.name) > 0) {
-            graft.core.Wkb.envelope(g.getBinary(f.name, 0).getBytes).foreach {
-              case (xmin, ymin, xmax, ymax) =>
-                env.updateWith(f.id) {
-                  case Some((lx, ly, ux, uy)) => Some((math.min(lx, xmin),
-                    math.min(ly, ymin), math.max(ux, xmax), math.max(uy, ymax)))
-                  case None => Some((xmin, ymin, xmax, ymax))
-                }
+    val r = GraftReaders.fileRows(file.getPath,
+      org.apache.spark.sql.types.StructType(geo.map(_._1)))
+    try while (r.nextKeyValue()) {
+      val row = r.getCurrentValue
+      geo.indices.filterNot(row.isNullAt).foreach { i =>
+        graft.core.Wkb.envelope(row.getBinary(i)).foreach {
+          case (xmin, ymin, xmax, ymax) =>
+            env.updateWith(geo(i)._2) {
+              case Some((lx, ly, ux, uy)) => Some((math.min(lx, xmin),
+                math.min(ly, ymin), math.max(ux, xmax), math.max(uy, ymax)))
+              case None => Some((xmin, ymin, xmax, ymax))
             }
-          }
         }
-        g = r.read()
       }
     } finally r.close()
     env.map { case (id, (lx, ly, ux, uy)) =>

@@ -232,4 +232,32 @@ class TableOperationsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
       .sorted.toSeq == Seq(3L, 7L))
   }
+
+  test("a whole-table compact records every delete file it drops as a " +
+      "DELETED entry of its own manifests") {
+    import ManifestEntryStatus.Deleted
+    val loc = tmpDir("ops_compact_deletes")
+    TableWriter.create(rows(1, 2, 3), loc)
+    def t = IcebergTables.load(loc)
+    TableWriter.append(t, rows(4, 5, 6))
+    TableWriter.deleteWhere(t, spark, col("k") === 2L)
+    TableWriter.deleteEquality(t, rows(5).select("k"), Seq("k"))
+    val parent = t
+    val liveAtParent = parent.newScan().planFiles().flatMap(_.deleteFiles)
+      .map(_.path).distinct.sorted
+    assert(liveAtParent.size >= 2, liveAtParent.mkString(", "))
+
+    val compacted = TableWriter.compact(parent, spark)
+    val snap = compacted.currentSnapshot.get
+    val own = ManifestIO.readManifestList(compacted.io.open(snap.manifestList))
+      .filter(_.addedSnapshotId == snap.snapshotId)
+    val retired = own.filter(_.content == 1).flatMap(m =>
+      ManifestIO.readManifestEntries(compacted.io.open(m.path), m, discardDeleted = false))
+    assert(retired.forall(e => e.status == Deleted && e.snapshotId.contains(snap.snapshotId)),
+      retired.mkString("\n"))
+    assert(retired.map(_.dataFile.path).sorted == liveAtParent)
+    assert(compacted.newScan().planFiles().forall(_.deleteFiles.isEmpty))
+    assert(compacted.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(1L, 3L, 4L, 6L))
+  }
 }
