@@ -7,13 +7,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Data-file writers for `write.format-default` = orc / avro — the write
+/** Data-file writers for `write.format.default` = orc / avro — the write
   * side of FormatReaders (the reference carries the format enum,
   * manifest.go:314-320, but can write nothing). One open file per call,
   * rolled by the task writer at `write.target-file-size-bytes` like the
   * parquet sink. Self-consistency contract: whatever these write, the
   * row readers in FormatReaders read back bit-identically (same
-  * micros-encoded timestamps, date days, unscaled-bytes decimals).
+  * micros-encoded timestamps, date days, unscaled-bytes decimals). Every
+  * data-file write (appends, copy-on-write rewrites, merge-on-read
+  * inserts, the streaming sink) takes the table's format through
+  * [[GraftCowWriterFactory.of]]; delete files are always Parquet.
   *
   * ORC files get real footer statistics (orc-core computes them per
   * stripe), which the commit path turns into Iceberg bounds — so stats
@@ -54,12 +57,15 @@ private[spark] object FormatWriters {
     case _ => "parquet"
   }
 
-  /** The table's data-file format property (Iceberg's
-    * `write.format-default`); PARQUET unless overridden. */
+  /** Iceberg's data-file format table property. */
+  val FormatProp = "write.format.default"
+
+  /** The table's data-file format ([[FormatProp]]); PARQUET unless
+    * overridden. */
   def dataFormatOf(properties: Map[String, String]): String = {
-    val f = properties.getOrElse("write.format-default", "parquet").toUpperCase
+    val f = properties.getOrElse(FormatProp, "parquet").toUpperCase
     require(f == "PARQUET" || f == "ORC" || f == "AVRO",
-      s"unsupported write.format-default: $f")
+      s"unsupported $FormatProp: $f")
     f
   }
 }

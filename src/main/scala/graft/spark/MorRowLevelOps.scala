@@ -4,8 +4,6 @@ import java.io.File
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -14,6 +12,8 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.{DeleteMatching, PartitionSpec}
 
 /** Merge-on-read row-level operations: SQL UPDATE / MERGE / DELETE under
   * `write.update.mode` / `write.merge.mode` / `write.delete.mode` =
@@ -83,10 +83,13 @@ final class GraftDeltaRowLevelOperation(table: IcebergTable,
     }
 }
 
-/** V2 delta batch write: tasks write positional-tombstone parquet +
-  * ordinary data files; the driver commit lands both in ONE snapshot,
-  * pinned to the handle the scan read (a concurrent commit between scan
-  * and write would invalidate the captured row positions). */
+/** V2 delta batch write: each task writes its appended rows and its
+  * positional tombstones through two task writers built by
+  * [[GraftCowWriterFactory.of]] (the rows in the table's format, the
+  * tombstones as Parquet under the reserved `file_path`/`pos` field ids);
+  * the driver commit lands both in ONE snapshot, pinned to the handle the
+  * scan read (a concurrent commit between scan and write would invalidate
+  * the captured row positions). */
 final class GraftDeltaWrite(location: String, dataSchema: StructType,
                             rowIdSchema: StructType,
                             scanned: () => IcebergTable,
@@ -95,25 +98,23 @@ final class GraftDeltaWrite(location: String, dataSchema: StructType,
 
   private val writeDir =
     new File(location, s"data/mor-${java.util.UUID.randomUUID()}")
+  // both task writers name files part-<partition>-<task>-<seq>: the
+  // tombstone files get their own directory
+  private val deleteDir = new File(writeDir, "deletes")
 
   override def toBatch: DeltaBatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    writeDir.mkdirs()
+    deleteDir.mkdirs()
     val table = scanned()
-    val partFields = table.spec.fields.map { pf =>
-      val src = table.schema.findFieldById(pf.sourceId).getOrElse(
-        throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
-      PartFieldSpec(src.name, pf.transform.repr, pf.name)
-    }
-    GraftDeltaWriterFactory(writeDir.getPath,
-      GraftCowWriterFactory.withParquetIds(dataSchema, table.schema).json,
-      rowIdSchema.json, partFields,
-      GraftCowWriterFactory.floatFieldsOf(table.schema, dataSchema),
-      GraftCowWriterFactory.parquetPropsOf(
-        org.apache.spark.sql.SparkSession.active, table.properties),
-      GraftCowWriterFactory.targetFileBytes(table.properties),
-      GraftCowWriterFactory.maxOpenFilesOf(table.properties))
+    GraftDeltaWriterFactory(
+      GraftCowWriterFactory.of(writeDir.getPath, dataSchema, table.schema,
+        table.spec, table.properties),
+      GraftCowWriterFactory.of(deleteDir.getPath,
+        SchemaConv.toSparkSchema(DeleteMatching.PositionalDeleteSchema),
+        DeleteMatching.PositionalDeleteSchema, PartitionSpec.unpartitioned, Map.empty),
+      rowIdSchema.fieldIndex(GraftReaders.FileCol),
+      rowIdSchema.fieldIndex(GraftReaders.PosCol))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -130,6 +131,7 @@ final class GraftDeltaWrite(location: String, dataSchema: StructType,
       m.dataFiles.foreach(f => new File(f.path).delete())
       m.deleteFiles.foreach(f => new File(f).delete())
     }
+    deleteDir.delete()
     writeDir.delete()
   }
 }
@@ -138,55 +140,35 @@ final case class GraftDeltaCommit(dataFiles: Seq[CowFileOut],
                                   deleteFiles: Seq[String])
     extends WriterCommitMessage
 
-final case class GraftDeltaWriterFactory(dir: String, dataSchemaJson: String,
-                                         rowIdSchemaJson: String,
-                                         partFields: Seq[PartFieldSpec],
-                                         floatFields: Seq[FloatFieldSpec],
-                                         parquetProps: Map[String, String],
-                                         targetFileBytes: Long,
-                                         maxOpenFiles: Int)
+/** The delta write's two task writers and where a row id holds its
+  * `_file` and `_pos`. */
+final case class GraftDeltaWriterFactory(inserts: GraftCowWriterFactory,
+                                         deletes: GraftCowWriterFactory,
+                                         fileOrd: Int, posOrd: Int)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftPositionDeltaWriter(dir, partitionId, taskId,
-      DataType.fromJson(dataSchemaJson).asInstanceOf[StructType],
-      DataType.fromJson(rowIdSchemaJson).asInstanceOf[StructType],
-      partFields, floatFields, parquetProps, targetFileBytes, maxOpenFiles)
+    new GraftPositionDeltaWriter(this, partitionId, taskId)
 }
 
 /** Task-side delta writer: inserts ride the same rolling partitioned data
   * writer as copy-on-write; deletes buffer (file, pos) pairs and flush at
-  * task commit as ONE sorted positional-delete parquet file per task
-  * (Iceberg's required (file_path, pos) order). An update is a delete of
-  * the old coordinate plus an insert of the new row — same file shapes,
-  * no third case. Memory: the delete buffer is 2 words per MATCHED row of
-  * this task only (never the scanned rows), the shape Iceberg's own
-  * position-delta writers accept. */
-final class GraftPositionDeltaWriter(dir: String, partitionId: Int, taskId: Long,
-                                     dataSchema: StructType,
-                                     rowIdSchema: StructType,
-                                     partFields: Seq[PartFieldSpec],
-                                     floatFields: Seq[FloatFieldSpec],
-                                     parquetProps: Map[String, String],
-                                     targetFileBytes: Long,
-                                     maxOpenFiles: Int)
+  * task commit, sorted (Iceberg's required (file_path, pos) order),
+  * through a second task writer over the positional-delete schema: one
+  * Parquet file per task. An update is a delete of the old coordinate plus
+  * an insert of the new row — same file shapes, no third case. Memory: the
+  * delete buffer is 2 words per MATCHED row of this task only (never the
+  * scanned rows), the shape Iceberg's own position-delta writers accept. */
+final class GraftPositionDeltaWriter(factory: GraftDeltaWriterFactory,
+                                     partitionId: Int, taskId: Long)
     extends DeltaWriter[InternalRow] {
 
-  private val fileOrd = rowIdSchema.fieldIndex(GraftReaders.FileCol)
-  private val posOrd = rowIdSchema.fieldIndex(GraftReaders.PosCol)
-
-  private var inserter: GraftCowDataWriter = _
-  private def ins(): GraftCowDataWriter = {
-    if (inserter == null)
-      inserter = new GraftCowDataWriter(dir, partitionId, taskId, dataSchema,
-        partFields, floatFields, parquetProps, targetFileBytes,
-        maxOpenFiles = maxOpenFiles)
-    inserter
-  }
+  private var inserter: DataWriter[InternalRow] = _
+  private var deleter: DataWriter[InternalRow] = _
 
   private val deletes = ArrayBuffer[(String, Long)]()
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    deletes += ((id.getUTF8String(fileOrd).toString, id.getLong(posOrd)))
+    deletes += ((id.getUTF8String(factory.fileOrd).toString, id.getLong(factory.posOrd)))
 
   override def update(metadata: InternalRow, id: InternalRow,
                       row: InternalRow): Unit = {
@@ -197,79 +179,33 @@ final class GraftPositionDeltaWriter(dir: String, partitionId: Int, taskId: Long
   override def reinsert(metadata: InternalRow, row: InternalRow): Unit =
     insert(row)
 
-  override def insert(row: InternalRow): Unit = ins().write(row)
+  override def insert(row: InternalRow): Unit = {
+    if (inserter == null) inserter = factory.inserts.createWriter(partitionId, taskId)
+    inserter.write(row)
+  }
+
+  private def files(w: DataWriter[InternalRow]): Seq[CowFileOut] =
+    w.commit().asInstanceOf[GraftCowCommit].files
 
   override def commit(): WriterCommitMessage = {
-    val dataFiles =
-      if (inserter == null) Nil
-      else inserter.commit().asInstanceOf[GraftCowCommit].files
+    val dataFiles = if (inserter == null) Nil else files(inserter)
     val delFiles =
       if (deletes.isEmpty) Nil
       else {
-        val f = new File(dir, f"delete-$partitionId%05d-$taskId.parquet")
-        PosDeleteFileWriter.write(f.getPath,
-          deletes.distinct.sorted.toSeq, parquetProps)
-        Seq(f.getPath)
+        deleter = factory.deletes.createWriter(partitionId, taskId)
+        deletes.distinct.sorted.foreach { case (f, p) =>
+          deleter.write(new GenericInternalRow(Array[Any](UTF8String.fromString(f), p)))
+        }
+        files(deleter).map(_.path)
       }
     GraftDeltaCommit(dataFiles, delFiles)
   }
 
   override def abort(): Unit = {
     if (inserter != null) inserter.abort()
+    if (deleter != null) deleter.abort()
     deletes.clear()
   }
 
   override def close(): Unit = ()
-}
-
-/** Writes one positional-delete parquet file — (file_path, pos) rows,
-  * caller-sorted — through Spark's ParquetWriteSupport (same encoding as
-  * every other file this engine writes; [[DeleteFileCache]] and DuckDB
-  * both read it back by name). */
-private[spark] object PosDeleteFileWriter {
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-
-  val schema: StructType = StructType(Seq(
-    StructField("file_path", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
-
-  private final class B(path: Path)
-      extends ParquetWriter.Builder[InternalRow, B](path) {
-    override def self(): B = this
-    override def getWriteSupport(c: Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
-      new ParquetWriteSupport()
-  }
-
-  def write(path: String, rows: Seq[(String, Long)],
-            parquetProps: Map[String, String]): Unit = {
-    val conf = new Configuration()
-    parquetProps.foreach { case (k, v) => conf.set(k, v) }
-    ParquetWriteSupport.setSchema(schema, conf)
-    conf.set("spark.sql.session.timeZone", "UTC")
-    conf.setBoolean("spark.sql.parquet.writeLegacyFormat", false)
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
-    conf.setBoolean("spark.sql.parquet.variant.annotateLogicalType.enabled", false)
-    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
-    conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    val codec = {
-      import org.apache.parquet.hadoop.metadata.CompressionCodecName
-      parquetProps.get("parquet.compression").map(_.toUpperCase) match {
-        case None | Some("SNAPPY") => CompressionCodecName.SNAPPY
-        case Some("NONE") | Some("UNCOMPRESSED") => CompressionCodecName.UNCOMPRESSED
-        case Some(c) =>
-          try CompressionCodecName.valueOf(c)
-          catch { case _: IllegalArgumentException => CompressionCodecName.SNAPPY }
-      }
-    }
-    val w = new B(new Path(path)).withConf(conf)
-      .withCompressionCodec(codec).build()
-    try rows.foreach { case (f, p) =>
-      w.write(new GenericInternalRow(Array[Any](UTF8String.fromString(f), p)))
-    } finally w.close()
-  }
 }

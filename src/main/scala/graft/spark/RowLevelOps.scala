@@ -111,11 +111,12 @@ final class GraftRowLevelOperation(table: IcebergTable,
     }
 }
 
-/** V2 batch write for the replacement rows: tasks write parquet files with
-  * Spark's own row write support; the driver commit swaps the replaced
-  * files in one OVERWRITE snapshot, pinned to the handle the scan read
-  * (CommitConflictError on concurrent commits — a MoR delete landing
-  * mid-rewrite would otherwise be silently undone). */
+/** V2 batch write for the replacement rows: tasks write them in the
+  * table's file format through the task writer [[GraftCowWriterFactory.of]]
+  * builds; the driver commit swaps the replaced files in one OVERWRITE
+  * snapshot, pinned to the handle the scan read (CommitConflictError on
+  * concurrent commits — a MoR delete landing mid-rewrite would otherwise
+  * be silently undone). */
 final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
                                   replacedFiles: () => (IcebergTable, Seq[String], Set[String]),
                                   withLineage: Boolean = false,
@@ -130,11 +131,6 @@ final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     writeDir.mkdirs()
     val table = replacedFiles()._1
-    val partFields = table.spec.fields.map { pf =>
-      val src = table.schema.findFieldById(pf.sourceId).getOrElse(
-        throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
-      PartFieldSpec(src.name, pf.transform.repr, pf.name)
-    }
     // V3 lineage: physical trailing columns under the spec's reserved ids;
     // metadata arrives as (_file, _row_id, _last_updated_sequence_number)
     // — the declaration order of requiredMetadataAttributes
@@ -146,13 +142,8 @@ final class GraftReplaceDataWrite(location: String, writeSchema: StructType,
           Seq(StructField(GraftReaders.LastUpdatedSeqCol, LongType,
             nullable = true))
         else Nil)))
-    GraftCowWriterFactory(writeDir.getPath,
-      GraftCowWriterFactory.withParquetIds(fullSchema, table.schema).json, partFields,
-      GraftCowWriterFactory.floatFieldsOf(table.schema, fullSchema),
-      GraftCowWriterFactory.parquetPropsOf(
-        org.apache.spark.sql.SparkSession.active, table.properties),
-      GraftCowWriterFactory.targetFileBytes(table.properties),
-      maxOpenFiles = GraftCowWriterFactory.maxOpenFilesOf(table.properties),
+    GraftCowWriterFactory.of(writeDir.getPath, fullSchema, table.schema,
+      table.spec, table.properties,
       lineageMetaOrds =
         if (!withLineage) Nil
         else if (withLastUpdated) Seq(1, 2) else Seq(1))
@@ -188,21 +179,22 @@ final case class GraftCowCommit(files: Seq[CowFileOut]) extends WriterCommitMess
   * post-hoc data pass would double the write cost). */
 final case class FloatFieldSpec(colName: String, fieldId: Int)
 
+/** The serializable recipe of one task writer; built only by
+  * [[GraftCowWriterFactory.of]]. */
 final case class GraftCowWriterFactory(dir: String, schemaJson: String,
                                        partFields: Seq[PartFieldSpec],
-                                       floatFields: Seq[FloatFieldSpec] = Nil,
-                                       parquetProps: Map[String, String] = Map.empty,
-                                       targetFileBytes: Long = Long.MaxValue,
-                                       format: String = "PARQUET",
-                                       maxOpenFiles: Int =
-                                         GraftCowWriterFactory.DefaultMaxOpenFiles,
+                                       floatFields: Seq[FloatFieldSpec],
+                                       parquetProps: Map[String, String],
+                                       targetFileBytes: Long,
+                                       format: String,
+                                       maxOpenFiles: Int,
                                        // V3 CoW lineage: ordinals of
                                        // (_row_id, _last_updated_sequence_
                                        // number) in the METADATA row Spark
                                        // hands write(meta, row); when set,
                                        // `schemaJson` already carries the
                                        // two trailing long columns
-                                       lineageMetaOrds: Seq[Int] = Nil)
+                                       lineageMetaOrds: Seq[Int])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftCowDataWriter(dir, partitionId, taskId,
@@ -211,6 +203,27 @@ final case class GraftCowWriterFactory(dir: String, schemaJson: String,
 }
 
 object GraftCowWriterFactory {
+  /** The one rule deriving a task writer, for every file this engine
+    * writes: `writeSchema` stamped with `schema`'s field ids, `spec`'s
+    * partition fields, the float fields counted for NaNs, and from
+    * `properties` the Parquet settings, file format, target file size and
+    * open-file cap. Data files pass the table's schema, spec and
+    * properties; delete files pass their own schema, no partitions and no
+    * properties, so they are always Parquet. */
+  def of(dir: String, writeSchema: StructType, schema: graft.core.Schema,
+         spec: graft.core.PartitionSpec, properties: Map[String, String],
+         lineageMetaOrds: Seq[Int] = Nil): GraftCowWriterFactory =
+    GraftCowWriterFactory(dir, withParquetIds(writeSchema, schema).json,
+      spec.fields.map { pf =>
+        val src = schema.findFieldById(pf.sourceId).getOrElse(
+          throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
+        PartFieldSpec(src.name, pf.transform.repr, pf.name)
+      },
+      floatFieldsOf(schema, writeSchema),
+      parquetPropsOf(org.apache.spark.sql.SparkSession.active, properties),
+      targetFileBytes(properties), FormatWriters.dataFormatOf(properties),
+      maxOpenFilesOf(properties), lineageMetaOrds)
+
   /** Spark's parquet field-id metadata key (ParquetUtils.FIELD_ID_METADATA_KEY). */
   val ParquetFieldIdKey = "parquet.field.id"
 
@@ -344,9 +357,10 @@ object GraftCowWriterFactory {
   private[spark] val VariantShredKeyPrefix = "graft.variant.shred#"
 }
 
-/** Data-file writing through Spark's ParquetWriteSupport (same encoding
-  * as Spark's own parquet sink) — or the ORC/Avro rolling writers when
-  * `write.format-default` says so — one open file per partition tuple
+/** The task writer of every data and delete file: Parquet through
+  * Spark's ParquetWriteSupport (same encoding as Spark's own parquet sink)
+  * — or the ORC/Avro rolling writers when the table's
+  * `write.format.default` says so — one open file per partition tuple
   * seen by this task. Partition tuples are derived per row with the CORE
   * transforms (bucket/truncate/day/... exactly as the spec defines them)
   * and shipped to the driver in the commit message — manifests carry

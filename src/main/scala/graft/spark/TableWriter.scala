@@ -172,20 +172,31 @@ object TableWriter {
   }
 
   /** Positional MoR delete: rows of `table` matching `predicate` become
-    * (file_path, pos) tombstones in a delete manifest — no data rewrite. */
+    * (file_path, pos) tombstones in a delete manifest — no data rewrite.
+    * One distributed scan finds them; the data files' task writer writes
+    * them sorted, one file per non-empty partition, so a predicate that
+    * matches nothing commits a snapshot without a delete file. */
   def deleteWhere(table: IcebergTable, spark: org.apache.spark.sql.SparkSession,
                   predicate: Column): IcebergTable = {
     // V3 forbids positional delete FILES (and readers ignore them for
     // DV-bearing files — writing one would silently drop the delete)
     if (table.metadata.formatVersion >= 3)
       return deleteWhereDv(table, spark, predicate)
-    // compute tombstones with one distributed scan over current data
-    val delDir = new File(table.location, s"data/deletes-${System.nanoTime()}")
-    deadRows(table.newScan(), spark, predicate)
-      .orderBy("file_path", "pos")
-      .write.parquet(delDir.getPath)
-    publish(table, stageDeltaSnapshot(table, Nil, listParquet(delDir).map(_.getPath)))
+    val written = writeDeleteFiles(
+      deadRows(table.newScan(), spark, predicate).orderBy("file_path", "pos"),
+      new File(table.location, s"data/deletes-${System.nanoTime()}"),
+      DeleteMatching.PositionalDeleteSchema)
+    publish(table, stageDeltaSnapshot(table, Nil, written.map(_.path)))
   }
+
+  /** Write delete-file rows, clustered and sorted by the caller, through
+    * the data files' task writer under `schema`'s field ids (the reserved
+    * `file_path`/`pos` ids for positional deletes): unpartitioned, no
+    * table properties (Parquet, the default target size), at least one
+    * file per non-empty partition and none for an empty one. */
+  private def writeDeleteFiles(rows: DataFrame, dir: File, schema: Schema): Seq[CowFileOut] =
+    writeDistributed(rows, dir, schema, PartitionSpec.unpartitioned, Map.empty,
+      SortOrder.unsorted, preClustered = true)
 
   /** The (file_path, pos) tombstone coordinates of the rows of `scan`
     * matching `predicate`: the scan's `_file`/`_pos` metadata columns,
@@ -617,14 +628,11 @@ object TableWriter {
       throw new IllegalArgumentException(s"equality column '$c' not in schema")))
     val distinctKeys = keys.select(equalityCols.zip(keyFields).map { case (c, f) =>
       col(c).cast(SchemaConv.toSparkType(f.fieldType)).as(f.name) }: _*).distinct()
-    val written = writeDistributed(distinctKeys,
-      new File(table.location, s"data/eqdeletes-$snapId"), Schema(0, StructT(keyFields)),
-      PartitionSpec.unpartitioned, Map.empty, SortOrder.unsorted, preClustered = true)
-    manifestOf(table, "manifest-eqdel", written.sortBy(_.path).map { out =>
-      addedFile(statsFromFooter(new File(out.path), table.schema, Map.empty,
-        content = graft.core.DataFileContent.EqualityDeletes, None)
-        .copy(equalityIds = keyFields.map(_.id)), snapId, seq)
-    })
+    val written = writeDeleteFiles(distinctKeys,
+      new File(table.location, s"data/eqdeletes-$snapId"), Schema(0, StructT(keyFields)))
+    manifestOf(table, "manifest-eqdel", written.sortBy(_.path).map(
+      addedEntry(table, _, snapId, seq, content = DataFileContent.EqualityDeletes,
+        equalityIds = keyFields.map(_.id))))
   }
 
   /** ATOMIC retract-and-replace: ONE snapshot carrying an equality-delete
@@ -725,19 +733,16 @@ object TableWriter {
     * with [[RestTransaction.stageDelta]]. */
   private def stageDeltaSnapshot(table: IcebergTable,
                                  added: Seq[graft.spark.CowFileOut],
-                                 posDeleteFiles: Seq[String]): Snapshot = {
-    val delInfos = posDeleteFiles.map { p =>
-      statsFromFooter(new File(p), table.schema, Map.empty,
-        content = DataFileContent.PositionDeletes,
-        overrideSchema = Some(DeleteMatching.PositionalDeleteSchema))
-    }
+                                 posDeleteFiles: Seq[String]): Snapshot =
     stageSnapshot(table) { (snapId, seq) =>
       SnapshotChanges(if (added.isEmpty) OpDelete else OpOverwrite,
         liveManifests(table),
         Seq(manifestOf(table, "manifest-mor", added.map(addedEntry(table, _, snapId, seq))),
-          manifestOf(table, "manifest-mor-del", delInfos.map(addedFile(_, snapId, seq)))))
+          // Parquet delete files: the footer counts their rows
+          manifestOf(table, "manifest-mor-del", posDeleteFiles.map(p =>
+            addedEntry(table, CowFileOut(p, 0L, Map.empty), snapId, seq,
+              content = DataFileContent.PositionDeletes)))))
     }
-  }
 
   /** Every commit between `sinceSnapshotId` and the current head is a
     * pure append under an unchanged schema — the condition under which a
@@ -1612,9 +1617,7 @@ object TableWriter {
     val livePaths = liveTasks.filter(!_.deleteFiles.exists(_.isDeletionVector))
       .map(_.file.path).toSet
     import org.apache.spark.sql.functions.col
-    val targetBytes = md.properties.get(GraftCowWriterFactory.TargetFileSizeProp)
-      .flatMap(_.toLongOption)
-      .getOrElse(GraftCowWriterFactory.DefaultTargetFileSize)
+    val targetBytes = GraftCowWriterFactory.targetFileBytes(md.properties)
     // Upper bound on surviving bytes: the inputs (danglers only shrink it).
     val liveBytesUb = posFiles.map(_.dataFile.fileSizeInBytes).sum
     val outFiles = math.max(1,
@@ -1626,13 +1629,8 @@ object TableWriter {
       .sortWithinPartitions("file_path", "pos")
 
     val snapshot = stageSnapshot(table) { (snapId, seq) =>
-      val delDir = new File(table.location, s"data/deletes-rw-$snapId")
-      merged.write.parquet(delDir.getPath)
-      val mergedInfos = listParquet(delDir).map { f =>
-        statsFromFooter(f, table.schema, Map.empty,
-          content = DataFileContent.PositionDeletes,
-          overrideSchema = Some(DeleteMatching.PositionalDeleteSchema))
-      }
+      val mergedFiles = writeDeleteFiles(merged,
+        new File(table.location, s"data/deletes-rw-$snapId"), DeleteMatching.PositionalDeleteSchema)
       // Eq entries rescued from mixed manifests: one manifest per original
       // spec, partition type preserved so tuples survive the rewrite.
       val eqManifests = eqEntries.groupBy(_._1).toSeq.sortBy(_._1).map {
@@ -1646,10 +1644,12 @@ object TableWriter {
         // the merged files replace the rewritten ones, which stay as
         // DELETED entries of the same manifest
         (manifestOf(table, "manifest-del-rw",
-          mergedInfos.map(addedFile(_, snapId, seq)) ++ retire(Nil, posFiles, snapId)) +:
+          mergedFiles.map(addedEntry(table, _, snapId, seq,
+            content = DataFileContent.PositionDeletes)) ++
+            retire(Nil, posFiles, snapId)) +:
           eqManifests) :+ manifestOf(table, "manifest-del-rw-dv", dvRescued),
         Map("delete-files-rewritten" -> posFiles.size.toString,
-          "delete-files-created" -> mergedInfos.size.toString))
+          "delete-files-created" -> mergedFiles.size.toString))
     }
     (publish(table, snapshot), posFiles.size,
       snapshot.summary.get.properties("delete-files-created").toInt)
@@ -2400,24 +2400,33 @@ object TableWriter {
     val d = new File(table.location, "metadata"); d.mkdirs(); d
   }
 
-  /** One ADDED data-file entry for a freshly written file: footer stats
-    * (parquet, ORC; AVRO carries counts only) + task-side NaN counts,
-    * stamped with the sort order it was written under. */
+  /** The ADDED entry of snapshot `snapId` (at sequence `seq`) for a file
+    * this engine wrote, data or delete: footer stats (Parquet, ORC; AVRO
+    * carries counts only) over the columns its content holds — the
+    * reserved `file_path`/`pos` for positional deletes, the table's
+    * otherwise — plus task-side NaN counts, stamped with the sort order it
+    * was written under and, for equality deletes, the key field ids. The
+    * one entry rule for written files. */
   private def addedEntry(table: IcebergTable, f: CowFileOut, snapId: Long,
-                         seq: Long, sortOrderId: Int = 0): ManifestEntry = {
+                         seq: Long, sortOrderId: Int = 0,
+                         content: Int = DataFileContent.Data,
+                         equalityIds: Seq[Int] = Nil): ManifestEntry = {
     val file = new File(f.path)
     val partition = f.partition.filter(_._2 != null)
+    val schema =
+      if (content == DataFileContent.PositionDeletes) DeleteMatching.PositionalDeleteSchema
+      else table.schema
     val info = f.path.toLowerCase match {
       case p if p.endsWith(".orc") =>
-        statsFromOrc(file, table.schema, partition, f.nanCounts)
+        statsFromOrc(file, schema, partition, f.nanCounts)
       case p if p.endsWith(".avro") =>
         DataFileInfo(DataFileContent.Data, f.path, "AVRO", partition, f.rows,
           file.length(), Map.empty, Map.empty, Map.empty, f.nanCounts,
           Map.empty, Map.empty, Nil, Nil, None)
-      case _ => statsFromFooter(file, table.schema, partition,
-        DataFileContent.Data, None, f.nanCounts)
+      case _ => statsFromFooter(file, schema, partition, f.nanCounts)
     }
-    addedFile(info.copy(sortOrderId = Some(sortOrderId)), snapId, seq)
+    addedFile(info.copy(content = content, sortOrderId = Some(sortOrderId),
+      equalityIds = equalityIds), snapId, seq)
   }
 
   /** The ADDED entry of snapshot `snapId` (at sequence `seq`) for `info`. */
@@ -2578,18 +2587,8 @@ object TableWriter {
     // written data (footers don't record NaN counts). Partition tuples ride
     // the commit messages into the manifest; no hive directory layout.
     dataDir.mkdirs()
-    val writeSchema = distributed.schema
-    val factory = GraftCowWriterFactory(dataDir.getPath,
-      GraftCowWriterFactory.withParquetIds(writeSchema, schema).json,
-      spec.fields.map { pf =>
-        val src = schema.findFieldById(pf.sourceId).get
-        PartFieldSpec(src.name, pf.transform.repr, pf.name)
-      },
-      GraftCowWriterFactory.floatFieldsOf(schema, writeSchema),
-      GraftCowWriterFactory.parquetPropsOf(df.sparkSession, properties),
-      GraftCowWriterFactory.targetFileBytes(properties),
-      FormatWriters.dataFormatOf(properties),
-      GraftCowWriterFactory.maxOpenFilesOf(properties))
+    val factory = GraftCowWriterFactory.of(dataDir.getPath, distributed.schema,
+      schema, spec, properties)
     val outs: Seq[CowFileOut] = distributed.queryExecution.toRdd
       .mapPartitionsWithIndex { (pid, rows) =>
         // taskAttemptId (globally unique per attempt) in the file name:
@@ -2962,14 +2961,6 @@ object TableWriter {
       targets.size)
   }
 
-  private def listParquet(dir: File): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f)
-      else Nil
-    walk(dir).sortBy(_.getPath)
-  }
-
   private def isNaNLit(l: Literal): Boolean = l match {
     case FloatLit(f) => f.isNaN
     case DoubleLit(d) => d.isNaN
@@ -3008,10 +2999,8 @@ object TableWriter {
     * across row groups; split offsets = row-group start positions. Metadata
     * read only — never touches row data. */
   private def statsFromFooter(file: File, schema: Schema,
-                              partition: Map[String, Any], content: Int,
-                              overrideSchema: Option[Schema],
-                              nanCounts: Map[Int, Long] = Map.empty): DataFileInfo = {
-    val effSchema = overrideSchema.getOrElse(schema)
+                              partition: Map[String, Any],
+                              nanCounts: Map[Int, Long]): DataFileInfo = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(file.getPath), new Configuration()))
     try {
@@ -3028,7 +3017,7 @@ object TableWriter {
 
       for (block <- blocks; chunk <- block.getColumns.asScala) {
         val colPath = chunk.getPath.toDotString
-        effSchema.findFieldByName(colPath).foreach { field =>
+        schema.findFieldByName(colPath).foreach { field =>
           val id = field.id
           colSizes.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getTotalSize))
           valCounts.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getValueCount))
@@ -3060,9 +3049,9 @@ object TableWriter {
       // correct, conservative envelope; the antimeridian-wrapped tightening
       // the spec ALLOWS for geography is a writer optimization we skip
       // (the evaluator still honors wrapped bounds from foreign writers).
-      val geoBounds = geoEnvelopeBounds(file, effSchema)
+      val geoBounds = geoEnvelopeBounds(file, schema)
       DataFileInfo(
-        content = content, path = file.getPath, format = "PARQUET",
+        content = DataFileContent.Data, path = file.getPath, format = "PARQUET",
         partition = partition, recordCount = rowCount,
         fileSizeInBytes = file.length(),
         columnSizes = colSizes.toMap, valueCounts = valCounts.toMap,

@@ -7,12 +7,13 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-import graft.spark.{GraftCowCommit, GraftCowWriterFactory, IcebergTable, PartFieldSpec, TableWriter}
+import graft.spark.{GraftCowCommit, GraftCowWriterFactory, IcebergTable, TableWriter}
 
 /** Structured Streaming SINK over an Iceberg table:
   * `df.writeStream.format("icegopher").start(dir)` — each epoch commits one
-  * APPEND snapshot through the same task writers as batch writes (partition
-  * tuples + NaN counts derived per row, parquet field ids stamped).
+  * APPEND snapshot through the same task writers as batch writes (the
+  * table's file format, partition tuples + NaN counts derived per row,
+  * field ids stamped).
   *
   * Exactly-once across epoch retries: each commit stamps BOTH the query id
   * and the epoch id into the snapshot summary, and a replayed commit scans
@@ -42,18 +43,8 @@ final class GraftStreamingWrite(table: IcebergTable, schema: StructType,
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     writeDir.mkdirs()
     val table = currentTable()
-    val partFields = table.spec.fields.map { pf =>
-      val src = table.schema.findFieldById(pf.sourceId).getOrElse(
-        throw new IllegalStateException(s"partition source ${pf.sourceId} missing"))
-      PartFieldSpec(src.name, pf.transform.repr, pf.name)
-    }
-    val inner = GraftCowWriterFactory(writeDir.getPath,
-      GraftCowWriterFactory.withParquetIds(schema, table.schema).json, partFields,
-      GraftCowWriterFactory.floatFieldsOf(table.schema, schema),
-      GraftCowWriterFactory.parquetPropsOf(
-        org.apache.spark.sql.SparkSession.active, table.properties),
-      GraftCowWriterFactory.targetFileBytes(table.properties),
-      maxOpenFiles = GraftCowWriterFactory.maxOpenFilesOf(table.properties))
+    val inner = GraftCowWriterFactory.of(writeDir.getPath, schema, table.schema,
+      table.spec, table.properties)
     new StreamingDataWriterFactory {
       // task attempt ids are globally unique per SparkContext, so file
       // names cannot collide across epochs or retries

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.ManifestIO
+import graft.core.{DeleteMatching, ManifestIO}
 
 /** Delete files are decoded by the data files' own reader. Equality keys
   * of every primitive key type round-trip: the writer casts them to their
@@ -22,7 +22,8 @@ import graft.core.ManifestIO
   * the session writes by default), and a key matches the data value it was
   * taken from. A delete file missing a key column fails with the file named
   * instead of reading the key as null. Positional tombstones address a data
-  * file by one path form, with or without its `file:` scheme. */
+  * file by one path form, with or without its `file:` scheme, and every
+  * positional delete file carries the spec's reserved field ids. */
 class DeleteFileDecodeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -85,6 +86,46 @@ class DeleteFileDecodeSpec extends AnyFunSuite {
       outcome.map(p => s"$name: $p")
     }
     assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("positional delete files carry the reserved field ids") {
+    val reserved = DeleteMatching.PositionalDeleteSchema.fields.map(f => Some(f.id))
+    def liveDeleteFiles(t: IcebergTable): Seq[String] =
+      t.newScan().planFiles().flatMap(_.deleteFiles).map(_.path).distinct
+    /** The delete files of `t` without the reserved ids, or a note that it
+      * has none. */
+    def idProblems(name: String, t: IcebergTable): Seq[String] = {
+      val files = liveDeleteFiles(t)
+      if (files.isEmpty) Seq(s"$name: no positional delete file")
+      else files.filterNot(p => footerColumns(p).map(_._1) == reserved)
+        .map(p => s"$name: $p has ids ${footerColumns(p).map(_._1)}")
+    }
+    val loc = tmpDir("pos_ids")
+    val t = TableWriter.create(spark.range(0, 10).selectExpr("id AS k").coalesce(1), loc)
+    val deleted = TableWriter.deleteWhere(t, spark, col("k") === 2L)
+    val (merged, _, _) = TableWriter.rewritePositionDeletes(
+      TableWriter.deleteWhere(deleted, spark, col("k") === 5L), spark)
+
+    val warehouse = tmpDir("pos_ids_wh")
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gdec", "graft.spark.GraftCatalog")
+    s.conf.set("spark.sql.catalog.gdec.warehouse", warehouse)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS gdec.d")
+    s.sql("""CREATE TABLE gdec.d.m (id BIGINT, s STRING)
+             TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')""")
+    s.sql("INSERT INTO gdec.d.m VALUES (1, 'aax'), (2, 'bbb'), (3, 'aay')")
+    // LIKE is not pushable: the row-level delta write, not deleteWhere
+    s.sql("DELETE FROM gdec.d.m WHERE s LIKE '%a_'")
+    val mor = IcebergTables.load(s"$warehouse/d/m")
+
+    val problems = idProblems("deleteWhere", deleted) ++
+      idProblems("rewritePositionDeletes", merged) ++
+      idProblems("SQL merge-on-read DELETE", mor)
+    assert(problems.isEmpty, problems.mkString("\n"))
+    assert(merged.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(0L, 1L, 3L, 4L, 6L, 7L, 8L, 9L))
+    assert(mor.newScan().toDF(spark).select("id").collect().map(_.getLong(0))
+      .toSeq == Seq(2L))
   }
 
   test("a delete file holding none of a key's id or names fails naming the file") {

@@ -297,7 +297,7 @@ class FormatReadSpec extends AnyFunSuite {
 
     val loc = tmpDir("tbl_orc_write")
     val t0 = TableWriter.create(df, loc,
-      properties = Map("write.format-default" -> "orc"))
+      properties = Map("write.format.default" -> "orc"))
     // the data files ARE orc, recorded as such in the manifest
     val files = t0.newScan().planFiles()
     assert(files.nonEmpty && files.forall(_.file.format == "ORC"),
@@ -336,7 +336,7 @@ class FormatReadSpec extends AnyFunSuite {
     val loc = tmpDir("tbl_avro_write")
     val t0 = TableWriter.create(
       (0 until 100).map(i => (i.toLong, s"row-$i")).toDF("id", "name"),
-      loc, properties = Map("write.format-default" -> "avro"))
+      loc, properties = Map("write.format.default" -> "avro"))
     val files = t0.newScan().planFiles()
     assert(files.nonEmpty && files.forall(_.file.format == "AVRO"))
     assert(files.forall(_.file.path.endsWith(".avro")))
@@ -356,7 +356,7 @@ class FormatReadSpec extends AnyFunSuite {
     val loc = tmpDir("tbl_orc_stream")
     val rows = (i: Range) => i.map(n => (n.toLong, s"row-$n"))
     TableWriter.create(rows(0 until 10).toDF("id", "name").coalesce(1), loc,
-      properties = Map("write.format-default" -> "orc"))
+      properties = Map("write.format.default" -> "orc"))
     val q = spark.readStream.format("icegopher").load(loc)
       .writeStream.format("memory").queryName("orc_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
@@ -370,6 +370,53 @@ class FormatReadSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getString(1))).toSeq
       assert(got.sorted == rows(0 until 15), got)
     } finally q.stop()
+  }
+
+  test("write.format.default=orc: a CoW UPDATE, a MoR MERGE and a streaming " +
+      "append add only ORC data files") {
+    val warehouse = tmpDir("fmt_wh")
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gfmt", "graft.spark.GraftCatalog")
+    s.conf.set("spark.sql.catalog.gfmt.warehouse", warehouse)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS gfmt.f")
+    s.sql("""CREATE TABLE gfmt.f.o (id BIGINT, name STRING)
+             TBLPROPERTIES ('write.format.default' = 'orc',
+                            'write.merge.mode' = 'merge-on-read')""")
+    val loc = s"$warehouse/f/o"
+    def dataFiles(): Seq[DataFileInfo] =
+      IcebergTables.load(loc).newScan().planFiles().map(_.file)
+    /** The data files `step` adds that are not ORC, or a note that it
+      * added none. */
+    def nonOrcAdded(name: String)(step: => Unit): Seq[String] = {
+      val before = dataFiles().map(_.path).toSet
+      step
+      val added = dataFiles().filterNot(f => before(f.path))
+      if (added.isEmpty) Seq(s"$name added no data file")
+      else added.filterNot(f => f.format == "ORC" && f.path.endsWith(".orc"))
+        .map(f => s"$name added ${f.format} file ${f.path}")
+    }
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val problems =
+      nonOrcAdded("INSERT")(s.sql("INSERT INTO gfmt.f.o VALUES (1, 'a'), (2, 'b'), (3, 'c')")) ++
+      nonOrcAdded("copy-on-write UPDATE")(s.sql("UPDATE gfmt.f.o SET name = 'B' WHERE id = 2")) ++
+      nonOrcAdded("merge-on-read MERGE") {
+        Seq((3L, "C"), (4L, "d")).toDF("id", "name").createOrReplaceTempView("fmt_src")
+        s.sql("""MERGE INTO gfmt.f.o t USING fmt_src u ON t.id = u.id
+                 WHEN MATCHED THEN UPDATE SET t.name = u.name
+                 WHEN NOT MATCHED THEN INSERT *""")
+      } ++
+      nonOrcAdded("streaming append") {
+        val q = input.toDF().toDF("id", "name").writeStream.format("icegopher")
+          .option("checkpointLocation", tmpDir("fmt_ck")).start(loc)
+        try { input.addData((5L, "e")); q.processAllAvailable() } finally q.stop()
+      }
+    assert(problems.isEmpty, problems.mkString("\n"))
+    val got = IcebergTables.load(loc).newScan().toDF(spark).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == Seq((1L, "a"), (2L, "B"), (3L, "C"), (4L, "d"), (5L, "e")))
   }
 
   test("unknown data format still fails loudly at plan time") {

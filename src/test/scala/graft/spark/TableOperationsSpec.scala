@@ -260,4 +260,25 @@ class TableOperationsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(compacted.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
       .sorted.toSeq == Seq(1L, 3L, 4L, 6L))
   }
+
+  test("a V2 deleteWhere that matches no row commits a delete snapshot " +
+      "without a delete file") {
+    val loc = tmpDir("ops_delete_nothing")
+    TableWriter.create(rows(1, 2, 3), loc)
+    def t = IcebergTables.load(loc)
+    val before = t.currentSnapshot.get.snapshotId
+    TableWriter.deleteWhere(t, spark, col("k") === 99L)
+    val snap = t.currentSnapshot.get
+    assert(snap.snapshotId != before)
+    assert(snap.summary.get.operation == OpDelete)
+    assert(snap.summary.get.properties("added-delete-files") == "0",
+      snap.summary.get.properties.toString)
+    assert(t.newScan().planFiles().forall(_.deleteFiles.isEmpty))
+    // the one real delete file is the only one a rewrite then counts
+    TableWriter.deleteWhere(t, spark, col("k") === 2L)
+    val (rewritten, before2, created) = TableWriter.rewritePositionDeletes(t, spark)
+    assert((before2, created) == (1, 1))
+    assert(rewritten.newScan().toDF(spark).select("k").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(1L, 3L))
+  }
 }
